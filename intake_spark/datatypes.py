@@ -16,6 +16,7 @@ In the Spark rebuild a datatype resolves to the argument set of
 from __future__ import annotations
 
 import re
+import zlib
 from typing import Any
 
 from intake_spark.config import conf
@@ -444,35 +445,38 @@ def recommend_scored(
             if head.startswith(magic):
                 try:
                     inner = _decompress_head(head, codec)
-                    inner_url = re.sub(rf"\.({codec}|gz|bz2|zst|lz4)$", "", url or "")
-                    return recommend_scored(
-                        inner_url or None, mime=None, head=inner,
-                        _via_prefix=f"{_via_prefix}compressed:{codec}:",
-                    )
-                except Exception:
-                    # codec recognized but not decodable here (zstd/lz4):
-                    # score by pattern/mime alone — running _head_ok on the
-                    # COMPRESSED bytes would veto formats whose filepatterns
-                    # explicitly claim the extension
+                except (ValueError, OSError, EOFError, zlib.error):
+                    # codec not decodable here (zstd/lz4) or a truncated/
+                    # corrupt stream: score by pattern/mime alone — running
+                    # _head_ok on the COMPRESSED bytes would veto formats
+                    # whose filepatterns explicitly claim the extension
                     head = None
                     break
+                inner_url = re.sub(rf"\.({codec}|gz|bz2|zst|lz4)$", "", url or "")
+                return recommend_scored(
+                    inner_url or None, mime=None, head=inner,
+                    _via_prefix=f"{_via_prefix}compressed:{codec}:",
+                )
         # container recursion (reference datatypes.py:2028-2043): for a zip
         # that is a plain container (not an OOXML/NPZ-style format claimed
         # by a more specific datatype), recommend by member names.
-        if head.startswith(b"PK\x03\x04") and url and url.lower().endswith(".zip"):
-            try:
-                import io
-                import zipfile
+        if (head is not None and head.startswith(b"PK\x03\x04")
+                and url and url.lower().endswith(".zip")):
+            import io
+            import zipfile
 
+            try:
                 with zipfile.ZipFile(url if "://" not in url else io.BytesIO(head)) as z:
                     members = z.namelist()
-                if members:
-                    return recommend_scored(
-                        members[0], mime=None, head=None,
-                        _via_prefix=_via_prefix + "container:zip:",
-                    )
-            except Exception:
-                pass
+            except (zipfile.BadZipFile, OSError):
+                # a corrupt or unreadable archive has no member names to
+                # recurse on: score the .zip itself by magic/pattern below
+                members = []
+            if members:
+                return recommend_scored(
+                    members[0], mime=None, head=None,
+                    _via_prefix=_via_prefix + "container:zip:",
+                )
 
     scores: dict[type[BaseData], tuple[float, str]] = {}
     for cls in datatypes():
@@ -541,15 +545,19 @@ def recommend_corpus(
        a ``path`` column or a plain list instead), never the file
        bytes.
     2. Files cluster by ``(dir, ext)`` — the homogeneity unit of real
-       lakes. ``samples_per_cluster`` members per cluster (deterministic:
-       lowest ``xxhash64(path)``) are head-sniffed via ``mapInPandas``:
-       each task opens its own files, reads ``head_bytes``, and runs
-       :func:`recommend_scored` — heads never cross the wire, the driver
-       reads nothing.
-    3. A cluster whose samples agree unanimously propagates the verdict
-       to its remaining members without opening them (``via='cluster'``);
-       a disputed or undetectable cluster falls back to sniffing every
-       member. CAVEAT — propagation is sample-based: a minority format
+       lakes. The listing is shuffled by cluster, and one
+       ``mapInPandas`` pass orders each partition's listing by
+       ``(dir, ext, xxhash64(path), path)`` and head-sniffs every
+       cluster's first ``samples_per_cluster`` members (deterministic:
+       the lowest ``(xxhash64(path), path)``): the task opens its own
+       files, reads ``head_bytes``, and runs :func:`recommend_scored` —
+       heads never cross the wire, the driver reads nothing.
+    3. In the same pass, a cluster whose samples agree unanimously
+       propagates the verdict to its remaining members without opening
+       them (``via='cluster'``); the members of a disputed or
+       undetectable cluster are marked pending, shuffled by path, and a
+       second ``mapInPandas`` pass sniffs each of them. CAVEAT —
+       propagation is sample-based: a minority format
        hiding in an otherwise homogeneous directory is mislabeled when
        all ``samples_per_cluster`` draws miss it (probability
        ``C(n-m, s)/C(n, s)`` for m minority members out of n). That is
@@ -573,19 +581,20 @@ def recommend_corpus(
     is single-URL only; this distributed form is the rebuild's
     scale-mandated extension (SURVEY.md §7's detection plan).
 
-    EXECUTION SEMANTICS (r11 restructure): this function runs EAGERLY —
-    the ranked listing, the sampled sniff verdicts and the per-cluster
-    consensus are materialized at call time via ``localCheckpoint`` (all
-    metadata-sized), because each subtree is consumed by several plan
-    branches and a lazy plan re-executed them per consumer.
-    ``localCheckpoint`` data is not recomputable after executor loss: on
-    a long-lived cluster session, treat the returned DataFrame as a
-    result to consume (or write out) promptly, not as a lazy plan to
-    hold across executor churn.
+    EXECUTION SEMANTICS: without ``cache_path`` this function is LAZY —
+    it lists a directory root driver-side (or plans the executor walk)
+    and returns one plan; no file is sniffed and no Spark job runs until
+    an action. The plan is two shuffles and two ``mapInPandas`` passes,
+    both with an explicit partition count so adaptive execution cannot
+    coalesce the sniffing into one task, and nothing in it is
+    materialized: an executor loss recomputes the lost partitions from
+    the listing like any other lineage. With ``cache_path`` the new
+    verdicts are appended at call time (one write) and the returned
+    DataFrame reads the registry.
     """
     import os
 
-    from pyspark.sql import DataFrame, Window
+    from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
     from intake_spark.session import ensure_py_deps
@@ -594,40 +603,17 @@ def recommend_corpus(
     # at UDF wrap time, so executors must already have the package
     ensure_py_deps(spark)
 
-    def _cluster_key(p: str) -> "tuple[str, str]":
-        # python twin of the (dir, ext) SQL derivation below — used only
-        # to SIZE the sample-sniff stage when the listing is local
-        d = p[: p.rfind("/")] if "/" in p else p
-        name = p.rsplit("/", 1)[-1]
-        e = name.split(".", 1)[1].lower() if "." in name else ""
-        return (d, e)
-
-    n_hint = None
-    n_cluster_hint = None
     if isinstance(source, DataFrame):
         listing = source.select(F.col("path").cast("string"))
-    elif isinstance(source, str):
-        if walk_on_executors:
-            # localCheckpoint (eager): materializes the walk once and
-            # ties the cached partitions to THIS DataFrame's lifetime —
-            # a plain persist() would pin the listing in executor
-            # storage for the whole session with no release point
-            listing = distributed_walk(spark, source).localCheckpoint()
-            n_hint = listing.count()
-        else:
-            paths = []
-            for r, _, files in os.walk(source):
-                paths.extend(os.path.join(r, f) for f in files)
-            listing = spark.createDataFrame(
-                [(p,) for p in paths], "path string"
-            )
-            n_hint = len(paths)
-            n_cluster_hint = len({_cluster_key(p) for p in paths})
+    elif isinstance(source, str) and walk_on_executors:
+        listing = distributed_walk(spark, source)
     else:
-        source = list(source)
-        listing = spark.createDataFrame([(p,) for p in source], "path string")
-        n_hint = len(source)
-        n_cluster_hint = len({_cluster_key(p) for p in source})
+        if isinstance(source, str):
+            paths = [os.path.join(r, f)
+                     for r, _, files in os.walk(source) for f in files]
+        else:
+            paths = list(source)
+        listing = spark.createDataFrame([(p,) for p in paths], "path string")
 
     base = listing.select(
         "path",
@@ -637,131 +623,90 @@ def recommend_corpus(
                              r"\.(.*)$", 1)
         ).alias("ext"),
     )
+    todo = base
+    if cache_path and os.path.exists(cache_path):
+        todo = base.join(
+            spark.read.parquet(cache_path).select("path"), "path", "left_anti"
+        )
 
+    cols = ["path", "dir", "ext", "datatype", "score", "via"]
     verdict_schema = (
         "path string, dir string, ext string, "
         "datatype string, score double, via string"
     )
     _head_n = int(head_bytes)
+    _n_samples = int(samples_per_cluster)
 
-    def _sniff(batches):
-        import pandas as pd
-
+    def _verdict(p):
         from intake_spark.datatypes import recommend_scored
 
-        for pdf in batches:
-            rows = []
-            for p, d_, e_ in zip(pdf["path"], pdf["dir"], pdf["ext"]):
+        head = None
+        if "://" not in p:
+            try:
+                with open(p, "rb") as f:
+                    head = f.read(_head_n)
+            except OSError:
                 head = None
-                if "://" not in p:
-                    try:
-                        with open(p, "rb") as f:
-                            head = f.read(_head_n)
-                    except OSError:
-                        head = None
-                ranked = recommend_scored(p, head=head)
-                if ranked:
-                    c, s, v = ranked[0]
-                    rows.append((p, d_, e_, c.__name__, float(s), v))
-                else:
-                    rows.append((p, d_, e_, None, None, "none"))
-            yield pd.DataFrame(
-                rows,
-                columns=["path", "dir", "ext", "datatype", "score", "via"],
-            )
+        ranked = recommend_scored(p, head=head)
+        if ranked:
+            c, s, v = ranked[0]
+            return c.__name__, float(s), v
+        return None, None, "none"
 
-    cached = None
-    if cache_path and os.path.exists(cache_path):
-        cached = (
-            spark.read.parquet(cache_path)
-            .select("path", "datatype", "score", "via")
-            .dropDuplicates(["path"])
-            .join(base, "path")  # keep only listed paths, reattach keys
-            .select("path", "dir", "ext", "datatype", "score", "via")
+    def _triage(batches):
+        # a partition holds whole clusters; ordered here rather than by a
+        # Spark sort, whose last memory page a Python task keeps reachable
+        # after the task ends (one spark.buffer.pageSize per task)
+        import pandas as pd
+
+        frames = list(batches)
+        if not frames:
+            return
+        pdf = pd.concat(frames, ignore_index=True).sort_values(
+            ["dir", "ext", "_h", "path"]
         )
-        todo = base.join(cached.select("path"), "path", "left_anti")
-    else:
-        todo = base
+        rows = []
+        key, n, dts = None, 0, set()
+        for p, d_, e_ in zip(pdf["path"], pdf["dir"], pdf["ext"]):
+            if (d_, e_) != key:
+                key, n, dts = (d_, e_), 0, set()
+            n += 1
+            if n <= _n_samples:
+                v = _verdict(p)
+                dts.add(v[0])
+                rows.append((p, d_, e_) + v)
+            elif len(dts) == 1 and None not in dts:
+                rows.append((p, d_, e_, next(iter(dts)), None, "cluster"))
+            else:
+                # disputed cluster: via=null marks the row pending
+                rows.append((p, d_, e_, None, None, None))
+        yield pd.DataFrame(rows, columns=cols)
 
-    def _distribute(df, rows_hint):
-        # enough partitions that a million-file sniff spreads evenly,
-        # keyed by path so retries are deterministic; when the row count
-        # flowing into THIS sniff stage is known, cap at ~64 files per
-        # task so a small stage is not taxed with hundreds of
-        # near-empty Python-worker tasks. The explicit count matters:
-        # AQE coalesces by shuffle BYTES, and a million tiny path rows
-        # would coalesce into one task even though every row costs a
-        # head_bytes read downstream.
-        n = max(spark.sparkContext.defaultParallelism * 4, 8)
-        if rows_hint is not None:
-            n = max(1, min(n, -(-rows_hint // 64)))
-        return df.repartition(n, "path")
+    def _sniff_pending(batches):
+        import pandas as pd
 
-    # the sample stage sniffs at most samples_per_cluster files per
-    # cluster — sizing it by the full listing would shuffle a handful of
-    # sample rows into dozens of near-empty Python tasks
-    n_samp_hint = None
-    if n_cluster_hint is not None:
-        n_samp_hint = samples_per_cluster * n_cluster_hint
-        if n_hint is not None:
-            n_samp_hint = min(n_hint, n_samp_hint)
+        for pdf in batches:
+            pending = pdf["via"].isna()
+            if pending.any():
+                pdf = pd.DataFrame(
+                    [r[:3] + _verdict(r[0]) if todo_ else r
+                     for r, todo_ in zip(
+                         pdf.itertuples(index=False, name=None), pending)],
+                    columns=cols,
+                )
+            yield pdf
 
-    w = Window.partitionBy("dir", "ext").orderBy(F.xxhash64("path"), "path")
-    # localCheckpoint (eager): the ranked listing feeds both the sample
-    # branch and the propagation branch — without the cut, the
-    # full-listing window sort (the only listing-sized sort in the
-    # operator) executes once per consumer. Listing rows are metadata
-    # (~100 bytes/path), so even a million-file lake materializes tens
-    # of MB of executor storage.
-    ranked = todo.withColumn("_rn", F.row_number().over(w)).localCheckpoint()
-    sampled = ranked.filter(F.col("_rn") <= samples_per_cluster).drop("_rn")
-    rest = ranked.filter(F.col("_rn") > samples_per_cluster).drop("_rn")
-
-    # localCheckpoint (eager): the sampled verdicts feed BOTH the output
-    # union and the consensus aggregate — without materialization the
-    # whole sniff stage (window shuffle + Python stage + head reads)
-    # executes once per consumer, since Python stages are opaque to
-    # exchange reuse. The table is small by construction (at most
-    # samples_per_cluster rows per (dir, ext) cluster), so executor
-    # storage cost is metadata-sized even for a million-file lake.
-    sampled_v = (
-        _distribute(sampled, n_samp_hint)
-        .mapInPandas(_sniff, verdict_schema)
-        .localCheckpoint()
+    # explicit partition counts: adaptive execution coalesces by shuffle
+    # BYTES, and a million tiny path rows would land in one task even
+    # though each pending row costs a head_bytes read downstream
+    n_parts = spark.sparkContext.defaultParallelism
+    fresh = (
+        todo.withColumn("_h", F.xxhash64("path"))
+        .repartition(n_parts, "dir", "ext")
+        .mapInPandas(_triage, verdict_schema)
+        .repartition(n_parts, "path")
+        .mapInPandas(_sniff_pending, verdict_schema)
     )
-
-    consensus = sampled_v.groupBy("dir", "ext").agg(
-        F.count_distinct("datatype").alias("_n_dt"),
-        F.sum(F.when(F.col("datatype").isNull(), 1).otherwise(0))
-        .alias("_n_null"),
-        F.min("datatype").alias("_dt"),
-    )
-    # one row per cluster — materialized once, consumed by the
-    # propagation join, the disputed anti-join, and the disputed-count
-    # gate below
-    cons = consensus.localCheckpoint()
-    is_unanimous = (F.col("_n_dt") == 1) & (F.col("_n_null") == 0)
-    unanimous = cons.filter(is_unanimous).select("dir", "ext", "_dt")
-
-    propagated = rest.join(unanimous, ["dir", "ext"]).select(
-        "path", "dir", "ext",
-        F.col("_dt").alias("datatype"),
-        F.lit(None).cast("double").alias("score"),
-        F.lit("cluster").alias("via"),
-    )
-    fresh = sampled_v.unionByName(propagated)
-    # the disputed fallback (sniff every member of a non-unanimous
-    # cluster) only enters the plan when a disputed cluster exists —
-    # the count is a cluster-sized job over the checkpointed consensus,
-    # and on the common all-unanimous corpus it saves a full-listing
-    # anti-join plus an empty Python stage per call
-    if cons.filter(~is_unanimous).count():
-        disputed = rest.join(unanimous.select("dir", "ext"),
-                             ["dir", "ext"], "left_anti")
-        disputed_v = _distribute(disputed, n_hint).mapInPandas(
-            _sniff, verdict_schema
-        )
-        fresh = fresh.unionByName(disputed_v)
     if cache_path:
         # append the new verdicts (eager action: the sniff runs exactly
         # once), then answer purely from the registry — the returned
@@ -774,10 +719,8 @@ def recommend_corpus(
             spark.read.parquet(cache_path)
             .dropDuplicates(["path"])
             .join(base, "path")  # drop verdicts for vanished paths
-            .select("path", "dir", "ext", "datatype", "score", "via")
+            .select(*cols)
         )
-    # no cache_path: cached is necessarily None (it is only built from an
-    # existing cache file) and fresh covers the whole listing
     return fresh
 
 

@@ -7,8 +7,10 @@ the SURVEY §7 scale plan."""
 
 from __future__ import annotations
 
+import contextlib
 import gzip
 import os
+import uuid
 
 import numpy as np
 import pytest
@@ -46,6 +48,27 @@ def _corpus(root) -> dict[str, int]:
     return {"csv": 10, "png": 6, "dat_parquet": 3, "dat_png": 3}
 
 
+@contextlib.contextmanager
+def _job_counter(spark):
+    """Yield a callable counting the Spark jobs this thread launched
+    inside the block (a fresh job group, read from the status tracker
+    once the listener bus has delivered every job-start event)."""
+    sc = spark.sparkContext
+    group = f"rc-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        yield jobs
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
 def test_recommend_scored_evidence():
     """recommend_scored exposes the (class, score, via) triple recommend
     ranks by; compression recursion is visible in the via prefix."""
@@ -56,10 +79,43 @@ def test_recommend_scored_evidence():
     assert recommend_scored("/x/unclaimed.zzz9", head=b"\x00\x01") == []
 
 
-def test_corpus_triage_clusters_and_disputes(spark, tmp_path):
-    n = _corpus(tmp_path)
-    out = recommend_corpus(spark, str(tmp_path), samples_per_cluster=4)
-    rows = {r.path: r for r in out.collect()}
+def test_recommend_scored_undecodable_compression():
+    """A compressed head that cannot be decoded here (zstd/lz4, or a
+    truncated gzip stream) is scored by filename pattern alone."""
+    zst = recommend_scored("/x/a.csv.zst", head=b"\x28\xb5\x2f\xfd" + b"\x00" * 16)
+    assert zst[0][0] is dt.CSV and zst[0][2] == "pattern"
+    truncated = gzip.compress(b"a,b\n1,2\n" * 50)[:24]
+    gz = recommend_scored("/x/a.csv.gz", head=truncated)
+    assert gz[0][0] is dt.CSV and gz[0][2] == "pattern"
+
+
+def test_corpus_triage_undecodable_compression(spark, tmp_path):
+    """A .zst member triages instead of failing the sniffing task."""
+    os.makedirs(f"{tmp_path}/z")
+    for i in range(3):
+        with open(f"{tmp_path}/z/f{i}.csv.zst", "wb") as f:
+            f.write(b"\x28\xb5\x2f\xfd" + b"\x00" * 16)
+    rows = recommend_corpus(spark, str(tmp_path), samples_per_cluster=4).collect()
+    assert sorted((r.datatype, r.via) for r in rows) == [("CSV", "pattern")] * 3
+
+
+@pytest.mark.parametrize("batch_rows", [None, 2], ids=["default", "batch2"])
+def test_corpus_triage_clusters_and_disputes(spark, tmp_path, batch_rows):
+    """With 2-row Arrow batches every cluster straddles batches, so the
+    per-cluster sample state must carry across them."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key, None)
+    try:
+        if batch_rows is not None:
+            spark.conf.set(key, str(batch_rows))
+        n = _corpus(tmp_path)
+        out = recommend_corpus(spark, str(tmp_path), samples_per_cluster=4)
+        rows = {r.path: r for r in out.collect()}
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
     assert len(rows) == sum(n.values())
 
     csv_rows = [r for p, r in rows.items() if "/csv/" in p]
@@ -78,6 +134,30 @@ def test_corpus_triage_clusters_and_disputes(spark, tmp_path):
     dat_rows = [r for p, r in rows.items() if "/mixed/" in p]
     assert sorted(r.datatype for r in dat_rows) == ["PNG"] * 3 + ["Parquet"] * 3
     assert all(r.via != "cluster" for r in dat_rows)
+
+
+def test_corpus_triage_disputed_fan_out(spark, tmp_path):
+    """A large disputed cluster is sniffed file by file across several
+    tasks, not funnelled through one."""
+    from pyspark.sql import functions as F
+
+    os.makedirs(f"{tmp_path}/mixed")
+    for i in range(32):
+        with open(f"{tmp_path}/mixed/d{i}.dat", "wb") as f:
+            f.write(b"PAR1" + b"x" * 32)
+        _png(f"{tmp_path}/mixed/p{i}.dat")
+    # 33 samples out of a 32/32 split always hold both formats
+    out = recommend_corpus(spark, str(tmp_path), samples_per_cluster=33)
+    rows = out.withColumn("_part", F.spark_partition_id()).collect()
+    assert len(rows) == 64
+    assert not [r for r in rows if r.via == "cluster"]
+    assert all(
+        r.datatype == ("Parquet" if os.path.basename(r.path)[0] == "d" else "PNG")
+        for r in rows
+    )
+    # one task for all pending rows would leave at most two partition
+    # ids (the samples' and the rest's)
+    assert len({r._part for r in rows}) > 2
 
 
 def test_corpus_triage_unclaimed_files(spark, tmp_path):
@@ -133,6 +213,38 @@ def test_corpus_triage_listing_inputs(spark, tmp_path):
     ldf = spark.createDataFrame([(p,) for p in paths], "path string")
     out2 = recommend_corpus(spark, ldf, samples_per_cluster=3)
     assert out2.count() == 10
+
+
+@pytest.mark.parametrize(
+    "kind", ["walk", "list", "dataframe", "executor_walk"]
+)
+def test_corpus_triage_is_lazy(spark, tmp_path, kind):
+    """Building the triage launches no Spark job; the action does."""
+    _corpus(tmp_path)
+    paths = [os.path.join(r, fn)
+             for r, _d, files in os.walk(tmp_path) for fn in files]
+    source = {
+        "walk": str(tmp_path),
+        "executor_walk": str(tmp_path),
+        "list": paths,
+        "dataframe": spark.createDataFrame([(p,) for p in paths],
+                                           "path string"),
+    }[kind]
+    with _job_counter(spark) as jobs:
+        out = recommend_corpus(spark, source, samples_per_cluster=4,
+                               walk_on_executors=kind == "executor_walk")
+        assert jobs() == 0
+        assert len(out.collect()) == len(paths)
+        assert jobs() > 0
+
+
+def test_corpus_triage_job_budget(spark, tmp_path):
+    """Triaging a walked directory, call and collect, runs at most three
+    jobs: the cluster shuffle, the path shuffle and the result stage."""
+    _corpus(tmp_path)
+    with _job_counter(spark) as jobs:
+        recommend_corpus(spark, str(tmp_path), samples_per_cluster=4).collect()
+        assert jobs() <= 3
 
 
 def test_corpus_triage_plan_is_distributed(spark, tmp_path):
