@@ -187,18 +187,22 @@ def main() -> None:
     except Exception:
         pass
 
-    # Session-shared tables (jaccard pairs, dup spans, semantic pairs,
-    # PCA direction) are built ONCE here and billed as explicit shared:*
-    # lines; otherwise whichever consumer runs first absorbs the build
-    # and the per-query medians become order-dependent (q22 spread hit
-    # 109x in round 6). `value` includes the shared cost, so totals
-    # stay honest.
-    try:
-        from intake_spark.llm.queries import prewarm_shared
+    # Every registered session-shared table (pair tables, dup spans,
+    # PCA direction, prover fixture stores) is built ONCE here and billed
+    # as an explicit shared:* line; otherwise whichever consumer runs
+    # first absorbs the build and the per-query medians become
+    # order-dependent (q22 spread hit 109x in round 6). `value` includes
+    # the shared cost, so totals stay honest; a build that fails is
+    # recorded in `errors` under its label instead.
+    from intake_spark.llm.queries import prewarm_shared
 
-        shared = {k: round(v, 4) for k, v in prewarm_shared(spark, sf_dir).items()}
-    except Exception:
-        shared = {}
+    errors: dict[str, str] = {}
+    shared = {}
+    for lbl, v in prewarm_shared(spark, sf_dir).items():
+        if isinstance(v, str):
+            errors[lbl] = v[:500]
+        else:
+            shared[lbl] = round(v, 4)
     shared.update(warm_cost)
 
     names = sorted(queries)
@@ -222,7 +226,6 @@ def main() -> None:
         except Exception:
             return 0, 0
 
-    errors: dict[str, str] = {}
     # per-query transient-spawn retry counts (verdict #8): a drain_stream
     # retry runs INSIDE the timed region, so a retried streaming query's
     # sample is honestly slow — this map says which samples carried one
@@ -725,7 +728,10 @@ def main() -> None:
         "sf": sf,
     }
     if errors:
-        line["errors"] = {n.split("_", 1)[0]: e[:120] for n, e in errors.items()}
+        line["errors"] = {
+            n if n.startswith("shared:") else n.split("_", 1)[0]: e[:120]
+            for n, e in errors.items()
+        }
     if stream_retries:
         line["retries"] = {
             n.split("_", 1)[0]: c for n, c in stream_retries.items()

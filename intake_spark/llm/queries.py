@@ -9,7 +9,13 @@ exact, not approximate.
 
 from __future__ import annotations
 
+import inspect
+import os
+import tempfile
+import time
+
 import pandas as pd
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -97,7 +103,7 @@ def q22_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale-safe stop-shingle cap active — the DuckDB oracle encodes the
     identical ``HAVING count(*) <= cap`` filter, so the hash-checked
     configuration is the one that survives skewed corpora."""
-    return _jaccard_pairs_shared(spark, sf_dir, Q22_MAX_SHINGLE_DF)
+    return _jaccard_pairs_capped_shared(spark, sf_dir)
 
 
 def _minhash_sql(num_hashes: int) -> str:
@@ -1216,7 +1222,7 @@ def q72_dup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from intake_spark.llm import graph
 
     docs = load_table(spark, sf_dir, "documents")
-    edges = _jaccard_pairs_shared(spark, sf_dir, Q22_MAX_SHINGLE_DF)
+    edges = _jaccard_pairs_capped_shared(spark, sf_dir)
     return graph.pagerank(edges, iterations=_Q72_ITERS)
 
 
@@ -1378,122 +1384,119 @@ cl AS (SELECT e.vec_id, v, seed_id AS cluster_id
 """
 
 
-def _session_cached(cache: dict, key: tuple, cap: int, build):
-    """The ONE get / FIFO-evict / build / persist body behind every
-    session-shared table (`_dup_spans_shared`, `_jaccard_pairs_shared`,
-    `_semantic_pairs_shared`, and `_direction_shared`'s triple variant
-    keeps its own unpinned form): bounded cache so a long-lived session
-    sweeping many sf_dirs does not pin one table per dir in executor
-    storage memory for the application's lifetime; evicted entries are
-    unpersisted (pop BEFORE unpersist so a throwing unpersist cannot
-    wedge the cache). ``Catalog.materialize`` is the cross-session form
-    of all of these; persist() is the in-session form."""
-    got = cache.get(key)
-    if got is None:
-        while len(cache) >= cap:
-            old = cache.pop(next(iter(cache)))  # FIFO: oldest insertion
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        got = build().persist()
-        cache[key] = got
-    return got
+# label -> (build, takes sf_dir, takes root), and
+# label -> {(applicationId, sf_dir or None): (value, root or None)}
+_SHARED_BUILDERS: dict = {}
+_SHARED_BUILT: dict = {}
+# entries kept per label: a long-lived session sweeping many sf_dirs must
+# not pin one table per dir in executor storage for its whole lifetime
+_SHARED_FIFO = 2
 
 
-def prewarm_shared(spark: SparkSession, sf_dir: str) -> "dict[str, float]":
-    """Eagerly build every session-shared table for ``sf_dir`` and
-    return {label: build_seconds}. bench.py calls this BEFORE the timed
-    rounds and reports the costs as synthetic ``shared:*`` lines, so a
-    per-query median can neither absorb a shared build (q22 billed 109×
-    its steady-state in r6's interleaving) nor dodge it (a 0.04 s q22
-    misread as a free pair table). Failures are skipped: a corpus
-    without documents/embeddings tables just has no shared builds."""
-    import time as _time
+def shared_table(label: str):
+    """Register the decorated function as the one builder of the
+    session-shared table ``label`` and bind its name to the cached
+    accessor ``(spark, sf_dir=None)`` (see :func:`shared`).
 
-    out: dict[str, float] = {}
-    for label, (_inv, fn) in _shared_build_specs(spark, sf_dir).items():
-        t0 = _time.perf_counter()
+    The builder's signature decides the rest: without an ``sf_dir``
+    parameter the table is keyed per session only (the prover fixture
+    stores, whose content does not depend on the corpus); with a
+    ``root`` parameter it is handed a fresh tempdir and rebuilt if that
+    directory disappears. bench.py bills every registered build once,
+    as an explicit ``shared:*`` line, through :func:`prewarm_shared`."""
+
+    def register_builder(build):
+        params = inspect.signature(build).parameters
+        _SHARED_BUILDERS[label] = (build, "sf_dir" in params, "root" in params)
+
+        def get(spark: SparkSession, sf_dir: "str | None" = None):
+            return shared(spark, sf_dir, label)
+
+        get.__doc__ = build.__doc__
+        return get
+
+    return register_builder
+
+
+def _shared_slot(spark: SparkSession, sf_dir: "str | None", label: str):
+    """(the entries of ``label``, the key ``sf_dir`` maps to in them)."""
+    _build, per_dir, _root = _SHARED_BUILDERS[label]
+    key = (spark.sparkContext.applicationId, sf_dir if per_dir else None)
+    return _SHARED_BUILT.setdefault(label, {}), key
+
+
+def _shared_evict(entries: dict, key) -> None:
+    """Drop one entry, popped BEFORE the unpersist so a throwing
+    unpersist cannot wedge the cache. A path store's directory stays on
+    disk for any frame still reading it."""
+    value, _root = entries.pop(key)
+    if isinstance(value, DataFrame):
         try:
-            fn()
-        except Exception:
-            continue
-        out[label] = _time.perf_counter() - t0
+            value.unpersist()
+        except Py4JError:
+            # the entry outlived its SparkContext (a stopped session's
+            # table evicted by a later session): its blocks died with it
+            pass
+
+
+def shared(spark: SparkSession, sf_dir: "str | None", label: str):
+    """The session-shared table ``label`` for ``sf_dir``: built on first
+    use, then the same object until evicted (FIFO, ``_SHARED_FIFO``
+    keys per label) or invalidated by :func:`rebuild_shared`. A
+    DataFrame is persist()ed on insert — lazily, the first action fills
+    it — and unpersisted on eviction; other values (the direction
+    triple, store paths) are only dereferenced. A store whose ``root``
+    was removed mid-session (a /tmp reaper) is rebuilt instead of
+    handing out dead paths. ``Catalog.materialize`` is the
+    cross-session form of the same reuse."""
+    build, per_dir, takes_root = _SHARED_BUILDERS[label]
+    entries, key = _shared_slot(spark, sf_dir, label)
+    if key in entries:
+        value, root = entries[key]
+        if root is None or os.path.isdir(root):
+            return value
+        _shared_evict(entries, key)
+    while len(entries) >= _SHARED_FIFO:
+        _shared_evict(entries, next(iter(entries)))  # oldest insertion
+    kw: dict = {}
+    if per_dir:
+        kw["sf_dir"] = sf_dir
+    if takes_root:
+        name = label.split(":", 1)[1]
+        kw["root"] = tempfile.mkdtemp(prefix=f"intake_spark_{name}_")
+    value = build(spark, **kw)
+    if isinstance(value, DataFrame):
+        value = value.persist()
+    entries[key] = (value, kw.get("root"))
+    return value
+
+
+def _shared_build_seconds(spark: SparkSession, sf_dir: str, label: str) -> float:
+    """Seconds to get ``label`` ready, a persisted DataFrame counted so
+    its blocks are filled inside the timing."""
+    t0 = time.perf_counter()
+    got = shared(spark, sf_dir, label)
+    if isinstance(got, DataFrame):
+        got.count()
+    return time.perf_counter() - t0
+
+
+def prewarm_shared(spark: SparkSession, sf_dir: str) -> "dict[str, float | str]":
+    """Eagerly build every registered shared table for ``sf_dir`` and
+    return {label: build_seconds}; a build that raises maps to its
+    ``"Type: message"`` instead, and the remaining labels still build.
+    bench.py calls this BEFORE the timed rounds and reports the costs as
+    synthetic ``shared:*`` lines (failures as errors), so a per-query
+    median can neither absorb a shared build (q22 billed 109× its
+    steady-state in r6's interleaving) nor dodge it (a 0.04 s q22
+    misread as a free pair table)."""
+    out: "dict[str, float | str]" = {}
+    for label in _SHARED_BUILDERS:
+        try:
+            out[label] = _shared_build_seconds(spark, sf_dir, label)
+        except Exception as exc:  # noqa: BLE001 — reported, not dropped
+            out[label] = f"{type(exc).__name__}: {exc}"
     return out
-
-
-def _shared_build_specs(spark: SparkSession, sf_dir: str) -> dict:
-    """{label: (invalidate, build)} for every session-shared table.
-
-    ``build`` is what :func:`prewarm_shared` times; ``invalidate`` pops
-    the session cache behind the label so :func:`rebuild_shared` can
-    time a genuinely fresh second build (a cached re-call would measure
-    a dict lookup). DataFrame caches are unpersisted on invalidation;
-    fixture-store invalidation only drops the path — the old tempdir
-    stays on disk for any frame still reading it."""
-    app = spark.sparkContext.applicationId
-
-    def _pop_df(cache: dict, key: tuple):
-        got = cache.pop(key, None)
-        if got is not None:
-            try:
-                got.unpersist()
-            except Exception:
-                pass
-
-    return {
-        "shared:dup_spans": (
-            lambda: _pop_df(_DUP_SPANS_CACHE, (app, sf_dir)),
-            lambda: _dup_spans_shared(spark, sf_dir).count(),
-        ),
-        "shared:jaccard_pairs": (
-            lambda: _pop_df(_JACCARD_PAIRS_CACHE, (app, sf_dir, None)),
-            lambda: _jaccard_pairs_shared(spark, sf_dir).count(),
-        ),
-        "shared:jaccard_pairs_capped": (
-            lambda: _pop_df(
-                _JACCARD_PAIRS_CACHE, (app, sf_dir, Q22_MAX_SHINGLE_DF)
-            ),
-            lambda: _jaccard_pairs_shared(
-                spark, sf_dir, Q22_MAX_SHINGLE_DF).count(),
-        ),
-        "shared:semantic_pairs": (
-            lambda: _pop_df(_SEM_PAIRS_CACHE, (app, sf_dir)),
-            lambda: _semantic_pairs_shared(spark, sf_dir).count(),
-        ),
-        "shared:direction": (
-            lambda: _DIRECTION_CACHE.pop((app, sf_dir), None),
-            lambda: _direction_shared(spark, sf_dir),
-        ),
-        # fixture stores for the reader/lakehouse/triage provers: built
-        # once per session so q135-q138/q140 measure the read+decode
-        # they certify, not tempdir construction (whose variance made
-        # their 2x regression bar unpoliceable in r10)
-        "shared:q135_store": (
-            lambda: _FIXTURE_STORE_CACHE.pop((app, "q135"), None),
-            lambda: _q135_store(spark),
-        ),
-        "shared:q136_store": (
-            lambda: _FIXTURE_STORE_CACHE.pop((app, "q136"), None),
-            lambda: _q136_store(spark),
-        ),
-        "shared:q137_store": (
-            lambda: _Q137_CACHE.pop(app, None),
-            lambda: _q137_store(spark),
-        ),
-        "shared:q138_store": (
-            lambda: _FIXTURE_STORE_CACHE.pop((app, "q138"), None),
-            lambda: _q138_store(spark),
-        ),
-        "shared:q140_store": (
-            lambda: _Q140_ROOT_CACHE.pop((app, sf_dir), None),
-            lambda: _q140_corpus_root(spark, sf_dir),
-        ),
-        "shared:q141_store": (
-            lambda: _Q141_SRC_CACHE.pop((app, sf_dir), None),
-            lambda: _q141_store(spark, sf_dir),
-        ),
-    }
 
 
 def rebuild_shared(spark: SparkSession, sf_dir: str, label: str):
@@ -1506,73 +1509,53 @@ def rebuild_shared(spark: SparkSession, sf_dir: str, label: str):
     driver run: dup_spans billed 24.4 s vs a ~6 s quiet build). Host
     noise is strictly additive — min(first build, rebuild) is the same
     estimator the query path has recorded since r11 s7."""
-    import time as _time
-
-    spec = _shared_build_specs(spark, sf_dir).get(label)
-    if spec is None:
+    if label not in _SHARED_BUILDERS:
         return None
-    invalidate, build = spec
+    entries, key = _shared_slot(spark, sf_dir, label)
+    if key in entries:
+        _shared_evict(entries, key)
     try:
-        invalidate()
-        t0 = _time.perf_counter()
-        build()
-        return _time.perf_counter() - t0
+        return _shared_build_seconds(spark, sf_dir, label)
     except Exception:
         return None
 
 
-_DUP_SPANS_CACHE: dict = {}
-
-
+@shared_table("shared:dup_spans")
 def _dup_spans_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (k=8, min_occurrences=2) duplicated-span table shared by q101
     (report) and q103 (removal)."""
-    return _session_cached(
-        _DUP_SPANS_CACHE,
-        (spark.sparkContext.applicationId, sf_dir),
-        2,
-        lambda: dedup.dup_spans(
-            load_table(spark, sf_dir, "documents"), k=8, min_occurrences=2
-        ),
+    return dedup.dup_spans(
+        load_table(spark, sf_dir, "documents"), k=8, min_occurrences=2
     )
 
 
-_JACCARD_PAIRS_CACHE: dict = {}
-
-
-def _jaccard_pairs_shared(
-    spark: SparkSession, sf_dir: str, max_shingle_df: "int | None" = None
-) -> DataFrame:
-    """The exact-Jaccard-0.5 pair table over documents, one build per
-    (session, sf_dir, cap) — shared by q33/q115/q118 (uncapped) and
-    q22/q72 (stop-shingle-capped), which otherwise each rebuild the
-    shingle self-join in one bench session."""
-    return _session_cached(
-        _JACCARD_PAIRS_CACHE,
-        (spark.sparkContext.applicationId, sf_dir, max_shingle_df),
-        4,
-        lambda: dedup.jaccard_pairs(
-            load_table(spark, sf_dir, "documents"),
-            threshold=0.5,
-            max_shingle_df=max_shingle_df,
-        ),
+@shared_table("shared:jaccard_pairs")
+def _jaccard_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The exact-Jaccard-0.5 pair table over documents, shared by
+    q33/q115/q118, which otherwise each rebuild the shingle self-join in
+    one bench session."""
+    return dedup.jaccard_pairs(
+        load_table(spark, sf_dir, "documents"), threshold=0.5
     )
 
 
-_SEM_PAIRS_CACHE: dict = {}
+@shared_table("shared:jaccard_pairs_capped")
+def _jaccard_pairs_capped_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The same pair table under the stop-shingle cap, shared by q22/q72."""
+    return dedup.jaccard_pairs(
+        load_table(spark, sf_dir, "documents"),
+        threshold=0.5,
+        max_shingle_df=Q22_MAX_SHINGLE_DF,
+    )
 
 
+@shared_table("shared:semantic_pairs")
 def _semantic_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (cluster_id, id_a, id_b, cosine) SemDeDup pair table shared by
     q84/q89/q90 — computed once per (session, sf_dir), so the three
     queries stop rebuilding the clustering+pair plan thrice."""
-    return _session_cached(
-        _SEM_PAIRS_CACHE,
-        (spark.sparkContext.applicationId, sf_dir),
-        2,
-        lambda: similarity.semantic_dedup_pairs(
-            load_table(spark, sf_dir, "embeddings"), n_seeds=8, threshold=0.3
-        ),
+    return similarity.semantic_dedup_pairs(
+        load_table(spark, sf_dir, "embeddings"), n_seeds=8, threshold=0.3
     )
 
 
@@ -2660,29 +2643,20 @@ def _pca_sql(dim: int = 64, iters: int = 3, qscale: int = 1024,
     """
 
 
-_DIRECTION_CACHE: dict = {}
-
-
+@shared_table("shared:direction")
 def _direction_shared(spark: SparkSession, sf_dir: str):
     """The (base, mu, v) power-iteration triple shared by q109 and q112
     — both run similarity.power_direction on the same corpus with the
     same (dim=64, iters=3, qscale=1024, vmax=4096) parameters, so a
     session running both pays for the checkpoint + mean + 3 iteration
-    aggregates once (the _semantic_pairs_shared pattern). The base
-    frame inside the triple is already localCheckpoint-pinned by
-    power_direction; FIFO eviction drops the reference and lets the
-    ContextCleaner reclaim the checkpoint blocks."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _DIRECTION_CACHE.get(key)
-    if got is None:
-        while len(_DIRECTION_CACHE) >= 2:
-            _DIRECTION_CACHE.pop(next(iter(_DIRECTION_CACHE)))
-        emb = load_table(spark, sf_dir, "embeddings")
-        got = similarity.power_direction(
-            emb, "vec_id", "embedding", 64, 3, 1024, 4096
-        )
-        _DIRECTION_CACHE[key] = got
-    return got
+    aggregates once. The base frame inside the triple is already
+    localCheckpoint-pinned by power_direction; eviction drops the
+    reference and lets the ContextCleaner reclaim the checkpoint
+    blocks."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    return similarity.power_direction(
+        emb, "vec_id", "embedding", 64, 3, 1024, 4096
+    )
 
 
 @register("q109_pca_projection", _pca_sql())
@@ -3979,31 +3953,8 @@ def q134_transcode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).mapInPandas(sums, sum_schema)
 
 
-_FIXTURE_STORE_CACHE: dict = {}
-
-
-def _fixture_store(spark: SparkSession, name: str, build):
-    """Get-or-build for the q135-q138 prover fixture stores: one tempdir
-    per (session, prover), built by ``build(root)``. bench.py triggers
-    every builder through :func:`prewarm_shared` so store construction
-    is billed ONCE as an explicit ``shared:*`` line and the measured
-    queries time only the read+decode they certify (the r10 verdict's
-    spread_steady 0.6-0.9 on these provers was tempdir construction
-    noise drowning the 2x regression bar)."""
-    import os as _os
-    import tempfile as _tempfile
-
-    key = (spark.sparkContext.applicationId, name)
-    got = _FIXTURE_STORE_CACHE.get(key)
-    if got is not None and _os.path.isdir(got):
-        return got
-    root = _tempfile.mkdtemp(prefix=f"intake_spark_{name}_")
-    build(root)
-    _FIXTURE_STORE_CACHE[key] = root
-    return root
-
-
-def _q135_store(spark: SparkSession) -> "tuple[str, str]":
+@shared_table("shared:q135_store")
+def _q135_store(spark: SparkSession, root: str) -> "tuple[str, str]":
     """Session-cached q135 fixture stores: one complex-packed GRIB2
     message with missing-value management, one sharded zarr v3 array.
     Deterministic content — see q135's docstring for the series."""
@@ -4017,68 +3968,62 @@ def _q135_store(spark: SparkSession) -> "tuple[str, str]":
     from intake_spark.compress import crc32c
     from intake_spark.sci import encode_grib2_complex
 
-    def build(root):
-        # GRIB2: 32x32 grid, v(i) = (i*37+11) % 251, missing at i%97==5
-        i = np.arange(1024)
-        gvals = ((i * 37 + 11) % 251).astype(float).reshape(32, 32)
-        gmask = (i % 97 == 5).reshape(32, 32)
-        with open(_os.path.join(root, "field.grib2"), "wb") as f:
-            f.write(encode_grib2_complex(gvals, sd_order=2, mvm=1,
-                                         miss1=gmask))
+    # GRIB2: 32x32 grid, v(i) = (i*37+11) % 251, missing at i%97==5
+    i = np.arange(1024)
+    gvals = ((i * 37 + 11) % 251).astype(float).reshape(32, 32)
+    gmask = (i % 97 == 5).reshape(32, 32)
+    with open(_os.path.join(root, "field.grib2"), "wb") as f:
+        f.write(encode_grib2_complex(gvals, sd_order=2, mvm=1,
+                                     miss1=gmask))
 
-        # zarr v3 sharded: 1024 int64, shards of 256, inner chunks of
-        # 64, gzip-compressed inner chunks, crc32c-protected end index
-        zvals = ((i * 53 + 7) % 241).astype("<i8")
-        zroot = _os.path.join(root, "arr.zarr")
-        _os.makedirs(f"{zroot}/c", exist_ok=True)
-        meta = {
-            "zarr_format": 3, "node_type": "array", "shape": [1024],
-            "data_type": "int64",
-            "chunk_grid": {"name": "regular",
-                           "configuration": {"chunk_shape": [256]}},
-            "chunk_key_encoding": {"name": "default",
-                                   "configuration": {"separator": "/"}},
-            "fill_value": 0,
-            "codecs": [{
-                "name": "sharding_indexed",
-                "configuration": {
-                    "chunk_shape": [64],
-                    "codecs": [
-                        {"name": "bytes",
-                         "configuration": {"endian": "little"}},
-                        {"name": "gzip", "configuration": {"level": 5}},
-                    ],
-                    "index_codecs": [
-                        {"name": "bytes",
-                         "configuration": {"endian": "little"}},
-                        {"name": "crc32c"},
-                    ],
-                    "index_location": "end",
-                },
-            }],
-        }
-        with open(f"{zroot}/zarr.json", "w") as f:
-            _json.dump(meta, f)
-        for s in range(4):
-            pieces, index, pos = [], [], 0
-            for k in range(4):
-                raw = _gzip.compress(
-                    zvals[s * 256 + k * 64 : s * 256 + (k + 1) * 64]
-                    .tobytes()
-                )
-                index.append((pos, len(raw)))
-                pieces.append(raw)
-                pos += len(raw)
-            idx = b"".join(_struct.pack("<QQ", o, ln) for o, ln in index)
-            idx += _struct.pack("<I", crc32c(idx))
-            with open(f"{zroot}/c/{s}", "wb") as f:
-                f.write(b"".join(pieces) + idx)
-
-    root = _fixture_store(spark, "q135", build)
-    import os as _os
-
-    return (_os.path.join(root, "field.grib2"),
-            _os.path.join(root, "arr.zarr"))
+    # zarr v3 sharded: 1024 int64, shards of 256, inner chunks of
+    # 64, gzip-compressed inner chunks, crc32c-protected end index
+    zvals = ((i * 53 + 7) % 241).astype("<i8")
+    zroot = _os.path.join(root, "arr.zarr")
+    _os.makedirs(f"{zroot}/c", exist_ok=True)
+    meta = {
+        "zarr_format": 3, "node_type": "array", "shape": [1024],
+        "data_type": "int64",
+        "chunk_grid": {"name": "regular",
+                       "configuration": {"chunk_shape": [256]}},
+        "chunk_key_encoding": {"name": "default",
+                               "configuration": {"separator": "/"}},
+        "fill_value": 0,
+        "codecs": [{
+            "name": "sharding_indexed",
+            "configuration": {
+                "chunk_shape": [64],
+                "codecs": [
+                    {"name": "bytes",
+                     "configuration": {"endian": "little"}},
+                    {"name": "gzip", "configuration": {"level": 5}},
+                ],
+                "index_codecs": [
+                    {"name": "bytes",
+                     "configuration": {"endian": "little"}},
+                    {"name": "crc32c"},
+                ],
+                "index_location": "end",
+            },
+        }],
+    }
+    with open(f"{zroot}/zarr.json", "w") as f:
+        _json.dump(meta, f)
+    for s in range(4):
+        pieces, index, pos = [], [], 0
+        for k in range(4):
+            raw = _gzip.compress(
+                zvals[s * 256 + k * 64 : s * 256 + (k + 1) * 64]
+                .tobytes()
+            )
+            index.append((pos, len(raw)))
+            pieces.append(raw)
+            pos += len(raw)
+        idx = b"".join(_struct.pack("<QQ", o, ln) for o, ln in index)
+        idx += _struct.pack("<I", crc32c(idx))
+        with open(f"{zroot}/c/{s}", "wb") as f:
+            f.write(b"".join(pieces) + idx)
+    return _os.path.join(root, "field.grib2"), zroot
 
 
 @register(
@@ -4159,7 +4104,8 @@ def q135_reader_longtail(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.unionByName(z)
 
 
-def _q136_store(spark: SparkSession) -> "tuple[str, str]":
+@shared_table("shared:q136_store")
+def _q136_store(spark: SparkSession, root: str) -> "tuple[str, str]":
     """Session-cached q136 fixture stores: a two-commit Delta table
     (v0 overwrite + v1 append, v(i) = (i*41+13) % 199) and a DICOM
     Part-10 file with one encapsulated JPEG-LS frame
@@ -4171,24 +4117,21 @@ def _q136_store(spark: SparkSession) -> "tuple[str, str]":
     from intake_spark.output import to_delta
     from intake_spark.sci import dicom_bytes
 
-    def build(root):
-        droot = _os.path.join(root, "tbl")
-        base = spark.range(1024).selectExpr(
-            "id AS i", "(id * 41 + 13) % 199 AS v"
-        )
-        to_delta(base, droot, mode="overwrite")
-        extra = spark.range(1024, 2048).selectExpr(
-            "id AS i", "(id * 41 + 13) % 199 AS v"
-        )
-        to_delta(extra, droot, mode="append")
+    droot = _os.path.join(root, "tbl")
+    base = spark.range(1024).selectExpr(
+        "id AS i", "(id * 41 + 13) % 199 AS v"
+    )
+    to_delta(base, droot, mode="overwrite")
+    extra = spark.range(1024, 2048).selectExpr(
+        "id AS i", "(id * 41 + 13) % 199 AS v"
+    )
+    to_delta(extra, droot, mode="append")
 
-        frame = ((np.arange(1024) * 29 + 3) % 1021).astype(np.uint16)
-        with open(_os.path.join(root, "frame.dcm"), "wb") as f:
-            f.write(dicom_bytes([frame.reshape(32, 32)],
-                                transfer_syntax="1.2.840.10008.1.2.4.80"))
-
-    root = _fixture_store(spark, "q136", build)
-    return _os.path.join(root, "tbl"), _os.path.join(root, "frame.dcm")
+    frame = ((np.arange(1024) * 29 + 3) % 1021).astype(np.uint16)
+    with open(_os.path.join(root, "frame.dcm"), "wb") as f:
+        f.write(dicom_bytes([frame.reshape(32, 32)],
+                            transfer_syntax="1.2.840.10008.1.2.4.80"))
+    return droot, _os.path.join(root, "frame.dcm")
 
 
 @register(
@@ -4258,10 +4201,8 @@ def q136_lakehouse_dicom(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d0.unionByName(d1).unionByName(dcm)
 
 
-_Q137_CACHE: dict = {}
-
-
-def _q137_store(spark: SparkSession) -> tuple:
+@shared_table("shared:q137_store")
+def _q137_store(spark: SparkSession, root: str) -> tuple:
     """Session-cached q137 fixtures: the npy-decoded chunk frame
     (localCheckpoint-ed — the executor decode runs once per session)
     plus the four sink outputs (netcdf3/hdf5/tiff/avro) written from it.
@@ -4269,7 +4210,6 @@ def _q137_store(spark: SparkSession) -> tuple:
     bench bills the write once (shared:*) and the query times the four
     READER scans it oracles."""
     import os as _os
-    import tempfile as _tempfile
 
     import numpy as np
 
@@ -4277,15 +4217,6 @@ def _q137_store(spark: SparkSession) -> tuple:
     from intake_spark import output
     from intake_spark.arrays import NumpyArrayReader
 
-    key = spark.sparkContext.applicationId
-    got = _Q137_CACHE.get(key)
-    # same staleness re-check as _fixture_store: if a /tmp reaper
-    # removed the store mid-session, rebuild instead of handing out
-    # dead paths for the rest of the application
-    if got is not None and _os.path.isdir(_os.path.dirname(got[2])):
-        return got
-
-    root = _tempfile.mkdtemp(prefix="intake_spark_q137_")
     arr = ((np.arange(1024) * 31 + 5) % 223).astype("<f8").reshape(32, 32)
     npy = _os.path.join(root, "a.npy")
     np.save(npy, arr)
@@ -4302,9 +4233,7 @@ def _q137_store(spark: SparkSession) -> tuple:
     avro_dir = _os.path.join(root, "rec.avro")
     output.to_avro(rec, avro_dir)
 
-    got = (chunks, nc_desc, h5_desc.url, tif_desc.url, avro_dir)
-    _Q137_CACHE[key] = got
-    return got
+    return chunks, nc_desc, h5_desc.url, tif_desc.url, avro_dir
 
 
 @register(
@@ -4373,7 +4302,8 @@ def q137_array_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _q138_store(spark: SparkSession) -> str:
+@shared_table("shared:q138_store")
+def _q138_store(spark: SparkSession, root: str) -> str:
     """Session-cached q138 fixture: a partitioned Iceberg v1 table with
     two snapshots (overwrite + append), v(i) = (i*47+19) % 193,
     identity-partitioned on even/odd."""
@@ -4381,20 +4311,18 @@ def _q138_store(spark: SparkSession) -> str:
 
     from intake_spark.output import to_iceberg
 
-    def build(root_dir):
-        tbl = _os.path.join(root_dir, "tbl")
-        base = spark.range(1024).selectExpr(
-            "id AS i", "CAST((id * 47 + 19) % 193 AS BIGINT) AS v",
-            "CASE WHEN id % 2 = 0 THEN 'even' ELSE 'odd' END AS part",
-        )
-        to_iceberg(base, tbl, mode="overwrite", partition_by=["part"])
-        extra = spark.range(1024, 2048).selectExpr(
-            "id AS i", "CAST((id * 47 + 19) % 193 AS BIGINT) AS v",
-            "CASE WHEN id % 2 = 0 THEN 'even' ELSE 'odd' END AS part",
-        )
-        to_iceberg(extra, tbl, mode="append", partition_by=["part"])
-
-    return _os.path.join(_fixture_store(spark, "q138", build), "tbl")
+    tbl = _os.path.join(root, "tbl")
+    base = spark.range(1024).selectExpr(
+        "id AS i", "CAST((id * 47 + 19) % 193 AS BIGINT) AS v",
+        "CASE WHEN id % 2 = 0 THEN 'even' ELSE 'odd' END AS part",
+    )
+    to_iceberg(base, tbl, mode="overwrite", partition_by=["part"])
+    extra = spark.range(1024, 2048).selectExpr(
+        "id AS i", "CAST((id * 47 + 19) % 193 AS BIGINT) AS v",
+        "CASE WHEN id % 2 = 0 THEN 'even' ELSE 'odd' END AS part",
+    )
+    to_iceberg(extra, tbl, mode="append", partition_by=["part"])
+    return tbl
 
 
 @register(
@@ -4559,10 +4487,8 @@ def q139_stream_guard_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q140_ROOT_CACHE: dict = {}
-
-
-def _q140_corpus_root(spark: SparkSession, sf_dir: str) -> str:
+@shared_table("shared:q140_store")
+def _q140_corpus_root(spark: SparkSession, sf_dir: str, root: str) -> str:
     """Build (once per session per sf_dir) the q140 mixed-format corpus
     tree: per sampled document six tiny files — csv, gzipped csv,
     parquet, png, wav, npy — written ON EXECUTORS via mapInPandas into
@@ -4571,16 +4497,10 @@ def _q140_corpus_root(spark: SparkSession, sf_dir: str) -> str:
     tree. On a real cluster the tree would live on shared storage; in
     local mode the shared tempdir plays that role."""
     import os as _os
-    import tempfile as _tempfile
 
     from intake_spark.session import ensure_py_deps
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _Q140_ROOT_CACHE.get(key)
-    if got is not None and _os.path.isdir(got):
-        return got
     ensure_py_deps(spark)
-    root = _tempfile.mkdtemp(prefix="intake_spark_q140_")
     for sub in ("csv", "csvgz", "parquet", "png", "wav", "npy"):
         _os.makedirs(_os.path.join(root, sub), exist_ok=True)
 
@@ -4637,7 +4557,6 @@ def _q140_corpus_root(spark: SparkSession, sf_dir: str) -> str:
     docs.repartition(par).mapInPandas(write_files, "n long").agg(
         F.sum("n")
     ).collect()
-    _Q140_ROOT_CACHE[key] = root
     return root
 
 
@@ -4685,10 +4604,8 @@ def q140_corpus_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q141_SRC_CACHE: dict = {}
-
-
-def _q141_store(spark: SparkSession, sf_dir: str) -> str:
+@shared_table("shared:q141_store")
+def _q141_store(spark: SparkSession, sf_dir: str, root: str) -> str:
     """Session-cached q141 stream source: the sampled documents plus an
     exact-text twin per document (twin id = 2*doc_id + 1, base id =
     2*doc_id), written as ONE parquet file so the available-now replay
@@ -4696,15 +4613,8 @@ def _q141_store(spark: SparkSession, sf_dir: str) -> str:
     sorts ids ascending within a batch, so each base claims its buckets
     before its twin arrives)."""
     import os as _os
-    import tempfile as _tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _Q141_SRC_CACHE.get(key)
-    if got is not None and _os.path.isdir(got):
-        return got
-    root = _os.path.join(
-        _tempfile.mkdtemp(prefix="intake_spark_q141_"), "src"
-    )
+    src = _os.path.join(root, "src")
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 10 == 1)
@@ -4712,9 +4622,8 @@ def _q141_store(spark: SparkSession, sf_dir: str) -> str:
     )
     base = docs.select((2 * F.col("did")).alias("id"), "text")
     twin = docs.select((2 * F.col("did") + 1).alias("id"), "text")
-    base.unionByName(twin).coalesce(1).write.parquet(root)
-    _Q141_SRC_CACHE[key] = root
-    return root
+    base.unionByName(twin).coalesce(1).write.parquet(src)
+    return src
 
 
 @register(

@@ -172,7 +172,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     plan, every action still reads the parquet from disk, and the cache
     dies with the process (no cross-run persistence). Bounded FIFO like
     every other session cache; keyed by applicationId so a restarted
-    context never hands out plans bound to a dead session.
+    context never hands out plans bound to a dead session, and by the
+    table path's mtime so a table rewritten in place (an overwrite
+    replaces its part files) is listed again instead of served from a
+    plan that names deleted files.
 
     ``events.parquet`` may store TIMESTAMP(NANOS), which Spark's parquet
     reader rejects; read nanos as long (legacy conf) and, when ``ts`` comes
@@ -180,7 +183,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     DuckDB produces when casting ns→µs. Files already written with µs
     timestamps pass through untouched.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, name)
+    try:
+        mtime = os.stat(f"{sf_dir}/{name}.parquet").st_mtime_ns
+    except OSError:
+        # not a local path (or missing): no token, and a missing table
+        # still fails in spark.read with Spark's own error
+        mtime = None
+    key = (spark.sparkContext.applicationId, sf_dir, name, mtime)
     got = _SCAN_CACHE.get(key)
     if got is not None:
         return got

@@ -268,11 +268,11 @@ def test_q109_q112_share_direction_cache(spark, tmp_path):
     the second consumer gets the SAME triple object back."""
     from intake_spark.llm import queries as Q
 
-    Q._DIRECTION_CACHE.clear()
+    Q._SHARED_BUILT.pop("shared:direction", None)
     t1 = Q._direction_shared(spark, "/root/testdata/sf0.001")
     t2 = Q._direction_shared(spark, "/root/testdata/sf0.001")
     assert t1 is t2
-    assert len(Q._DIRECTION_CACHE) == 1
+    assert len(Q._SHARED_BUILT["shared:direction"]) == 1
 
 
 def test_kmeans_fit_matches_pure_python_replay(spark):
