@@ -29,6 +29,7 @@ from pyspark.sql import types as T
 
 from intake_spark import datatypes as dt
 from intake_spark.readers import BaseReader
+from intake_spark.session import local_frame
 
 CHUNK_SCHEMA = T.StructType(
     [
@@ -92,8 +93,8 @@ class NumpyArrayReader(BaseReader):
             (i, start, min(start + rows_per_chunk, n0))
             for i, start in enumerate(range(0, n0, rows_per_chunk))
         ]
-        mdf = spark.createDataFrame(
-            manifest, "chunk_id long, row_start long, row_end long"
+        mdf = local_frame(
+            spark, manifest, "chunk_id long, row_start long, row_end long"
         )
 
         shape_l = list(shape)
@@ -159,7 +160,7 @@ class NPZReader(BaseReader):
             "shape": list(shape),
             "values": [float(v) for v in vals],
         }
-        return spark.createDataFrame([row], schema=CHUNK_SCHEMA)
+        return local_frame(spark, [row], schema=CHUNK_SCHEMA)
 
 
 def elementwise(df: DataFrame, expr: str) -> DataFrame:
@@ -370,7 +371,7 @@ class NumpyTextReader(BaseReader):
             F.sum(F.expr("CAST(exists(_vals, v -> v IS NULL) AS BIGINT)")).alias("bad"),
         ).collect()[0]
         if tot.n == 0:
-            return spark.createDataFrame([], CHUNK_SCHEMA)
+            return local_frame(spark, [], CHUNK_SCHEMA)
         if tot.wmin != tot.wmax:
             raise ValueError(
                 f"ragged rows: widths {tot.wmin}..{tot.wmax} (np.loadtxt "

@@ -20,6 +20,7 @@ from pyspark.sql import types as T
 
 from intake_spark import datatypes as dt
 from intake_spark.readers import BaseReader
+from intake_spark.session import local_frame
 
 
 class FASTA(dt.FileData):
@@ -355,10 +356,10 @@ class BigWigReader(BaseReader):
             {"chroms": sorted(chroms.values()), "n_blocks": len(leaves)}
         )
         if not leaves:
-            return spark.createDataFrame([], _BIGWIG_SCHEMA)
+            return local_frame(spark, [], _BIGWIG_SCHEMA)
         ensure_py_deps(spark)
         compressed = hdr["compressed"]
-        mdf = spark.createDataFrame(leaves, "blk_off long, blk_len long")
+        mdf = local_frame(spark, leaves, "blk_off long, blk_len long")
         if len(leaves) > 1:
             mdf = mdf.repartition(min(len(leaves), spark.sparkContext.defaultParallelism))
 
@@ -516,7 +517,7 @@ class DCDReader(BaseReader):
         )
         idxs = list(range(0, int(n), max(1, frame_stride)))
         manifest = [(i, hdr["first"] + i * hdr["frame_bytes"]) for i in idxs]
-        mdf = spark.createDataFrame(manifest, "frame int, offset long")
+        mdf = local_frame(spark, manifest, "frame int, offset long")
         if len(manifest) > 1:
             mdf = mdf.repartition(
                 min(len(manifest), spark.sparkContext.defaultParallelism)
@@ -789,7 +790,7 @@ class XTCReader(BaseReader):
         if frames is not None:
             manifest = manifest[:frames]
         self.data.metadata.update({"natoms": natoms, "nframes": len(manifest)})
-        mdf = spark.createDataFrame(manifest, "frame int, offset long, nbytes long")
+        mdf = local_frame(spark, manifest, "frame int, offset long, nbytes long")
         if len(manifest) > 1:
             mdf = mdf.repartition(
                 min(len(manifest), spark.sparkContext.defaultParallelism)
@@ -931,8 +932,8 @@ class TRRReader(BaseReader):
         self.data.metadata.update(
             {"nframes": len(manifest), "natoms": manifest[0][3] if manifest else 0}
         )
-        mdf = spark.createDataFrame(
-            manifest,
+        mdf = local_frame(
+            spark, manifest,
             "frame int, step int, time_ps double, natoms int, real int, "
             "data_off long, skip long, x_size long, v_size long, f_size long",
         )

@@ -11,6 +11,19 @@ run — measured: a 145-query bench pass re-paid the 32-worker import
 storm after every streaming query, inflating unrelated Python-stage
 queries 2-5x (q136 1.1 s warm -> 4-7 s post-churn).
 
+One daemon per session. Spark keys its worker daemons by the Python
+executable, the worker and daemon modules and the worker environment,
+and its SQL Python runners (``mapInPandas`` and the pandas UDFs) add
+``SPARK_SIMPLIFIED_TRACEBACK=1`` to that environment where the runner
+of a pickled Python RDD does not. A session that runs both kinds of
+task therefore starts two daemons, and each pays these imports (~1 s,
+on the first task that needs it). The engine builds its driver-local
+frames through ``session.local_frame``, as Arrow local relations that
+no Python worker touches, so the SQL runners' daemon is the only one
+and stderr shows one ``engaged`` line per session. (The readers that
+infer a schema from dict rows still plan a pickled Python RDD, and a
+session that uses one starts the second daemon.)
+
 ``intake_spark.session.get_session`` sets this module as the daemon
 only when the package is plainly filesystem-importable by a fresh
 ``python -m`` (local mode with PYTHONPATH exported) — on a cluster

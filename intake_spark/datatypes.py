@@ -584,11 +584,18 @@ def recommend_corpus(
     EXECUTION SEMANTICS: without ``cache_path`` this function is LAZY —
     it lists a directory root driver-side (or plans the executor walk)
     and returns one plan; no file is sniffed and no Spark job runs until
-    an action. The plan is two shuffles and two ``mapInPandas`` passes,
-    both with an explicit partition count so adaptive execution cannot
-    coalesce the sniffing into one task, and nothing in it is
-    materialized: an executor loss recomputes the lost partitions from
-    the listing like any other lineage. With ``cache_path`` the new
+    an action. A driver-side listing (walked root or list of paths) is
+    an Arrow local relation (:func:`~intake_spark.session.local_frame`):
+    it lives in the plan, so no Python worker pickles it and the only
+    Python workers are the sniffing passes'. The plan is two shuffles
+    and two ``mapInPandas`` passes, both with an explicit partition
+    count so adaptive execution cannot coalesce the sniffing into one
+    task. The first shuffle is keyed by the ``dir``/``ext``
+    EXPRESSIONS, and the columns are computed after it: a projection
+    directly on the local relation would be evaluated on the driver,
+    row by row, at every planning. Nothing in the plan is materialized:
+    an executor loss recomputes the lost partitions from the listing
+    like any other lineage. With ``cache_path`` the new
     verdicts are appended at call time (one write) and the returned
     DataFrame reads the registry.
     """
@@ -597,7 +604,7 @@ def recommend_corpus(
     from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
-    from intake_spark.session import ensure_py_deps
+    from intake_spark.session import ensure_py_deps, local_frame
 
     # BEFORE any mapInPandas wrap: pyspark snapshots the py-includes list
     # at UDF wrap time, so executors must already have the package
@@ -613,19 +620,20 @@ def recommend_corpus(
                      for r, _, files in os.walk(source) for f in files]
         else:
             paths = list(source)
-        listing = spark.createDataFrame([(p,) for p in paths], "path string")
+        listing = local_frame(spark, [(p,) for p in paths], "path string")
 
-    base = listing.select(
-        "path",
-        F.regexp_replace("path", "/[^/]*$", "").alias("dir"),
-        F.lower(
-            F.regexp_extract(F.element_at(F.split("path", "/"), -1),
-                             r"\.(.*)$", 1)
-        ).alias("ext"),
+    # dir/ext are computed after the first exchange, never in a
+    # projection directly on the listing: on a local relation Catalyst
+    # would evaluate that projection on the driver, row by row, at
+    # every planning (local_frame's caveat)
+    dir_ = F.regexp_replace("path", "/[^/]*$", "")
+    ext_ = F.lower(
+        F.regexp_extract(F.element_at(F.split("path", "/"), -1),
+                         r"\.(.*)$", 1)
     )
-    todo = base
+    todo = listing
     if cache_path and os.path.exists(cache_path):
-        todo = base.join(
+        todo = listing.join(
             spark.read.parquet(cache_path).select("path"), "path", "left_anti"
         )
 
@@ -701,8 +709,9 @@ def recommend_corpus(
     # though each pending row costs a head_bytes read downstream
     n_parts = spark.sparkContext.defaultParallelism
     fresh = (
-        todo.withColumn("_h", F.xxhash64("path"))
-        .repartition(n_parts, "dir", "ext")
+        todo.repartition(n_parts, dir_, ext_)
+        .select("path", dir_.alias("dir"), ext_.alias("ext"),
+                F.xxhash64("path").alias("_h"))
         .mapInPandas(_triage, verdict_schema)
         .repartition(n_parts, "path")
         .mapInPandas(_sniff_pending, verdict_schema)
@@ -718,8 +727,9 @@ def recommend_corpus(
         return (
             spark.read.parquet(cache_path)
             .dropDuplicates(["path"])
-            .join(base, "path")  # drop verdicts for vanished paths
-            .select(*cols)
+            .join(listing, "path")  # drop verdicts for vanished paths
+            .select("path", dir_.alias("dir"), ext_.alias("ext"),
+                    "datatype", "score", "via")
         )
     return fresh
 
@@ -737,7 +747,7 @@ def distributed_walk(spark, root: str):
 
     from pyspark.sql import functions as F
 
-    from intake_spark.session import ensure_py_deps
+    from intake_spark.session import ensure_py_deps, local_frame
 
     ensure_py_deps(spark)
     top_files, top_dirs = [], []
@@ -768,13 +778,11 @@ def distributed_walk(spark, root: str):
                     out.extend(_os.path.join(r, f) for f in files)
             yield pd.DataFrame({"path": out})
 
-    parts = [
-        spark.createDataFrame([(p,) for p in top_files], "path string")
-    ]
+    parts = [local_frame(spark, [(p,) for p in top_files], "path string")]
     if top_dirs:
         n = max(1, min(len(top_dirs),
                        spark.sparkContext.defaultParallelism * 2))
-        sub = spark.createDataFrame([(d,) for d in top_dirs], "dir string")
+        sub = local_frame(spark, [(d,) for d in top_dirs], "dir string")
         parts.append(
             sub.repartition(n, "dir").mapInPandas(walk, "path string")
         )

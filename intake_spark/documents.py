@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 
 from intake_spark import datatypes as dt
 from intake_spark.readers import BaseReader
+from intake_spark.session import local_frame
 
 
 class Markdown(dt.FileData):
@@ -734,7 +735,8 @@ class ONNXMetadataReader(BaseReader):
                                     meta[key].append(q.decode("utf-8", "replace"))
         except (IndexError, ValueError):
             pass  # truncated at max_bytes mid-message: report what we walked
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(meta["ir_version"], meta["producer"], meta["opset"],
               meta["graph_name"], meta["n_nodes"], meta["inputs"], meta["outputs"])],
             "ir_version long, producer string, opset array<long>, "
@@ -763,8 +765,8 @@ class TorchScriptMetadataReader(BaseReader):
                     break
             total = sum(i.file_size for i in z.infolist())
             n_tensors = sum(1 for n in names if "/data/" in n and not n.endswith("/"))
-        return spark.createDataFrame(
-            [(version, sorted(names), total, n_tensors)],
+        return local_frame(
+            spark, [(version, sorted(names), total, n_tensors)],
             "format_version string, members array<string>, total_bytes long, n_tensors long",
         )
 
@@ -833,8 +835,8 @@ class JoblibMetadataReader(BaseReader):
         for c in classes:
             if c not in seen:
                 seen.append(c)
-        return spark.createDataFrame(
-            [(protocol, seen, n_ops, len(blob))],
+        return local_frame(
+            spark, [(protocol, seen, n_ops, len(blob))],
             "protocol long, classes array<string>, n_ops long, bytes_scanned long",
         )
 

@@ -18,6 +18,7 @@ from pyspark.sql import types as T
 
 from intake_spark import datatypes as dt
 from intake_spark.readers import BaseReader
+from intake_spark.session import local_frame
 
 
 class KML(dt.FileData):
@@ -215,7 +216,7 @@ class MBTilesReader(BaseReader):
                 rows = con.execute("SELECT name, value FROM metadata").fetchall()
             finally:
                 con.close()
-            return spark.createDataFrame(rows or [("", "")], "name string, value string")
+            return local_frame(spark, rows or [("", "")], "name string, value string")
 
         ensure_py_deps(spark)
         where = f" WHERE zoom_level = {int(zoom)}" if zoom is not None else ""
@@ -260,7 +261,7 @@ class MBTilesReader(BaseReader):
                     "zoom_level int, tile_column int, tile_row int, tile_data binary"
                 )
                 if not bounds and not n_nulls:
-                    return spark.createDataFrame([], tile_schema)
+                    return local_frame(spark, [], tile_schema)
                 windows = [
                     bounds[i]
                     + (bounds[i + 1] if i + 1 < len(bounds) else (None, None, None))
@@ -273,8 +274,8 @@ class MBTilesReader(BaseReader):
                     # OFFSET path (NULL-keyed rows are broken-join debris
                     # but they belong to the caller, not to the pager)
                     windows.append((None, None, None, None, None, None, 1))
-                wdf = spark.createDataFrame(
-                    windows,
+                wdf = local_frame(
+                    spark, windows,
                     "lo_z long, lo_c long, lo_r long, hi_z long, hi_c long, hi_r long, "
                     "null_win long",
                 )
@@ -344,15 +345,15 @@ class MBTilesReader(BaseReader):
             if con is not None:
                 con.close()
         if lo_hi is None or lo_hi[0] is None:
-            return spark.createDataFrame(
-                [], "zoom_level int, tile_column int, tile_row int, tile_data binary"
+            return local_frame(
+                spark, [], "zoom_level int, tile_column int, tile_row int, tile_data binary"
             )
         lo, hi = lo_hi
         ranges = [
             (start, min(start + rows_per_task - 1, hi))
             for start in range(lo, hi + 1, rows_per_task)
         ]
-        mdf = spark.createDataFrame(ranges, "lo long, hi long")
+        mdf = local_frame(spark, ranges, "lo long, hi long")
         if len(ranges) > 1:
             mdf = mdf.repartition(min(len(ranges), spark.sparkContext.defaultParallelism))
 
@@ -516,7 +517,7 @@ class PMTilesReader(BaseReader):
         manifest = [
             (tid, data_off + off, ln, max(run, 1)) for tid, off, ln, run in entries
         ]
-        mdf = spark.createDataFrame(manifest, "tid long, off long, len long, run long")
+        mdf = local_frame(spark, manifest, "tid long, off long, len long, run long")
         if len(manifest) > 1:
             mdf = mdf.repartition(min(1 + len(manifest) // batch, spark.sparkContext.defaultParallelism))
 
@@ -805,7 +806,7 @@ class OSMPBFReader(BaseReader):
         manifest = [
             (off, ln) for btype, off, ln in _osm_blob_manifest(url) if btype == "OSMData"
         ]
-        mdf = spark.createDataFrame(manifest, "off long, len long")
+        mdf = local_frame(spark, manifest, "off long, len long")
         if len(manifest) > 1:
             mdf = mdf.repartition(min(len(manifest), spark.sparkContext.defaultParallelism))
 
@@ -976,13 +977,13 @@ class ShapefileReader(BaseReader):
             ]
         )
         if not index:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         ensure_py_deps(spark)
         ranges = [
             (start, min(start + records_per_task, len(index)))
             for start in range(0, len(index), records_per_task)
         ]
-        mdf = spark.createDataFrame(ranges, "rec_start long, rec_end long")
+        mdf = local_frame(spark, ranges, "rec_start long, rec_end long")
         if len(ranges) > 1:
             mdf = mdf.repartition(min(len(ranges), spark.sparkContext.defaultParallelism))
 
@@ -1166,14 +1167,14 @@ class GeoPackageReader(BaseReader):
             ]
         )
         if lo_hi is None or lo_hi[0] is None:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         ensure_py_deps(spark)
         lo, hi = lo_hi
         ranges = [
             (start, min(start + rows_per_task - 1, hi))
             for start in range(lo, hi + 1, rows_per_task)
         ]
-        mdf = spark.createDataFrame(ranges, "lo long, hi long")
+        mdf = local_frame(spark, ranges, "lo long, hi long")
         if len(ranges) > 1:
             mdf = mdf.repartition(min(len(ranges), spark.sparkContext.defaultParallelism))
         qgeom = geom_col.replace('"', '""')
@@ -1586,7 +1587,7 @@ class FlatGeobufReader(BaseReader):
             ]
         )
         if not index:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         ensure_py_deps(spark)
         # each manifest ROW carries only ITS slice of (offset, size) pairs
         # — capturing the whole index in the decode closure would ship the
@@ -1599,8 +1600,8 @@ class FlatGeobufReader(BaseReader):
             )
             for start in range(0, len(index), features_per_task)
         ]
-        mdf = spark.createDataFrame(
-            ranges, "rec_start long, offs array<long>, lens array<long>"
+        mdf = local_frame(
+            spark, ranges, "rec_start long, offs array<long>, lens array<long>"
         )
         if len(ranges) > 1:
             mdf = mdf.repartition(

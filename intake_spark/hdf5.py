@@ -29,6 +29,7 @@ import struct
 
 from intake_spark import datatypes as dt
 from intake_spark.readers import BaseReader
+from intake_spark.session import local_frame
 
 _SIG = b"\x89HDF\r\n\x1a\n"
 _UNDEF = 0xFFFFFFFFFFFFFFFF
@@ -490,8 +491,10 @@ def _chunked_h5_df(spark, url, dtype, shape, chunk_dims, filters, index, base, f
         for i, c0 in enumerate(range(0, shape[0], chunk_dims[0]))
     ]
     if not manifest:  # zero-length dataspace
-        return spark.createDataFrame([], CHUNK_SCHEMA)
-    mdf = spark.createDataFrame(manifest, ["chunk_id", "row_start", "chunks_json"])
+        return local_frame(spark, [], CHUNK_SCHEMA)
+    mdf = local_frame(
+        spark, manifest, "chunk_id long, row_start long, chunks_json string"
+    )
     np_dtype = np.dtype(dtype)
 
     def decode(batches):
@@ -577,8 +580,8 @@ class HDF5Reader(BaseReader):
             n = 1
             for s in shape:
                 n *= s
-            return spark.createDataFrame(
-                [(0, 0, shape, vals[:n].astype(np.float64).tolist())], CHUNK_SCHEMA
+            return local_frame(
+                spark, [(0, 0, shape, vals[:n].astype(np.float64).tolist())], CHUNK_SCHEMA
             )
         if layout[0] == "chunked":
             if layout[1] == _UNDEF:

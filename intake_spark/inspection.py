@@ -17,7 +17,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 
 from intake_spark.datatypes import recommend
-from intake_spark.session import get_session
+from intake_spark.session import get_session, local_frame
 
 
 def schema_report(df: DataFrame) -> dict[str, Any]:
@@ -244,7 +244,7 @@ def parquet_layout(spark, url: str) -> "object":
         "uncompressed_bytes long, has_stats boolean, null_count long, "
         "stat_min string, stat_max string"
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def plan_report(df) -> dict:

@@ -35,6 +35,7 @@ import zlib
 
 from intake_spark import datatypes as dt
 from intake_spark.readers import BaseReader
+from intake_spark.session import local_frame
 
 # --------------------------------------------------------------------------
 # Avro binary decoding (spec: https://avro.apache.org/docs/ spec — varint
@@ -474,8 +475,8 @@ class AvroOCFReader(BaseReader):
         cols = [f.name for f in spark_schema.fields]
         self.data.metadata.update({"avro_schema": schema0, "codec": codec0})
         ensure_py_deps(spark)
-        mdf = spark.createDataFrame(
-            manifest, "path string, codec string, wschema string, runs string"
+        mdf = local_frame(
+            spark, manifest, "path string, codec string, wschema string, runs string"
         )
 
         def decode(batches):
@@ -809,7 +810,7 @@ def delta_checkpoint(url: str, spark=None) -> int:
         # or a restarted stream re-appends every batch
         rows.append({"txn": {"appId": app_id, "version": int(app_v)}})
     ckpt_tmp = os.path.join(log, f"_ckpt_tmp_{version}")
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(ckpt_tmp)
+    local_frame(spark, rows, schema).coalesce(1).write.mode("overwrite").parquet(ckpt_tmp)
     part = next(
         f for f in os.listdir(ckpt_tmp) if f.endswith(".parquet")
     )
@@ -906,7 +907,7 @@ class DeltaLakeReader(BaseReader):
             return _delta_cm_rename(df, logical_schema) if mapped else df
 
         if not adds:
-            return spark.createDataFrame([], logical_schema)
+            return local_frame(spark, [], logical_schema)
         from urllib.parse import unquote
 
         # add.path is RFC 2396 URI-encoded per the Delta protocol
@@ -1312,8 +1313,8 @@ def _apply_delta_dvs(spark, base, dv_adds: list, root: str, col_order):
                 int(desc.get("cardinality") or -1),
             )
         )
-    dv_df = spark.createDataFrame(
-        rows,
+    dv_df = local_frame(
+        spark, rows,
         "__file string, dv_path string, inline binary, "
         "offset long, size long, card long",
     )
@@ -1482,7 +1483,7 @@ class IcebergTableReader(BaseReader):
             ]
         snap_id = snapshot_id if snapshot_id is not None else meta.get("current-snapshot-id")
         if snap_id in (None, -1):
-            return spark.createDataFrame([], spark_schema)
+            return local_frame(spark, [], spark_schema)
         snap = next(
             (s for s in meta["snapshots"] if s["snapshot-id"] == snap_id), None
         )
@@ -1586,7 +1587,7 @@ class IcebergTableReader(BaseReader):
             return df
 
         if not files:
-            return fin(spark.createDataFrame([], spark_schema))
+            return fin(local_frame(spark, [], spark_schema))
         if pos_dels or eq_dels:
             # v2 merge-on-read: delete files carry the row identities to
             # drop. Data files written by v2 writers embed every column,
@@ -2110,7 +2111,7 @@ def _apply_iceberg_deletes(
         (_spark_uri_path(_norm_file_uri(fp)), int(fseq.get(fp, 0)))
         for fp in files
     ]
-    seq_map = spark.createDataFrame(seq_rows, "__file string, __seq long")
+    seq_map = local_frame(spark, seq_rows, "__file string, __seq long")
     base = base.join(F.broadcast(seq_map), "__file", "left")
 
     if pos_dels:
@@ -2123,11 +2124,11 @@ def _apply_iceberg_deletes(
             (_norm_file_uri(rec), _spark_uri_path(_norm_file_uri(lp)))
             for lp, rec in frec.items()
         ]
-        rec_map = spark.createDataFrame(rec_rows, "__rp string, __tfile string")
+        rec_map = local_frame(spark, rec_rows, "__rp string, __tfile string")
         dseq_rows = [
             (_spark_uri_path(_norm_file_uri(p)), int(s)) for p, s in pos_dels
         ]
-        dseq_map = spark.createDataFrame(dseq_rows, "__dfile string, __dseq long")
+        dseq_map = local_frame(spark, dseq_rows, "__dfile string, __dseq long")
         pd_df = (
             spark.read.parquet(*sorted({p for p, _ in pos_dels}))
             .select(
@@ -2168,8 +2169,8 @@ def _apply_iceberg_deletes(
             dseq_rows = [
                 (_spark_uri_path(_norm_file_uri(p)), int(s)) for p, s in group
             ]
-            dseq_map = spark.createDataFrame(
-                dseq_rows, "__dfile string, __dseq long"
+            dseq_map = local_frame(
+                spark, dseq_rows, "__dfile string, __dseq long"
             )
             ed = (
                 spark.read.parquet(*sorted({p for p, _ in group}))

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from intake_spark.session import local_frame
+
 # Deterministic affine-hash family over a 32-bit md5-derived base hash.
 # a_j < 2^28 keeps a*h < 2^60 — no 64-bit overflow before the modulus.
 MINHASH_P = 4294967311  # prime > 2^32
@@ -617,8 +619,8 @@ def dup_groups(
         # schema crashed on string ids ONLY below the small_threshold
         # boundary while the distributed path handled them fine
         id_type = pairs.schema[a_col].dataType.simpleString()
-        return spark.createDataFrame(
-            [(n, find(n)) for n in sorted(nodes)],
+        return local_frame(
+            spark, [(n, find(n)) for n in sorted(nodes)],
             f"doc_id {id_type}, group_id {id_type}",
         )
 
@@ -1279,8 +1281,8 @@ def lsh_plan(
                 else:
                     fn += math.floor((1.0 - p) * scale)
             out.append((bands, rows_, bands * rows_, fp, fn, fp + fn))
-    return spark.createDataFrame(
-        out,
+    return local_frame(
+        spark, out,
         "bands long, rows long, signature long, fp_fx long, fn_fx long, "
         "err_fx long",
     )

@@ -24,7 +24,7 @@ from intake_spark.benchqueries import register
 from intake_spark.llm import assembly, dedup, multimodal, sampling, similarity, sketches, text
 from intake_spark.llm.dedup import MINHASH_P, _affine_coeffs
 from intake_spark.llm.text import LANG_ORDER, STOPWORDS
-from intake_spark.session import load_table
+from intake_spark.session import load_table, local_frame
 
 # --- shared SQL fragments -------------------------------------------------
 
@@ -1765,8 +1765,8 @@ def q88_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     merges = bpe.learn_bpe_merges(docs, n_merges=8)
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, pair_count long"
+    return local_frame(
+        spark, merges, "rank int, left string, right string, pair_count long"
     )
 
 
@@ -3297,8 +3297,8 @@ def q122_exact_corpus_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # small corpus two quantiles share a rank (n=5 puts 0.9 and 0.99 both
     # at rank 5) — the map form raised DUPLICATED_MAP_KEY, and the oracle
     # join emits one row PER q for a shared rank
-    tgt = spark.createDataFrame(
-        [(float(q), int(-(-q * n // 1))) for q in _Q122_QS], "q double, rk long"
+    tgt = local_frame(
+        spark, [(float(q), int(-(-q * n // 1))) for q in _Q122_QS], "q double, rk long"
     )
     return (
         ranked.join(F.broadcast(tgt), "rk")

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from intake_spark.session import local_frame
+
 # md5-derived 32-bit bucket in [0, 10^6): enough resolution for per-ppm
 # sampling rates while staying exactly representable in both engines
 _BUCKETS = 1_000_000
@@ -372,7 +374,7 @@ def unimax_budgets(
         remaining -= give
         out.append((lang, n_tok, cap, give))
     spark = df.sparkSession
-    return spark.createDataFrame(
-        sorted(out),
+    return local_frame(
+        spark, sorted(out),
         "lang string, n_tokens long, cap_tokens long, budget_tokens long",
     )

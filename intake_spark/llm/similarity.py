@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from intake_spark.session import local_frame
 from intake_spark.utils import trunc_div
 
 
@@ -345,8 +346,9 @@ def ivf_search(
     equi-join on ``ivf_list`` — candidate work is corpus/n_lists×n_probes
     per query instead of the full corpus."""
     spark = assigned.sparkSession
-    cdf = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)], ["ivf_list", "centroid"]
+    cdf = local_frame(
+        spark, [(i, c) for i, c in enumerate(centroids)],
+        "ivf_list long, centroid array<double>",
     )
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
@@ -535,8 +537,8 @@ def ivf_save(
         .sortBy("ivf_list")
         .saveAsTable(f"{table_prefix}_vectors")
     )
-    cdf = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+    cdf = local_frame(
+        spark, [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "ivf_list int, centroid array<double>",
     )
     cdf.write.mode("overwrite").saveAsTable(f"{table_prefix}_centroids")

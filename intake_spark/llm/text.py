@@ -1046,6 +1046,21 @@ _REP_TOP_THR = {2: 20, 3: 18, 4: 16}
 _REP_DUP_THR = {5: 15, 6: 14, 7: 13, 8: 12, 9: 11, 10: 10}
 
 
+def _pack_count_len(counts, lens):
+    """Pack int64 (count, length) arrays into one int64 key ordered by
+    count, then length: ``count << 32 | length``, unpacked with
+    ``key >> 32`` and ``key & 0xFFFFFFFF``. Both must be under 2^31 (an
+    Arrow string cell caps a document at 2 GiB, so gram counts and
+    lengths do); a larger value would overflow into the other half, so
+    it raises instead."""
+    if len(counts) and max(counts.max(), lens.max()) >= 1 << 31:
+        raise ValueError(
+            "top-gram pack: count or length >= 2^31 "
+            f"(max count {counts.max()}, max length {lens.max()})"
+        )
+    return counts * (1 << 32) + lens
+
+
 def _rep_stats_batch(ids, texts, np, pd):
     """One batch of the vectorized Gopher repetition counters — the
     numpy twin of the HOF expression stack, bit-identical by
@@ -1123,9 +1138,7 @@ def _rep_stats_batch(ids, texts, np, pd):
             if n <= 4:
                 # value = count x gram char length; ties on (count, len)
                 # tie on the product, so no string tie-break is needed.
-                # Packing is safe: an Arrow string cell caps a document
-                # at 2 GiB, so count and length both sit under 2^31.
-                key = run_counts * (1 << 32) + rlen
+                key = _pack_count_len(run_counts, rlen)
                 best = np.zeros(N, dtype=np.int64)
                 np.maximum.at(best, sdoc[run_first], key)
                 out[f"top{n}_chars"] = (best >> 32) * (best & 0xFFFFFFFF)

@@ -14,7 +14,7 @@ from typing import Any
 
 from intake_spark import datatypes as dt
 from intake_spark.pipeline import PipelineMixin
-from intake_spark.session import get_session
+from intake_spark.session import get_session, local_frame
 from intake_spark.utils import Tokenizable, import_name, qname, subclasses
 
 
@@ -379,8 +379,8 @@ class SparkJDBC(BaseReader):
                     f"lower_bound/upper_bound for a distributed read, or "
                     f"install the JDBC driver jar"
                 )
-            return spark.createDataFrame(
-                [tuple(r) for r in rows], schema
+            return local_frame(
+                spark, [tuple(r) for r in rows], schema
             )
 
         # distributed: one range predicate per task, executed on executors
@@ -413,8 +413,8 @@ class SparkJDBC(BaseReader):
                         columns=names,
                     )
 
-        tasks = spark.createDataFrame(
-            [(p,) for p in preds], "pred string"
+        tasks = local_frame(
+            spark, [(p,) for p in preds], "pred string"
         ).repartition(len(preds))
         return tasks.mapInPandas(fetch_ranges, schema)
 
@@ -719,7 +719,7 @@ class ZarrReader(BaseReader):
                 for rest in itertools.product(*trailing_grid)
             ]
             manifest.append((i0, names))
-        mdf = spark.createDataFrame(manifest, "chunk_id long, chunk_files array<string>")
+        mdf = local_frame(spark, manifest, "chunk_id long, chunk_files array<string>")
         if len(manifest) > 1:
             mdf = mdf.repartition(min(len(manifest), spark.sparkContext.defaultParallelism))
 
@@ -1194,8 +1194,8 @@ class SQLiteReader(BaseReader):
                 cols = [d[0] for d in cur.description]
                 rows = cur.fetchall()
                 pdf_rows = [dict(zip(cols, r)) for r in rows]
-                return spark.createDataFrame(pdf_rows) if pdf_rows else spark.createDataFrame(
-                    [], T.StructType([T.StructField(c, T.StringType()) for c in cols])
+                return spark.createDataFrame(pdf_rows) if pdf_rows else local_frame(
+                    spark, [], T.StructType([T.StructField(c, T.StringType()) for c in cols])
                 )
             if table is None:
                 if not tables:
@@ -1249,7 +1249,7 @@ class SQLiteReader(BaseReader):
                 ]
             finally:
                 con.close()
-            return spark.createDataFrame(recs, schema)
+            return local_frame(spark, recs, schema)
 
         ensure_py_deps(spark)
         lo, hi = lo_hi
@@ -1267,7 +1267,7 @@ class SQLiteReader(BaseReader):
             (start, min(start + step - 1, hi))
             for start in range(lo, hi + 1, step)
         ]
-        mdf = spark.createDataFrame(ranges, "lo long, hi long")
+        mdf = local_frame(spark, ranges, "lo long, hi long")
         if len(ranges) > 1:
             mdf = mdf.repartition(min(len(ranges), spark.sparkContext.defaultParallelism))
 
@@ -1410,7 +1410,7 @@ class DuckDBReader(BaseReader):
                     spark.createDataFrame(batch.to_pandas(), schema=spark_schema)
                 )
             if not parts:
-                return spark.createDataFrame([], schema=spark_schema)
+                return local_frame(spark, [], schema=spark_schema)
             out = parts[0]
             for p in parts[1:]:
                 out = out.unionByName(p)

@@ -20,6 +20,7 @@ from pyspark.sql import types as T
 
 from intake_spark import datatypes as dt
 from intake_spark.readers import BaseReader
+from intake_spark.session import local_frame
 
 
 class FITS(dt.FileData):
@@ -83,8 +84,8 @@ def _chunked_array_df(spark, url: str, dtype: str, shape: list[int], data_off: i
         (i, start, min(start + rows_per_chunk, n0))
         for i, start in enumerate(range(0, n0, rows_per_chunk))
     ]
-    mdf = spark.createDataFrame(
-        manifest, "chunk_id long, row_start long, row_end long"
+    mdf = local_frame(
+        spark, manifest, "chunk_id long, row_start long, row_end long"
     )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -130,7 +131,7 @@ class FITSReader(BaseReader):
             # bytes after the header (they are the next HDU's header)
             from intake_spark.arrays import CHUNK_SCHEMA
 
-            return spark.createDataFrame([], CHUNK_SCHEMA)
+            return local_frame(spark, [], CHUNK_SCHEMA)
         # FITS axis order is fortran-like: NAXIS1 varies fastest → reverse
         shape = [int(cards[f"NAXIS{i}"]) for i in range(naxis, 0, -1)]
         dtype = _FITS_BITPIX[int(cards["BITPIX"])]
@@ -593,8 +594,8 @@ class TIFFReader(BaseReader):
                 nrows = min(meta["rows_per_strip"], h - row)
                 manifest.append((i, row, nrows, off, cnt))
                 row += nrows
-        mdf = spark.createDataFrame(
-            manifest, "chunk_id int, row_start long, nrows int, off long, cnt long"
+        mdf = local_frame(
+            spark, manifest, "chunk_id int, row_start long, nrows int, off long, cnt long"
         )
         if len(manifest) > 1:
             mdf = mdf.repartition(
@@ -665,7 +666,7 @@ def _inflated_chunk_df(
     from intake_spark.session import ensure_py_deps
 
     ensure_py_deps(spark)
-    mdf = spark.createDataFrame([(data_off,)], "data_off long")
+    mdf = local_frame(spark, [(data_off,)], "data_off long")
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import gzip as _gzip
@@ -1023,7 +1024,7 @@ class MatlabMatReader(BaseReader):
         name, off, nb, compressed = pick
         self.data.metadata.update({"variable": name, "variables": names})
         ensure_py_deps(spark)
-        mdf = spark.createDataFrame([(off, nb, compressed)], "off long, nb long, comp boolean")
+        mdf = local_frame(spark, [(off, nb, compressed)], "off long, nb long, comp boolean")
 
         def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             import zlib
@@ -1731,10 +1732,10 @@ class GRIB2Reader(BaseReader):
         url = self.data.url
         manifest = _grib_messages(url)
         if not manifest:
-            return spark.createDataFrame([], _GRIB_SCHEMA)
+            return local_frame(spark, [], _GRIB_SCHEMA)
         ensure_py_deps(spark)
-        mdf = spark.createDataFrame(
-            [(i, off, ln) for i, (off, ln) in enumerate(manifest)],
+        mdf = local_frame(
+            spark, [(i, off, ln) for i, (off, ln) in enumerate(manifest)],
             "msg_id int, msg_off long, msg_len long",
         )
         if len(manifest) > 1:
@@ -2149,7 +2150,7 @@ class DicomReader(BaseReader):
                 (i, _json.dumps([[off, nb]]))
                 for i, (off, nb) in enumerate(frags)
             ]
-        mdf = spark.createDataFrame(manifest, "frame long, frags string")
+        mdf = local_frame(spark, manifest, "frame long, frags string")
         multi = frames > 1
         # the driver-validated per-frame shape: every decoded frame is
         # cross-checked against it (an spp mismatch between the tags and
@@ -2323,13 +2324,13 @@ class LASReader(BaseReader):
             ]
         )
         if not hdr["n"]:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         ensure_py_deps(spark)
         ranges = [
             (start, min(start + points_per_task, hdr["n"]))
             for start in range(0, hdr["n"], points_per_task)
         ]
-        mdf = spark.createDataFrame(ranges, "p_start long, p_end long")
+        mdf = local_frame(spark, ranges, "p_start long, p_end long")
         if len(ranges) > 1:
             mdf = mdf.repartition(min(len(ranges), spark.sparkContext.defaultParallelism))
         cols = ["x", "y", "z", "intensity", "classification", "point_source_id"] + extra
@@ -2676,9 +2677,9 @@ class OpenEXRReader(BaseReader):
             ]
         )
         if not hdr["block_offsets"]:
-            return spark.createDataFrame([], schema)
-        mdf = spark.createDataFrame(
-            [(int(o),) for o in hdr["block_offsets"]], "blk_off long"
+            return local_frame(spark, [], schema)
+        mdf = local_frame(
+            spark, [(int(o),) for o in hdr["block_offsets"]], "blk_off long"
         )
         if len(hdr["block_offsets"]) > 1:
             mdf = mdf.repartition(
@@ -3040,7 +3041,7 @@ class E57MetaReader(BaseReader):
             "proto_fields array<string>, x_min double, x_max double, "
             "y_min double, y_max double, z_min double, z_max double"
         )
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
 
 
 def _e57_prototype(scan) -> "tuple[int, int, list[dict]]":
@@ -3295,8 +3296,8 @@ class E57PointsReader(BaseReader):
         schema = "scan_idx int, " + ", ".join(
             f"`{fd['name']}` {spark_type[fd['kind']]}" for fd in f0
         )
-        mdf = spark.createDataFrame(
-            scans, "scan_idx int, rc long, off long, fields string"
+        mdf = local_frame(
+            spark, scans, "scan_idx int, rc long, off long, fields string"
         )
 
         def decode(batches):

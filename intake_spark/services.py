@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from intake_spark import datatypes as dt
 from intake_spark.readers import BaseReader
+from intake_spark.session import local_frame
 
 
 class MongoDBService(dt.Service):
@@ -145,7 +146,7 @@ class MongoDBReader(BaseReader):
         finally:
             client.close()
         if not rows:
-            return spark.createDataFrame([], "value string")
+            return local_frame(spark, [], "value string")
         return spark.createDataFrame(rows)
 
 
@@ -234,7 +235,7 @@ class ElasticsearchReader(BaseReader):
                         {"scroll": "1m", "scroll_id": scroll_id})
             scroll_id = page.get("_scroll_id", scroll_id)
         if not rows:
-            return spark.createDataFrame([], "_id string")
+            return local_frame(spark, [], "_id string")
         return spark.createDataFrame(rows)
 
 
@@ -304,8 +305,8 @@ class PrometheusMetricReader(BaseReader):
             for series in payload["data"]["result"]
             for t, v in series["values"]
         ]
-        return spark.createDataFrame(
-            rows, "metric string, ts double, value double"
+        return local_frame(
+            spark, rows, "metric string, ts double, value double"
         )
 
 
@@ -328,7 +329,7 @@ class SocrataReader(BaseReader):
                 break
             offset += page_size
         if not rows:
-            return spark.createDataFrame([], "value string")
+            return local_frame(spark, [], "value string")
         return spark.createDataFrame(rows)
 
 
@@ -359,8 +360,8 @@ class OGCAPIFeaturesReader(BaseReader):
             if not nxt:
                 break
             url = nxt[0]["href"]
-        return spark.createDataFrame(
-            rows, "id string, geometry string, properties string"
+        return local_frame(
+            spark, rows, "id string, geometry string, properties string"
         )
 
 
@@ -1136,7 +1137,7 @@ def stac_search(
         "miny double, maxx double, maxy double, asset_key string, "
         "asset_href string, media_type string"
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def stac_stack_bands(
@@ -1571,7 +1572,7 @@ class OpenDAPReader(BaseReader):
                 }
             )
             cid += 1
-        return spark.createDataFrame(out, CHUNK_SCHEMA)
+        return local_frame(spark, out, CHUNK_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1881,6 +1882,6 @@ class WebSocketReader(BaseReader):
         finally:
             if own:  # pragma: no cover
                 sock.close()
-        return spark.createDataFrame(
-            rows, "msg_idx int, opcode int, payload string, payload_bytes binary"
+        return local_frame(
+            spark, rows, "msg_idx int, opcode int, payload string, payload_bytes binary"
         )

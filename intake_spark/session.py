@@ -142,6 +142,124 @@ def ensure_py_deps(spark: SparkSession) -> None:
     _PYFILES_ADDED.add(key)
 
 
+def local_frame(spark: SparkSession, rows, schema):
+    """A driver-local DataFrame built as an Arrow local relation.
+
+    ``spark.createDataFrame(rows, schema)`` over Python rows plans a
+    ``Scan ExistingRDD`` over a pickled Python RDD: every action re-runs
+    a pickling stage in Python workers, and those workers fork from a
+    daemon of their own, separate from the one that serves
+    ``mapInPandas`` — whose first use pays the prewarm imports again
+    (~1 s, see daemon_prewarm.py). This builds a pyarrow Table column by
+    column, typed by the Spark schema, and returns
+    ``spark.createDataFrame(table, schema)``: a ``LocalRelation``
+    (executed as a ``LocalTableScan``) with the rows in the plan and no
+    Python worker anywhere. (Past
+    ``spark.sql.execution.arrow.localRelationThreshold`` Spark plans the
+    Arrow batches as a JVM RDD instead — still no Python worker.)
+
+    ``schema`` is a DDL string or a ``StructType``. ``rows`` are
+    tuples, ``Row``s or lists (by position) or dicts (by field name).
+    Values convert by Arrow's rules, which check each value against its
+    column type as the row path's verifier does (a str in a long column,
+    an int outside an int column's range, a None in a non-nullable field
+    all raise). Where Arrow's rules differ, the row path's are kept: a
+    float in an integral column raises instead of being truncated, and a
+    datetime in a ``timestamp`` column is the instant it names (a naive
+    one in the system zone), not its wall clock read as UTC.
+
+    CAVEAT: Catalyst's ``ConvertToLocalRelation`` rule evaluates a
+    deterministic projection that sits directly on a local relation ON
+    THE DRIVER, row by row, at every planning of the plan. For a frame
+    whose size scales with the input (a file listing), let the first
+    operator be an exchange — key it by expressions,
+    ``repartition(n, expr, ...)`` — and compute columns after it.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if hasattr(rows, "columns"):
+        raise TypeError(
+            "local_frame takes Python rows; pass a pandas DataFrame or an "
+            "Arrow table to spark.createDataFrame (already the Arrow path)"
+        )
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    rows = list(rows)
+    fields = schema.fields
+    if rows and isinstance(rows[0], dict):
+        cols = [[r.get(f.name) for r in rows] for f in fields]
+    else:
+        cols = list(zip(*rows, strict=True)) if rows else [()] * len(fields)
+        if len(cols) != len(fields):
+            raise ValueError(
+                f"rows have {len(cols)} values, schema has {len(fields)} "
+                f"fields: {schema.simpleString()}"
+            )
+    arrow_schema = to_arrow_schema(schema)
+    arrays = []
+    for f, col, af in zip(fields, cols, arrow_schema):
+        adapt = _arrow_adapter(f.dataType)
+        arr = pa.array([adapt(v) for v in col] if adapt else col, af.type)
+        if arr.null_count and not f.nullable:
+            raise ValueError(f"field {f.name!r} is not nullable, got None")
+        arrays.append(arr)
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
+
+
+def _arrow_adapter(dtype):
+    """A per-value function that makes pyarrow convert a row-path value
+    as ``createDataFrame``'s row path would, or None where pyarrow
+    already does (see :func:`local_frame`)."""
+    import datetime
+
+    from pyspark.sql.types import (
+        ArrayType,
+        IntegralType,
+        MapType,
+        StructType,
+        TimestampType,
+    )
+
+    if isinstance(dtype, IntegralType):
+        def integral(v):
+            if isinstance(v, float):
+                raise TypeError(
+                    f"{dtype.simpleString()} column can not accept float {v!r}"
+                )
+            return v
+        return integral
+    if isinstance(dtype, TimestampType):
+        # pyarrow keeps the wall clock of an aware datetime and reads a
+        # naive one as UTC; astimezone() reads a naive one in the system
+        # zone and shifts both to the UTC instant
+        return lambda v: v if v is None else v.astimezone(datetime.timezone.utc)
+    if isinstance(dtype, ArrayType):
+        elem = _arrow_adapter(dtype.elementType)
+        return elem and (lambda v: v if v is None else [elem(x) for x in v])
+    if isinstance(dtype, MapType):
+        key, val = _arrow_adapter(dtype.keyType), _arrow_adapter(dtype.valueType)
+        if not (key or val):
+            return None
+        key, val = key or (lambda k: k), val or (lambda x: x)
+        return lambda v: v if v is None else {key(k): val(x) for k, x in v.items()}
+    if isinstance(dtype, StructType):
+        # pyarrow takes a struct as a dict (or a tuple, but not a list,
+        # and not both kinds in one column): hand it dicts throughout
+        subs = [(f.name, _arrow_adapter(f.dataType)) for f in dtype.fields]
+
+        def struct(v):
+            if v is None:
+                return None
+            if not isinstance(v, dict):
+                v = dict(zip(dtype.names, v, strict=True))
+            return {n: a(v.get(n)) if a else v.get(n) for n, a in subs}
+        return struct
+    return None
+
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -209,10 +327,7 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str):
         # (captured in the plan at read time), then restore: leaving it on
         # would make every later nanos-parquet read in the caller's session
         # silently return raw longs instead of failing loudly
-        try:
-            prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong")
-        except Exception:
-            prev = None
+        prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         try:
             df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -273,18 +388,24 @@ def spread_small_scan(df, min_parts: int | None = None):
         return df
     sc = df.sparkSession.sparkContext
     par = min_parts if min_parts is not None else sc.defaultParallelism
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors.exceptions.captured import CapturedException
+
     try:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
-        scan_shaped = all(
-            ln.lstrip(" +-:").startswith(
-                ("Project", "Filter", "Relation", "LogicalRDD",
-                 "LocalRelation", "ColumnPruning")
-            )
-            for ln in plan.splitlines()
-            if ln.strip(" +-:")
+    except (Py4JJavaError, CapturedException):
+        # the probe runs the optimizer at this call, not at the caller's
+        # action: a JVM error it raises for this frame is the action's to
+        # report, where the caller handles it, so leave the frame as is
+        return df
+    scan_shaped = all(
+        ln.lstrip(" +-:").startswith(
+            ("Project", "Filter", "Relation", "LogicalRDD",
+             "LocalRelation", "ColumnPruning")
         )
-    except Exception:
-        scan_shaped = False
+        for ln in plan.splitlines()
+        if ln.strip(" +-:")
+    )
     if not scan_shaped:
         return df
     if df.rdd.getNumPartitions() >= par:

@@ -2104,6 +2104,27 @@ def test_gopher_repetition_plan_mapper_only(spark):
     assert "Exchange" not in plan and "EvalPython" not in plan
 
 
+def test_top_gram_pack_range_guard():
+    """The (count, length) pack round-trips below 2^31 and raises at
+    2^31, where the count would overflow int64 or the length would
+    spill into the count's half."""
+    import numpy as np
+
+    from intake_spark.llm.text import _pack_count_len
+
+    counts = np.array([1, 7, (1 << 31) - 1], dtype=np.int64)
+    lens = np.array([0, 12, (1 << 31) - 1], dtype=np.int64)
+    key = _pack_count_len(counts, lens)
+    assert ((key >> 32) == counts).all() and ((key & 0xFFFFFFFF) == lens).all()
+    empty = np.array([], dtype=np.int64)
+    assert len(_pack_count_len(empty, empty)) == 0
+    big = np.array([1 << 31], dtype=np.int64)
+    with pytest.raises(ValueError, match="2\\^31"):
+        _pack_count_len(big, np.array([5], dtype=np.int64))
+    with pytest.raises(ValueError, match="2\\^31"):
+        _pack_count_len(np.array([2], dtype=np.int64), big)
+
+
 def test_hashed_linear_classifier_exact_replay(spark):
     """The distributed GD trainer must match a pure-Python integer
     replay bit for bit (trunc-division steps, fixed-point weights) and

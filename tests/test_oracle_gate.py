@@ -82,6 +82,31 @@ def test_entry_smoke(spark):
     assert len(rows) >= 0 and len(df.schema) > 0
 
 
+# q25/q45: brute-force similarity IS the oracle algorithm (guarded);
+# q63/q64/q75/q77/q87/q93/q94: single-row broadcast scalar thresholds/
+# vocabularies/corpus stats; q105: single-row corpus gram totals
+# joined onto the buckets-sized table (never onto the corpus)
+# q112: 3-probe brute-force corrected-cosine scan by design
+# q114: q25's probe-scan shape with the label-mismatch filter
+# q128: single-row broadcast corpus-token total joined onto the
+# k-words-×-sources profile table (never onto the corpus)
+SANCTIONED_CARTESIANS = {
+    "q105_dsir_weights",
+    "q112_abtt_knn",
+    "q128_word_profile_divergence",
+    "q114_hard_negatives",
+    "q25_knn_bruteforce",
+    "q45_embedding_near_dup",
+    "q63_vocab_coverage",
+    "q64_token_probability",
+    "q75_important_brands",
+    "q77_funnel",
+    "q87_bm25_search",
+    "q93_top_supplier",
+    "q94_temperature_mix",
+}
+
+
 @pytest.mark.slow  # whole-registry plan audit; plan shape also machine-checked from plans/
 def test_no_row_udfs_and_sanctioned_cartesians_only(spark):
     """Whole-registry plan audit: no query may contain a row-at-a-time
@@ -90,29 +115,6 @@ def test_no_row_udfs_and_sanctioned_cartesians_only(spark):
     algorithms and single-row broadcast scalars)."""
     from intake_spark.benchqueries import get_queries
 
-    # q25/q45: brute-force similarity IS the oracle algorithm (guarded);
-    # q63/q64/q75/q77/q87/q93/q94: single-row broadcast scalar thresholds/
-    # vocabularies/corpus stats; q105: single-row corpus gram totals
-    # joined onto the buckets-sized table (never onto the corpus)
-    # q112: 3-probe brute-force corrected-cosine scan by design
-    # q114: q25's probe-scan shape with the label-mismatch filter
-    # q128: single-row broadcast corpus-token total joined onto the
-    # k-words-×-sources profile table (never onto the corpus)
-    sanctioned = {
-        "q105_dsir_weights",
-        "q112_abtt_knn",
-        "q128_word_profile_divergence",
-        "q114_hard_negatives",
-        "q25_knn_bruteforce",
-        "q45_embedding_near_dup",
-        "q63_vocab_coverage",
-        "q64_token_probability",
-        "q75_important_brands",
-        "q77_funnel",
-        "q87_bm25_search",
-        "q93_top_supplier",
-        "q94_temperature_mix",
-    }
     offenders_udf, offenders_cart = [], []
     for name, fn in get_queries().items():
         plan = fn(spark, SF_MEDIUM)._jdf.queryExecution().executedPlan().toString()
@@ -120,10 +122,64 @@ def test_no_row_udfs_and_sanctioned_cartesians_only(spark):
             offenders_udf.append(name)
         if (
             "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
-        ) and name not in sanctioned:
+        ) and name not in SANCTIONED_CARTESIANS:
             offenders_cart.append(name)
     assert not offenders_udf, f"row-at-a-time Python UDF in: {offenders_udf}"
     assert not offenders_cart, f"unsanctioned cartesian join in: {offenders_cart}"
+
+
+# A fixed sample of the registry for the default run: the two queries
+# whose driver-local frames are Arrow local relations (q88, q122), the
+# corpus triage's listing (q140), local-frame readers and operators
+# (q115, q116, q118, q126, q135) and two sanctioned cartesians (q25, q63).
+PLAN_AUDIT_SAMPLE = (
+    "q88_bpe_learn",
+    "q122_exact_corpus_quantiles",
+    "q140_corpus_triage",
+    "q115_dedup_aware_split",
+    "q116_unimax_budgets",
+    "q118_keep_best_duplicate",
+    "q126_lsh_plan",
+    "q135_reader_longtail",
+    "q25_knn_bruteforce",
+    "q63_vocab_coverage",
+)
+
+
+def _python_rdd_scans(plan):
+    """The ``Scan ExistingRDD`` leaves of a physical plan (cached
+    relations included) whose RDD lineage holds a ``PythonRDD``: rows
+    pickled by a Python worker, as ``createDataFrame`` over Python rows
+    plans them. A ``localCheckpoint`` also scans as ExistingRDD, but
+    over a JVM RDD."""
+    found, todo = [], [plan]
+    while todo:
+        leaves = todo.pop().collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.nodeName() == "InMemoryTableScan":
+                todo.append(leaf.relation().cachedPlan())
+            elif (leaf.nodeName() == "Scan ExistingRDD"
+                  and "PythonRDD" in leaf.rdd().toDebugString()):
+                found.append(leaf.simpleString(80))
+    return found
+
+
+def test_sampled_plan_audit(spark):
+    """The whole-registry audit above on a fixed sample, plus: no scan
+    over a pickled Python RDD (driver-local rows are Arrow local
+    relations)."""
+    from intake_spark.benchqueries import get_queries
+
+    queries = get_queries()
+    for name in PLAN_AUDIT_SAMPLE:
+        qe = queries[name](spark, SF_MEDIUM)._jdf.queryExecution()
+        plan = qe.executedPlan().toString()
+        assert "BatchEvalPython" not in plan, name
+        if name not in SANCTIONED_CARTESIANS:
+            assert "CartesianProduct" not in plan, name
+            assert "BroadcastNestedLoopJoin" not in plan, name
+        assert not _python_rdd_scans(qe.sparkPlan()), name
 
 
 def test_verify_order_derived_from_correctness_files(tmp_path):

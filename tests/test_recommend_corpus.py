@@ -257,6 +257,51 @@ def test_corpus_triage_plan_is_distributed(spark, tmp_path):
     assert "BatchEvalPython" not in plan  # no row-at-a-time UDFs
 
 
+@pytest.mark.parametrize("kind", ["walk", "list", "executor_walk"])
+def test_corpus_triage_listing_is_local_relation(spark, tmp_path, kind):
+    """A driver-side listing is an Arrow local relation, not a pickled
+    Python RDD, and the dir/ext projection stays off it: each of the
+    optimized plan's LocalRelations outputs only the listed path (or,
+    for the executor walk, the directory to walk), so Catalyst has not
+    folded the per-row expressions into it on the driver."""
+    import re
+
+    _corpus(tmp_path)
+    paths = [os.path.join(r, fn)
+             for r, _d, files in os.walk(tmp_path) for fn in files]
+    source = paths if kind == "list" else str(tmp_path)
+    out = recommend_corpus(spark, source, samples_per_cluster=4,
+                           walk_on_executors=kind == "executor_walk")
+    qe = out._jdf.queryExecution()
+    executed = qe.executedPlan().toString()
+    assert "LocalTableScan" in executed
+    assert "Scan ExistingRDD" not in executed
+    relations = re.findall(r"LocalRelation (?:<empty>, )?\[([^\]]*)\]",
+                           qe.optimizedPlan().toString())
+    assert relations
+    assert all(re.fullmatch(r"(path|dir)#\d+", cols) for cols in relations)
+
+
+def test_corpus_triage_extension_case(spark):
+    """ext is the extension lower-cased as lower() does, non-ASCII
+    letters included, computed after the exchange; case variants of one
+    extension in one directory are one cluster."""
+    from pyspark.sql import functions as F
+
+    paths = ["/nx/d/a.CSV", "/nx/d/b.csv", "/nx/d/c.ÄB", "/nx/d/e.äb",
+             "/nx/d/noext", "/nx/d/f.Tar.GZ", "/nx/d/g.İ"]
+    rows = recommend_corpus(spark, paths, samples_per_cluster=1).collect()
+    want = {
+        r.path: r.ext for r in spark.createDataFrame(
+            [(p, p.rsplit("/", 1)[1].partition(".")[2]) for p in paths],
+            "path string, raw string",
+        ).select("path", F.lower("raw").alias("ext")).collect()
+    }
+    assert {r.path: r.ext for r in rows} == want
+    csv = sorted(r.via for r in rows if r.ext == "csv")
+    assert len(csv) == 2 and csv.count("cluster") == 1
+
+
 def test_recommend_scored_chained_wrapper_prefix():
     """Chained compression wrappers keep the FULL evidence trail (r11
     review: the outer prefix was dropped on recursion)."""
