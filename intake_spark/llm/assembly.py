@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 
 from intake_spark.llm.dedup import shingles
 from intake_spark.llm.sampling import _BUCKETS, hash_bucket
+from intake_spark.session import materialize
 
 
 def decontaminate(
@@ -188,17 +189,17 @@ def global_prefix_sum(
     below must not fork).
 
     Pass a SKINNY projection (id + value + order keys): the frame is
-    ``localCheckpoint``-pinned — RangePartitioner samples its boundaries,
-    so the offsets ``collect`` and the final pass would otherwise be two
-    physical executions whose partition contents can differ, desyncing
-    the partition-keyed offsets — and the checkpoint materializes every
-    column to executor-local disk. Deterministic under any input
-    partitioning. Returns the pinned frame + ``out_col``."""
+    pinned by ``session.materialize`` — RangePartitioner samples its
+    boundaries, so the offsets ``collect`` and the final pass would
+    otherwise be two physical executions whose partition contents can
+    differ, desyncing the partition-keyed offsets — and the pin stores
+    every column. Deterministic under any input partitioning. Returns
+    the pinned frame + ``out_col``."""
     d = df.repartitionByRange(shards, *order_cols)
     d = d.sortWithinPartitions(*order_cols).withColumn(
         "_gps_pid", F.spark_partition_id()
     )
-    d = d.localCheckpoint(eager=True)
+    d = materialize(d)
     totals = {
         int(r["_gps_pid"]): int(r["_t"])
         for r in d.groupBy("_gps_pid").agg(F.sum(value_col).alias("_t")).collect()
@@ -245,7 +246,7 @@ def global_row_number(
     as ROW_NUMBER's ORDER BY — an ambiguous order gives an arbitrary
     but valid numbering; with a unique tie-break it is deterministic
     and engine-exact). Pass a SKINNY projection where possible: the
-    frame is checkpoint-pinned inside global_prefix_sum."""
+    frame is materialized inside global_prefix_sum."""
     d = df.withColumn("_grn_one", F.lit(1).cast("bigint"))
     d = global_prefix_sum(d, "_grn_one", order_cols, shards, out_col=out_col)
     return d.drop("_grn_one")

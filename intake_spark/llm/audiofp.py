@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from intake_spark.session import materialize
+
 __all__ = ["landmarks", "audio_landmarks", "landmark_match_pairs"]
 
 # default analysis geometry: 256-sample frames, half-overlap, the
@@ -178,9 +180,10 @@ def landmark_match_pairs(
     # the landmark frame feeds three plan branches (sizes, hot-landmark
     # scan, both join sides) and usually comes from an expensive
     # decode+FFT mapInPandas: truncate lineage so it is computed once
-    lm = (lm.filter(F.col("landmark").isNotNull())
-          .select(id_col, "landmark")
-          .localCheckpoint(eager=False))
+    lm = materialize(
+        lm.filter(F.col("landmark").isNotNull()).select(id_col, "landmark"),
+        eager=False,
+    )
     sizes = lm.groupBy(id_col).agg(F.count("*").alias("n_lm"))
     hot = (
         lm.groupBy("landmark")

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from intake_spark.session import materialize
+
 EOW = "</w>"
 
 
@@ -98,22 +100,21 @@ def learn_bpe_merges(
     Each round: weighted adjacent-pair counts over the segmented vocab
     (vocab-sized shuffle), best pair via TakeOrdered (count desc, then
     lexicographic — fully deterministic), then one fold pass re-segments
-    the vocab. ``localCheckpoint`` cuts the per-round lineage so round k
-    does not replay rounds 1..k-1."""
+    the vocab. ``session.materialize`` cuts the per-round lineage so
+    round k does not replay rounds 1..k-1."""
     if n_merges <= 0:
         raise ValueError("n_merges must be positive")
-    seg = (
+    seg = materialize(
         word_counts(df, text_col)
         .withColumn("syms", _initial_symbols())
         .select("syms", "n")
-        .localCheckpoint()
     )
     merges: list[tuple[int, str, str, int]] = []
-    # checkpoint every few rounds, not every round: each checkpoint pins a
-    # fresh copy of the vocab table in executor storage (the replaced one
-    # is only reclaimed by the ContextCleaner once the old frame is
-    # GC-unreachable), so per-round checkpoints accumulate n_merges cached
-    # copies on long training runs. Between checkpoints the plan carries at
+    # materialize every few rounds, not every round: each materialization
+    # stores a fresh copy of the vocab table (the replaced one is only
+    # reclaimed by the ContextCleaner once the old frame is
+    # GC-unreachable), so per-round materializations accumulate n_merges
+    # copies on long training runs. Between them the plan carries at
     # most `checkpoint_every` nested folds — still flat.
     checkpoint_every = 4
     since_ckpt = 0
@@ -131,7 +132,7 @@ def learn_bpe_merges(
         seg = seg.withColumn("syms", _merge_expr(left, right))
         since_ckpt += 1
         if since_ckpt >= checkpoint_every:
-            seg = seg.localCheckpoint()
+            seg = materialize(seg)
             since_ckpt = 0
     return merges
 
@@ -144,17 +145,17 @@ def bpe_segment_vocab(
     vocab-sized table — computed once, then broadcast to tokenize any
     corpus.
 
-    The chain localCheckpoints every ``checkpoint_every`` merges: a real
+    The chain is materialized every ``checkpoint_every`` merges: a real
     tokenizer carries hundreds to tens of thousands of merges, and one
     projection holding that many nested ``aggregate`` folds blows up
-    Catalyst analysis / hits codegen limits — the checkpoint keeps every
+    Catalyst analysis / hits codegen limits — the cut keeps every
     plan at most ``checkpoint_every`` folds deep (vocab-sized
     materializations, cheap by construction)."""
     seg = wc.withColumn("syms", _initial_symbols())
     for i, (_, left, right, _) in enumerate(merges):
         seg = seg.withColumn("syms", _merge_expr(left, right))
         if (i + 1) % checkpoint_every == 0 and (i + 1) < len(merges):
-            seg = seg.localCheckpoint()
+            seg = materialize(seg)
     return seg.select("word", "n", F.col("syms").alias("pieces"))
 
 

@@ -15,7 +15,7 @@ Design constraints, in order:
    so a DuckDB oracle can replay training round for round and match the
    final scores bit for bit (the q72 unrolled-CTE pattern).
 2. **Distributed shape.** The feature matrix is the (doc, bucket, count)
-   long form — one explode + one hash-aggregation, checkpointed once.
+   long form — one explode + one hash-aggregation, materialized once.
    The full-batch gradient factors as g = (XᵀX)·w − scale·Xᵀy, so ONE
    self-join pass precomputes the (buckets+1)² Gram matrix H and Xᵀy
    (map-side combine collapses each partition to ≤ B² rows before the
@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from intake_spark.session import materialize
 from intake_spark.utils import trunc_div
 
 # documents per dense chunk in the Gram accumulation — bounds the
@@ -247,10 +248,11 @@ def hashed_linear_classifier(
         )
     # Materialize the long-form feature matrix once (n·(buckets+1) rows,
     # lineage truncated) — every GD round and the final scoring pass read
-    # it instead of re-exploding the corpus. localCheckpoint rather than
-    # persist: checkpointed blocks are reclaimed when the frame goes out
-    # of scope, so repeated training runs in one session don't pin cache.
-    x = _gram_bucket_counts(df, id_col, text_col, buckets).localCheckpoint(eager=True)
+    # it instead of re-exploding the corpus. materialize rather than
+    # persist: Spark reclaims the rows once the frame goes out of scope
+    # (see session.materialize), so repeated training runs in one
+    # session don't pin cache.
+    x = materialize(_gram_bucket_counts(df, id_col, text_col, buckets))
     y = df.select(
         F.col(id_col),
         F.when(label, F.lit(1)).otherwise(F.lit(-1)).cast("int").alias("y"),

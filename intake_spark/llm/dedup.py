@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from intake_spark.session import local_frame
+from intake_spark.session import local_frame, materialize
 
 # Deterministic affine-hash family over a 32-bit md5-derived base hash.
 # a_j < 2^28 keeps a*h < 2^60 — no 64-bit overflow before the modulus.
@@ -258,8 +258,8 @@ def lsh_candidate_pairs(
     pipeline (the old groupBy formulation got this reuse for free from its
     shuffle — measured 0.7 s of the q32 pipeline at sf0.1).
     """
-    banded = minhash_band_keys(sig_df, id_col, num_hashes, bands).localCheckpoint(
-        eager=False
+    banded = materialize(
+        minhash_band_keys(sig_df, id_col, num_hashes, bands), eager=False
     )
     a = banded.select(F.col(id_col).alias("doc_a"), "band_id", "band_key")
     b = banded.select(F.col(id_col).alias("doc_b"), "band_id", "band_key")
@@ -287,10 +287,12 @@ def minhash_dedup_pairs(
     from pyspark.sql.window import Window
 
     sigs = minhash_signatures(df, id_col, text_col, num_hashes, k)
-    # checkpointed: the candidate set feeds the id semi-join AND both verify
+    # materialized: the candidate set feeds the id semi-join AND both verify
     # joins — without it the whole signature+banding pipeline re-executes
     # three times
-    cands = lsh_candidate_pairs(sigs, id_col, num_hashes, bands).localCheckpoint(eager=False)
+    cands = materialize(
+        lsh_candidate_pairs(sigs, id_col, num_hashes, bands), eager=False
+    )
     # Verify only needs shingles of docs that appear in some candidate pair —
     # a tiny fraction of the corpus once LSH has pruned. The semi-join cuts
     # the shuffled shingle volume from O(corpus) to O(candidate docs): at
@@ -350,15 +352,18 @@ def near_dup_first_seen(
     mapper-only signatures+banding, one aggregate on the band key, one
     join back, one per-doc rollup — all compact keys.
     """
-    banded = minhash_band_keys(
-        minhash_signatures(df, id_col, text_col, num_hashes, k),
-        id_col,
-        num_hashes,
-        bands,
-        # referenced by both the firsts aggregate and the join-back:
-        # materialize the compact (id, band) table once instead of running
-        # the mapper signature pipeline twice
-    ).localCheckpoint(eager=False)
+    # referenced by both the firsts aggregate and the join-back:
+    # materialize the compact (id, band) table once instead of running
+    # the mapper signature pipeline twice
+    banded = materialize(
+        minhash_band_keys(
+            minhash_signatures(df, id_col, text_col, num_hashes, k),
+            id_col,
+            num_hashes,
+            bands,
+        ),
+        eager=False,
+    )
     # first-claim compares on the long-cast id, EXACTLY like the stream arm
     # (streaming.py stream_near_dup_flags): a native string id would order
     # lexically here ('10' < '9') while the stream sorts numerically, and
@@ -476,30 +481,28 @@ def dup_groups_star(
     Beyond") → (doc_id, group_id), group_id = min id in the component —
     the same contract as :func:`dup_groups`, reached in O(log n) rounds
     on ANY graph shape, including the adversarial long chains where
-    min-label propagation needs O(diameter) rounds.
+    min-label propagation would need O(diameter) rounds.
 
     Per round: large-star points every neighbor v > u at
     min(Γ(u) ∪ {u}) (halves every long path), then small-star re-hangs
     each node's smaller neighbors off its minimum. Both are one
     hash-aggregate + one equi-join per round over the EDGE set (never
-    the corpus), with the round output localCheckpoint-ed so plan depth
+    the corpus), with the round output materialized so plan depth
     stays constant. Convergence = the canonical edge set reaches a
     fixpoint: a star per component, centered at the component minimum.
     """
-    e = (
+    e = materialize(
         pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(
             F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    all_nodes = (
+    all_nodes = materialize(
         pairs.select(F.col(a_col).alias("node"))
         .unionByName(pairs.select(F.col(b_col).alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     converged = False
     for _ in range(max_iter):
@@ -513,26 +516,24 @@ def dup_groups_star(
             .agg(F.min("v").alias("mn"))
             .select("u", F.least("mn", F.col("u")).alias("m"))
         )
-        ls = (
+        ls = materialize(
             bidir.filter(F.col("v") > F.col("u"))
             .join(m, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         # SMALL-STAR: edges are (u, smaller v); hang every smaller
         # neighbor — and u itself — off min(neighbors(u)); canonical
         # u > v is preserved because m <= every smaller neighbor
         m2 = ls.groupBy("u").agg(F.min("v").alias("m"))
-        ss = (
+        ss = materialize(
             ls.join(m2, "u")
             .select(F.col("v").alias("n"), F.col("m"))
             .unionByName(m2.select(F.col("u").alias("n"), F.col("m")))
             .filter(F.col("n") != F.col("m"))
             .select(F.col("n").alias("u"), F.col("m").alias("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         converged = (
             ss.count() == e.count()
@@ -563,112 +564,59 @@ def dup_groups_star(
     )
 
 
+# Edge count up to which dup_groups collects the pairs and labels them
+# with a driver-side union-find; above it dup_groups_star runs.
+UNION_FIND_MAX_EDGES = 1_000_000
+
+
 def dup_groups(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    max_iter: int = 20,
-    small_threshold: int = 1_000_000,
-    method: str = "auto",
 ) -> DataFrame:
     """Connected components over near-dup pairs → (doc_id, group_id), with
     group_id = min doc id in the component (canonical survivor per group).
 
-    Adaptive strategy: near-dup pair sets are tiny relative to the corpus
-    (LSH + verification already pruned them), so when the edge count fits
-    comfortably on the driver (``small_threshold``) a driver-side union-find
-    answers in one collect — no iterative Spark jobs. Above the threshold,
-    distributed min-label propagation takes over: each round every node
-    takes the min label among itself and its neighbors (join on edges +
-    hash aggregate, one shuffle per round), stopping at fixpoint or
-    ``max_iter``. Dup clusters have tiny diameters, so rounds stay in
-    single digits; ``method='star'`` switches to the logarithmic
-    large-star/small-star alternation (:func:`dup_groups_star`) for
-    adversarial long chains, where propagation would need O(diameter)
-    rounds. ``method``: 'auto' (size-adaptive), 'label' (force
-    propagation), 'star' (force the O(log n) alternation).
+    Near-dup pair sets are tiny relative to the corpus (LSH + verification
+    already pruned them), so when the edge count is at most
+    ``UNION_FIND_MAX_EDGES`` a driver-side union-find answers in one
+    collect — no iterative Spark jobs. Above it the components come from
+    the O(log n)-round large-star/small-star alternation
+    (:func:`dup_groups_star`), which converges on any graph shape or
+    raises.
     """
-    if method not in ("auto", "label", "star"):
-        raise ValueError(f"unknown method {method!r}: auto | label | star")
-    if method == "star":
-        return dup_groups_star(pairs, a_col, b_col, max_iter=max_iter)
     # cache IS warranted here (unlike the verify joins): pairs is the
     # output of the whole LSH pipeline and feeds 2+ actions — but it must
     # be unpersisted on every exit path or a long-lived session leaks one
-    # pinned pair set per dedup call
+    # pinned pair set per dedup call. dup_groups_star materializes its
+    # inputs eagerly, so its lazy result no longer reads the cache.
     pairs = pairs.select(a_col, b_col).cache()
-    n_edges = pairs.count()
-    if method != "label" and n_edges <= small_threshold:
-        parent: dict = {}
-
-        def find(x):
-            while parent.get(x, x) != x:
-                parent[x] = parent.get(parent[x], parent[x])
-                x = parent[x]
-            return x
-
+    try:
+        if pairs.count() > UNION_FIND_MAX_EDGES:
+            return dup_groups_star(pairs, a_col, b_col)
         rows = pairs.collect()
+    finally:
         pairs.unpersist()
-        for r in rows:
-            ra, rb = find(r[0]), find(r[1])
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        nodes = {r[0] for r in rows} | {r[1] for r in rows}
-        spark = pairs.sparkSession
-        # preserve the pair columns' actual id type: a hardcoded 'long'
-        # schema crashed on string ids ONLY below the small_threshold
-        # boundary while the distributed path handled them fine
-        id_type = pairs.schema[a_col].dataType.simpleString()
-        return local_frame(
-            spark, [(n, find(n)) for n in sorted(nodes)],
-            f"doc_id {id_type}, group_id {id_type}",
-        )
+    parent: dict = {}
 
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .distinct()
-        .cache()
+    def find(x):
+        while parent.get(x, x) != x:
+            parent[x] = parent.get(parent[x], parent[x])
+            x = parent[x]
+        return x
+
+    for r in rows:
+        ra, rb = find(r[0]), find(r[1])
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    nodes = {r[0] for r in rows} | {r[1] for r in rows}
+    # preserve the pair columns' actual id type: a hardcoded 'long'
+    # schema crashed on string ids on this path only
+    id_type = pairs.schema[a_col].dataType.simpleString()
+    return local_frame(
+        pairs.sparkSession, [(n, find(n)) for n in sorted(nodes)],
+        f"doc_id {id_type}, group_id {id_type}",
     )
-    labels0 = (
-        edges.select(F.col("src").alias("node")).distinct().withColumn("label", F.col("node"))
-    ).cache()
-    labels = labels0
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        # localCheckpoint truncates the growing join lineage each round —
-        # without it, plan size (and planning time) grows exponentially
-        # with iteration count.
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias(
-                    "label"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    # the result is a materialized localCheckpoint: safe to release every
-    # intermediate pin (old checkpoints are GC'd by the ContextCleaner)
-    pairs.unpersist()
-    edges.unpersist()
-    labels0.unpersist()
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("group_id"))
 
 
 def embedding_near_dup_pairs(
@@ -1199,8 +1147,8 @@ def incremental_dedup(
     # cross join); without a materialization point both would re-run the
     # text -> explode -> distinct pipeline — same policy as
     # lsh_candidate_pairs
-    sh_n = sh_n.localCheckpoint(eager=False)
-    sh_a = sh_a.localCheckpoint(eager=False)
+    sh_n = materialize(sh_n, eager=False)
+    sh_a = materialize(sh_a, eager=False)
     nn = sh_n.groupBy(id_col).agg(F.count(F.lit(1)).alias("_nn"))
     na = sh_a.groupBy(id_col).agg(F.count(F.lit(1)).alias("_na"))
     co = (

@@ -19,11 +19,11 @@ Scale notes: each iteration is one equi-join of the edge list against
 the rank table plus one partial-combining aggregate on the destination —
 the standard distributed PageRank shape. The rank table is
 node-cardinality (dup-graph nodes only, not the whole corpus).
-``localCheckpoint`` truncates lineage every ``checkpoint_every``
+``session.materialize`` cuts the lineage every ``checkpoint_every``
 iterations (default 8) so plans stay flat at high iteration counts
 without paying a materialization per round — short runs like the
-3-iteration q72 never checkpoint the rank table at all (only the eager
-edge-list checkpoint runs).
+3-iteration q72 never materialize the rank table at all (only the eager
+edge-list materialization runs).
 
 No reference counterpart (part of the mandated beyond-reference
 LLM-pipeline layer).
@@ -33,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from intake_spark.session import materialize
 
 PAGERANK_SCALE = 10**12
 
@@ -59,16 +61,15 @@ def pagerank(
         raise ValueError("iterations must be >= 0")
     scale = PAGERANK_SCALE
     base = (scale * (damping_den - damping_num)) // damping_den
-    e = (
+    # materialize the edge list ONCE: deg, the initial ranks, the
+    # per-iteration joins, and the final join all reference it — without
+    # this the (possibly expensive) edge-derivation pipeline upstream
+    # re-executes 3 + iterations times
+    e = materialize(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .unionAll(
             edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
         )
-        # materialize the edge list ONCE: deg, the initial ranks, the
-        # per-iteration joins, and the final join all reference it — without
-        # this the (possibly expensive) edge-derivation pipeline upstream
-        # re-executes 3 + iterations times
-        .localCheckpoint(eager=True)
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     r = deg.select(F.col("src").alias("id"), F.lit(scale).cast("bigint").alias("r"))
@@ -95,7 +96,7 @@ def pagerank(
         )
         if (i + 1) % checkpoint_every == 0:
             # truncate lineage: without this the plan doubles per iteration
-            r = r.localCheckpoint(eager=True)
+            r = materialize(r)
     return (
         r.join(deg.select(F.col("src").alias("id"), "deg"), "id")
         .select(

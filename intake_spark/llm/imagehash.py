@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from intake_spark.session import materialize
+
 __all__ = [
     "ahash64",
     "dhash64",
@@ -243,7 +245,7 @@ def hamming_band_pairs(
     # often an expensive decode+hash mapInPandas): truncate lineage so
     # it is computed once, not once per join branch — (id, int64) rows
     # are tiny at any corpus scale
-    sig = sig.filter(F.col(hash_col).isNotNull()).localCheckpoint(eager=False)
+    sig = materialize(sig.filter(F.col(hash_col).isNotNull()), eager=False)
     band_structs = F.array(
         *[
             F.struct(

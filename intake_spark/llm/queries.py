@@ -24,7 +24,7 @@ from intake_spark.benchqueries import register
 from intake_spark.llm import assembly, dedup, multimodal, sampling, similarity, sketches, text
 from intake_spark.llm.dedup import MINHASH_P, _affine_coeffs
 from intake_spark.llm.text import LANG_ORDER, STOPWORDS
-from intake_spark.session import load_table, local_frame
+from intake_spark.session import load_table, local_frame, materialize
 
 # --- shared SQL fragments -------------------------------------------------
 
@@ -332,10 +332,11 @@ _DUP_GROUPS_BODY = """
     """,
 )
 def q33_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup clustering: exact Jaccard pairs → connected components via
-    iterative min-label propagation (dedup.dup_groups). Oracle recomputes
-    components with a recursive transitive-closure CTE — the distributed
-    iterative algorithm is exact-checked against declarative SQL."""
+    """Near-dup clustering: exact Jaccard pairs → connected components
+    (dedup.dup_groups: driver union-find up to UNION_FIND_MAX_EDGES
+    edges, large-star/small-star above). Oracle recomputes components
+    with a recursive transitive-closure CTE — the engine's algorithm is
+    exact-checked against declarative SQL."""
     pairs = _jaccard_pairs_shared(spark, sf_dir)
     return dedup.dup_groups(pairs)
 
@@ -1797,7 +1798,7 @@ def q88_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q89_semantic_keep_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup end to end: semantic pairs (q84's cluster-then-compare) →
-    connected components (dup_groups min-label propagation) → the KEEP
+    connected components (dedup.dup_groups) → the KEEP
     LIST: every vector tagged with its semantic group and whether it is
     the canonical (min-id) survivor. This is the actual curation artifact
     — filter keep=1 and the corpus is semantically deduplicated. Oracle
@@ -2648,11 +2649,10 @@ def _direction_shared(spark: SparkSession, sf_dir: str):
     """The (base, mu, v) power-iteration triple shared by q109 and q112
     — both run similarity.power_direction on the same corpus with the
     same (dim=64, iters=3, qscale=1024, vmax=4096) parameters, so a
-    session running both pays for the checkpoint + mean + 3 iteration
+    session running both pays for the materialization + mean + 3 iteration
     aggregates once. The base frame inside the triple is already
-    localCheckpoint-pinned by power_direction; eviction drops the
-    reference and lets the ContextCleaner reclaim the checkpoint
-    blocks."""
+    materialized by power_direction; eviction drops the reference and
+    lets the ContextCleaner reclaim the materialized rows."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.power_direction(
         emb, "vec_id", "embedding", 64, 3, 1024, 4096
@@ -2764,9 +2764,10 @@ def q111_cms_term_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE explode + groupBy: the aggregate feeds both the exact top-15
     # and (weight_col) the sketch — the raw term stream is never scanned
     # twice
-    counts = terms.groupBy("term").agg(
-        F.count(F.lit(1)).alias("true_cnt")
-    ).localCheckpoint(eager=False)
+    counts = materialize(
+        terms.groupBy("term").agg(F.count(F.lit(1)).alias("true_cnt")),
+        eager=False,
+    )
     top = counts.orderBy(F.desc("true_cnt"), F.asc("term")).limit(15)
     sk = sketches.cms_sketch(counts, "term", weight_col="true_cnt")
     return sketches.cms_estimate(sk, top, "term").orderBy(
@@ -2825,9 +2826,9 @@ def q112_abtt_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     by design (3 probes), rank window on the rounded cosine. Reuses
     q109's direction triple via _direction_shared."""
     emb = load_table(spark, sf_dir, "embeddings")
-    corr = similarity.abtt_correct(
+    corr = materialize(similarity.abtt_correct(
         emb, dim=64, direction=_direction_shared(spark, sf_dir)
-    ).localCheckpoint(eager=True)
+    ))
     n2 = corr.withColumn(
         "n2",
         F.expr(
@@ -4204,7 +4205,7 @@ def q136_lakehouse_dicom(spark: SparkSession, sf_dir: str) -> DataFrame:
 @shared_table("shared:q137_store")
 def _q137_store(spark: SparkSession, root: str) -> tuple:
     """Session-cached q137 fixtures: the npy-decoded chunk frame
-    (localCheckpoint-ed — the executor decode runs once per session)
+    (materialized — the executor decode runs once per session)
     plus the four sink outputs (netcdf3/hdf5/tiff/avro) written from it.
     The sinks ARE part of what q137 certifies; hoisting them here means
     bench bills the write once (shared:*) and the query times the four
@@ -4220,9 +4221,9 @@ def _q137_store(spark: SparkSession, root: str) -> tuple:
     arr = ((np.arange(1024) * 31 + 5) % 223).astype("<f8").reshape(32, 32)
     npy = _os.path.join(root, "a.npy")
     np.save(npy, arr)
-    chunks = NumpyArrayReader(data=dtypes.NumpyFile(url=npy)).read(
+    chunks = materialize(NumpyArrayReader(data=dtypes.NumpyFile(url=npy)).read(
         spark=spark, rows_per_chunk=8
-    ).localCheckpoint()
+    ))
     nc_desc = output.to_netcdf(chunks, _os.path.join(root, "a.nc"))
     h5_desc = output.to_hdf5(chunks, _os.path.join(root, "a.h5"))
     tif_desc = output.to_tiff(chunks, _os.path.join(root, "a.tif"))

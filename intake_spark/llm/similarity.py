@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from intake_spark.session import local_frame
+from intake_spark.session import local_frame, materialize
 from intake_spark.utils import trunc_div
 
 
@@ -244,13 +244,13 @@ def lsh_ann_pairs(
     payload through the shuffle.
     """
     # Materialize the compact (id, band_id, band_key) rows once: both sides
-    # of the self-join share the checkpointed RDD, so the sign-bit stage
+    # of the self-join share the materialized rows, so the sign-bit stage
     # (a large expression tree over the plane constants) is planned and
     # executed once, not twice — and the join plans against a leaf.
-    banded = (
+    banded = materialize(
         with_lsh_bands(df.select(id_col, vec_col), vec_col, dim, bands, planes_per_band)
-        .select(id_col, "band_id", "band_key")
-        .localCheckpoint(eager=False)
+        .select(id_col, "band_id", "band_key"),
+        eager=False,
     )
     a = banded.select(F.col(id_col).alias("id_a"), "band_id", "band_key")
     b = banded.select(F.col(id_col).alias("id_b"), "band_id", "band_key")
@@ -657,7 +657,7 @@ def _pairs_within(
     # and the probe are separate subtrees — there is no exchange for
     # ReusedExchange to hit). Same policy as minhash_dedup_pairs'
     # candidate table; measured 2.14 -> 1.91 s on the sf0.1 build.
-    sel = sel.localCheckpoint(eager=False)
+    sel = materialize(sel, eager=False)
     a = sel.select(
         group_col,
         F.col("_id").alias("id_a"),
@@ -794,7 +794,7 @@ def power_direction(df, id_col, vec_col, dim, iters, qscale, vmax):
     """The shared direction-finding core of :func:`power_iteration_pca`
     and :func:`abtt_correct`: returns (quantized base frame, integer
     mean, final direction). See power_iteration_pca for the exactness
-    and scale analysis. The returned base frame is localCheckpoint-pinned
+    and scale analysis. The returned base frame is materialized
     — callers may feed the triple to BOTH consumers via their
     ``direction=`` kwarg without re-running the iteration ladder."""
     if dim < 1 or iters < 1:
@@ -804,9 +804,7 @@ def power_direction(df, id_col, vec_col, dim, iters, qscale, vmax):
         f"transform(CAST({vec_col} AS ARRAY<DOUBLE>), "
         f"x -> CAST(floor(x * {qscale}) AS BIGINT))"
     )
-    base = df.select(F.col(id_col), F.expr(q).alias("_q")).localCheckpoint(
-        eager=True
-    )
+    base = materialize(df.select(F.col(id_col), F.expr(q).alias("_q")))
     sums_row = base.agg(
         F.count(F.lit(1)).alias("_n"),
         *[
@@ -992,7 +990,7 @@ def kmeans_fit(
     against k literal centroid arrays (mapper-only — no join, no
     shuffle), then one k×dim-sized aggregate collected to the driver
     (centroids must sit there anyway to become the next round's
-    literals). The quantized base is localCheckpoint-pinned once, so
+    literals). The quantized base is materialized once, so
     ``iters`` rounds never re-read the source. At 100 TB this is the
     textbook scalable k-means loop: linear scans, k·dim driver state,
     no per-row Python.
@@ -1008,9 +1006,7 @@ def kmeans_fit(
         f"transform(CAST({vec_col} AS ARRAY<DOUBLE>), "
         f"x -> CAST(floor(x * {qscale}) AS BIGINT))"
     )
-    base = df.select(F.col(id_col), F.expr(q).alias("_q")).localCheckpoint(
-        eager=True
-    )
+    base = materialize(df.select(F.col(id_col), F.expr(q).alias("_q")))
     seeds = base.orderBy(F.asc(id_col)).limit(k).collect()
     if len(seeds) < k:
         raise ValueError(

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from intake_spark.session import materialize
+
 # A small, fixed stopword list per language used by the heuristic
 # language-ID scorer and the quality scorer. Deliberately tiny and
 # hard-coded: the scorer must be deterministic and oracle-reproducible.
@@ -902,7 +904,7 @@ def dsir_weights(
 
     Scale shape: exactly two mapper passes over the corpus (bucket
     counting, doc scoring — the buckets-sized count table is
-    checkpointed eagerly so the broadcast score subplan doesn't re-run
+    materialized eagerly so the broadcast score subplan doesn't re-run
     the explode), one hash-aggregation to ``buckets`` rows (map-side
     combine collapses each partition to ≤ ``buckets`` rows before the
     exchange), and one BROADCAST join of the bucket table back to the
@@ -921,13 +923,11 @@ def dsir_weights(
     # broadcast score-table subplan (bc -> tot -> lr) re-runs the corpus
     # explode twice more; with it the whole operator is exactly two
     # corpus passes (count, score)
-    bc = (
-        ex.groupBy("b")
-        .agg(
+    bc = materialize(
+        ex.groupBy("b").agg(
             F.sum("tgt").alias("ct"),
             F.sum(F.lit(1) - F.col("tgt")).alias("cr"),
         )
-        .localCheckpoint(eager=True)
     )
     tot = bc.agg(F.sum("ct").alias("nt"), F.sum("cr").alias("nr"))
     num = (F.col("ct") + 1).cast("double") * (F.col("nr") + buckets).cast("double")
@@ -956,77 +956,6 @@ def dsir_weights(
                 F.coalesce(F.col("fx"), F.lit(0)).cast("double") / float(scale), 6
             ).alias("dsir_w_r"),
         )
-    )
-
-
-def _rep_gram_structs(n: int) -> str:
-    """SQL for the sorted (gram, char-start, char-end) array at width n
-    over the canonical single-space join; empty when the doc is shorter
-    than n words. Char offsets come from `_st` (the O(n) prefix-sum fold
-    of word lengths), so intervals cover the gram's internal spaces."""
-    return (
-        f"CASE WHEN size(_w) >= {n} THEN array_sort(transform("
-        f"sequence(1, size(_w) - {n - 1}), i -> named_struct("
-        f"'g', concat_ws(' ', slice(_w, i, {n})), "
-        f"'cs', element_at(_st, i), "
-        f"'ce', element_at(_st, i + {n - 1}) + length(element_at(_w, i + {n - 1})))"
-        f")) ELSE array() END"
-    )
-
-
-def _rep_dup_cover(n: int) -> str:
-    """SQL: characters covered by n-grams occurring >= 2 times in the doc,
-    counting overlapping occurrences ONCE (interval-union fold). The
-    sorted gram array makes duplicate detection a neighbor check; the
-    union is a single aggregate() pass over the cs-sorted intervals."""
-    s = f"_s{n}"
-    return (
-        # duplicate iff equal to the previous or next gram in sorted order
-        f"aggregate(array_sort(transform(filter({s}, (x, j) -> "
-        f"(j > 0 AND try_element_at({s}, j).g = x.g) OR "
-        f"try_element_at({s}, j + 2).g = x.g), "
-        f"x -> named_struct('cs', x.cs, 'ce', x.ce))), "
-        # (covered-so-far, current-island-start, current-island-end)
-        f"named_struct('cov', cast(0 as bigint), 'cs', cast(0 as bigint), "
-        f"'ce', cast(0 as bigint)), "
-        f"(st, x) -> CASE WHEN x.cs > st.ce THEN named_struct("
-        f"'cov', st.cov + st.ce - st.cs, 'cs', cast(x.cs as bigint), "
-        f"'ce', cast(x.ce as bigint)) "
-        f"ELSE named_struct('cov', st.cov, 'cs', st.cs, "
-        f"'ce', greatest(st.ce, cast(x.ce as bigint))) END, "
-        f"st -> st.cov + st.ce - st.cs)"
-    )
-
-
-def _rep_runs(n: int) -> str:
-    """SQL: 1-based indices of run starts in the sorted gram array — its
-    own projected column so each index is computed once (inlining it
-    into the consumer would re-evaluate the filter per element access,
-    an O(m^2) rescan that showed up as 20x on the bench)."""
-    s = f"_s{n}"
-    return (
-        f"filter(sequence(1, size({s})), j -> j = 1 OR "
-        f"try_element_at({s}, j - 1).g != try_element_at({s}, j).g)"
-    )
-
-
-def _rep_top_chars(n: int) -> str:
-    """SQL: occurrences * char-length of the doc's most frequent n-gram
-    (ties broken by longer gram, then lexicographically-last gram — the
-    same (count, len, gram) ordering the oracle's ROW_NUMBER uses). Run
-    lengths come from the distance between run starts (column ``_r{n}``)
-    — O(m) after the sort, no quadratic rescan."""
-    s, r = f"_s{n}", f"_r{n}"
-    return (
-        f"CASE WHEN size({s}) = 0 THEN cast(0 as bigint) ELSE "
-        f"cast(aggregate(transform({r}, (st, k) -> named_struct("
-        f"'c', coalesce(try_element_at({r}, k + 2), size({s}) + 1) - st, "
-        f"'l', length(try_element_at({s}, st).g), "
-        f"'g', try_element_at({s}, st).g)), "
-        f"cast(null as struct<c: int, l: int, g: string>), "
-        f"(best, x) -> CASE WHEN best IS NULL OR struct(x.c, x.l, x.g) > "
-        f"struct(best.c, best.l, best.g) THEN x ELSE best END, "
-        f"best -> cast(best.c as bigint) * best.l) as bigint) END"
     )
 
 
@@ -1062,15 +991,14 @@ def _pack_count_len(counts, lens):
 
 
 def _rep_stats_batch(ids, texts, np, pd):
-    """One batch of the vectorized Gopher repetition counters — the
-    numpy twin of the HOF expression stack, bit-identical by
-    construction: Python ``len``/``split`` and Spark
-    ``length``/``split`` both count code points and keep trailing
-    empties for literal separators, n-gram equality groups come from a
-    per-batch word dictionary (pd.factorize) + lexsort instead of
-    string sorts (any total order yields the same groups), the top-gram
-    value is count x char-length so the SQL's lexicographic gram
-    tie-break cannot change the output (tied (count, len) grams tie on
+    """One batch of the vectorized Gopher repetition counters, exact by
+    construction: Python ``len``/``split`` and Spark ``length``/``split``
+    both count code points and keep trailing empties for literal
+    separators, n-gram equality groups come from a per-batch word
+    dictionary (pd.factorize) + lexsort instead of string sorts (any
+    total order yields the same groups), the top-gram value is count x
+    char-length so the oracle's lexicographic gram tie-break cannot
+    change the output (tied (count, len) grams tie on
     the product too), and the interval union is the same sorted-by-start
     sweep, done as a segmented exclusive cummax."""
     N = len(ids)
@@ -1200,9 +1128,8 @@ def gopher_repetition(
     offsets are measured over the canonical single-space join of the
     document's nonempty words. Python and Spark agree on every
     primitive involved (code-point ``len``, literal-separator ``split``
-    keeping empties), and :func:`gopher_repetition_hof` — the original
-    pure-expression implementation — stays as the in-plan cross-check
-    twin (tests assert both agree with a brute-force reference).
+    keeping empties); tests check every output cell against a
+    brute-force Python reference.
 
     Scale shape: MAPPER-ONLY (one MapInPandas, no explode, no shuffle).
     r12 moved the per-document n-gram counting from per-row interpreted
@@ -1255,102 +1182,6 @@ def gopher_repetition(
     # through every stage) — select each input column once
     in_cols = [icol, tcol] + [c for c in cc if c not in (icol, tcol)]
     return df.select(*in_cols).mapInPandas(rep, schema)
-
-
-def gopher_repetition_hof(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    carry: "tuple[str, ...]" = (),
-) -> DataFrame:
-    """The original pure-expression (higher-order-function) form of
-    :func:`gopher_repetition` — kept as the cross-check twin: two
-    independent implementations of the same counters, asserted equal in
-    tests. Zero Python boundary, so it also remains the fallback for
-    deployments that must keep the cleaning ladder JVM-only."""
-    txt = F.coalesce(F.col(text_col), F.lit(""))
-    base = df.select(
-        F.col(id_col),
-        nonempty_words(txt).alias("_w"),
-        F.split(txt, "\n").alias("_ln"),
-        F.split(txt, "\n\n").alias("_pg"),
-        *[F.col(c) for c in carry],  # see c4_filter: stage chaining
-    )
-    # O(n) prefix-sum fold: char start of word i in the canonical join
-    base = base.withColumn(
-        "_st",
-        F.expr(
-            "aggregate(_w, named_struct('a', cast(array() as array<bigint>), "
-            "'acc', cast(0 as bigint)), "
-            "(s, x) -> named_struct('a', concat(s.a, array(s.acc)), "
-            "'acc', s.acc + length(x) + 1), s -> s.a)"
-        ),
-    )
-    for n in range(2, 11):
-        base = base.withColumn(f"_s{n}", F.expr(_rep_gram_structs(n)))
-    for n in (2, 3, 4):
-        base = base.withColumn(f"_r{n}", F.expr(_rep_runs(n)))
-    charsum = "aggregate({0}, cast(0 as bigint), (s, x) -> s + length(x))"
-    total = F.expr(
-        f"{charsum.format('_w')} + greatest(cast(size(_w) as bigint) - 1, 0)"
-    )
-    stats = base.select(
-        F.col(id_col),
-        total.alias("n_chars"),
-        F.size("_ln").cast("long").alias("n_lines"),
-        (F.size("_ln") - F.size(F.array_distinct("_ln"))).cast("long").alias("dup_lines"),
-        F.expr(
-            f"{charsum.format('_ln')} - {charsum.format('array_distinct(_ln)')}"
-        ).alias("dup_line_chars"),
-        F.expr(charsum.format("_ln")).alias("line_chars"),
-        F.size("_pg").cast("long").alias("n_paras"),
-        (F.size("_pg") - F.size(F.array_distinct("_pg"))).cast("long").alias("dup_paras"),
-        F.expr(
-            f"{charsum.format('_pg')} - {charsum.format('array_distinct(_pg)')}"
-        ).alias("dup_para_chars"),
-        F.expr(charsum.format("_pg")).alias("para_chars"),
-        *[F.expr(_rep_top_chars(n)).alias(f"top{n}_chars") for n in (2, 3, 4)],
-        *[F.expr(_rep_dup_cover(n)).alias(f"dup{n}_chars") for n in range(5, 11)],
-        *[F.col(c) for c in carry],
-    )
-    top_thr = {2: 20, 3: 18, 4: 16}
-    dup_thr = {5: 15, 6: 14, 7: 13, 8: 12, 9: 11, 10: 10}
-    flags = [
-        ((100 * F.col("dup_lines")) > (30 * F.col("n_lines"))).cast("int").alias("r_dup_line"),
-        ((100 * F.col("dup_line_chars")) > (20 * F.col("line_chars"))).cast("int").alias("r_dup_line_char"),
-        ((100 * F.col("dup_paras")) > (30 * F.col("n_paras"))).cast("int").alias("r_dup_para"),
-        ((100 * F.col("dup_para_chars")) > (20 * F.col("para_chars"))).cast("int").alias("r_dup_para_char"),
-        *[
-            ((100 * F.col(f"top{n}_chars")) > (t * F.col("n_chars"))).cast("int").alias(f"r_top{n}")
-            for n, t in top_thr.items()
-        ],
-        *[
-            ((100 * F.col(f"dup{n}_chars")) > (t * F.col("n_chars"))).cast("int").alias(f"r_dup{n}")
-            for n, t in dup_thr.items()
-        ],
-    ]
-    out = stats.select(
-        F.col(id_col),
-        F.col("n_chars"),
-        F.col("n_lines"),
-        F.col("dup_lines"),
-        F.col("dup_line_chars"),
-        F.col("dup_paras"),
-        F.col("dup_para_chars"),
-        *[F.col(f"top{n}_chars") for n in (2, 3, 4)],
-        *[F.col(f"dup{n}_chars") for n in range(5, 11)],
-        *flags,
-        *[F.col(c) for c in carry],
-    )
-    flag_names = [
-        "r_dup_line", "r_dup_line_char", "r_dup_para", "r_dup_para_char",
-        "r_top2", "r_top3", "r_top4",
-        "r_dup5", "r_dup6", "r_dup7", "r_dup8", "r_dup9", "r_dup10",
-    ]
-    keep = None
-    for fn in flag_names:
-        keep = F.col(fn) if keep is None else keep + F.col(fn)
-    return out.withColumn("keep", (keep == 0).cast("int"))
 
 
 def blocklist_filter(
@@ -1582,7 +1413,7 @@ def word_profile_divergence(
     corpus — every token is tagged with its listed word (or NULL) map-
     side, so the single (source, word) aggregate yields both the listed
     counts and, via its NULL bucket, the per-source token totals. The
-    tiny result (sources × (k+1) rows) is localCheckpoint-ed so the
+    tiny result (sources × (k+1) rows) is materialized so the
     derived branches (totals, grid, corpus profile) reuse it instead of
     re-tokenizing the corpus per referencing subtree."""
     if not words:
@@ -1594,10 +1425,9 @@ def word_profile_divergence(
         F.col(source_col).alias("source"),
         F.explode(nonempty_words(txt)).alias("term"),
     ).select("source", F.when(low.isin(wlist), low).alias("word"))
-    counts = (
+    counts = materialize(
         tagged.groupBy("source", "word")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     totals = counts.groupBy("source").agg(
         F.sum("cnt").cast("long").alias("n_tokens")

@@ -413,6 +413,35 @@ def spread_small_scan(df, min_parts: int | None = None):
     return df.repartition(par)
 
 
+def materialize(df, eager: bool = True):
+    """Cut ``df``'s lineage: the engine's one materialization primitive.
+
+    Iterative loops call it so each round plans over the previous
+    round's rows instead of a plan that grows with the round count, and
+    multi-consumer subplans call it so every consumer reads one copy
+    instead of re-running the subplan.
+
+    The mechanism follows the deployment. Without a checkpoint directory
+    (``sc.getCheckpointDir()`` is None) this is ``df.localCheckpoint``:
+    the rows live in executor block storage, which is fast but not
+    fault-tolerant — an executor lost after the cut fails the job, since
+    the lineage to recompute the rows is gone. Once the SparkContext has
+    a checkpoint directory (``sc.setCheckpointDir`` or the
+    ``spark.checkpoint.dir`` conf) it is ``df.checkpoint``: the rows are
+    written to reliable storage and survive an executor loss.
+
+    ``eager=True`` runs a job now; ``eager=False`` defers the work to the
+    first action over the result. A lazy local checkpoint caches the rows
+    inside that action, but a lazy reliable checkpoint costs Spark one
+    extra job after it, which recomputes the rows to write them. Once
+    the returned frame is unreachable, Spark's ContextCleaner drops local
+    checkpoint blocks; it deletes reliable checkpoint files only under
+    ``spark.cleaner.referenceTracking.cleanCheckpoints=true``."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager)
+    return df.checkpoint(eager)
+
+
 def ntz_epoch_micros(ref: str):
     """Naive-epoch microseconds of a TIMESTAMP_NTZ expression via pure
     FIELD EXTRACTION — timezone-proof by construction. ``ref`` is an SQL

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import ast
 import os
 import sys
 
@@ -33,3 +34,19 @@ def duck():
         )
     yield con
     con.close()
+
+
+def method_calls(tree, name):
+    """(enclosing function, call node) of every ``.<name>(...)`` call in
+    a parsed module; the function is None at module level."""
+    def walk(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield from walk(child, child.name)
+                continue
+            if (isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr == name):
+                yield fn, child
+            yield from walk(child, fn)
+    return walk(tree, None)

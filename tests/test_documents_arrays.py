@@ -229,7 +229,7 @@ def test_catalog_mapper(spark):
 
 
 def test_dup_groups_small(spark):
-    from intake_spark.llm.dedup import dup_groups
+    from intake_spark.llm.dedup import dup_groups, dup_groups_star
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)],
@@ -239,21 +239,34 @@ def test_dup_groups_small(spark):
     # driver-side union-find fast path
     out = {r.doc_id: r.group_id for r in dup_groups(pairs).collect()}
     assert out == expected
-    # distributed min-label propagation path (forced)
-    out2 = {
-        r.doc_id: r.group_id
-        for r in dup_groups(pairs, small_threshold=0).collect()
-    }
+    # distributed large-star/small-star path
+    out2 = {r.doc_id: r.group_id for r in dup_groups_star(pairs).collect()}
     assert out2 == expected
 
 
-def test_dup_groups_chain(spark):
-    """Long chain exercises multi-round propagation in the distributed path."""
-    from intake_spark.llm.dedup import dup_groups
+def test_dup_groups_chain(spark, monkeypatch):
+    """Long chain through the distributed path of dup_groups."""
+    from intake_spark.llm import dedup
 
+    monkeypatch.setattr(dedup, "UNION_FIND_MAX_EDGES", 0)
     pairs = spark.createDataFrame([(i, i + 1) for i in range(12)], ["doc_a", "doc_b"])
-    out = {r.doc_id: r.group_id for r in dup_groups(pairs, small_threshold=0).collect()}
+    out = {r.doc_id: r.group_id for r in dedup.dup_groups(pairs).collect()}
     assert set(out.values()) == {0} and len(out) == 13
+
+
+def test_dup_groups_distributed_chain_is_one_group(spark, monkeypatch):
+    """A 40-node chain above the union-find threshold is one component:
+    the distributed path labels the whole chain or raises, and never
+    returns a partial labelling."""
+    from intake_spark.llm import dedup
+
+    monkeypatch.setattr(dedup, "UNION_FIND_MAX_EDGES", 0)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(39)], ["doc_a", "doc_b"]
+    )
+    out = dedup.dup_groups(pairs).collect()
+    assert len(out) == 40
+    assert {r.group_id for r in out} == {0}
 
 
 @pytest.mark.slow  # adversarial 10k chain; core covered by test_dup_groups_chain/_small
@@ -262,13 +275,13 @@ def test_dup_groups_star_adversarial_chain(spark):
     min-label propagation would need 10k rounds) converges within
     O(log n) alternation rounds — max_iter=16 bounds the rounds, so a
     slow-converging implementation fails on wrong labels."""
-    from intake_spark.llm.dedup import dup_groups
+    from intake_spark.llm.dedup import dup_groups_star
 
     n = 10_000
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], ["doc_a", "doc_b"]
     ).coalesce(8)
-    out = dup_groups(pairs, method="star", max_iter=16)
+    out = dup_groups_star(pairs, max_iter=16)
     agg = out.groupBy("group_id").count().collect()
     assert len(agg) == 1 and agg[0]["group_id"] == 0 and agg[0]["count"] == n
     # mixed shapes + string ids through the same arm
@@ -278,13 +291,9 @@ def test_dup_groups_star_adversarial_chain(spark):
         ["doc_a", "doc_b"],
     )
     got = {r.doc_id: r.group_id
-           for r in dup_groups(spairs, method="star").collect()}
+           for r in dup_groups_star(spairs).collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x",
                    "q": "q", "q2": "q", "q3": "q"}
-    import pytest
-
-    with pytest.raises(ValueError, match="auto | label | star"):
-        dup_groups(spairs, method="bogus")
 
 
 def test_dup_groups_star_unconverged_raises(spark):

@@ -2208,10 +2208,16 @@ def test_curation_funnel_stages(spark):
 
 
 def test_gopher_repetition_random_cross_check(spark):
-    """Brute-force Python reference (per-n occurrence counting + interval
-    union over char spans) vs the sorted-run HOF implementation, on 40
-    seeded random docs over a tiny alphabet (maximal collision rate)."""
+    """Brute-force Python reference (per-n occurrence counting, interval
+    union over char spans, per-line and per-paragraph occurrence counts
+    and the Gopher thresholds) vs gopher_repetition on EVERY output
+    cell: 40 seeded random docs over a tiny alphabet (maximal collision
+    rate), 40 seeded random multi-line docs, and structural text —
+    newline and double-newline duplicates, empty and NULL docs,
+    multi-space runs."""
     import random
+    from collections import Counter
+    from fractions import Fraction
 
     from intake_spark.llm import text as llmtext
 
@@ -2221,15 +2227,67 @@ def test_gopher_repetition_random_cross_check(spark):
         (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 25))))
         for i in range(40)
     ]
+    # line/paragraph structure: lines of words from a wider vocabulary,
+    # a third of them repeats of an earlier line, joined by single or
+    # double newlines — fractions on both sides of every threshold
+    rng = random.Random(20260815)
+    vocab = [f"w{i}" for i in range(60)]
+    for i in range(200, 240):
+        lines = []
+        for _ in range(rng.randint(1, 12)):
+            if lines and rng.random() < 0.35:
+                lines.append(rng.choice(lines))
+            else:
+                lines.append(" ".join(
+                    rng.choice(vocab) for _ in range(rng.randint(0, 7))))
+        text = lines[0]
+        for ln in lines[1:]:
+            text += rng.choice(["\n", "\n\n"]) + ln
+        docs.append((i, text))
+    docs += [
+        (100, "aa b\naa b\naa b\n\nccc\n\nccc"),
+        (101, ""),
+        (102, None),
+        (103, "  aa   b  "),
+        (104, "\n\n\n"),
+    ]
+
+    def dup_counts(parts):
+        """(excess copies, chars in excess copies, total chars)."""
+        extra = [(c - 1, (c - 1) * len(x)) for x, c in Counter(parts).items()]
+        return (sum(e for e, _ in extra), sum(ch for _, ch in extra),
+                sum(map(len, parts)))
+
+    # Gopher (Rae et al. 2021, appendix A): a doc is dropped when a
+    # fraction exceeds its threshold
+    thresholds = {
+        "r_dup_line": ("dup_lines", "n_lines", Fraction(30, 100)),
+        "r_dup_line_char": ("dup_line_chars", "line_chars", Fraction(20, 100)),
+        "r_dup_para": ("dup_paras", "n_paras", Fraction(30, 100)),
+        "r_dup_para_char": ("dup_para_chars", "para_chars", Fraction(20, 100)),
+        "r_top2": ("top2_chars", "n_chars", Fraction(20, 100)),
+        "r_top3": ("top3_chars", "n_chars", Fraction(18, 100)),
+        "r_top4": ("top4_chars", "n_chars", Fraction(16, 100)),
+        **{f"r_dup{n}": (f"dup{n}_chars", "n_chars", Fraction(20 - n, 100))
+           for n in range(5, 11)},
+    }
 
     def brute(text):
+        text = text or ""
         ws = [x for x in text.split(" ") if x]
         starts, acc = [], 0
         for wd in ws:
             starts.append(acc)
             acc += len(wd) + 1
-        total = max(acc - 1, 0)
-        out = {}
+        out = {"n_chars": max(acc - 1, 0)}
+        lines = text.split("\n")
+        out["n_lines"] = len(lines)
+        out["dup_lines"], out["dup_line_chars"], out["line_chars"] = (
+            dup_counts(lines))
+        paras = text.split("\n\n")
+        out["n_paras"] = len(paras)
+        out["dup_paras"], out["dup_para_chars"], out["para_chars"] = (
+            dup_counts(paras))
         for n in range(2, 11):
             grams = {}
             for i in range(len(ws) - n + 1):
@@ -2245,7 +2303,7 @@ def test_gopher_repetition_random_cross_check(spark):
                     ),
                     default=None,
                 )
-                out[f"top{n}"] = (
+                out[f"top{n}_chars"] = (
                     0 if best is None else best[0] * best[1]
                 )
             if n >= 5:
@@ -2260,42 +2318,22 @@ def test_gopher_repetition_random_cross_check(spark):
                         cs, ce = s, e
                     else:
                         ce = max(ce, e)
-                out[f"dup{n}"] = cov + ce - cs
-        out["total"] = total
+                out[f"dup{n}_chars"] = cov + ce - cs
+        for flag, (num, den, thr) in thresholds.items():
+            out[flag] = int(out[den] > 0 and Fraction(out[num], out[den]) > thr)
+        out["keep"] = int(not any(out[f] for f in thresholds))
+        for k in ("line_chars", "n_paras", "para_chars"):
+            del out[k]
         return out
 
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {r.doc_id: r for r in llmtext.gopher_repetition(df).collect()}
+    got = {r.doc_id: r.asDict() for r in llmtext.gopher_repetition(df).collect()}
+    assert set(got) == {i for i, _ in docs}
     for i, text in docs:
         exp = brute(text)
-        r = got[i]
-        assert r.n_chars == exp["total"], (i, text)
-        for n in (2, 3, 4):
-            assert r[f"top{n}_chars"] == exp[f"top{n}"], (i, n, text)
-        for n in range(5, 11):
-            assert r[f"dup{n}_chars"] == exp[f"dup{n}"], (i, n, text)
-
-    # the r12 vectorized implementation and the original HOF expression
-    # stack must agree on EVERY output cell (newlines/paragraph dups and
-    # the flag columns included, which brute() doesn't model), with
-    # structural text thrown in: newlines, double-newlines, empty and
-    # NULL docs, multi-space runs
-    extra = docs + [
-        (100, "aa b\naa b\naa b\n\nccc\n\nccc"),
-        (101, ""),
-        (102, None),
-        (103, "  aa   b  "),
-        (104, "\n\n\n"),
-    ]
-    df2 = spark.createDataFrame(extra, "doc_id long, text string")
-    vec = {r.doc_id: r.asDict() for r in llmtext.gopher_repetition(df2).collect()}
-    hof = {
-        r.doc_id: r.asDict()
-        for r in llmtext.gopher_repetition_hof(df2).collect()
-    }
-    assert set(vec) == set(hof)
-    for k in vec:
-        assert vec[k] == hof[k], (k, vec[k], hof[k])
+        assert set(got[i]) == set(exp) | {"doc_id"}, i
+        for k, v in exp.items():
+            assert got[i][k] == v, (i, k, text)
 
 
 def test_hll_distinct_accuracy_and_partition_invariance(spark):

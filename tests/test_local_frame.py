@@ -21,6 +21,7 @@ from pyspark.sql.types import (
 )
 
 from intake_spark.session import local_frame
+from tests.conftest import method_calls
 
 DDL = (
     "l long, i int, d double, f float, s string, b binary, t boolean, "
@@ -110,20 +111,10 @@ CREATE_DATAFRAME_ALLOWED = {
 def _schema_create_dataframe_calls(tree):
     """(enclosing function, first argument, line) of every
     ``.createDataFrame(rows, schema)`` call in a module."""
-    def walk(node, fn):
-        for child in ast.iter_child_nodes(node):
-            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                yield from walk(child, child.name)
-                continue
-            if (isinstance(child, ast.Call)
-                    and isinstance(child.func, ast.Attribute)
-                    and child.func.attr == "createDataFrame"
-                    and (len(child.args) >= 2
-                         or any(k.arg == "schema" for k in child.keywords))):
-                first = ast.unparse(child.args[0]) if child.args else ""
-                yield fn, first, child.lineno
-            yield from walk(child, fn)
-    return walk(tree, None)
+    for fn, call in method_calls(tree, "createDataFrame"):
+        if len(call.args) >= 2 or any(k.arg == "schema" for k in call.keywords):
+            first = ast.unparse(call.args[0]) if call.args else ""
+            yield fn, first, call.lineno
 
 
 def test_engine_local_frames_use_arrow():

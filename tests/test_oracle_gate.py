@@ -150,8 +150,8 @@ def _python_rdd_scans(plan):
     """The ``Scan ExistingRDD`` leaves of a physical plan (cached
     relations included) whose RDD lineage holds a ``PythonRDD``: rows
     pickled by a Python worker, as ``createDataFrame`` over Python rows
-    plans them. A ``localCheckpoint`` also scans as ExistingRDD, but
-    over a JVM RDD."""
+    plans them. A ``session.materialize`` checkpoint also scans as
+    ExistingRDD, but over a JVM RDD."""
     found, todo = [], [plan]
     while todo:
         leaves = todo.pop().collectLeaves()
