@@ -28,6 +28,19 @@ from intake_spark.user_parameters import (
 )
 from intake_spark.utils import Tokenizable, merge_dicts, tokenize, walk_replace
 
+try:  # libyaml's C parser and emitter, when PyYAML was built with it
+    from yaml import CSafeDumper as _Dumper, CSafeLoader as _Loader
+except ImportError:
+    from yaml import SafeDumper as _Dumper, SafeLoader as _Loader
+
+
+def load_yaml_file(path: str):
+    """The one YAML parse of a catalog file: the safe loader, in C when
+    PyYAML was built with libyaml. Malformed YAML raises
+    ``yaml.YAMLError``."""
+    with open(path) as f:
+        return yaml.load(f, Loader=_Loader)
+
 
 class ReaderDescription(Tokenizable):
     """Serializable description of a reader or pipeline."""
@@ -336,12 +349,14 @@ class Catalog(Tokenizable):
 
     def to_yaml_file(self, path: str) -> None:
         with open(path, "w") as f:
-            yaml.safe_dump(self.to_dict(), f, sort_keys=True)
+            yaml.dump(self.to_dict(), f, Dumper=_Dumper, sort_keys=True)
 
     @classmethod
     def from_yaml_file(cls, path: str) -> "Catalog":
-        with open(path) as f:
-            d = yaml.safe_load(f)
+        return cls._from_yaml_doc(load_yaml_file(path), path)
+
+    @classmethod
+    def _from_yaml_doc(cls, d, path: str) -> "Catalog":
         cat = cls.from_dict(d)
         cat.metadata.setdefault("catalog_path", os.path.abspath(path))
         return cat
@@ -402,7 +417,12 @@ def open_catalog(path: str | None = None, ttl: float | None = None):
     re-stats the file(s) at most once per TTL window and re-parses when
     an mtime changed — glob catalogs also re-glob, so files appearing
     or vanishing mid-session are picked up (parity: the reference's
-    TTL-based catalog reload, intake/catalog/base.py:188-191)."""
+    TTL-based catalog reload, intake/catalog/base.py:188-191).
+
+    Each file is parsed once (:func:`load_yaml_file`, libyaml when
+    PyYAML has it) and the parsed document picks the loader: a
+    top-level ``sources:`` key is V1, anything else V2. Malformed YAML
+    raises ``yaml.YAMLError``."""
     if ttl is not None:
         if path is None:
             raise ValueError("ttl needs a catalog path to watch")
@@ -416,11 +436,14 @@ def open_catalog(path: str | None = None, ttl: float | None = None):
         for p in sorted(globmod.glob(path)):
             merged += open_catalog(p)
         return merged
-    from intake_spark.v1compat import is_v1_yaml, open_v1_catalog
+    doc = load_yaml_file(path)
+    if isinstance(doc, dict) and "sources" in doc:
+        from intake_spark.v1compat import from_v1_dict
 
-    if is_v1_yaml(path):
-        return open_v1_catalog(path)
-    return Catalog.from_yaml_file(path)
+        return from_v1_dict(
+            doc, catalog_dir=os.path.dirname(os.path.abspath(path))
+        )
+    return Catalog._from_yaml_doc(doc, path)
 
 
 class ReloadingCatalog:
@@ -518,10 +541,11 @@ def entrypoints_catalog(group: str = "intake_spark.catalogs") -> Catalog:
     Each entry point may resolve to a Catalog, a zero-arg callable returning
     one, or a reader/pipeline (catalogued under the entry-point name).
     Broken entry points are skipped — a bad plugin must not take down
-    discovery."""
+    discovery — and recorded in ``metadata['skipped']`` as
+    ``{"name", "reason": "Type: message"}``."""
     import importlib.metadata as _md
 
-    out = Catalog()
+    out = Catalog(metadata={"skipped": []})
     for ep in _md.entry_points(group=group):
         try:
             obj = ep.load()
@@ -535,6 +559,8 @@ def entrypoints_catalog(group: str = "intake_spark.catalogs") -> Catalog:
                     out.aliases[f"{ep.name}.{alias}"] = tok
             else:
                 out.add_entry(obj, name=ep.name)
-        except Exception:
-            continue
+        except Exception as exc:  # any plugin failure: record, keep going
+            out.metadata["skipped"].append(
+                {"name": ep.name, "reason": f"{type(exc).__name__}: {exc}"}
+            )
     return out

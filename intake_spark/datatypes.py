@@ -590,14 +590,21 @@ def recommend_corpus(
     Python workers are the sniffing passes'. The plan is two shuffles
     and two ``mapInPandas`` passes, both with an explicit partition
     count so adaptive execution cannot coalesce the sniffing into one
-    task. The first shuffle is keyed by the ``dir``/``ext``
-    EXPRESSIONS, and the columns are computed after it: a projection
-    directly on the local relation would be evaluated on the driver,
-    row by row, at every planning. Nothing in the plan is materialized:
-    an executor loss recomputes the lost partitions from the listing
-    like any other lineage. With ``cache_path`` the new
-    verdicts are appended at call time (one write) and the returned
-    DataFrame reads the registry.
+    task. The first shuffle is keyed by the ``dir`` EXPRESSION alone, so
+    each directory, and with it each of its ``(dir, ext)`` clusters,
+    lands whole in one partition; ``dir`` is computed after it, because
+    a projection directly on the local relation would be evaluated on
+    the driver, row by row, at every planning. ``ext`` is folded in
+    Python by the detection rule (:func:`corpus_ext`: ``str.lower`` of
+    everything after the basename's first dot, the folding
+    :func:`recommend_scored` applies to the URL), never by the JVM's
+    ``lower()``: the JVM's first ``lower()`` starts ICU case mapping,
+    ~1.5 s and ~5 MB once per JVM, which a triage pays for nothing.
+    Nothing in the plan is materialized: an executor loss recomputes
+    the lost partitions from the listing like any other lineage. With
+    ``cache_path`` the new verdicts are appended at call time (one
+    write) and the returned DataFrame reads the registry, its ``ext``
+    folded by the same Python rule in one more ``mapInPandas`` pass.
     """
     import os
 
@@ -622,15 +629,11 @@ def recommend_corpus(
             paths = list(source)
         listing = local_frame(spark, [(p,) for p in paths], "path string")
 
-    # dir/ext are computed after the first exchange, never in a
-    # projection directly on the listing: on a local relation Catalyst
-    # would evaluate that projection on the driver, row by row, at
-    # every planning (local_frame's caveat)
+    # dir is computed after the first exchange, never in a projection
+    # directly on the listing: on a local relation Catalyst would
+    # evaluate that projection on the driver, row by row, at every
+    # planning (local_frame's caveat)
     dir_ = F.regexp_replace("path", "/[^/]*$", "")
-    ext_ = F.lower(
-        F.regexp_extract(F.element_at(F.split("path", "/"), -1),
-                         r"\.(.*)$", 1)
-    )
     todo = listing
     if cache_path and os.path.exists(cache_path):
         todo = listing.join(
@@ -670,9 +673,9 @@ def recommend_corpus(
         frames = list(batches)
         if not frames:
             return
-        pdf = pd.concat(frames, ignore_index=True).sort_values(
-            ["dir", "ext", "_h", "path"]
-        )
+        pdf = pd.concat(frames, ignore_index=True)
+        pdf["ext"] = [corpus_ext(p) for p in pdf["path"]]
+        pdf = pdf.sort_values(["dir", "ext", "_h", "path"])
         rows = []
         key, n, dts = None, 0, set()
         for p, d_, e_ in zip(pdf["path"], pdf["dir"], pdf["ext"]):
@@ -709,9 +712,8 @@ def recommend_corpus(
     # though each pending row costs a head_bytes read downstream
     n_parts = spark.sparkContext.defaultParallelism
     fresh = (
-        todo.repartition(n_parts, dir_, ext_)
-        .select("path", dir_.alias("dir"), ext_.alias("ext"),
-                F.xxhash64("path").alias("_h"))
+        todo.repartition(n_parts, dir_)
+        .select("path", dir_.alias("dir"), F.xxhash64("path").alias("_h"))
         .mapInPandas(_triage, verdict_schema)
         .repartition(n_parts, "path")
         .mapInPandas(_sniff_pending, verdict_schema)
@@ -724,14 +726,27 @@ def recommend_corpus(
         fresh.select("path", "datatype", "score", "via").write.mode(
             "append"
         ).parquet(cache_path)
+
+        def _with_ext(batches):
+            for pdf in batches:
+                pdf.insert(2, "ext", [corpus_ext(p) for p in pdf["path"]])
+                yield pdf
+
         return (
             spark.read.parquet(cache_path)
             .dropDuplicates(["path"])
             .join(listing, "path")  # drop verdicts for vanished paths
-            .select("path", dir_.alias("dir"), ext_.alias("ext"),
-                    "datatype", "score", "via")
+            .select("path", dir_.alias("dir"), "datatype", "score", "via")
+            .mapInPandas(_with_ext, verdict_schema)
         )
     return fresh
+
+
+def corpus_ext(path: str) -> str:
+    """A corpus file's cluster extension: everything after the first dot
+    of its basename, lower-cased as :func:`recommend_scored` folds the
+    URL (``"d/a.Tar.GZ"`` -> ``"tar.gz"``, ``"d/noext"`` -> ``""``)."""
+    return path.rsplit("/", 1)[-1].partition(".")[2].lower()
 
 
 def distributed_walk(spark, root: str):

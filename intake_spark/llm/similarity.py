@@ -20,6 +20,7 @@ for ≥1k dims (noted, not needed for the synthetic tables).
 from __future__ import annotations
 
 import hashlib
+import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -105,13 +106,33 @@ def _hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
     return planes
 
 
+def _double_sql(x: float) -> str:
+    """A double as a SQL literal that parses back bit-identical: ``repr``
+    prints the shortest round-trip form (``-0.0`` and subnormals
+    included); non-finite values are string casts."""
+    x = float(x)
+    if math.isfinite(x):
+        return repr(x) + "D"
+    name = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
+    return f"CAST('{name}' AS DOUBLE)"
+
+
 def _dot_sql(vec_sql: str, row: list[float]) -> str:
     """Index-ordered left-fold dot product of a vector column against a
-    literal plane, as one SQL fragment. ``repr(x)`` prints the shortest
-    round-trip double, so the parsed literal is bit-identical to the Python
-    value (and to DuckDB's md5-derived recomputation)."""
-    arr = "array(" + ",".join(repr(x) + "D" for x in row) + ")"
+    literal plane, as one SQL fragment; the literals are bit-identical to
+    the Python values (:func:`_double_sql`), and so to DuckDB's
+    md5-derived recomputation."""
+    arr = "array(" + ",".join(map(_double_sql, row)) + ")"
     return f"aggregate(zip_with({vec_sql}, {arr}, (x,y) -> x*y), 0.0D, (a,x) -> a+x)"
+
+
+def _sums_col(term: str, dim: int):
+    """``array(sum(<term, j=1>), …, sum(<term, j=dim>)) AS _s``: a
+    per-dimension aggregate built as one Column (one py4j call where
+    ``dim`` separate ``F.sum`` Columns cost hundreds), read back as the
+    list ``row["_s"]``. The aggregate functions are the same."""
+    sums = ", ".join(f"sum({term.format(j=j)})" for j in range(1, dim + 1))
+    return F.expr(f"array({sums})").alias("_s")
 
 
 def _rp_signs(out_dim: int, dim: int) -> list[list[float]]:
@@ -570,9 +591,10 @@ def seeded_clusters(
     ``[(seed_id, vector), ...]`` to reuse a quantizer across corpora.
 
     Scale posture: the seed set is tiny (k ~ sqrt(n) in practice), so it is
-    inlined as literal arrays into ONE per-row argmax projection — the
-    assignment pass is shuffle-free and stream-capable, exactly like the
-    broadcast-centroid map step of IVF. The argmax tie-break (equal cosine
+    inlined as literal arrays into ONE per-row argmax projection, built
+    as one SQL expression with bit-identical double literals (not one
+    Column per coordinate) — the assignment pass is shuffle-free and
+    stream-capable, exactly like the broadcast-centroid map step of IVF. The argmax tie-break (equal cosine
     -> lowest seed id) is encoded in an ordered struct max, so assignment
     is engine-reproducible. Reference surface: SemDeDup / cluster-dedup
     pipelines (no direct intake counterpart; first-class LLM-pipeline op).
@@ -592,24 +614,21 @@ def seeded_clusters(
     v = v.withColumn("_n2", norm2_expr("_v"))
     scored = []
     for sid, vec in seeds:
-        lit_vec = F.array(*[F.lit(float(x)) for x in vec])
         # left-fold python sum matches the engines' sequential fold
         sn2 = 0.0
         for x in vec:
             sn2 += float(x) * float(x)
-        dot = F.aggregate(
-            F.zip_with(F.col("_v"), lit_vec, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        )
+        dot = _dot_sql("_v", vec)
         # zero-norm guard: ANSI mode raises DIVIDE_BY_ZERO on 0.0/0.0
         # (non-ANSI silently yields NaN, which sorts ABOVE every cosine) —
         # an all-zeros embedding assigns deterministically at cos = -2.0,
         # below any real cosine, so ties break purely on seed id
-        denom = F.col("_n2") * F.lit(sn2)
-        cos = F.when(denom > 0, dot / F.sqrt(denom)).otherwise(F.lit(-2.0))
-        scored.append(F.struct(cos.alias("c"), F.lit(-int(sid)).alias("nid")))
-    best = F.array_max(F.array(*scored))
+        denom = f"(_n2 * {_double_sql(sn2)})"
+        scored.append(
+            f"named_struct('c', CASE WHEN {denom} > 0 THEN {dot} / "
+            f"sqrt({denom}) ELSE -2.0D END, 'nid', {-int(sid)})"
+        )
+    best = F.expr(f"array_max(array({', '.join(scored)}))")
     return (
         v.withColumn("cluster_id", (-best["nid"]).cast("long"))
         .drop("_v", "_n2")
@@ -806,16 +825,12 @@ def power_direction(df, id_col, vec_col, dim, iters, qscale, vmax):
     )
     base = materialize(df.select(F.col(id_col), F.expr(q).alias("_q")))
     sums_row = base.agg(
-        F.count(F.lit(1)).alias("_n"),
-        *[
-            F.sum(F.expr(f"element_at(_q, {j + 1})")).alias(f"s{j}")
-            for j in range(dim)
-        ],
+        F.count(F.lit(1)).alias("_n"), _sums_col("element_at(_q, {j})", dim)
     ).collect()[0]
     n = sums_row["_n"]
     if n == 0:
         raise ValueError("power iteration needs at least one vector")
-    mu = [trunc_div(int(sums_row[f"s{j}"]), n) for j in range(dim)]
+    mu = [trunc_div(int(x), n) for x in sums_row["_s"]]
 
     v = [1] * dim
     for _ in range(iters):
@@ -827,14 +842,9 @@ def power_direction(df, id_col, vec_col, dim, iters, qscale, vmax):
         row = base.select(
             F.expr(p).alias("_p"), F.expr(_centered_sql(mu)).alias("_c")
         ).agg(
-            *[
-                F.sum(
-                    F.expr(f"cast(_p * element_at(_c, {j + 1}) as decimal(38,0))")
-                ).alias(f"u{j}")
-                for j in range(dim)
-            ]
+            _sums_col("cast(_p * element_at(_c, {j}) as decimal(38,0))", dim)
         ).collect()[0]
-        u = [int(row[f"u{j}"]) for j in range(dim)]
+        u = [int(x) for x in row["_s"]]
         s = max(abs(x) for x in u)
         if s == 0:
             break  # degenerate cloud: direction stays put
@@ -1025,21 +1035,14 @@ def kmeans_fit(
         asg = base.withColumn("_b", F.expr(_kmeans_assign_expr(cents)))
         sums = (
             asg.groupBy(F.col("_b.c").alias("_cl"))
-            .agg(
-                F.count(F.lit(1)).alias("_n"),
-                *[
-                    F.sum(F.expr(f"element_at(_q, {j + 1})")).alias(f"s{j}")
-                    for j in range(dim)
-                ],
-            )
+            .agg(F.count(F.lit(1)).alias("_n"),
+                 _sums_col("element_at(_q, {j})", dim))
             .collect()
         )
         nxt = [list(c) for c in cents]  # empty clusters carry over
         for r in sums:
             n = int(r["_n"])
-            nxt[int(r["_cl"])] = [
-                trunc_div(int(r[f"s{j}"]), n) for j in range(dim)
-            ]
+            nxt[int(r["_cl"])] = [trunc_div(int(x), n) for x in r["_s"]]
         cents = nxt
     out = base.withColumn("_b", F.expr(_kmeans_assign_expr(cents))).select(
         F.col(id_col),

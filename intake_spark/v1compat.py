@@ -19,10 +19,8 @@ import os
 import re
 from typing import Any
 
-import yaml
-
 from intake_spark import datatypes as dt
-from intake_spark.catalog import Catalog, ReaderDescription
+from intake_spark.catalog import Catalog, ReaderDescription, load_yaml_file
 from intake_spark.readers import (
     BaseReader,
     SparkAvro,
@@ -386,15 +384,5 @@ _DERIVED_DRIVERS = {
 
 
 def open_v1_catalog(path: str) -> Catalog:
-    with open(path) as f:
-        doc = yaml.safe_load(f)
-    return from_v1_dict(doc, catalog_dir=os.path.dirname(os.path.abspath(path)))
-
-
-def is_v1_yaml(path: str) -> bool:
-    try:
-        with open(path) as f:
-            doc = yaml.safe_load(f)
-        return isinstance(doc, dict) and "sources" in doc
-    except Exception:
-        return False
+    return from_v1_dict(load_yaml_file(path),
+                        catalog_dir=os.path.dirname(os.path.abspath(path)))

@@ -1141,6 +1141,91 @@ def test_seeded_clusters_assignment_and_plan(spark):
     assert "Exchange" not in plan
 
 
+def _seeded_reference(vecs, seeds):
+    """Python replay of seeded_clusters: left-fold dot and norms, cos =
+    dot / sqrt(n2 * sn2) or -2.0 at zero norm, argmax with ties to the
+    lowest seed id. Spark orders NaN above every double, so a NaN denom
+    (0 * inf) passes ``> 0`` and a NaN cosine wins."""
+    import math
+
+    def fold(xs):
+        acc = 0.0
+        for x in xs:
+            acc += x
+        return acc
+
+    out = {}
+    for vid, v in vecs:
+        n2 = fold(x * x for x in v)
+        best = None
+        for sid, sv in seeds:
+            denom = n2 * fold(x * x for x in sv)
+            c = (fold(a * b for a, b in zip(v, sv)) / math.sqrt(denom)
+                 if denom > 0 or math.isnan(denom) else -2.0)
+            key = (math.isnan(c), 0.0 if math.isnan(c) else c, -sid)
+            if best is None or key > best:
+                best = key
+        out[vid] = -best[2]
+    return out
+
+
+def test_seeded_clusters_exact_seed_literals(spark):
+    """Seed coordinates enter the plan as SQL literals that parse back
+    bit-identical: -0.0, the smallest subnormal, the largest double,
+    0.1, 1/3 and one-ulp neighbours assign exactly as the Python
+    replay does, zero-norm and overflowing seeds included."""
+    import math
+    import random
+
+    third = 1 / 3
+    up = math.nextafter
+    seeds = [
+        (3, [0.1, third, -0.0, 0.5]),
+        (7, [up(0.1, 1.0), third, -0.0, 0.5]),
+        (1, [0.1, up(third, 0.0), 0.0, 0.5]),
+        (4, [5e-324, -0.0, 5e-324, 0.0]),       # sn2 underflows to 0
+        (9, [1.7976931348623157e308, 0.1, 0.0, third]),  # sn2 overflows
+        (2, [-0.1, -third, 0.25, -0.0]),
+    ]
+    rng = random.Random(11)
+    vecs = [(i, [rng.choice([0.1, third, -0.0, 0.5, 5e-324])
+                 * rng.choice([1.0, -1.0, 3.0]) for _ in range(4)])
+            for i in range(60)]
+    vecs += [(100, [0.1, third, -0.0, 0.5]), (101, [0.0, 0.0, 0.0, 0.0]),
+             (102, [up(0.1, 1.0), third, 0.0, 0.5])]
+    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    got = {r.vec_id: r.cluster_id
+           for r in sim.seeded_clusters(df, seeds=seeds).collect()}
+    assert got == _seeded_reference(vecs, seeds)
+
+
+def test_seeded_clusters_build_py4j_budget(spark):
+    """One seeded_clusters build over 8 seeds x 64 dims sends a bounded
+    number of py4j commands: the argmax is one SQL expression, not a
+    Column call per seed coordinate (~4,000 commands that way)."""
+    import random
+
+    rng = random.Random(5)
+    df = spark.createDataFrame(
+        [(i, [rng.random() for _ in range(64)]) for i in range(4)],
+        "vec_id long, embedding array<double>",
+    )
+    seeds = [(i, [rng.random() for _ in range(64)]) for i in range(8)]
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, [0]
+
+    def counting(*args, **kwargs):
+        sent[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        sim.seeded_clusters(df, seeds=seeds)
+    finally:
+        del client.send_command
+    assert sent[0] <= 400
+
+
 def test_semantic_dedup_matches_bruteforce(spark, emb):
     """Cluster-then-compare must equal brute force *restricted to
     co-clustered pairs* — and every pair it emits is a true >=threshold
