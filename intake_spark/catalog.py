@@ -34,12 +34,19 @@ except ImportError:
     from yaml import SafeDumper as _Dumper, SafeLoader as _Loader
 
 
-def load_yaml_file(path: str):
+def load_yaml_file(path: str) -> dict:
     """The one YAML parse of a catalog file: the safe loader, in C when
     PyYAML was built with libyaml. Malformed YAML raises
-    ``yaml.YAMLError``."""
+    ``yaml.YAMLError``; a document that is not a mapping (an empty file,
+    a top-level list or scalar) raises ``ValueError`` naming the file."""
     with open(path) as f:
-        return yaml.load(f, Loader=_Loader)
+        doc = yaml.load(f, Loader=_Loader)
+    if not isinstance(doc, dict):
+        got = "an empty document" if doc is None else type(doc).__name__
+        raise ValueError(
+            f"catalog file {path!r}: expected a YAML mapping at the top level, got {got}"
+        )
+    return doc
 
 
 class ReaderDescription(Tokenizable):
@@ -421,8 +428,9 @@ def open_catalog(path: str | None = None, ttl: float | None = None):
 
     Each file is parsed once (:func:`load_yaml_file`, libyaml when
     PyYAML has it) and the parsed document picks the loader: a
-    top-level ``sources:`` key is V1, anything else V2. Malformed YAML
-    raises ``yaml.YAMLError``."""
+    top-level ``sources:`` key is V1, any other mapping V2. Malformed
+    YAML raises ``yaml.YAMLError``, a file that is not a mapping
+    ``ValueError``."""
     if ttl is not None:
         if path is None:
             raise ValueError("ttl needs a catalog path to watch")
@@ -437,7 +445,7 @@ def open_catalog(path: str | None = None, ttl: float | None = None):
             merged += open_catalog(p)
         return merged
     doc = load_yaml_file(path)
-    if isinstance(doc, dict) and "sources" in doc:
+    if "sources" in doc:
         from intake_spark.v1compat import from_v1_dict
 
         return from_v1_dict(

@@ -151,20 +151,9 @@ def snappy_uncompress(src: bytes) -> bytes:
     """Decode one raw snappy block (not the framing format)."""
     n = len(src)
     # varint preamble: uncompressed length
-    total = 0
-    shift = 0
-    i = 0
-    while True:
-        if i >= n:
-            raise ValueError("snappy: truncated length preamble")
-        b = src[i]
-        i += 1
-        total |= (b & 0x7F) << shift
-        shift += 7
-        if not (b & 0x80):
-            break
-        if shift > 32:
-            raise ValueError("snappy: length varint overruns 32 bits")
+    total, i = read_uvarint(src, 0)
+    if total >> 32:
+        raise ValueError("snappy: length varint overruns 32 bits")
     out = bytearray()
     while i < n:
         tag = src[i]
@@ -223,17 +212,7 @@ def snappy_compress(data: bytes) -> bytes:
     encoder; decode(encode(x)) == x is the contract (round-trip and
     CRC-verified in tests)."""
     n = len(data)
-    out = bytearray()
-    # varint length preamble
-    v = n
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            break
+    out = bytearray(uvarint(n))  # varint length preamble
 
     def emit_literal(lo: int, hi: int) -> None:
         ln = hi - lo
@@ -392,23 +371,85 @@ def blosc_compress(
     return header + struct.pack("<I", start) + struct.pack("<I", len(comp)) + comp
 
 
-_CRC32C_TABLE: list | None = None
+def _crc32c_table() -> list[int]:
+    """The byte-wise CRC-32C table, DERIVED from the reflected Castagnoli
+    polynomial (0x1EDC6F41 -> 0x82F63B78), not transcribed."""
+    tbl = []
+    for i in range(256):
+        c = i
+        for _ in range(8):
+            c = (c >> 1) ^ 0x82F63B78 if c & 1 else c >> 1
+        tbl.append(c)
+    return tbl
 
 
-def crc32c(data: bytes) -> int:
-    """CRC-32C (Castagnoli, reflected polynomial 0x82F63B78) — the
-    checksum zarr v3's sharding index and Iceberg/parquet footers use.
-    The table is DERIVED from the polynomial here, not transcribed."""
-    global _CRC32C_TABLE
-    if _CRC32C_TABLE is None:
-        tbl = []
-        for i in range(256):
-            c = i
-            for _ in range(8):
-                c = (c >> 1) ^ 0x82F63B78 if c & 1 else c >> 1
-            tbl.append(c)
-        _CRC32C_TABLE = tbl
-    crc = 0xFFFFFFFF
-    for b in data:
-        crc = (crc >> 8) ^ _CRC32C_TABLE[(crc ^ b) & 0xFF]
+# slice-by-8 tables: T[k][b] advances a CRC through byte b followed by k
+# zero bytes, so the hot loop consumes 8 bytes per Python iteration
+_CRC32C_T8 = [_crc32c_table()]
+for _ in range(7):
+    _CRC32C_T8.append([(v >> 8) ^ _CRC32C_T8[0][v & 0xFF] for v in _CRC32C_T8[-1]])
+
+
+def crc32c(data: bytes, crc: int = 0) -> int:
+    """CRC-32C (Castagnoli) — the checksum of zarr v3's sharding index,
+    Kafka record batches and TFRecord framing; pinned by the RFC 3720
+    §B.4 published vectors. ``crc`` continues a running checksum:
+    ``crc32c(b, crc32c(a)) == crc32c(a + b)``. Slice-by-8 pure Python
+    (~8x fewer interpreter iterations than byte-at-a-time)."""
+    t = _CRC32C_T8
+    crc ^= 0xFFFFFFFF
+    n8 = len(data) - (len(data) % 8)
+    for i in range(0, n8, 8):
+        c = crc ^ int.from_bytes(data[i : i + 4], "little")
+        crc = (
+            t[7][c & 0xFF]
+            ^ t[6][(c >> 8) & 0xFF]
+            ^ t[5][(c >> 16) & 0xFF]
+            ^ t[4][(c >> 24) & 0xFF]
+            ^ t[3][data[i + 4]]
+            ^ t[2][data[i + 5]]
+            ^ t[1][data[i + 6]]
+            ^ t[0][data[i + 7]]
+        )
+    for b in data[n8:]:
+        crc = (crc >> 8) ^ t[0][(crc ^ b) & 0xFF]
     return crc ^ 0xFFFFFFFF
+
+
+# ---------------------------------------------------------------------------
+# Unsigned LEB128 varints: protobuf, Kafka and Avro (under their zigzag
+# step), MQTT remaining lengths, snappy preambles, PMTiles directories.
+# ---------------------------------------------------------------------------
+
+
+def uvarint(n: int) -> bytes:
+    """Unsigned LEB128: 7 bits per byte, low group first, high bit set on
+    every byte but the last."""
+    if n < 0:
+        raise ValueError(f"uvarint of a negative number {n}")
+    out = bytearray()
+    while True:
+        b = n & 0x7F
+        n >>= 7
+        if not n:
+            out.append(b)
+            return bytes(out)
+        out.append(b | 0x80)
+
+
+def read_uvarint(buf: bytes, pos: int) -> "tuple[int, int]":
+    """Decode one unsigned LEB128 varint at ``buf[pos]`` → (value, next
+    position). A varint runs at most 10 bytes (a 64-bit value); a longer
+    one, or one cut off by the end of ``buf``, raises ``ValueError``."""
+    out = shift = 0
+    end = min(len(buf), pos + 10)
+    while pos < end:
+        b = buf[pos]
+        pos += 1
+        out |= (b & 0x7F) << shift
+        if not b & 0x80:
+            return out, pos
+        shift += 7
+    if shift == 70:
+        raise ValueError("varint longer than 10 bytes")
+    raise ValueError("truncated varint")

@@ -17,6 +17,7 @@ import pandas as pd
 from pyspark.sql import types as T
 
 from intake_spark import datatypes as dt
+from intake_spark.compress import read_uvarint
 from intake_spark.readers import BaseReader
 from intake_spark.session import local_frame
 
@@ -424,25 +425,20 @@ def _tileid_to_zxy(tile_id: int) -> tuple[int, int, int]:
         z += 1
 
 
-def _pm_varints(buf: bytes):
+def _iter_varints(buf: bytes):
+    """Every varint of a packed run, in order (PMTiles directories, OSM
+    packed keys/vals/roles/types and sint deltas)."""
     i = 0
     while i < len(buf):
-        out = shift = 0
-        while True:
-            b = buf[i]
-            i += 1
-            out |= (b & 0x7F) << shift
-            if not b & 0x80:
-                break
-            shift += 7
-        yield out
+        v, i = read_uvarint(buf, i)
+        yield v
 
 
 def _pm_directory(blob: bytes) -> list[tuple[int, int, int, int]]:
     """Decode a PMTiles v3 directory: (tile_id, offset, length, run_length)
     entries. Layout: varint n, then n tile-id deltas, n run_lengths,
     n lengths, n offsets (0 ⇒ previous offset+length; else value-1)."""
-    it = _pm_varints(blob)
+    it = _iter_varints(blob)
     n = next(it)
     deltas = [next(it) for _ in range(n)]
     runs = [next(it) for _ in range(n)]
@@ -587,26 +583,11 @@ def _zigzag(v: int) -> int:
 
 
 def _packed_sint_deltas(payload: bytes) -> list[int]:
-    from intake_spark.mlds import _read_varint
-
-    vals, acc, i = [], 0, 0
-    while i < len(payload):
-        v, i = _read_varint(payload, i)
+    vals, acc = [], 0
+    for v in _iter_varints(payload):
         acc += _zigzag(v)
         vals.append(acc)
     return vals
-
-
-def _packed_varints(payload: bytes) -> list[int]:
-    """Packed plain varints (keys/vals/roles/types fields)."""
-    from intake_spark.mlds import _read_varint
-
-    out = []
-    i = 0
-    while i < len(payload):
-        v, i = _read_varint(payload, i)
-        out.append(v)
-    return out
 
 
 def _parse_primitive_block(blob: bytes, kind: str = "nodes") -> list[dict]:
@@ -615,7 +596,7 @@ def _parse_primitive_block(blob: bytes, kind: str = "nodes") -> list[dict]:
     tags) or "relations" (id, members, tags)."""
     import zlib
 
-    from intake_spark.mlds import _fields, _read_varint
+    from intake_spark.mlds import _fields
 
     raw = None
     other_comp = None
@@ -669,18 +650,18 @@ def _parse_primitive_block(blob: bytes, kind: str = "nodes") -> list[dict]:
                     if f2 == 1:
                         eid = p
                     elif f2 == 2:
-                        keys = _packed_varints(p)
+                        keys = list(_iter_varints(p))
                     elif f2 == 3:
-                        vals = _packed_varints(p)
+                        vals = list(_iter_varints(p))
                     elif f2 == 8:  # way refs / relation roles_sid
                         if kind == "ways":
                             refs = _packed_sint_deltas(p)
                         else:
-                            roles = _packed_varints(p)
+                            roles = list(_iter_varints(p))
                     elif f2 == 9 and kind == "relations":
                         refs = _packed_sint_deltas(p)  # memids, delta-coded
                     elif f2 == 10 and kind == "relations":
-                        types = _packed_varints(p)
+                        types = list(_iter_varints(p))
                 tags = sdecode(zip(keys, vals))
                 if kind == "ways":
                     out.append({"id": eid, "refs": refs, "tags": tags})
@@ -714,10 +695,7 @@ def _parse_primitive_block(blob: bytes, kind: str = "nodes") -> list[dict]:
                 elif f2 == 9:
                     lons = _packed_sint_deltas(p)
                 elif f2 == 10:
-                    i = 0
-                    while i < len(p):
-                        v, i = _read_varint(p, i)
-                        kvs.append(v)
+                    kvs.extend(_iter_varints(p))
             # keys_vals: k,v index pairs per node, 0-terminated
             tag_iter = iter(kvs)
             for nid, la, lo in zip(ids, lats, lons):

@@ -34,6 +34,7 @@ import struct
 import zlib
 
 from intake_spark import datatypes as dt
+from intake_spark.compress import read_uvarint, uvarint
 from intake_spark.readers import BaseReader
 from intake_spark.session import local_frame
 
@@ -57,14 +58,7 @@ class _Buf:
         return out
 
     def varlong(self) -> int:
-        shift = acc = 0
-        while True:
-            byte = self.b[self.p]
-            self.p += 1
-            acc |= (byte & 0x7F) << shift
-            if not byte & 0x80:
-                break
-            shift += 7
+        acc, self.p = read_uvarint(self.b, self.p)
         return (acc >> 1) ^ -(acc & 1)  # zigzag
 
 
@@ -249,7 +243,7 @@ def _avro_header(f) -> tuple[dict, str, bytes, int]:
                     meta[k] = bytes(buf.read(buf.varlong()))
             sync = bytes(buf.read(16))
             break
-        except (ValueError, IndexError):
+        except ValueError:
             # header (huge writer schema) outgrew the buffer: refill bigger
             if len(raw) < read_size:
                 raise ValueError("truncated avro header") from None
@@ -295,7 +289,7 @@ def _avro_block_index(f, sync: bytes, start: int) -> list[tuple[int, int, int]]:
         try:
             count = buf.varlong()
             size = buf.varlong()
-        except (IndexError, ValueError):
+        except ValueError:
             return out
         data_off = f.tell() - len(head) + buf.p
         f.seek(data_off + size)
@@ -2193,16 +2187,7 @@ def _apply_iceberg_deletes(
 
 def _avro_zz(v: int) -> bytes:
     """Zigzag varint (the inverse of _Buf.varlong)."""
-    u = (v << 1) ^ (v >> 63)
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
+    return uvarint((v << 1) ^ (v >> 63))
 
 
 def _avro_encode_datum(schema, value, out: bytearray, names: dict) -> None:

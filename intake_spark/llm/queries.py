@@ -3174,7 +3174,7 @@ def q119_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     topic-balanced mixing and IVF coarse quantizers, upgrading the
     static seeded_clusters assignment that SemDeDup uses."""
     emb = load_table(spark, sf_dir, "embeddings")
-    _, asg = similarity.kmeans_fit(emb, k=8, iters=3, dim=64)
+    _, asg = similarity.kmeans_fit(emb, k=8, iters=3)
     return asg
 
 

@@ -135,6 +135,19 @@ def _sums_col(term: str, dim: int):
     return F.expr(f"array({sums})").alias("_s")
 
 
+# the fixed-point scale of every integer k-means: a power of two, so
+# ``x * QSCALE`` is exact in IEEE and floor makes the integers
+QSCALE = 1024
+
+
+def _quantize_sql(vec_col: str, qscale: int = QSCALE) -> str:
+    """``floor(x * qscale)`` of every coordinate, as ``array<bigint>``."""
+    return (
+        f"transform(CAST({vec_col} AS ARRAY<DOUBLE>), "
+        f"x -> CAST(floor(x * {qscale}) AS BIGINT))"
+    )
+
+
 def _rp_signs(out_dim: int, dim: int) -> list[list[float]]:
     """Deterministic +-1 sign matrix from md5 parity — an Achlioptas-style
     sparse random projection, reproducible in any engine with md5."""
@@ -300,56 +313,29 @@ def ivf_build(
     df: DataFrame,
     vec_col: str = "embedding",
     n_lists: int = 16,
-    seed: int = 42,
-    method: str = "ml",
     id_col: str = "vec_id",
-    iters: int = 3,
-    dim: "int | None" = None,
-    qscale: int = 1024,
 ):
-    """Train an IVF coarse quantizer (k-means centroids) and assign every
-    vector to its nearest list → (centroids, assigned_df with ``ivf_list``).
+    """Train an IVF coarse quantizer and assign every vector to its
+    nearest list → (centroids, assigned_df with ``ivf_list``).
 
     The scale path for ANN beyond LSH: k-means centroids, then search
-    probes only the query's nearest lists. ``method="ml"`` (default)
-    fits Spark ML KMeans — distributed, seeded → deterministic given the
-    data, but float-valued and not replayable cross-engine.
-    ``method="exact"`` trains :func:`kmeans_fit` instead (requires
-    ``dim``): lowest-id seeds, integer rounds — the SAME index on every
-    run/engine/partitioning, the choice when index builds must be
-    auditable; its assignment pass is a mapper-only argmin against
-    literal centroids (no ML stage, no join). Either way the centroids
-    returned are float lists compatible with :func:`ivf_search` /
-    :func:`ivf_save`.
+    probes only the query's nearest lists. The quantizer is
+    :func:`kmeans_fit` (``k=n_lists``, 3 rounds; the vector width is read
+    from the data): lowest-id seeds and integer rounds, so the SAME index
+    comes out on every run, engine and partitioning and an oracle can
+    replay every list. The assignment pass is a mapper-only argmin
+    against literal centroids (no join, no shuffle). The centroids
+    returned are float lists (the integer centroids over ``QSCALE``)
+    compatible with :func:`ivf_search` / :func:`ivf_save`.
     """
-    if method == "exact":
-        if dim is None:
-            raise ValueError('ivf_build(method="exact") requires dim')
-        cents_int, _ = kmeans_fit(
-            df, id_col, vec_col, k=n_lists, iters=iters, dim=dim, qscale=qscale
-        )
-        q = (
-            f"transform(CAST({vec_col} AS ARRAY<DOUBLE>), "
-            f"x -> CAST(floor(x * {qscale}) AS BIGINT))"
-        )
-        assigned = (
-            df.withColumn("_q", F.expr(q))
-            .withColumn("_b", F.expr(_kmeans_assign_expr(cents_int)))
-            .withColumn("ivf_list", F.col("_b.c").cast("int"))
-            .drop("_q", "_b")
-        )
-        centroids = [[x / qscale for x in c] for c in cents_int]
-        return centroids, assigned
-    if method != "ml":
-        raise ValueError(f"unknown ivf_build method {method!r}")
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    with_vec = df.withColumn("_v", array_to_vector(F.col(vec_col).cast("array<double>")))
-    km = KMeans(k=n_lists, seed=seed, featuresCol="_v", predictionCol="ivf_list")
-    model = km.fit(with_vec)
-    assigned = model.transform(with_vec).drop("_v")
-    centroids = [[float(x) for x in c] for c in model.clusterCenters()]
+    cents_int, _ = kmeans_fit(df, id_col, vec_col, k=n_lists)
+    assigned = (
+        df.withColumn("_q", F.expr(_quantize_sql(vec_col)))
+        .withColumn("_b", F.expr(_kmeans_assign_expr(cents_int)))
+        .withColumn("ivf_list", F.col("_b.c").cast("int"))
+        .drop("_q", "_b")
+    )
+    centroids = [[x / QSCALE for x in c] for c in cents_int]
     return centroids, assigned
 
 
@@ -622,11 +608,13 @@ def seeded_clusters(
         # zero-norm guard: ANSI mode raises DIVIDE_BY_ZERO on 0.0/0.0
         # (non-ANSI silently yields NaN, which sorts ABOVE every cosine) —
         # an all-zeros embedding assigns deterministically at cos = -2.0,
-        # below any real cosine, so ties break purely on seed id
+        # below any real cosine, so ties break purely on seed id. A zero
+        # norm times an overflowed (inf) one is NaN, and Spark orders NaN
+        # above every double, so ``> 0`` alone would let it through.
         denom = f"(_n2 * {_double_sql(sn2)})"
         scored.append(
-            f"named_struct('c', CASE WHEN {denom} > 0 THEN {dot} / "
-            f"sqrt({denom}) ELSE -2.0D END, 'nid', {-int(sid)})"
+            f"named_struct('c', CASE WHEN {denom} > 0 AND NOT isnan({denom}) "
+            f"THEN {dot} / sqrt({denom}) ELSE -2.0D END, 'nid', {-int(sid)})"
         )
     best = F.expr(f"array_max(array({', '.join(scored)}))")
     return (
@@ -704,9 +692,6 @@ def semantic_dedup_pairs_ivf(
     vec_col: str = "embedding",
     n_lists: int = 16,
     threshold: float = 0.3,
-    seed: int = 42,
-    method: str = "ml",
-    dim: "int | None" = None,
 ) -> DataFrame:
     """SemDeDup candidate pairs with an IVF (trained k-means) coarse
     quantizer instead of the fixed lowest-id seeds — the candidate
@@ -717,17 +702,14 @@ def semantic_dedup_pairs_ivf(
     the corpus grows. Same equi-join pair shape (O(sum list_i^2), never
     a crossJoin); output (ivf_list, id_a, id_b, cosine).
 
+    The lists come from :func:`ivf_build`, i.e. the integer
+    :func:`kmeans_fit`, so the same dedup run returns the same pairs
+    across engines and partitionings (the audit-trail requirement).
     Recall vs the brute-force oracle is pinned >= 95% in pytest (near-
     dup pairs are much closer than the list diameter, so boundary losses
     stay in the tail); for exact parity on small corpora use
-    :func:`semantic_dedup_pairs`. ``method="exact"`` (with ``dim``)
-    swaps the quantizer for the deterministic integer
-    :func:`kmeans_fit` — same dedup run reproducible across
-    engines/partitionings, the audit-trail requirement."""
-    _, assigned = ivf_build(
-        df, vec_col=vec_col, n_lists=n_lists, seed=seed,
-        method=method, id_col=id_col, dim=dim,
-    )
+    :func:`semantic_dedup_pairs`."""
+    _, assigned = ivf_build(df, vec_col=vec_col, n_lists=n_lists, id_col=id_col)
     return _pairs_within(assigned, "ivf_list", id_col, vec_col, threshold)
 
 
@@ -819,11 +801,9 @@ def power_direction(df, id_col, vec_col, dim, iters, qscale, vmax):
     if dim < 1 or iters < 1:
         raise ValueError("dim and iters must be >= 1")
 
-    q = (
-        f"transform(CAST({vec_col} AS ARRAY<DOUBLE>), "
-        f"x -> CAST(floor(x * {qscale}) AS BIGINT))"
+    base = materialize(
+        df.select(F.col(id_col), F.expr(_quantize_sql(vec_col, qscale)).alias("_q"))
     )
-    base = materialize(df.select(F.col(id_col), F.expr(q).alias("_q")))
     sums_row = base.agg(
         F.count(F.lit(1)).alias("_n"), _sums_col("element_at(_q, {j})", dim)
     ).collect()[0]
@@ -980,21 +960,23 @@ def kmeans_fit(
     vec_col: str = "embedding",
     k: int = 8,
     iters: int = 3,
-    dim: int = 64,
-    qscale: int = 1024,
 ) -> "tuple[list[list[int]], DataFrame]":
     """Deterministic integer Lloyd's k-means over an embedding column —
-    the clustering stage behind corpus partitioning for semantic dedup,
-    topic-balanced mixing, and IVF coarse quantizers; the oracle-able
-    integer twin of :func:`ivf_build`'s Spark-ML KMeans (which is
-    float-valued and only deterministic per seed+data, not
-    cross-engine replayable). No RNG anywhere:
-    vectors quantize by a power-of-two scale (IEEE-exact), the initial
-    centroids are the ``k`` lowest-id vectors, assignment breaks
-    distance ties toward the lowest cluster index, and centroid updates
-    are truncating integer means (empty clusters keep their previous
-    centroid) — so an unrolled-CTE oracle replays every round bit for
-    bit, the q72/q88 iterative-algorithm pattern.
+    the one k-means of the engine: the clustering stage behind corpus
+    partitioning for semantic dedup, topic-balanced mixing, and the IVF
+    coarse quantizer of :func:`ivf_build`. No RNG anywhere:
+    vectors quantize by the power-of-two scale ``QSCALE`` (IEEE-exact),
+    the initial centroids are the ``k`` lowest-id vectors, assignment
+    breaks distance ties toward the lowest cluster index, and centroid
+    updates are truncating integer means (empty clusters keep their
+    previous centroid) — so an unrolled-CTE oracle replays every round
+    bit for bit, the q72/q88 iterative-algorithm pattern.
+
+    The vector width is read from the ``k`` seed rows; seeds of unequal
+    or zero width (a NULL embedding counts as zero) raise ``ValueError``
+    up front, since a centroid narrower than the vectors would NULL-pad
+    every distance after round 1 and silently put every row in
+    cluster 0.
 
     Plan shape per iteration: ONE corpus scan computing the argmin
     against k literal centroid arrays (mapper-only — no join, no
@@ -1005,32 +987,28 @@ def kmeans_fit(
     textbook scalable k-means loop: linear scans, k·dim driver state,
     no per-row Python.
 
-    Overflow bound: per-dim |q| ≤ qscale·A (A = max |coordinate|), so
-    dist2 ≤ dim·(2·qscale·A)² — for dim=64, qscale=1024, A≤64 this is
-    ~1.8e15, int64-safe; centroid sums are n·qscale·A, safe past 1e13
+    Overflow bound: per-dim |q| ≤ QSCALE·A (A = max |coordinate|), so
+    dist2 ≤ dim·(2·QSCALE·A)² — for dim=64, QSCALE=1024, A≤64 this is
+    ~1.8e15, int64-safe; centroid sums are n·QSCALE·A, safe past 1e13
     rows. Returns (final centroids, assignments (id, cluster_id,
     dist2))."""
-    if k < 1 or iters < 1 or dim < 1:
-        raise ValueError("k, iters and dim must all be >= 1")
-    q = (
-        f"transform(CAST({vec_col} AS ARRAY<DOUBLE>), "
-        f"x -> CAST(floor(x * {qscale}) AS BIGINT))"
+    if k < 1 or iters < 1:
+        raise ValueError("k and iters must both be >= 1")
+    base = materialize(
+        df.select(F.col(id_col), F.expr(_quantize_sql(vec_col)).alias("_q"))
     )
-    base = materialize(df.select(F.col(id_col), F.expr(q).alias("_q")))
     seeds = base.orderBy(F.asc(id_col)).limit(k).collect()
     if len(seeds) < k:
         raise ValueError(
             f"kmeans_fit needs at least k={k} vectors, got {len(seeds)}"
         )
-    cents = [list(r["_q"]) for r in sorted(seeds, key=lambda r: r[id_col])]
-    for c in cents:
-        # a dim narrower than the vectors would shrink centroids after
-        # round 1 and NULL-pad every distance (all rows silently land in
-        # cluster 0); a wider dim crashes later on a None centroid sum
-        if len(c) != dim:
-            raise ValueError(
-                f"dim={dim} does not match the embedding width {len(c)}"
-            )
+    cents = [list(r["_q"] or ()) for r in sorted(seeds, key=lambda r: r[id_col])]
+    widths = sorted({len(c) for c in cents})
+    if len(widths) != 1 or widths[0] == 0:
+        raise ValueError(
+            f"kmeans_fit needs seed vectors of one non-zero width, got widths {widths}"
+        )
+    dim = widths[0]
     for _ in range(iters):
         asg = base.withColumn("_b", F.expr(_kmeans_assign_expr(cents)))
         sums = (

@@ -22,6 +22,7 @@ import socket
 import struct
 import threading
 
+from intake_spark.compress import uvarint
 from intake_spark.wire import BsonInt64, bson_decode, bson_encode
 
 
@@ -184,16 +185,6 @@ class LoopbackMongo(_LoopbackBase):
             conn.close()
 
 
-def _mqtt_varint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n % 128
-        n //= 128
-        out.append(b | (0x80 if n else 0))
-        if not n:
-            return bytes(out)
-
-
 class LoopbackMqtt(_LoopbackBase):
     """MQTT 3.1.1 broker: validates CONNECT (protocol name/level),
     CONNACKs, SUBACKs the subscription, then pushes the configured
@@ -244,7 +235,7 @@ class LoopbackMqtt(_LoopbackBase):
                     var += struct.pack(">H", 42)
                 var += payload
                 conn.sendall(bytes([0x30 | (qos << 1)])
-                             + _mqtt_varint(len(var)) + var)
+                             + uvarint(len(var)) + var)
                 if qos:
                     ptype, ack = self._read_packet(conn)
                     if ptype == 0x40 and ack == struct.pack(">H", 42):

@@ -18,6 +18,7 @@ import pandas as pd
 from pyspark.sql import types as T
 
 from intake_spark import datatypes as dt
+from intake_spark.compress import crc32c, read_uvarint, uvarint
 from intake_spark.readers import BaseReader
 
 
@@ -26,31 +27,20 @@ class TFRecord(dt.FileData):
     structure = {"sequence", "nested"}
 
 
-def _read_varint(buf: bytes, i: int) -> tuple[int, int]:
-    out = shift = 0
-    while True:
-        b = buf[i]
-        i += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out, i
-        shift += 7
-
-
 def _fields(buf: bytes) -> Iterator[tuple[int, int, bytes | int]]:
     """Walk protobuf wire format: yields (field_no, wire_type, payload)."""
     i = 0
     while i < len(buf):
-        key, i = _read_varint(buf, i)
+        key, i = read_uvarint(buf, i)
         field, wt = key >> 3, key & 7
         if wt == 0:  # varint
-            val, i = _read_varint(buf, i)
+            val, i = read_uvarint(buf, i)
             yield field, wt, val
         elif wt == 1:  # 64-bit
             yield field, wt, buf[i : i + 8]
             i += 8
         elif wt == 2:  # length-delimited
-            ln, i = _read_varint(buf, i)
+            ln, i = read_uvarint(buf, i)
             yield field, wt, buf[i : i + ln]
             i += ln
         elif wt == 5:  # 32-bit
@@ -88,7 +78,7 @@ def _parse_feature(buf: bytes) -> tuple[list[bytes], list[float], list[int]]:
                 if wt2 == 2:
                     i = 0
                     while i < len(p):
-                        v, i = _read_varint(p, i)
+                        v, i = read_uvarint(p, i)
                         ivals.append(_to_signed_i64(v))
                 else:
                     ivals.append(_to_signed_i64(p))
@@ -368,77 +358,9 @@ def tfds_catalog(lister=None):
 
 # ---------------------------------------------------------------------------
 # TFRecord WRITE + CRC verification — the training-pipeline sink twin of
-# TFRecordReader. CRC-32C (Castagnoli) in pure Python (table generated
-# from the reflected polynomial, no constant blob); framing masks per the
+# TFRecordReader. CRC-32C is compress.crc32c; framing masks per the
 # TFRecord spec: masked = ((crc >> 15) | (crc << 17)) + 0xa282ead8.
 # ---------------------------------------------------------------------------
-
-_CRC32C_TABLE: list[int] | None = None
-
-
-def _crc32c_table() -> list[int]:
-    global _CRC32C_TABLE
-    if _CRC32C_TABLE is None:
-        tbl = []
-        for n in range(256):
-            c = n
-            for _ in range(8):
-                c = (c >> 1) ^ 0x82F63B78 if c & 1 else c >> 1
-            tbl.append(c)
-        _CRC32C_TABLE = tbl
-    return _CRC32C_TABLE
-
-
-_CRC32C_SLICE8: list[list[int]] | None = None
-
-
-def _crc32c_slice8() -> list[list[int]]:
-    # slicing-by-8: tables 1..7 extend the base table so the hot loop
-    # consumes 8 bytes per iteration (~6-8x over byte-at-a-time in pure
-    # Python) — the CRC runs twice per record on the distributed
-    # TFRecord-write hot path, so the constant matters
-    global _CRC32C_SLICE8
-    if _CRC32C_SLICE8 is None:
-        t0 = _crc32c_table()
-        tables = [t0]
-        for k in range(1, 8):
-            prev = tables[k - 1]
-            tables.append([t0[v & 0xFF] ^ (v >> 8) for v in prev])
-        _CRC32C_SLICE8 = tables
-    return _CRC32C_SLICE8
-
-
-def crc32c(data: bytes) -> int:
-    # prefer a native implementation when one is installed
-    try:
-        import crc32c as _c  # type: ignore
-
-        return _c.crc32c(data)
-    except Exception:
-        pass
-    t = _crc32c_slice8()
-    c = 0xFFFFFFFF
-    n = len(data)
-    i = 0
-    end8 = n - (n % 8)
-    while i < end8:
-        c ^= data[i] | (data[i + 1] << 8) | (data[i + 2] << 16) | (data[i + 3] << 24)
-        c = (
-            t[7][c & 0xFF]
-            ^ t[6][(c >> 8) & 0xFF]
-            ^ t[5][(c >> 16) & 0xFF]
-            ^ t[4][(c >> 24) & 0xFF]
-            ^ t[3][data[i + 4]]
-            ^ t[2][data[i + 5]]
-            ^ t[1][data[i + 6]]
-            ^ t[0][data[i + 7]]
-        )
-        i += 8
-    t0 = t[0]
-    while i < n:
-        c = t0[(c ^ data[i]) & 0xFF] ^ (c >> 8)
-        i += 1
-    return c ^ 0xFFFFFFFF
 
 
 def _masked_crc(data: bytes) -> int:
@@ -446,22 +368,9 @@ def _masked_crc(data: bytes) -> int:
     return (((c >> 15) | (c << 17)) + 0xA282EAD8) & 0xFFFFFFFF
 
 
-def _write_varint(out: bytearray, v: int) -> None:
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return
-
-
 def _field(out: bytearray, field_no: int, payload: bytes) -> None:
     """One length-delimited protobuf field."""
-    _write_varint(out, (field_no << 3) | 2)
-    _write_varint(out, len(payload))
-    out += payload
+    out += uvarint((field_no << 3) | 2) + uvarint(len(payload)) + payload
 
 
 def _encode_feature(bvals, fvals, ivals) -> bytes:
@@ -479,7 +388,7 @@ def _encode_feature(bvals, fvals, ivals) -> bytes:
     if ivals:
         packed = bytearray()
         for v in ivals:
-            _write_varint(packed, v & 0xFFFFFFFFFFFFFFFF if v < 0 else v)
+            packed += uvarint(v & 0xFFFFFFFFFFFFFFFF)
         lst = bytearray()
         _field(lst, 1, bytes(packed))
         _field(body, 3, bytes(lst))

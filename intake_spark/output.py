@@ -76,7 +76,6 @@ def to_delta(
     url: str,
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
-    use_jar: bool = False,
     txn: "tuple[str, int] | None" = None,
     **options,
 ) -> dt.DeltalakeTable:
@@ -90,26 +89,18 @@ def to_delta(
 
     Round-trips with ``DeltaLakeReader`` (same module's stdlib log
     replay), including ``version=`` time travel across appends and
-    hive-layout partitioned tables. ``use_jar=True`` restores the
-    delta-spark path for clusters that have it. Parity: SparkDeltaLake
-    writer (reference readers.py:550) minus the jar dependency.
+    hive-layout partitioned tables. Parity: SparkDeltaLake writer
+    (reference readers.py:550) minus the jar dependency; a cluster with
+    delta-spark writes through ``df.write.format("delta")`` directly.
 
     Scale: appends are O(new files) log lines; the reader replays JSON
     commits and checkpoints. (Checkpoint COMPACTION is not produced here
     — at high version counts run a real delta writer's checkpoint, which
     interoperates on the same log.)
     """
-    import os
-
-    if use_jar:
-        w = df.write.mode(mode).format("delta").options(**options)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.save(url)
-        return dt.DeltalakeTable(url=url)
-
     import hashlib
     import json as _json
+    import os
     import shutil
     import uuid as _uuid
     from urllib.parse import quote as _quote

@@ -26,6 +26,8 @@ from __future__ import annotations
 import socket
 import struct
 
+from intake_spark.compress import crc32c, read_uvarint, uvarint
+
 # --------------------------------------------------------------------------
 # RESP2 (Redis serialization protocol)
 # --------------------------------------------------------------------------
@@ -321,17 +323,6 @@ class MongoWireClient:
 # --------------------------------------------------------------------------
 
 
-def _mqtt_varint(n: int) -> bytes:
-    """MQTT remaining-length: 7 bits per byte, MSB = continuation."""
-    out = bytearray()
-    while True:
-        b = n % 128
-        n //= 128
-        out.append(b | (0x80 if n else 0))
-        if not n:
-            return bytes(out)
-
-
 class MqttWireClient:
     """Minimal MQTT 3.1.1 subscriber: CONNECT/CONNACK handshake,
     SUBSCRIBE at QoS 0/1, PUBLISH receive (PUBACK sent for QoS 1),
@@ -348,7 +339,7 @@ class MqttWireClient:
         cid = client_id.encode()
         var = (b"\x00\x04MQTT\x04\x02" + struct.pack(">H", keepalive)
                + struct.pack(">H", len(cid)) + cid)
-        self._sock.sendall(b"\x10" + _mqtt_varint(len(var)) + var)
+        self._sock.sendall(b"\x10" + uvarint(len(var)) + var)
         ptype, body = self._read_packet()
         if ptype != 0x20 or len(body) != 2 or body[1] != 0:
             raise ConnectionError(
@@ -395,7 +386,7 @@ class MqttWireClient:
         t = topic.encode()
         var = (struct.pack(">H", self._pkt_id)
                + struct.pack(">H", len(t)) + t + bytes([qos]))
-        self._sock.sendall(b"\x82" + _mqtt_varint(len(var)) + var)
+        self._sock.sendall(b"\x82" + uvarint(len(var)) + var)
         while True:
             ptype, body = self._read_packet()
             if ptype == 0x90:  # SUBACK
@@ -478,82 +469,14 @@ class MqttWireClient:
 # skipped per the spec: they are bookkeeping, not data.
 
 
-def _crc32c_table() -> "list[int]":
-    # reflected Castagnoli polynomial (0x1EDC6F41 -> reflected 0x82F63B78);
-    # correctness is pinned by the RFC 3720 B.4 published test vectors in
-    # tests/test_kafka_wire.py, not by self-agreement
-    tbl = []
-    for i in range(256):
-        c = i
-        for _ in range(8):
-            c = (c >> 1) ^ 0x82F63B78 if c & 1 else c >> 1
-        tbl.append(c)
-    return tbl
-
-
-_CRC32C_T = _crc32c_table()
-# slice-by-8 extension tables: T[k][b] advances a CRC through a zero byte
-# k times, letting the hot loop consume 8 bytes per Python iteration
-_CRC32C_T8 = [_CRC32C_T]
-for _ in range(7):
-    prev = _CRC32C_T8[-1]
-    _CRC32C_T8.append(
-        [(prev[b] >> 8) ^ _CRC32C_T[prev[b] & 0xFF] for b in range(256)]
-    )
-
-
-def crc32c(data: bytes, crc: int = 0) -> int:
-    """CRC-32C (Castagnoli) — Kafka's record-batch checksum (also iSCSI,
-    RFC 3720 §B.4, whose published vectors pin this implementation).
-    Slice-by-8 pure Python: ~8x fewer interpreter iterations than
-    per-byte; fixture/prover-sized batches only — the production
-    distributed path is the JVM Kafka connector."""
-    crc ^= 0xFFFFFFFF
-    t = _CRC32C_T8
-    n8 = len(data) - (len(data) % 8)
-    for i in range(0, n8, 8):
-        c = crc ^ int.from_bytes(data[i : i + 4], "little")
-        crc = (
-            t[7][c & 0xFF]
-            ^ t[6][(c >> 8) & 0xFF]
-            ^ t[5][(c >> 16) & 0xFF]
-            ^ t[4][(c >> 24) & 0xFF]
-            ^ t[3][data[i + 4]]
-            ^ t[2][data[i + 5]]
-            ^ t[1][data[i + 6]]
-            ^ t[0][data[i + 7]]
-        )
-    for b in data[n8:]:
-        crc = (crc >> 8) ^ _CRC32C_T[(crc ^ b) & 0xFF]
-    return crc ^ 0xFFFFFFFF
-
-
-def _k_uvarint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        out.append(b | (0x80 if n else 0))
-        if not n:
-            return bytes(out)
-
-
 def _k_svarint(n: int) -> bytes:
     """Zigzag-encoded signed varint (protobuf/Kafka record framing)."""
-    return _k_uvarint((n << 1) ^ (n >> 63))
+    return uvarint((n << 1) ^ (n >> 63))
 
 
 def _k_read_svarint(buf: bytes, pos: int) -> "tuple[int, int]":
-    u = shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        u |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return (u >> 1) ^ -(u & 1), pos
-        shift += 7
-        if shift > 70:
-            raise ValueError("kafka varint: too long")
+    u, pos = read_uvarint(buf, pos)
+    return (u >> 1) ^ -(u & 1), pos
 
 
 _KAFKA_CODECS = {"none": 0, "gzip": 1, "snappy": 2, "lz4": 3, "zstd": 4}

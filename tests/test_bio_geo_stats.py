@@ -1343,10 +1343,10 @@ def test_tfrecord_write_roundtrip(spark, tmp_path):
     """to_tfrecord → TFRecordReader round trip with typed columns, plus
     full masked-CRC verification of the written framing (the writer is
     spec-framed, not just parser-compatible)."""
+    from intake_spark.compress import crc32c
     from intake_spark.mlds import (
         TFRecord,
         TFRecordReader,
-        crc32c,
         to_tfrecord,
         tfrecord_verify_frames,
     )
@@ -1494,7 +1494,7 @@ def test_crc32c_slice8_matches_bytewise():
     byte-at-a-time table CRC on every length/alignment."""
     import hashlib
 
-    from intake_spark.mlds import _crc32c_table, crc32c
+    from intake_spark.compress import _crc32c_table, crc32c
 
     tbl = _crc32c_table()
 

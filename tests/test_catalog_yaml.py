@@ -85,6 +85,25 @@ def test_open_catalog_malformed_raises(tmp_path):
         open_catalog(str(bad))
 
 
+@pytest.mark.parametrize(
+    "text,got", [("", "an empty document"), ("- a\n- b\n", "list"), ("7\n", "int")]
+)
+@pytest.mark.parametrize(
+    "entry", [open_catalog, Catalog.from_yaml_file, "open_v1_catalog"]
+)
+def test_non_mapping_catalog_file_raises_value_error(tmp_path, text, got, entry):
+    """An empty file or a top-level list is not a catalog: every entry
+    point names the file and the expected mapping instead of failing
+    inside ``from_dict`` with an AttributeError."""
+    if entry == "open_v1_catalog":
+        from intake_spark.v1compat import open_v1_catalog as entry
+    path = tmp_path / "cat.yaml"
+    path.write_text(text)
+    with pytest.raises(ValueError, match="expected a YAML mapping") as err:
+        entry(str(path))
+    assert str(path) in str(err.value) and str(err.value).endswith(f"got {got}")
+
+
 def _emitted(cat: Catalog, path) -> tuple[bytes, bytes]:
     cat.to_yaml_file(str(path))
     with open(path, "rb") as f:

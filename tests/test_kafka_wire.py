@@ -14,11 +14,11 @@ import struct
 
 import pytest
 
+from intake_spark.compress import crc32c
 from intake_spark.loopback import LoopbackKafka
 from intake_spark.wire import (
     KafkaWireClient,
     _xxh32,
-    crc32c,
     decode_record_batches,
     encode_message_set,
     encode_record_batch,

@@ -1143,9 +1143,10 @@ def test_seeded_clusters_assignment_and_plan(spark):
 
 def _seeded_reference(vecs, seeds):
     """Python replay of seeded_clusters: left-fold dot and norms, cos =
-    dot / sqrt(n2 * sn2) or -2.0 at zero norm, argmax with ties to the
-    lowest seed id. Spark orders NaN above every double, so a NaN denom
-    (0 * inf) passes ``> 0`` and a NaN cosine wins."""
+    dot / sqrt(n2 * sn2), or -2.0 when n2 * sn2 is not > 0 (a zero norm,
+    also times an overflowed one: 0 * inf is NaN), argmax with ties to
+    the lowest seed id. Spark orders NaN above every double, so a NaN
+    cosine (inf / inf from an overflowed dot) wins."""
     import math
 
     def fold(xs):
@@ -1161,7 +1162,7 @@ def _seeded_reference(vecs, seeds):
         for sid, sv in seeds:
             denom = n2 * fold(x * x for x in sv)
             c = (fold(a * b for a, b in zip(v, sv)) / math.sqrt(denom)
-                 if denom > 0 or math.isnan(denom) else -2.0)
+                 if denom > 0 else -2.0)
             key = (math.isnan(c), 0.0 if math.isnan(c) else c, -sid)
             if best is None or key > best:
                 best = key
@@ -1197,6 +1198,7 @@ def test_seeded_clusters_exact_seed_literals(spark):
     got = {r.vec_id: r.cluster_id
            for r in sim.seeded_clusters(df, seeds=seeds).collect()}
     assert got == _seeded_reference(vecs, seeds)
+    assert got[101] == 1  # the zero vector: cos -2.0 everywhere, lowest id
 
 
 def test_seeded_clusters_build_py4j_budget(spark):
@@ -2944,9 +2946,9 @@ def test_global_row_number_matches_window_and_avoids_global_sort(spark):
 
 
 def test_ivf_semantic_dedup_exact_method_recall_and_determinism(spark):
-    """semantic_dedup_pairs_ivf(method='exact') keeps the recall bar AND
-    returns the identical pair set under any input partitioning — the
-    reproducible-audit variant of the scale path."""
+    """semantic_dedup_pairs_ivf (integer k-means lists) keeps the recall
+    bar AND returns the identical pair set under any input partitioning —
+    the reproducible-audit property of the scale path."""
     import numpy as np
 
     rng = np.random.default_rng(11)
@@ -2967,13 +2969,13 @@ def test_ivf_semantic_dedup_exact_method_recall_and_determinism(spark):
     p1 = {
         (r.id_a, r.id_b)
         for r in similarity.semantic_dedup_pairs_ivf(
-            emb, n_lists=8, threshold=0.95, method="exact", dim=16
+            emb, n_lists=8, threshold=0.95
         ).collect()
     }
     p2 = {
         (r.id_a, r.id_b)
         for r in similarity.semantic_dedup_pairs_ivf(
-            emb.repartition(9), n_lists=8, threshold=0.95, method="exact", dim=16
+            emb.repartition(9), n_lists=8, threshold=0.95
         ).collect()
     }
     assert p1 == p2  # deterministic under repartitioning

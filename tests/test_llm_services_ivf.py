@@ -299,7 +299,7 @@ def test_kmeans_fit_matches_pure_python_replay(spark):
         "vec_id long, embedding array<float>",
     )
     k, iters, dim, qscale = 3, 3, 6, 1024
-    cents, asg = kmeans_fit(df, k=k, iters=iters, dim=dim, qscale=qscale)
+    cents, asg = kmeans_fit(df, k=k, iters=iters)
     got = {r.vec_id: (r.cluster_id, r.dist2) for r in asg.collect()}
 
     import math
@@ -350,34 +350,39 @@ def test_kmeans_fit_requires_k_vectors(spark):
         "vec_id long, embedding array<float>",
     )
     with pytest.raises(ValueError, match="at least k=5"):
-        kmeans_fit(df, k=5, iters=1, dim=2)
+        kmeans_fit(df, k=5, iters=1)
 
 
 def test_kmeans_fit_rejects_dim_mismatch(spark):
-    """dim narrower than the vectors would NULL-pad every distance after
-    round 1 (all rows silently in cluster 0); wider crashes opaquely —
-    both refused by name up front."""
+    """The width comes from the k seed rows: seeds of unequal width would
+    NULL-pad every distance after round 1 (all rows silently in
+    cluster 0), and a NULL or empty seed has no width — both refused by
+    name up front."""
     import pytest
 
     from intake_spark.llm.similarity import kmeans_fit
 
-    df = spark.createDataFrame(
-        [(i, [0.1 * i, 0.2, 0.3, 0.4]) for i in range(6)],
+    ragged = spark.createDataFrame(
+        [(i, [0.1 * i, 0.2, 0.3, 0.4][: 2 if i == 1 else 4]) for i in range(6)],
         "vec_id long, embedding array<float>",
     )
-    with pytest.raises(ValueError, match="dim=2 does not match"):
-        kmeans_fit(df, k=2, iters=1, dim=2)
-    with pytest.raises(ValueError, match="dim=8 does not match"):
-        kmeans_fit(df, k=2, iters=1, dim=8)
+    with pytest.raises(ValueError, match=r"one non-zero width, got widths \[2, 4\]"):
+        kmeans_fit(ragged, k=2, iters=1)
+    empty = spark.createDataFrame(
+        [(0, None), (1, [0.1, 0.2]), (2, [0.3, 0.4])],
+        "vec_id long, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match=r"got widths \[0, 2\]"):
+        kmeans_fit(empty, k=2, iters=1)
+    # without row 1 both seeds (rows 0 and 2) are 4 wide
+    cents, _ = kmeans_fit(ragged.filter("vec_id != 1"), k=2, iters=1)
+    assert [len(c) for c in cents] == [4, 4]
 
 
 def test_ivf_build_exact_method(spark):
-    """method='exact' trains the integer k-means: identical centroids on
-    every run (no seed sensitivity), assignments agree with kmeans_fit,
-    unknown methods and a missing dim are refused, and search recall is
-    in the same band as the ML quantizer."""
-    import pytest
-
+    """ivf_build trains the integer k-means: identical centroids on every
+    run and partitioning, assignments agree with kmeans_fit, and search
+    recall holds the IVF band."""
     from intake_spark.llm.similarity import (
         ivf_build,
         ivf_search,
@@ -388,15 +393,10 @@ def test_ivf_build_exact_method(spark):
     from tests.conftest import SF_MEDIUM
 
     emb = load_table(spark, SF_MEDIUM, "embeddings")
-    with pytest.raises(ValueError, match="requires dim"):
-        ivf_build(emb, n_lists=8, method="exact")
-    with pytest.raises(ValueError, match="unknown ivf_build method"):
-        ivf_build(emb, n_lists=8, method="nope")
-
-    c1, a1 = ivf_build(emb, n_lists=8, method="exact", dim=64)
-    c2, a2 = ivf_build(emb.repartition(13), n_lists=8, method="exact", dim=64)
+    c1, a1 = ivf_build(emb, n_lists=8)
+    c2, a2 = ivf_build(emb.repartition(13), n_lists=8)
     assert c1 == c2  # deterministic under any partitioning
-    _, asg = kmeans_fit(emb, k=8, iters=3, dim=64)
+    _, asg = kmeans_fit(emb, k=8, iters=3)
     got = {r.vec_id: r.ivf_list for r in a1.collect()}
     want = {r.vec_id: r.cluster_id for r in asg.collect()}
     assert got == want
@@ -411,3 +411,37 @@ def test_ivf_build_exact_method(spark):
         for r in ivf_search(a1, c1, queries, top_k=5, n_probes=3).collect()
     }
     assert len(exact & approx) / len(exact) >= 0.6
+
+
+def test_engine_imports_no_pyspark_ml():
+    """One k-means (the integer ``kmeans_fit``) behind every IVF index:
+    no module under intake_spark/ imports ``pyspark.ml``, statically or
+    through ``importlib.import_module``."""
+    import ast
+    import pathlib
+
+    import intake_spark
+    from tests.conftest import method_calls
+
+    def is_ml(name):
+        return name == "pyspark.ml" or name.startswith("pyspark.ml.")
+
+    root = pathlib.Path(intake_spark.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                names = [node.module or ""]
+                if node.module == "pyspark":
+                    names += [f"pyspark.{a.name}" for a in node.names]
+            else:
+                continue
+            found += [f"{path.name}:{node.lineno} {n}" for n in names if is_ml(n)]
+        for _, call in method_calls(tree, "import_module"):
+            arg = call.args[0] if call.args else None
+            if isinstance(arg, ast.Constant) and is_ml(str(arg.value)):
+                found.append(f"{path.name}:{call.lineno} {arg.value}")
+    assert not found

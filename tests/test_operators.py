@@ -165,7 +165,7 @@ def test_kmeans_assignment_is_mapper_only(spark):
     from tests.conftest import SF_SMALL
 
     emb = load_table(spark, SF_SMALL, "embeddings")
-    _, asg = kmeans_fit(emb, k=4, iters=1, dim=64)
+    _, asg = kmeans_fit(emb, k=4, iters=1)
     plan = asg._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 

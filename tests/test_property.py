@@ -89,7 +89,7 @@ def test_pdf_literal_string_roundtrip(payload):
 
 @given(st.lists(st.integers(0, 2**63 - 1), max_size=8))
 def test_protobuf_varint_roundtrip(values):
-    from intake_spark.mlds import _read_varint
+    from intake_spark.compress import read_uvarint
 
     def enc(v: int) -> bytes:
         out = bytearray()
@@ -105,7 +105,7 @@ def test_protobuf_varint_roundtrip(values):
     buf = b"".join(enc(v) for v in values)
     i, got = 0, []
     while i < len(buf):
-        v, i = _read_varint(buf, i)
+        v, i = read_uvarint(buf, i)
         got.append(v)
     assert got == values
 
