@@ -608,13 +608,16 @@ def seeded_clusters(
         # zero-norm guard: ANSI mode raises DIVIDE_BY_ZERO on 0.0/0.0
         # (non-ANSI silently yields NaN, which sorts ABOVE every cosine) —
         # an all-zeros embedding assigns deterministically at cos = -2.0,
-        # below any real cosine, so ties break purely on seed id. A zero
-        # norm times an overflowed (inf) one is NaN, and Spark orders NaN
-        # above every double, so ``> 0`` alone would let it through.
+        # below any real cosine, so ties break purely on seed id. Any NaN
+        # cosine scores -2.0 too: a zero norm times an overflowed (inf)
+        # one is a NaN denominator (which passes ``> 0``), and a finite
+        # vector against an overflowed seed gives inf / sqrt(inf), and
+        # Spark orders NaN above every double, so it would win the argmax.
         denom = f"(_n2 * {_double_sql(sn2)})"
         scored.append(
-            f"named_struct('c', CASE WHEN {denom} > 0 AND NOT isnan({denom}) "
-            f"THEN {dot} / sqrt({denom}) ELSE -2.0D END, 'nid', {-int(sid)})"
+            f"named_struct('c', CASE WHEN {denom} > 0 "
+            f"THEN nanvl({dot} / sqrt({denom}), -2.0D) ELSE -2.0D END, "
+            f"'nid', {-int(sid)})"
         )
     best = F.expr(f"array_max(array({', '.join(scored)}))")
     return (
@@ -976,7 +979,9 @@ def kmeans_fit(
     or zero width (a NULL embedding counts as zero) raise ``ValueError``
     up front, since a centroid narrower than the vectors would NULL-pad
     every distance after round 1 and silently put every row in
-    cluster 0.
+    cluster 0. Any other row of a different width fails the eager
+    materialization of the quantized base with a message naming its
+    id, its width and the seed width.
 
     Plan shape per iteration: ONE corpus scan computing the argmin
     against k literal centroid arrays (mapper-only — no join, no
@@ -994,10 +999,10 @@ def kmeans_fit(
     dist2))."""
     if k < 1 or iters < 1:
         raise ValueError("k and iters must both be >= 1")
-    base = materialize(
-        df.select(F.col(id_col), F.expr(_quantize_sql(vec_col)).alias("_q"))
+    quantized = df.select(
+        F.col(id_col), F.expr(_quantize_sql(vec_col)).alias("_q")
     )
-    seeds = base.orderBy(F.asc(id_col)).limit(k).collect()
+    seeds = quantized.orderBy(F.asc(id_col)).limit(k).collect()
     if len(seeds) < k:
         raise ValueError(
             f"kmeans_fit needs at least k={k} vectors, got {len(seeds)}"
@@ -1009,6 +1014,15 @@ def kmeans_fit(
             f"kmeans_fit needs seed vectors of one non-zero width, got widths {widths}"
         )
     dim = widths[0]
+    # every other row's width is checked inside the eager materialization
+    # (no extra job): a wider row would get a NULL dist2 and sink into
+    # cluster 0, a narrower one would fail on element_at
+    width = "if(_q IS NULL, 0, size(_q))"
+    base = materialize(quantized.withColumn("_q", F.expr(
+        f"CASE WHEN {width} = {dim} THEN _q ELSE raise_error(concat("
+        f"'kmeans_fit: {id_col} ', CAST({id_col} AS STRING), ' has width ', "
+        f"CAST({width} AS STRING), ', expected width {dim}')) END"
+    )))
     for _ in range(iters):
         asg = base.withColumn("_b", F.expr(_kmeans_assign_expr(cents)))
         sums = (

@@ -278,8 +278,9 @@ def torch_datasets_catalog(rootdir: str, importer=None):
     """Enumerate the torchvision/torchaudio/torchtext example registries
     into a Catalog of ``TorchDatasetReader`` entries (first docstring line
     as the description, section recorded). ``importer(modname)`` is
-    injectable so the listing mock-tests without torch; missing sections
-    are skipped exactly like the reference."""
+    injectable so the listing mock-tests without torch; a section whose
+    import raises ``ImportError`` is skipped like the reference, any other
+    error propagates."""
     import importlib
 
     from intake_spark.catalog import Catalog
@@ -289,7 +290,7 @@ def torch_datasets_catalog(rootdir: str, importer=None):
     for section in ("vision", "audio", "text"):
         try:
             mod = importer(f"torch{section}")
-        except Exception:
+        except ImportError:
             continue
         for name in getattr(mod.datasets, "__all__", []):
             f = getattr(mod.datasets, name, None)

@@ -88,6 +88,18 @@ def get_session(app_name: str = "intake_spark", cpus: int | None = None) -> Spar
         )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # No PySpark call-site capture. With it on, every Column method
+        # and `functions` builtin reads this conf, looks up the JVM's
+        # PySparkCurrentOrigin, sets and clears it (35 py4j commands for
+        # `(F.col("a") + 1).alias("b")` against 5 without), and walks
+        # the stack, whose first walk imports IPython: ~540 modules and
+        # ~26 MB driver RSS, 22 MB of the `queries` benchmark driver's
+        # 155 MB peak (local[4], sf0.01). The cost: DataFrame-API errors
+        # lose their "== DataFrame == ... was called from <file>:<line>"
+        # section; the error class, SQLSTATE and message stay. The conf
+        # is static (settable only here, before the session starts),
+        # and pyspark caches it per process at the first Column call.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Python workers (incl. the Python-DataSource streaming source
         # runner) connect BACK to the JVM after a fresh-process import
         # of pyspark; under full 32-thread load that cold start can

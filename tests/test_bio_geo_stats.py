@@ -1152,8 +1152,12 @@ def test_trr_double_velocity_only_frame(spark, tmp_path):
 def test_torch_and_tfds_catalogs_mocked(tmp_path):
     """Torch/TFDS registry catalogs (reference catalogs.py:581-665 shape)
     with injectable listings: entries enumerate, carry section/description
-    metadata, rehydrate to import-gated readers, and YAML round-trip."""
+    metadata, rehydrate to import-gated readers, and YAML round-trip. A
+    section that is not installed is skipped; any other import error
+    propagates."""
     import types
+
+    import pytest
 
     from intake_spark.catalog import Catalog
     from intake_spark.mlds import tfds_catalog, torch_datasets_catalog
@@ -1189,6 +1193,14 @@ def test_torch_and_tfds_catalogs_mocked(tmp_path):
     back = Catalog.from_yaml_file(str(p))
     assert set(back.aliases) == {"MNIST", "CIFAR10"}
     assert back["CIFAR10"].data.name == "CIFAR10"
+
+    def broken_import(modname):
+        if modname == "torchaudio":
+            raise RuntimeError("torchaudio is broken")
+        return fake_import(modname)
+
+    with pytest.raises(RuntimeError, match="torchaudio is broken"):
+        torch_datasets_catalog(rootdir="/data/torch", importer=broken_import)
 
     tf = tfds_catalog(lister=lambda: ["xnli", "c4"])
     assert set(tf.aliases) == {"xnli", "c4"}

@@ -1144,9 +1144,9 @@ def test_seeded_clusters_assignment_and_plan(spark):
 def _seeded_reference(vecs, seeds):
     """Python replay of seeded_clusters: left-fold dot and norms, cos =
     dot / sqrt(n2 * sn2), or -2.0 when n2 * sn2 is not > 0 (a zero norm,
-    also times an overflowed one: 0 * inf is NaN), argmax with ties to
-    the lowest seed id. Spark orders NaN above every double, so a NaN
-    cosine (inf / inf from an overflowed dot) wins."""
+    also times an overflowed one: 0 * inf is NaN) or the cosine is NaN
+    (inf / inf against an overflowed seed), argmax with ties to the
+    lowest seed id."""
     import math
 
     def fold(xs):
@@ -1163,10 +1163,10 @@ def _seeded_reference(vecs, seeds):
             denom = n2 * fold(x * x for x in sv)
             c = (fold(a * b for a, b in zip(v, sv)) / math.sqrt(denom)
                  if denom > 0 else -2.0)
-            key = (math.isnan(c), 0.0 if math.isnan(c) else c, -sid)
+            key = (-2.0 if math.isnan(c) else c, -sid)
             if best is None or key > best:
                 best = key
-        out[vid] = -best[2]
+        out[vid] = -best[1]
     return out
 
 
@@ -1199,6 +1199,8 @@ def test_seeded_clusters_exact_seed_literals(spark):
            for r in sim.seeded_clusters(df, seeds=seeds).collect()}
     assert got == _seeded_reference(vecs, seeds)
     assert got[101] == 1  # the zero vector: cos -2.0 everywhere, lowest id
+    # inf / sqrt(inf) against the overflowing seed 9 is NaN, not a win
+    assert [got[v] for v in (0, 48, 56)] == [1, 1, 1]
 
 
 def test_seeded_clusters_build_py4j_budget(spark):

@@ -357,7 +357,9 @@ def test_kmeans_fit_rejects_dim_mismatch(spark):
     """The width comes from the k seed rows: seeds of unequal width would
     NULL-pad every distance after round 1 (all rows silently in
     cluster 0), and a NULL or empty seed has no width — both refused by
-    name up front."""
+    name up front. A non-seed row of another width fails too, naming its
+    id, its width and the seed width: a wider one would get a NULL dist2
+    and sink into cluster 0, a narrower one would fail on element_at."""
     import pytest
 
     from intake_spark.llm.similarity import kmeans_fit
@@ -377,6 +379,15 @@ def test_kmeans_fit_rejects_dim_mismatch(spark):
     # without row 1 both seeds (rows 0 and 2) are 4 wide
     cents, _ = kmeans_fit(ragged.filter("vec_id != 1"), k=2, iters=1)
     assert [len(c) for c in cents] == [4, 4]
+    for width in (5, 3):
+        odd = spark.createDataFrame(
+            [(i, [0.1 * i, 0.2, 0.3, 0.4, 0.5][: width if i == 3 else 4])
+             for i in range(6)],
+            "vec_id long, embedding array<float>",
+        )
+        with pytest.raises(Exception,
+                           match=f"vec_id 3 has width {width}, expected width 4"):
+            kmeans_fit(odd, k=2, iters=1)
 
 
 def test_ivf_build_exact_method(spark):
