@@ -1,29 +1,285 @@
 #!/usr/bin/env python
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1)
 on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+{"metric": ..., "value": total_sec, "unit": "sec", "queries": [...], "sf": ...}
 
 Each query is timed end-to-end: plan build + full execution into the
 ``noop`` write sink, which materializes every output column (``.count()``
 would let Catalyst skip computing projected expressions).
 
-Variance control: each query runs $SPARK_GRAFT_REPEATS times (default 3)
-in interleaved rounds (q1..qN, q1..qN, ...) so a GC pause or page-cache
-warm-up hits different queries in different rounds rather than biasing one
-query's samples. ``queries`` reports the per-query MEDIAN; ``value`` is the
-sum of medians; ``spread`` reports (max-min)/median per query so a noisy
-container shows up as spread, not as a phantom regression.
+Recording rule: each query runs $SPARK_GRAFT_REPEATS times (default 3) in
+interleaved rounds (q1..qN, q1..qN, ...) and its plain median is recorded.
+Every registered session-shared table, plus the Python-worker and
+Python-DataSource warm-ups, is built once before the rounds and billed as
+an explicit ``shared:*`` line. ``value`` is the sum of the medians plus
+the shared lines. Nothing is re-measured or adjusted afterwards.
+
+Layer record: every timed sample runs under the job group
+``bench|<round>|<query>`` and every shared line under its label, and the
+session writes an uncompressed event log. After the rounds,
+``perfbench/eventlog.py`` parses it and each query and shared line gets a
+``layers`` record in the detail file: the driver-side split of the sample
+(``construct_s``, the query call including any eager actions, and
+``exec_s``, the sink write) and its Spark jobs' stages, tasks, task run
+and CPU time, GC, shuffle bytes and spill, as medians over the rounds.
+Jobs that carry a group of their own (a streaming query runs its
+micro-batches under its run id) or none are attributed to the sample
+whose wall-clock window they started in (``window_jobs``). Host noise
+shows as wall time rising while ``task_run_s`` and ``task_cpu_s`` stay
+flat.
+
+The full record goes to ``bench_detail.json`` (``bench_detail_sf<sf>.json``
+at other scales). The stdout line stays within ``LINE_LIMIT`` bytes:
+``queries`` lists the medians in query-number order (q01 first, null for
+a query that failed; the names are in the detail file).
+
+Environment: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_REPEATS, SPARK_GRAFT_CPUS,
+SPARK_GRAFT_DRIVER_MEM, SPARK_GRAFT_DRIVER_JAVA_OPTS and
+SPARK_GRAFT_BENCH_ONLY (comma-separated name prefixes for a local debug
+run, recorded to ``bench_detail_partial.json``).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import statistics
 import sys
+import tempfile
 import time
+import traceback
+from dataclasses import dataclass
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+sys.path.append(os.path.join(HERE, "perfbench"))
+
+import eventlog  # noqa: E402 — perfbench's parser, the repo's only one
+
+# the stdout line's budget: a caller that keeps only the last ~2000
+# characters of stdout still gets the whole line
+LINE_LIMIT = 1950
+# summed per query and shared line into the layer record
+JOB_FIELDS = (
+    "jobs", "stages", "tasks", "task_run_s", "task_cpu_s", "gc_s",
+    "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes", "window_jobs",
+)
+# the suite totals on the stdout line
+LINE_TOTALS = ("jobs", "tasks", "task_run_s", "task_cpu_s", "window_jobs")
+
+
+@dataclass
+class Sample:
+    """One timed unit: a query in one round, or one shared build."""
+
+    key: str  # query name or shared:* label
+    group: str  # the Spark job group it ran under
+    start_ms: int  # wall-clock window, epoch ms (the event log's clock)
+    end_ms: int
+    construct_s: float
+    exec_s: float
+    compiles: int = 0  # generated classes compiled during the sample
+
+    @property
+    def seconds(self) -> float:
+        return self.construct_s + self.exec_s
+
+
+def number(name: str) -> int:
+    """``q07_foo`` -> 7."""
+    return int(name.split("_", 1)[0][1:])
+
+
+def short(name: str) -> str:
+    return name if name.startswith("shared:") else name.split("_", 1)[0]
+
+
+def job_layers(job) -> dict:
+    return {
+        "jobs": 1, "stages": job.stages, "tasks": job.tasks,
+        "task_run_s": job.task_run_ms / 1e3, "task_cpu_s": job.task_cpu_ns / 1e9,
+        "gc_s": job.gc_ms / 1e3, "shuffle_read_bytes": job.shuffle_read_bytes,
+        "shuffle_write_bytes": job.shuffle_write_bytes, "spill_bytes": job.spill_bytes,
+    }
+
+
+def layer_records(jobs, samples: list[Sample]) -> tuple[dict, dict]:
+    """({key: layers}, attribution counts). A job is its sample's when it
+    carries the sample's group; a job with any other group, or none,
+    belongs to the sample whose wall window its start falls in. A key's
+    record is the per-field median over its samples."""
+    by_group = {s.group: s for s in samples}
+    per_sample = {
+        s.group: {"construct_s": s.construct_s, "exec_s": s.exec_s,
+                  "compiles": s.compiles, **dict.fromkeys(JOB_FIELDS, 0)}
+        for s in samples
+    }
+    counts = {"group": 0, "window": 0, "none": 0}
+    for job in jobs:
+        owner = by_group.get(job.group)
+        how = "group"
+        if owner is None:
+            how = "window"
+            owner = next(
+                (s for s in samples if s.start_ms <= job.start_ms <= s.end_ms), None
+            )
+        if owner is None:
+            counts["none"] += 1
+            continue
+        counts[how] += 1
+        rec = per_sample[owner.group]
+        for k, v in job_layers(job).items():
+            rec[k] += v
+        rec["window_jobs"] += how == "window"
+    by_key: dict[str, list[dict]] = {}
+    for s in samples:
+        by_key.setdefault(s.key, []).append(per_sample[s.group])
+    records = {
+        key: {f: round(statistics.median(r[f] for r in recs), 4) for f in recs[0]}
+        for key, recs in by_key.items()
+    }
+    return records, counts
+
+
+def stdout_line(timings: dict, names: list[str], shared: dict, errors: dict,
+                retries: dict, layers: dict, repeats: int, sf: float) -> str:
+    """The one JSON line, within LINE_LIMIT: when errors and retries push
+    it over, they shrink to their names, then to counts (the detail file
+    keeps them whole)."""
+    queries_value = round(sum(timings.values()), 4)
+    line = {
+        "metric": "headline_queries_total",
+        "value": round(queries_value + sum(shared.values()), 4),
+        "unit": "sec",
+        # value = queries_value + sum(shared)
+        "queries_value": queries_value,
+        "queries": [timings.get(n) for n in sorted(names, key=number)],
+        "shared": shared,
+        "repeats": repeats,
+        "sf": sf,
+        "layer_totals": {
+            f: round(sum(r[f] for r in layers.values()), 2) for f in LINE_TOTALS
+        },
+    }
+    if errors:
+        line["errors"] = {short(n): e[:100] for n, e in errors.items()}
+    if retries:
+        line["retries"] = {short(n): c for n, c in retries.items()}
+    text = json.dumps(line, separators=(",", ":"))
+    for key, shrink in (("errors", sorted), ("retries", sorted),
+                        ("errors", len), ("retries", len)):
+        if len(text) <= LINE_LIMIT:
+            break
+        if key in line:
+            line[key] = shrink(line[key])
+            text = json.dumps(line, separators=(",", ":"))
+    return text
+
+
+def configure_jvm(events_dir: str) -> None:
+    """JVM options and the event log; must run before the JVM launches.
+
+    GC pinning: a fixed heap (-Xms == -Xmx, no resize pauses) with G1.
+    Without it, GC-alignment noise spread multi-second swings across
+    unrelated queries (r8: +6% suite drift at sf0.1). No
+    -XX:+AlwaysPreTouch: with a 16 GB heap it made every Arrow-UDF
+    stage's first execution 3-10x slower (q132 cold 15.8 s against
+    4.3 s)."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    os.environ.setdefault(
+        "SPARK_GRAFT_DRIVER_JAVA_OPTS",
+        f"-Xms{mem} -XX:+UseG1GC -XX:G1HeapRegionSize=32m "
+        "-XX:InitiatingHeapOccupancyPercent=30",
+    )
+    submit = os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--conf spark.eventLog.enabled=true "
+        f"--conf spark.eventLog.dir=file://{events_dir} "
+        f"--conf spark.eventLog.compress=false {submit}"
+    )
+
+
+def jvm_memory_mb(spark) -> dict:
+    """Heap still held after a full GC, and Metaspace's peak, in MB."""
+    lang = spark.sparkContext._jvm.java.lang
+    lang.System.gc()
+    time.sleep(0.5)
+    lang.System.gc()
+    mf = lang.management.ManagementFactory
+    out = {"heap_live": mf.getMemoryMXBean().getHeapMemoryUsage().getUsed() / 2**20}
+    for p in mf.getMemoryPoolMXBeans():
+        if p.getName() == "Metaspace":
+            out["Metaspace"] = p.getPeakUsage().getUsed() / 2**20
+    return {k: round(v, 1) for k, v in out.items()}
+
+
+def python_worker_probe(spark):
+    """The Python-worker pool warm-up frame. The first Arrow-UDF stage
+    otherwise pays parallel cold imports of numpy/pandas/pyarrow plus the
+    codec stack inside whichever query runs first (q132 read 12.97 s in
+    r9). Each worker reports whether the codec stack was already imported
+    when it was forked from the prewarm daemon."""
+
+    def warm(batches):
+        # the FULL codec stack: decode dispatch imports these lazily, and
+        # a worker importing them from the shipped zip pays py-compile
+        import os as _os
+        import sys as _sys
+        import time as _t
+
+        marker = "intake_spark.llm.jpeg2000" in _sys.modules
+        i0 = _t.time()
+        import numpy  # noqa: F401
+
+        import intake_spark.compress  # noqa: F401
+        import intake_spark.llm.audiofp  # noqa: F401
+        import intake_spark.llm.flac  # noqa: F401
+        import intake_spark.llm.imagehash  # noqa: F401
+        import intake_spark.llm.jpeg2000  # noqa: F401
+        import intake_spark.llm.jpegls  # noqa: F401
+        import intake_spark.llm.multimodal  # noqa: F401
+        import intake_spark.llm.video  # noqa: F401
+        import intake_spark.llm.vorbis  # noqa: F401
+        import intake_spark.llm.webp  # noqa: F401
+        import intake_spark.output  # noqa: F401
+
+        cost = _t.time() - i0
+        import pandas as _pd
+
+        for _ in batches:
+            yield _pd.DataFrame(
+                {"pid": [_os.getpid()], "inherited": [marker], "import_s": [cost]}
+            )
+
+    from intake_spark.session import ensure_py_deps
+
+    ensure_py_deps(spark)
+    n = spark.sparkContext.defaultParallelism * 2
+    return spark.range(n, numPartitions=n).mapInPandas(
+        warm, "pid long, inherited boolean, import_s double"
+    )
+
+
+def worker_report(probe) -> dict:
+    rows = probe.collect()
+    return {
+        "workers": len({r.pid for r in rows}),
+        "inherited_prewarm": len({r.pid for r in rows if r.inherited}),
+        "max_worker_import_s": round(max(r.import_s for r in rows), 3),
+    }
+
+
+def kafka_wire_frame(spark, port: int):
+    """The Python DataSource warm-up frame: a separate worker path from
+    mapInPandas, whose first use otherwise lands in q143 (15.3 s first
+    against 2.0 s steady)."""
+    from intake_spark.kafka_source import register_kafka_wire
+
+    register_kafka_wire(spark)
+    return (spark.read.format("kafka_wire")
+            .option("kafka.bootstrap.servers", f"127.0.0.1:{port}")
+            .option("subscribe", "warm").load())
 
 
 def main() -> None:
@@ -33,716 +289,147 @@ def main() -> None:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = -1.0
+    events_dir = tempfile.mkdtemp(prefix="intake_spark_bench_events_")
+    try:
+        run(sf_dir, repeats, sf, events_dir)
+    finally:
+        shutil.rmtree(events_dir, ignore_errors=True)
 
-    # GC pinning (round-9 noise hardening): fixed heap (-Xms == -Xmx, no
-    # resize pauses), G1 with a fixed region size and pre-touched pages.
-    # Without this, GC-alignment noise spread multi-second swings across
-    # unrelated queries (r8: +6% suite drift at sf0.1, 44x-vs-4.7x
-    # attribution swings at sf1.0). Must be set BEFORE the JVM launches.
-    # NOTE: no -XX:+AlwaysPreTouch — combined with -Xms16g it makes every
-    # Arrow-UDF stage's first execution 3-10x slower (measured 15.8 s vs
-    # 4.3 s for q132 cold, r10 A/B: the pre-touched 16 GB resident heap
-    # stalls Python-worker memory allocation, most plausibly THP
-    # compaction). The fixed heap (-Xms == -Xmx) alone delivers the
-    # no-resize GC pinning that r9 introduced it for.
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-    os.environ.setdefault(
-        "SPARK_GRAFT_DRIVER_JAVA_OPTS",
-        f"-Xms{mem} -XX:+UseG1GC -XX:G1HeapRegionSize=32m "
-        "-XX:InitiatingHeapOccupancyPercent=30",
-    )
 
+def run(sf_dir: str, repeats: int, sf: float, events_dir: str) -> None:
+    configure_jvm(events_dir)
+    from pyspark.sql import DataFrame
+
+    from intake_spark import streaming
     from intake_spark.benchqueries import get_queries
-    from intake_spark.session import get_session
+    from intake_spark.llm.queries import shared, shared_labels
+    from intake_spark.loopback import LoopbackKafka
+    from intake_spark.session import TABLE_NAMES, get_session, load_table
 
     spark = get_session("intake_spark_bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    codegen = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiled() -> int:
+        return codegen.METRIC_COMPILATION_TIME().getCount()
 
     queries = get_queries()
 
-    # JVM/codegen/IO warmup so no timed query absorbs engine startup or
-    # cold-file cost (measures the engine, not JVM boot / first-touch IO;
-    # per-query numbers stay order-independent).
+    # JVM/codegen/IO warm-up, so no timed query absorbs engine start-up or
+    # cold-file cost
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from intake_spark.session import TABLE_NAMES, load_table
-
     for t in TABLE_NAMES:
         try:
             load_table(spark, sf_dir, t).count()
-        except Exception:
+        except Exception:  # noqa: BLE001 — a missing table fails its queries
             pass
 
-    # Python-worker pool warmup: the first Arrow-UDF stage otherwise
-    # pays 32 PARALLEL cold imports of numpy/pandas/pyarrow plus the
-    # codec stack — a per-session constant that belongs with session
-    # boot, not inside whichever Python-stage query happens to run
-    # first (q132 read 12.97 s driver-side in r9, ~85% of it this
-    # import storm; workers are reused afterwards, so every Python
-    # stage then measures its own work). Billed as an explicit
-    # shared:* line below, like the shared table builds.
-    import time as _time
-
-    _t0 = _time.time()
-    # prewarm observability (r11 verdict #1): record the daemon module
-    # actually in effect plus a per-worker probe — whether the codec
-    # stack was ALREADY imported when the worker was forked (inherited
-    # from the prewarm daemon) and what the residual import cost was.
-    # This makes "did the prewarm engage in THIS environment?" a fact in
-    # the artifact instead of a builder claim.
-    prewarm_info: dict = {}
-    try:
-        prewarm_info["daemon_module"] = spark.conf.get(
-            "spark.python.daemon.module", ""
-        )
-    except Exception:
-        prewarm_info["daemon_module"] = ""
-    try:
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
-
-        def _warm(batches):
-            # the FULL codec stack, not just the front modules: decode
-            # dispatch imports jpeg2000/flac/vorbis/webp lazily, and a
-            # worker importing them from the shipped zip pays py-compile
-            # with no pycache — the actual per-worker cold cost
-            import os as _os
-            import sys as _sys
-            import time as _t
-
-            marker = "intake_spark.llm.jpeg2000" in _sys.modules
-            _i0 = _t.time()
-            import numpy  # noqa: F401
-
-            import intake_spark.compress  # noqa: F401
-            import intake_spark.llm.audiofp  # noqa: F401
-            import intake_spark.llm.flac  # noqa: F401
-            import intake_spark.llm.imagehash  # noqa: F401
-            import intake_spark.llm.jpeg2000  # noqa: F401
-            import intake_spark.llm.jpegls  # noqa: F401
-            import intake_spark.llm.multimodal  # noqa: F401
-            import intake_spark.llm.video  # noqa: F401
-            import intake_spark.llm.vorbis  # noqa: F401
-            import intake_spark.llm.webp  # noqa: F401
-            import intake_spark.output  # noqa: F401
-
-            cost = _t.time() - _i0
-            import pandas as _pd
-
-            for b in batches:
-                yield _pd.DataFrame(
-                    {
-                        "pid": [_os.getpid()],
-                        "inherited": [marker],
-                        "import_s": [cost],
-                    }
-                )
-
-        _n = spark.sparkContext.defaultParallelism * 2
-        rows = (
-            spark.range(_n, numPartitions=_n)
-            .mapInPandas(_warm, "pid long, inherited boolean, import_s double")
-            .collect()
-        )
-        pids = {r.pid for r in rows}
-        prewarm_info.update(
-            {
-                "workers": len(pids),
-                "inherited_prewarm": len({r.pid for r in rows if r.inherited}),
-                "max_worker_import_s": round(max(r.import_s for r in rows), 3)
-                if rows
-                else None,
-            }
-        )
-        warm_cost = {"shared:pyworker_warmup": round(_time.time() - _t0, 4)}
-    except Exception:
-        warm_cost = {}
-
-    # Python DataSource machinery warmup (separate worker path from
-    # mapInPandas: plan_data_source_read + streaming source runner);
-    # q143's first run otherwise absorbs ~13 s of one-time
-    # cloudpickle/Arrow/worker-spawn cost (15.3 s first vs 2.0 s steady
-    # measured in isolation) — the exact spread defect the r10 verdict
-    # flagged on q135/q136. Its OWN try/except: a failure here must not
-    # clobber the pyworker warmup line (the r11s4 run lost BOTH to a
-    # too-small max_conns and q133/q134 absorbed the import storm).
-    _t0 = _time.time()
-    try:
-        from intake_spark.kafka_source import register_kafka_wire
-        from intake_spark.loopback import LoopbackKafka
-
-        _srv = LoopbackKafka(
-            {"warm": [[[{"key": b"w", "value": b"0"}]]]}, max_conns=16
-        )
-        try:
-            register_kafka_wire(spark)
-            (spark.read.format("kafka_wire")
-             .option("kafka.bootstrap.servers", f"127.0.0.1:{_srv.port}")
-             .option("subscribe", "warm").load().count())
-        finally:
-            _srv.close()
-        warm_cost["shared:pydatasource_warmup"] = round(
-            _time.time() - _t0, 4
-        )
-    except Exception:
-        pass
-
-    # Every registered session-shared table (pair tables, dup spans,
-    # PCA direction, prover fixture stores) is built ONCE here and billed
-    # as an explicit shared:* line; otherwise whichever consumer runs
-    # first absorbs the build and the per-query medians become
-    # order-dependent (q22 spread hit 109x in round 6). `value` includes
-    # the shared cost, so totals stay honest; a build that fails is
-    # recorded in `errors` under its label instead.
-    from intake_spark.llm.queries import prewarm_shared
-
+    samples: list[Sample] = []
     errors: dict[str, str] = {}
-    shared = {}
-    for lbl, v in prewarm_shared(spark, sf_dir).items():
-        if isinstance(v, str):
-            errors[lbl] = v[:500]
-        else:
-            shared[lbl] = round(v, 4)
-    shared.update(warm_cost)
+
+    def timed(key: str, group: str, build, run_):
+        """Run ``run_(build())`` under job group ``group``, record the
+        sample and return run_'s result; an exception goes to ``errors``."""
+        sc.setJobGroup(group, key)
+        c0 = compiled()
+        w0 = time.time()
+        try:
+            t0 = time.perf_counter()
+            obj = build()
+            t1 = time.perf_counter()
+            out = run_(obj)
+            t2 = time.perf_counter()
+        except Exception as exc:  # noqa: BLE001 — the ledger survives
+            traceback.print_exc(file=sys.stderr)
+            errors[key] = f"{type(exc).__name__}: {exc}"[:500]
+            return None
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        samples.append(Sample(key, group, int(w0 * 1e3), int(time.time() * 1e3) + 1,
+                              t1 - t0, t2 - t1, compiled() - c0))
+        return out
+
+    prewarm = {
+        "daemon_module": spark.conf.get("spark.python.daemon.module", ""),
+        **(timed("shared:pyworker_warmup", "shared:pyworker_warmup",
+                 lambda: python_worker_probe(spark), worker_report) or {}),
+    }
+    srv = LoopbackKafka({"warm": [[[{"key": b"w", "value": b"0"}]]]}, max_conns=16)
+    try:
+        timed("shared:pydatasource_warmup", "shared:pydatasource_warmup",
+              lambda: kafka_wire_frame(spark, srv.port), lambda df: df.count())
+    finally:
+        srv.close()
+
+    def fill(got):
+        # a persisted shared frame is filled inside the timing
+        if isinstance(got, DataFrame):
+            got.count()
+
+    for label in shared_labels():
+        timed(label, label, lambda: shared(spark, sf_dir, label), fill)
+    compiles = {"setup": compiled()}
 
     names = sorted(queries)
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     if only:
-        # local-debug filter (comma-separated name prefixes); the driver
-        # never sets it, so the published numbers always cover the suite
-        pref = tuple(only.split(","))
-        names = [n for n in names if n.startswith(pref)]
+        names = [n for n in names if n.startswith(tuple(only.split(",")))]
 
-    def _proc_stat() -> tuple[int, int]:
-        """(steal_ticks, total_ticks) from /proc/stat's cpu line — the
-        host-noise signal the r10 degraded-window adjudication sampled
-        manually (PERF.md r10)."""
-        try:
-            with open("/proc/stat") as f:
-                parts = f.readline().split()[1:]
-            vals = [int(x) for x in parts]
-            steal = vals[7] if len(vals) > 7 else 0
-            return steal, sum(vals)
-        except Exception:
-            return 0, 0
+    def sink(df):
+        df.write.mode("overwrite").format("noop").save()
 
-    # per-query transient-spawn retry counts (verdict #8): a drain_stream
-    # retry runs INSIDE the timed region, so a retried streaming query's
-    # sample is honestly slow — this map says which samples carried one
-    stream_retries: dict[str, int] = {}
-
-    def _retry_count() -> int:
-        try:
-            from intake_spark import streaming as _stg
-
-            return _stg.RETRY_COUNT
-        except Exception:
-            return 0
-
-    def measure(round_count: int) -> tuple[dict[str, list[float]], float]:
-        """One full interleaved measurement pass; returns (samples,
-        steal_pct over the pass). A query that raises is recorded in
-        ``errors`` and skipped for the rest of the run — one flaky
-        query must not cost the whole ledger (a q145 streaming-worker
-        spawn timeout once killed a full 145-query pass)."""
-        s0, t0_ = _proc_stat()
-        out: dict[str, list[float]] = {n: [] for n in names}
-        for _ in range(round_count):
-            for name in names:
-                if name in errors:
-                    continue
-                r0 = _retry_count()
-                t0 = time.perf_counter()
-                try:
-                    df = queries[name](spark, sf_dir)
-                    df.write.mode("overwrite").format("noop").save()
-                except Exception as exc:  # noqa: BLE001 — ledger survives
-                    errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-                    continue
-                out[name].append(time.perf_counter() - t0)
-                dr = _retry_count() - r0
-                if dr:
-                    stream_retries[name] = stream_retries.get(name, 0) + dr
-        s1, t1_ = _proc_stat()
-        steal_pct = (s1 - s0) / max(1, t1_ - t0_)
-        return out, steal_pct
-
-    samples, steal_pct = measure(repeats)
-    samples = {n: s for n, s in samples.items() if s}
-
-    def _derive(smp):
-        t = {n: round(statistics.median(s), 4) for n, s in smp.items()}
-        sp = {
-            n: round((max(s) - min(s)) / statistics.median(s), 3)
-            if len(s) > 1 else 0.0
-            for n, s in smp.items()
-        }
-        sps = {
-            n: (
-                round((max(s[1:]) - min(s[1:])) / statistics.median(s[1:]), 3)
-                if len(s) > 2
-                else 0.0
-            )
-            for n, s in smp.items()
-        }
-        fre = {
-            n: round(s[0] - statistics.median(s), 4)
-            for n, s in smp.items()
-            if len(s) > 1 and s[0] - statistics.median(s) > 0.25
-        }
-        return t, sp, sps, fre
-
-    if os.environ.get("SPARK_GRAFT_BENCH_DEBUG"):
-        import sys as _sys
-
-        for n in names:
-            print(f"samples {n}: {[round(x, 3) for x in samples.get(n, [])]}",
-                  file=_sys.stderr)
-    # Round 1 pays whole-stage-codegen COMPILATION for each query's
-    # generated class (Janino caches it for rounds 2+), so queries with
-    # huge expression trees but tiny medians (q102's C4 rule stack:
-    # ~+1.0 s over a 0.27 s median in r7) show large `spread` that is
-    # NOT steady-state noise. Report both: `spread` over all rounds
-    # (honest worst case) and `spread_steady` over rounds 2+ (engine
-    # variance once compiled). The first-round excess itself is listed
-    # so the compile cost stays visible instead of median-hidden.
-    timings, spread, spread_steady, first_run_excess = _derive(samples)
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    # per-sf ledger: the driver's sf0.1 runs keep the legacy name; other
-    # scales (the sf1.0 replication runs) get their own file so a scale
-    # experiment can never clobber the driver's drift baseline
-    detail_path = os.path.join(
-        here,
-        "bench_detail.json" if sf == 0.1 else f"bench_detail_sf{sf}.json",
-    )
-    prev: dict = {}
-    prev_shared: dict = {}
-    try:
-        with open(detail_path) as f:
-            prev_all = json.load(f)
-        if prev_all.get("sf") == sf:
-            # a window-degraded run records baseline_queries = the last
-            # CLEAN run's medians, so drift always compares against a
-            # quiet host, never against a contaminated ledger
-            prev = prev_all.get("baseline_queries") or prev_all.get(
-                "queries", {}
-            )
-            prev_shared = prev_all.get("baseline_shared") or {}
-    except Exception:
-        prev = {}
-        prev_shared = {}
-
-    # Degraded-window detection (round-11 automation of the r10 manual
-    # adjudication, PERF.md r10): three fixed pure-JVM control queries +
-    # /proc/stat steal. When ALL controls drifted up uniformly vs the
-    # last clean run AND the host shows steal (or the drift is so
-    # uniform-large that cgroup throttling is the only explanation),
-    # the whole run is one `window-degraded` verdict — re-measured once,
-    # and if still degraded, recorded as such WITHOUT burning the
-    # per-query re-measure budget on host noise (r10: 34-64 drift rows
-    # went "unmeasured over the cap" exactly when the host was noisy).
-    controls = [c for c in (
-        "q01_pricing_summary", "q40_grouping_sets", "q44_simhash_pairs"
-    ) if c in timings and prev.get(c)]
-
-    def _window_degraded(t) -> tuple[bool, dict]:
-        if len(controls) < 3:
-            return False, {}
-        ratios = {c: round(t[c] / prev[c], 3) for c in controls}
-        uniform = all(r > 1.25 for r in ratios.values())
-        return uniform and (steal_pct > 0.02
-                            or all(r > 1.4 for r in ratios.values())), ratios
-
-    degraded, control_ratios = _window_degraded(timings)
-    window_rerun = False
-    if degraded and not os.environ.get("SPARK_GRAFT_NO_RERUN"):
-        import sys as _sys
-
-        print(
-            f"degraded window detected (controls {control_ratios}, "
-            f"steal {steal_pct:.3f}); re-running the suite once",
-            file=_sys.stderr,
-        )
-        window_rerun = True
-        samples, steal_pct = measure(repeats)
-        # errored queries carry empty sample lists (measure skips names
-        # already in `errors`) — median([]) would throw
-        samples = {n: s for n, s in samples.items() if s}
-        timings, spread, spread_steady, first_run_excess = _derive(samples)
-        degraded, control_ratios = _window_degraded(timings)
-
-    # Quiet re-measure (round-9 noise hardening): any query whose in-suite
-    # median drifted vs the PREVIOUS recorded run by more than its own
-    # steady-state spread (min 20%, and >50 ms absolute) is re-measured
-    # alone — forced GC first, 3 isolated runs — and the quiet median is
-    # what gets recorded. `drift_vs_prev` explains every replacement:
-    # "noise" when the quiet value agrees with the previous run (the
-    # in-suite sample was GC-contaminated), "real" when it doesn't.
-    # Queries whose own spread_steady exceeds 0.5 are quiet-re-measured
-    # UNCONDITIONALLY (outside the 15-query cap): their in-suite noise
-    # band swallows the 20% drift threshold, so only a recorded quiet
-    # median keeps the 2x regression bar policeable for them (the r10
-    # verdict's q135/q136/q134 finding).
-    drift_vs_prev: dict[str, dict] = {}
-
-    def _quiet_measure(n: str) -> float:
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
-        time.sleep(0.3)
-        quiet = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            queries[n](spark, sf_dir).write.mode("overwrite").format("noop").save()
-            quiet.append(time.perf_counter() - t0)
-        return round(statistics.median(quiet), 4)
-
-    mandatory = [n for n in names if spread_steady.get(n, 0.0) > 0.5]
-    flagged = []
-    for n, med in timings.items():
-        p = prev.get(n)
-        if p is None or p <= 0 or n in mandatory:
-            continue
-        rel = abs(med - p) / p
-        if rel > max(0.20, spread_steady.get(n, 0.0)) and abs(med - p) > 0.05:
-            flagged.append((abs(med - p), n))
-    flagged.sort(reverse=True)
-
-    if degraded:
-        # One verdict for the whole run; the ledger keeps the last clean
-        # baseline, and the driver artifact says loudly that this window
-        # was noisy. r12 fix: the worst-hit queries still get a bounded
-        # quiet re-measure. The old branch recorded KNOWN-contaminated
-        # suite medians unexamined, which is how 2.5 s media/streaming
-        # queries published 8-19 s in r11 (a minutes-scale steal burst
-        # multiplies the latency-sensitive all-core queries 4-8x while
-        # the short pure-JVM controls read only 1.5x): a query whose
-        # median exceeds 2x its clean baseline, or whose steady spread
-        # blew past 0.5, is re-measured alone and min(suite, quiet) is
-        # recorded — host noise is strictly additive, so the lower
-        # honest measurement is closer to the true cost (the same
-        # min-rule the non-degraded path has used since r11 s7). The
-        # cap keeps a fully-degraded run from re-measuring the world;
-        # everything else keeps the window-degraded stamp unchanged.
-        over2x = [
-            n
-            for n, med in timings.items()
-            if prev.get(n) and med > 2 * prev[n]
-        ]
-        targets = list(dict.fromkeys(mandatory + over2x))
-        targets.sort(key=lambda n: -(timings[n] - (prev.get(n) or 0.0)))
-        targets = targets[:20]
-        for n in targets:
-            qmed = _quiet_measure(n)
-            suite_med = timings[n]
-            rec = min(qmed, suite_med)
-            confirmed = qmed <= suite_med
-            drift_vs_prev[n] = {
-                "prev": prev.get(n),
-                "suite": suite_med,
-                "quiet": qmed,
-                "recorded": rec,
-                "quiet_confirmed": confirmed,
-                "verdict": "window-degraded (quiet re-measured)",
-            }
-            timings[n] = rec
-        done = set(targets)
-        for _, n in flagged:
-            if n in done:
+    # a drain_stream retry runs inside the timed sample; this names the
+    # queries whose samples carried one
+    retries: dict[str, int] = {}
+    for r in range(1, repeats + 1):
+        for name in names:
+            if name in errors:
                 continue
-            drift_vs_prev[n] = {
-                "prev": prev[n], "suite": timings[n], "quiet": None,
-                "verdict": "window-degraded",
-            }
-        for n in mandatory:
-            if n in done:
-                continue
-            drift_vs_prev[n] = {
-                "prev": prev.get(n), "suite": timings[n], "quiet": None,
-                "verdict": "window-degraded",
-            }
-    else:
-        def _record(n: str, qmed: float) -> tuple[float, bool, str]:
-            """Pick what to record from (in-suite median, quiet median).
+            r0 = streaming.RETRY_COUNT
+            timed(name, f"bench|{r}|{name}", lambda: queries[name](spark, sf_dir), sink)
+            if streaming.RETRY_COUNT > r0:
+                retries[name] = retries.get(name, 0) + streaming.RETRY_COUNT - r0
+        compiles[f"round_{r}"] = compiled()
+    jvm_mb = jvm_memory_mb(spark)
+    spark.stop()  # flushes the event log
 
-            Host noise is strictly additive: both medians are honest
-            3-sample measurements of the same computation, so the LOWER
-            one is closer to the true cost. The old rule recorded the
-            quiet median unconditionally, which published 2-3x-inflated
-            numbers whenever the end-of-run quiet phase landed in a
-            noise burst (observed: q59 suite 4.43 s, "quiet" 8.40 s —
-            the quiet pass was the contaminated one). Returns
-            (recorded, quiet_confirmed, note): quiet_confirmed is True
-            only when the quiet pass produced the recorded value, which
-            is what upward baseline re-anchoring requires.
-            """
-            suite_med = timings[n]
-            if qmed <= suite_med:
-                return qmed, True, ""
-            return suite_med, False, (
-                "; quiet read higher than suite — quiet pass "
-                "contaminated, suite median kept"
-            )
+    by_key: dict[str, list[float]] = {}
+    for s in samples:
+        by_key.setdefault(s.key, []).append(s.seconds)
+    shared_s = {k: round(v[0], 4) for k, v in by_key.items() if k.startswith("shared:")}
+    query_samples = {n: by_key[n] for n in names if n in by_key}
+    timings = {n: round(statistics.median(v), 4) for n, v in query_samples.items()}
+    layers, attribution = layer_records(eventlog.parse_dir(events_dir), samples)
 
-        for n in mandatory:
-            qmed = _quiet_measure(n)
-            p = prev.get(n)
-            rec, confirmed, note = _record(n, qmed)
-            drift_vs_prev[n] = {
-                "prev": p,
-                "suite": timings[n],
-                "quiet": qmed,
-                "recorded": rec,
-                "quiet_confirmed": confirmed,
-                "verdict": (
-                    (
-                        "noisy-spread (quiet median recorded)"
-                        if confirmed
-                        else "noisy-spread (suite median recorded)"
-                    )
-                    if p is None
-                    else ("noise" if abs(rec - p) / p <= 0.20 else "real")
-                ) + note,
-            }
-            timings[n] = rec
-        for _, n in flagged[15:]:
-            # over-cap drifts keep their in-suite medians but are
-            # RECORDED, so a noisy run can't present contaminated
-            # numbers as clean
-            drift_vs_prev[n] = {
-                "prev": prev[n], "suite": timings[n], "quiet": None,
-                "verdict": "unmeasured (over the 15-query re-measure cap)",
-            }
-        for _, n in flagged[:15]:
-            qmed = _quiet_measure(n)
-            p = prev[n]
-            rec, confirmed, note = _record(n, qmed)
-            drift_vs_prev[n] = {
-                "prev": p,
-                "suite": timings[n],
-                "quiet": qmed,
-                "recorded": rec,
-                "quiet_confirmed": confirmed,
-                "verdict": ("noise" if abs(rec - p) / p <= 0.20 else "real")
-                + note,
-            }
-            timings[n] = rec
-
-    # Shared-build drift guard (r12): a shared:* line is a SINGLE
-    # measurement with no repeat/median/quiet protection, and it sits in
-    # the headline `value` — a minutes-scale steal burst during prewarm
-    # published dup_spans at 24.4 s (vs ~6 s quiet) in the r11 driver
-    # run, unexamined. Any rebuildable shared line that exceeds 2x its
-    # recorded clean baseline is invalidated and rebuilt once (capped at
-    # 6, biggest excess first) and min(first, rebuild) is recorded —
-    # the same additive-noise min-rule the query path has used since
-    # r11 s7; both values stay in `shared_drift`. The two warmup lines
-    # are excluded: a second pass would measure the warm path, not the
-    # cold cost they bill.
-    shared_drift: dict[str, dict] = {}
-    _overbuilt = sorted(
-        (
-            (v - 2 * prev_shared[lbl], lbl)
-            for lbl, v in shared.items()
-            if not lbl.endswith("_warmup")
-            and prev_shared.get(lbl)
-            and v > 2 * prev_shared[lbl]
-        ),
-        reverse=True,
-    )[:6]
-    if _overbuilt:
-        from intake_spark.llm.queries import rebuild_shared
-
-        for _, lbl in _overbuilt:
-            first = shared[lbl]
-            re_s = rebuild_shared(spark, sf_dir, lbl)
-            rec = round(min(first, re_s), 4) if re_s is not None else first
-            shared_drift[lbl] = {
-                "prev": prev_shared.get(lbl),
-                "first": first,
-                "rebuild": round(re_s, 4) if re_s is not None else None,
-                "recorded": rec,
-            }
-            shared[lbl] = rec
-
-    total = round(sum(timings.values()) + sum(shared.values()), 4)
-
-    # Full per-query detail (long names, spread, raw samples) goes to a side
-    # file; stdout gets ONE compact JSON line. The driver captures only the
-    # last ~2000 chars of stdout, so the final line must stay short: 80
-    # long-form query names + spread overflowed that window in round 4
-    # (BENCH_r04 "parsed": null). Short keys ("q01".."q80") keep the line
-    # ~1.2 KB; bench_detail.json holds the mapping and everything else.
+    text = stdout_line(timings, names, shared_s, errors, retries, layers, repeats, sf)
     detail = {
-        "metric": "headline_queries_total",
-        "value": total,
-        "unit": "sec",
+        **json.loads(text),
         "queries": timings,
         "errors": errors,
-        "shared": shared,
-        "spread": spread,
-        "spread_steady": spread_steady,
-        "first_run_excess": first_run_excess,
-        "spread_note": (
-            "spread counts round 1, which pays per-query whole-stage-"
-            "codegen compilation (Janino caches the generated class for "
-            "rounds 2+); spread_steady excludes it. Large spread over a "
-            "small median (e.g. q102's C4 rule stack) is compile cost, "
-            "not steady-state variance — see first_run_excess."
-        ),
-        "drift_vs_prev": drift_vs_prev,
-        "recording_rule": (
-            "since r11 session 7, drift/mandatory re-measures record "
-            "min(suite median, quiet median) — a downward-biased estimator "
-            "relative to the pre-change quiet-only rule; ledger rows from "
-            "before that change are not like-for-like with rows after it "
-            "(compare via drift_vs_prev.{suite,quiet,recorded})"
-        ),
-        "drift_note": (
-            "queries whose in-suite median drifted vs the previous recorded "
-            "run beyond max(20%, own spread_steady) were re-measured alone "
-            "(forced GC + 3 isolated runs); the quiet median is recorded and "
-            "the verdict explains the drift (noise = quiet agrees with prev, "
-            "so the in-suite sample was contaminated)"
-        ),
+        "retries": retries,
+        "layers": layers,
+        "attribution": attribution,
+        "samples": {n: [round(x, 4) for x in v] for n, v in query_samples.items()},
+        "spread": {
+            n: round((max(v) - min(v)) / statistics.median(v), 3)
+            for n, v in query_samples.items()
+        },
+        # generated classes compiled by the end of setup and of each round
+        "codegen_compiles": compiles,
+        "jvm_mb": jvm_mb,
+        "prewarm": prewarm,
         "gc_pinned": os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", ""),
-        # r11 verdict #1: the daemon module in effect + the per-worker
-        # inheritance probe, so "did the prewarm engage?" is in-band
-        "prewarm": prewarm_info,
-        # r11 verdict #8: per-query transient-spawn retry counts — a
-        # retry runs inside the timed region, so these name the samples
-        # that carried one
-        "stream_retries": stream_retries,
-        # r12 shared-build drift guard: shared lines >2x their clean
-        # baseline were invalidated + rebuilt once; min(first, rebuild)
-        # is what `shared` reports, both values kept here
-        "shared_drift": shared_drift,
-        "samples": {n: [round(x, 4) for x in s] for n, s in samples.items()},
-        "repeats": repeats,
-        "sf": sf,
-        # window adjudication (automated r11): controls vs last clean
-        # run + /proc/stat steal over the measurement pass
-        "window_degraded": degraded,
-        "window_rerun": window_rerun,
-        "control_ratios_vs_prev": control_ratios,
-        "steal_pct": round(steal_pct, 4),
-        "window_note": (
-            "window_degraded means all three pure-JVM control queries "
-            "drifted uniformly >25% above the last clean run with host "
-            "steal observed (or uniformly >40%); the suite was re-run "
-            "once, stayed degraded, and this run's medians must be read "
-            "as host-noise-inflated. baseline_queries preserves the last "
-            "clean medians so the next run's drift check stays anchored. "
-            "Since r12: queries >2x their clean baseline (or with steady "
-            "spread >0.5) are still quiet-re-measured inside a degraded "
-            "window (capped at 20, min(suite,quiet) recorded) — a "
-            "minutes-scale steal burst multiplies long all-core "
-            "streaming/media queries 4-8x while the controls read 1.5x, "
-            "and the old branch published those contaminated medians "
-            "unexamined."
-        ),
     }
-    # Anchor the next run's drift baseline. A window-degraded run keeps
-    # the whole previous baseline. Otherwise anchor PER QUERY on "the
-    # last verified-or-better measurement": an upward move re-anchors
-    # only when a quiet re-measure confirmed it (otherwise back-to-back
-    # marginally-noisy windows — observed r11: three runs at steal
-    # 1.5-2.3% — ratchet every query's baseline upward and erode the 2x
-    # longitudinal bar); downward moves and quiet-verified values always
-    # re-anchor.
-    # baseline_shared mirrors baseline_queries: downward moves and
-    # rebuild-confirmed values always re-anchor; an upward move without a
-    # confirming rebuild (rebuild <= first, i.e. the rebuild produced the
-    # recorded value) keeps the old anchor so marginally-noisy windows
-    # cannot ratchet the shared baselines up.
-    if degraded and prev_shared:
-        detail["baseline_shared"] = {**shared, **prev_shared}
-    else:
-        baseline_shared = {}
-        for lbl, v in shared.items():
-            p = prev_shared.get(lbl)
-            d = shared_drift.get(lbl)
-            verified = (
-                d is not None
-                and d.get("rebuild") is not None
-                and d["rebuild"] <= d["first"]
-            )
-            if p is not None and v > p and not verified:
-                baseline_shared[lbl] = p
-            else:
-                baseline_shared[lbl] = v
-        detail["baseline_shared"] = baseline_shared
-    if degraded and prev:
-        detail["baseline_queries"] = prev
-    else:
-        baseline = {}
-        for n, t in timings.items():
-            p = prev.get(n)
-            # an upward move is "verified" only when the quiet pass
-            # itself produced the recorded value (quiet_confirmed); a
-            # quiet read that came back HIGHER than the suite median was
-            # contaminated and confirms nothing
-            verified = (
-                n in drift_vs_prev
-                and drift_vs_prev[n].get("quiet") is not None
-                and drift_vs_prev[n].get("quiet_confirmed", True)
-            )
-            if p is not None and t > p and not verified:
-                baseline[n] = p
-            else:
-                baseline[n] = t
-        detail["baseline_queries"] = baseline
-    if only:
-        # a filtered debug run must not clobber the full-suite drift
-        # ledger with a partial queries map
-        detail_path = os.path.join(here, "bench_detail_partial.json")
+    detail_path = os.path.join(
+        HERE,
+        "bench_detail_partial.json" if only
+        else "bench_detail.json" if sf == 0.1 else f"bench_detail_sf{sf}.json",
+    )
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1)
-
-    short = {n.split("_", 1)[0]: v for n, v in timings.items()}
-    line = {
-        "metric": "headline_queries_total",
-        "value": total,
-        "unit": "sec",
-        # value = queries_value + sum(shared): the shared-table builds
-        # are billed once, explicitly, instead of hiding inside (or
-        # being median-dropped from) whichever consumer ran first
-        "queries_value": round(sum(timings.values()), 4),
-        "queries": short if len(short) == len(timings) else timings,
-        "shared": shared,
-        "repeats": repeats,
-        # n = quiet-re-measured queries, real = drifts the quiet session
-        # CONFIRMED (everything else was in-suite GC noise; see
-        # bench_detail.json drift_vs_prev for the per-query story)
-        "drift": {
-            "n": len(drift_vs_prev),
-            "real": sum(1 for d in drift_vs_prev.values() if d["verdict"] == "real"),
-            "over_cap": sum(
-                1 for d in drift_vs_prev.values()
-                if d["verdict"].startswith("unmeasured")
-            ),
-        },
-        "window_degraded": degraded,
-        "sf": sf,
-    }
-    if errors:
-        line["errors"] = {
-            n if n.startswith("shared:") else n.split("_", 1)[0]: e[:120]
-            for n, e in errors.items()
-        }
-    if stream_retries:
-        line["retries"] = {
-            n.split("_", 1)[0]: c for n, c in stream_retries.items()
-        }
-    if shared_drift:
-        # which shared lines were rebuilt (detail has the paired values)
-        line["shared_rebuilt"] = sorted(
-            lbl.split(":", 1)[1] for lbl in shared_drift
-        )
     sys.stdout.flush()
-    print(json.dumps(line, separators=(",", ":")))
+    print(text)
     sys.stdout.flush()
 
 

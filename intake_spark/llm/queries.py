@@ -1404,7 +1404,7 @@ def shared_table(label: str):
     stores, whose content does not depend on the corpus); with a
     ``root`` parameter it is handed a fresh tempdir and rebuilt if that
     directory disappears. bench.py bills every registered build once,
-    as an explicit ``shared:*`` line, through :func:`prewarm_shared`."""
+    as an explicit ``shared:*`` line (see :func:`shared_labels`)."""
 
     def register_builder(build):
         params = inspect.signature(build).parameters
@@ -1486,11 +1486,9 @@ def prewarm_shared(spark: SparkSession, sf_dir: str) -> "dict[str, float | str]"
     """Eagerly build every registered shared table for ``sf_dir`` and
     return {label: build_seconds}; a build that raises maps to its
     ``"Type: message"`` instead, and the remaining labels still build.
-    bench.py calls this BEFORE the timed rounds and reports the costs as
-    synthetic ``shared:*`` lines (failures as errors), so a per-query
-    median can neither absorb a shared build (q22 billed 109× its
-    steady-state in r6's interleaving) nor dodge it (a 0.04 s q22
-    misread as a free pair table)."""
+    Building before any consumer runs keeps a consumer's timing from
+    absorbing the build (q22 billed 109× its steady state when it ran
+    first)."""
     out: "dict[str, float | str]" = {}
     for label in _SHARED_BUILDERS:
         try:
@@ -1500,25 +1498,21 @@ def prewarm_shared(spark: SparkSession, sf_dir: str) -> "dict[str, float | str]"
     return out
 
 
+def shared_labels() -> "list[str]":
+    """Every registered shared-table label, in registration order."""
+    return list(_SHARED_BUILDERS)
+
+
 def rebuild_shared(spark: SparkSession, sf_dir: str, label: str):
     """Invalidate and rebuild ONE shared table, returning the fresh
-    build seconds (None for unknown labels or failed rebuilds). bench.py
-    uses this as the shared-line twin of the per-query quiet re-measure:
-    a ``shared:*`` line is a single otherwise-unguarded measurement, so
-    a minutes-scale host-noise burst during prewarm publishes a 3-5x
-    inflated build cost that no re-measure path ever examines (r11
-    driver run: dup_spans billed 24.4 s vs a ~6 s quiet build). Host
-    noise is strictly additive — min(first build, rebuild) is the same
-    estimator the query path has recorded since r11 s7."""
+    build seconds, or None for an unknown label. A builder that raises
+    propagates its exception."""
     if label not in _SHARED_BUILDERS:
         return None
     entries, key = _shared_slot(spark, sf_dir, label)
     if key in entries:
         _shared_evict(entries, key)
-    try:
-        return _shared_build_seconds(spark, sf_dir, label)
-    except Exception:
-        return None
+    return _shared_build_seconds(spark, sf_dir, label)
 
 
 @shared_table("shared:dup_spans")

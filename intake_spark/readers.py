@@ -1085,6 +1085,9 @@ class HandleToUrlReader(BaseReader):
 
 
 def all_readers() -> list[type[BaseReader]]:
+    """Every reader class, after importing every module that declares
+    one, so the answer does not depend on what the process imported."""
+    dt.register_all()
     return sorted(subclasses(BaseReader), key=lambda c: c.__name__)
 
 

@@ -14,6 +14,13 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Entries of Spark's generated-class cache (`spark.sql.codegen.cache.
+# maxEntries`, static). The default of 100 is split by Guava into 4
+# segments of 25, each evicting on its own, far below the working set:
+# the bench's setup plus one 145-query round compiles 1,430 classes at
+# sf0.1, and with the default every round recompiled about 2,000 (9-11
+# ms each). Sized at more than twice the sf0.1 set.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_session(app_name: str = "intake_spark", cpus: int | None = None) -> SparkSession:
@@ -86,6 +93,13 @@ def get_session(app_name: str = "intake_spark", cpus: int | None = None) -> Spar
             "spark.driver.extraJavaOptions",
             os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", ""),
         )
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # The cache is keyed by the generated source, and by default a
+        # whole-stage class is named after its codegen stage id, which
+        # differs between two plannings of the same query, so a rerun
+        # recompiled identical code. The cost: a stack trace names
+        # `GeneratedIterator`, not `GeneratedIteratorForCodegenStage<id>`.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # No PySpark call-site capture. With it on, every Column method

@@ -7,6 +7,8 @@ from __future__ import annotations
 import json
 import os
 import struct
+import subprocess
+import sys
 import zlib
 
 import pytest
@@ -368,6 +370,42 @@ def test_recommend_routes_lakehouse(tmp_path):
     # stdlib readers outrank the jar-gated Spark formats by priority
     first = readers_for(dt.DeltalakeTable)[0].__name__
     assert first == "DeltaLakeReader"
+
+
+def test_fresh_process_sees_the_whole_reader_registry(spark, tmp_path):
+    """readers_for answers the same in a fresh process as after
+    recommend(): an Avro file written by to_avro gets the stdlib OCF
+    reader (no spark-avro jar needed), and Parquet lists every reader
+    that claims it."""
+    from intake_spark.output import to_avro
+
+    url = str(tmp_path / "t.avro")
+    to_avro(spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string"), url)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import json
+from intake_spark import datatypes as dt
+from intake_spark.readers import readers_for
+reader = dt.AVRO(url={url!r}).to_reader()
+parquet = [c.__name__ for c in readers_for(dt.Parquet)]
+from intake_spark.session import get_session
+spark = get_session("registry_probe", cpus=1)
+rows = sorted(tuple(r) for r in reader.read(spark=spark).collect())
+print("RESULT " + json.dumps(
+    {{"reader": type(reader).__name__, "parquet": parquet, "rows": rows}}))
+spark.stop()
+"""
+    proc = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True,
+        timeout=300, cwd=str(tmp_path),
+        env={**os.environ, "PYTHONPATH": root, "SPARK_GRAFT_DRIVER_MEM": "1g"},
+    )
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")]
+    assert lines, proc.stdout[-2000:] + proc.stderr[-2000:]
+    got = json.loads(lines[-1][len("RESULT "):])
+    assert got["reader"] == "AvroOCFReader"
+    assert {"SparkParquet", "AwkwardParquet", "FileStream"} <= set(got["parquet"])
+    assert got["rows"] == [[1, "a"], [2, "b"]]
 
 
 def test_avro_directory_of_part_files(spark, tmp_path):

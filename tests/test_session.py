@@ -1,5 +1,6 @@
 """session.get_session: the engine's sessions run without PySpark's
-per-Column call-site capture, and every engine session comes from it."""
+per-Column call-site capture, keep their compiled whole-stage classes,
+and every engine session comes from it."""
 
 from __future__ import annotations
 
@@ -99,3 +100,46 @@ def test_engine_sessions_come_from_get_session():
         if fn == "get_session"
     }
     assert ("spark.python.sql.dataFrameDebugging.enabled", "false") in confs
+
+
+def test_codegen_cache_keeps_more_than_spark_default_100_classes(spark):
+    """A plan compiled once is not compiled again: the generated-class
+    cache holds more than Spark's default 100 entries (4 Guava segments
+    of 25), which a 145-query round overflows many times over.
+    ``executedPlan().execute()`` compiles without running a job."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiled() -> int:
+        return metrics.METRIC_COMPILATION_TIME().getCount()
+
+    def compile_all() -> int:
+        # fresh frames, as each bench round builds them: a plan object
+        # keeps the class it compiled, the cache is what is shared
+        before = compiled()
+        for i in range(120):
+            df = spark.range(4).selectExpr(f"id * {i} + {i + 1} AS c{i}")
+            df._jdf.queryExecution().executedPlan().execute()
+        return compiled() - before
+
+    assert compile_all() > 100  # distinct classes
+    assert compile_all() == 0
+
+
+def test_same_stage_code_under_another_stage_id_is_not_recompiled(spark):
+    """The cache is keyed by the generated source: with the codegen stage
+    id left out of the class name, a stage that plans as stage 2 reuses
+    the class it compiled as stage 1 (a rerun of a query often numbers
+    its stages differently)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles(df) -> int:
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        df._jdf.queryExecution().executedPlan().execute()
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    def stage():
+        return spark.range(10).selectExpr("id * 7919 + 104729 AS c")
+
+    compiles(stage())  # compiled as codegen stage 1
+    second = spark.range(5).selectExpr("id * 7907 + 104723 AS c").union(stage())
+    assert compiles(second) == 1  # only the new first child

@@ -1,10 +1,9 @@
 """The session-shared table registry (``@shared_table``): one builder per
 label, a (label, session, sf_dir) cache with a per-label FIFO bound,
 persist/unpersist of DataFrame values, rebuilt path stores, and loud
-prewarm failures. rebuild_shared is the shared-line twin of the
-per-query quiet re-measure (OPTIMIZATION_r12 §3): a rebuild must (a)
-time a genuinely fresh build, not a cache hit, and (b) leave the shared
-table usable for later consumers in the same session."""
+prewarm failures. rebuild_shared must (a) time a genuinely fresh
+build, not a cache hit, (b) leave the shared table usable for later
+consumers in the same session and (c) let a failed build raise."""
 
 from __future__ import annotations
 
@@ -63,11 +62,22 @@ def test_rebuild_shared_unknown_label_is_none(spark):
     assert rebuild_shared(spark, SF_MEDIUM, "shared:nope") is None
 
 
+def test_rebuild_shared_propagates_a_failed_build(spark, throwaway):
+    from intake_spark.llm import queries as q
+
+    def boom(spark, sf_dir):
+        raise ValueError("no documents table")
+
+    throwaway("shared:t_boom", boom)
+    with pytest.raises(ValueError, match="no documents table"):
+        q.rebuild_shared(spark, "t_dir", "shared:t_boom")
+
+
 def test_specs_cover_every_prewarm_label(spark):
     # every billed label is declared once, at its builder, and is
     # therefore rebuildable (the two warmup lines live in bench.py and
     # are deliberately not rebuildable)
-    from intake_spark.llm.queries import _SHARED_BUILDERS
+    from intake_spark.llm.queries import _SHARED_BUILDERS, shared_labels
 
     expected = {
         "shared:dup_spans", "shared:jaccard_pairs",
@@ -77,6 +87,7 @@ def test_specs_cover_every_prewarm_label(spark):
         "shared:q141_store",
     }
     assert set(_SHARED_BUILDERS) == expected
+    assert set(shared_labels()) == expected
     for label, (build, _per_dir, _root) in _SHARED_BUILDERS.items():
         assert callable(build), label
 
