@@ -252,13 +252,11 @@ def python_worker_probe(spark):
                 {"pid": [_os.getpid()], "inherited": [marker], "import_s": [cost]}
             )
 
-    from intake_spark.session import ensure_py_deps
+    from intake_spark.session import map_in_pandas
 
-    ensure_py_deps(spark)
     n = spark.sparkContext.defaultParallelism * 2
-    return spark.range(n, numPartitions=n).mapInPandas(
-        warm, "pid long, inherited boolean, import_s double"
-    )
+    return map_in_pandas(spark.range(n, numPartitions=n), warm,
+                         "pid long, inherited boolean, import_s double")
 
 
 def worker_report(probe) -> dict:

@@ -29,7 +29,7 @@ from pyspark.sql import types as T
 
 from intake_spark import datatypes as dt
 from intake_spark.readers import BaseReader
-from intake_spark.session import local_frame
+from intake_spark.session import local_frame, map_in_pandas
 
 CHUNK_SCHEMA = T.StructType(
     [
@@ -74,9 +74,6 @@ class NumpyArrayReader(BaseReader):
     implements = {dt.NumpyFile}
 
     def _read(self, spark, rows_per_chunk: int = 4096, **kwargs):
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
         url = self.data.url
         with open(url, "rb") as f:
             head = f.read(4096)
@@ -119,7 +116,7 @@ class NumpyArrayReader(BaseReader):
                         )
                 yield pd.DataFrame(out, columns=["chunk_id", "offset0", "shape", "values"])
 
-        return mdf.mapInPandas(decode, schema=CHUNK_SCHEMA)
+        return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
 
 
 class NPZ(dt.FileData):

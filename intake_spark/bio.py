@@ -19,8 +19,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from intake_spark import datatypes as dt
-from intake_spark.readers import BaseReader
-from intake_spark.session import local_frame
+from intake_spark.readers import BaseReader, binary_files
+from intake_spark.session import local_frame, map_in_pandas
 
 
 class FASTA(dt.FileData):
@@ -38,19 +38,6 @@ class VCF(dt.FileData):
     filepattern = r"vcf$"
     magic = (b"##fileformat=VCF",)
     structure = {"table"}
-
-
-def _binary_files(spark, url: str, glob: str):
-    """binaryFile listing for a url that may be a glob, a single file, or a
-    directory. ``pathGlobFilter`` applies only to the directory case — a
-    single file already names its target, and filtering it against the glob
-    silently drops extensions the glob misses (e.g. '.fna' vs '*.fa*')."""
-    import os
-
-    reader = spark.read.format("binaryFile")
-    if "*" not in url and os.path.isdir(url):
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(url)
 
 
 _FASTA_SCHEMA = T.StructType(
@@ -89,10 +76,7 @@ class FASTAReader(BaseReader):
     implements = {FASTA}
 
     def _read(self, spark, glob: str = "*.{fa,fasta,fna,faa}", **kwargs):
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
-        files = _binary_files(spark, self.data.url, glob)
+        files = binary_files(spark, self.data.url, glob)
 
         def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
@@ -106,7 +90,7 @@ class FASTAReader(BaseReader):
                     rows, columns=["path", "seq_id", "description", "sequence", "length"]
                 )
 
-        return files.select("path", "content").mapInPandas(parse, schema=_FASTA_SCHEMA)
+        return map_in_pandas(files.select("path", "content"), parse, schema=_FASTA_SCHEMA)
 
 
 _FASTQ_SCHEMA = T.StructType(
@@ -127,10 +111,7 @@ class FASTQReader(BaseReader):
     implements = {FASTQ}
 
     def _read(self, spark, glob: str = "*.{fq,fastq}", **kwargs):
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
-        files = _binary_files(spark, self.data.url, glob)
+        files = binary_files(spark, self.data.url, glob)
 
         def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
@@ -151,7 +132,7 @@ class FASTQReader(BaseReader):
                     rows, columns=["path", "seq_id", "sequence", "quality", "length"]
                 )
 
-        return files.select("path", "content").mapInPandas(parse, schema=_FASTQ_SCHEMA)
+        return map_in_pandas(files.select("path", "content"), parse, schema=_FASTQ_SCHEMA)
 
 
 _VCF_CORE = ["CHROM", "POS", "ID", "REF", "ALT", "QUAL", "FILTER", "INFO"]
@@ -344,8 +325,6 @@ class BigWigReader(BaseReader):
     implements = {BigWig}
 
     def _read(self, spark, **kwargs):
-        from intake_spark.session import ensure_py_deps
-
         url = self.data.url
         with open(url, "rb") as f:
             hdr = _bw_header(f)
@@ -357,7 +336,6 @@ class BigWigReader(BaseReader):
         )
         if not leaves:
             return local_frame(spark, [], _BIGWIG_SCHEMA)
-        ensure_py_deps(spark)
         compressed = hdr["compressed"]
         mdf = local_frame(spark, leaves, "blk_off long, blk_len long")
         if len(leaves) > 1:
@@ -385,7 +363,7 @@ class BigWigReader(BaseReader):
                             )
                     yield pd.DataFrame(rows, columns=["chrom", "start", "end", "value"])
 
-        return mdf.mapInPandas(decode, schema=_BIGWIG_SCHEMA)
+        return map_in_pandas(mdf, decode, schema=_BIGWIG_SCHEMA)
 
 
 class PDB(dt.FileData):
@@ -499,9 +477,6 @@ class DCDReader(BaseReader):
     implements = {DCD}
 
     def _read(self, spark, frame_stride: int = 1, frames: int | None = None, **kwargs):
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
         url = self.data.url
         with open(url, "rb") as f:
             hdr = _dcd_header(f)
@@ -556,7 +531,7 @@ class DCDReader(BaseReader):
                             }
                         )
 
-        return mdf.mapInPandas(decode, schema=schema)
+        return map_in_pandas(mdf, decode, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -768,9 +743,6 @@ class XTCReader(BaseReader):
     implements = {XTC}
 
     def _read(self, spark, frame_stride: int = 1, frames: int | None = None, **kwargs):
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
         url = self.data.url
         manifest = []
         natoms = 0
@@ -832,7 +804,7 @@ class XTCReader(BaseReader):
                             }
                         )
 
-        return mdf.mapInPandas(decode, schema=schema)
+        return map_in_pandas(mdf, decode, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -906,9 +878,6 @@ class TRRReader(BaseReader):
     implements = {TRR}
 
     def _read(self, spark, frame_stride: int = 1, frames: int | None = None, **kwargs):
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
         url = self.data.url
         manifest = []
         with open(url, "rb") as f:
@@ -985,4 +954,4 @@ class TRRReader(BaseReader):
                             }
                         )
 
-        return mdf.mapInPandas(decode, schema=schema)
+        return map_in_pandas(mdf, decode, schema=schema)

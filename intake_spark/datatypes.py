@@ -611,11 +611,7 @@ def recommend_corpus(
     from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
-    from intake_spark.session import ensure_py_deps, local_frame
-
-    # BEFORE any mapInPandas wrap: pyspark snapshots the py-includes list
-    # at UDF wrap time, so executors must already have the package
-    ensure_py_deps(spark)
+    from intake_spark.session import local_frame, map_in_pandas
 
     if isinstance(source, DataFrame):
         listing = source.select(F.col("path").cast("string"))
@@ -711,13 +707,13 @@ def recommend_corpus(
     # BYTES, and a million tiny path rows would land in one task even
     # though each pending row costs a head_bytes read downstream
     n_parts = spark.sparkContext.defaultParallelism
-    fresh = (
-        todo.repartition(n_parts, dir_)
-        .select("path", dir_.alias("dir"), F.xxhash64("path").alias("_h"))
-        .mapInPandas(_triage, verdict_schema)
-        .repartition(n_parts, "path")
-        .mapInPandas(_sniff_pending, verdict_schema)
+    triaged = map_in_pandas(
+        todo.repartition(n_parts, dir_).select(
+            "path", dir_.alias("dir"), F.xxhash64("path").alias("_h")),
+        _triage, verdict_schema,
     )
+    fresh = map_in_pandas(
+        triaged.repartition(n_parts, "path"), _sniff_pending, verdict_schema)
     if cache_path:
         # append the new verdicts (eager action: the sniff runs exactly
         # once), then answer purely from the registry — the returned
@@ -732,13 +728,13 @@ def recommend_corpus(
                 pdf.insert(2, "ext", [corpus_ext(p) for p in pdf["path"]])
                 yield pdf
 
-        return (
+        known = (
             spark.read.parquet(cache_path)
             .dropDuplicates(["path"])
             .join(listing, "path")  # drop verdicts for vanished paths
             .select("path", dir_.alias("dir"), "datatype", "score", "via")
-            .mapInPandas(_with_ext, verdict_schema)
         )
+        return map_in_pandas(known, _with_ext, verdict_schema)
     return fresh
 
 
@@ -762,9 +758,8 @@ def distributed_walk(spark, root: str):
 
     from pyspark.sql import functions as F
 
-    from intake_spark.session import ensure_py_deps, local_frame
+    from intake_spark.session import local_frame, map_in_pandas
 
-    ensure_py_deps(spark)
     top_files, top_dirs = [], []
     try:
         entries = list(os.scandir(root))
@@ -799,7 +794,7 @@ def distributed_walk(spark, root: str):
                        spark.sparkContext.defaultParallelism * 2))
         sub = local_frame(spark, [(d,) for d in top_dirs], "dir string")
         parts.append(
-            sub.repartition(n, "dir").mapInPandas(walk, "path string")
+            map_in_pandas(sub.repartition(n, "dir"), walk, "path string")
         )
     out = parts[0]
     for p_ in parts[1:]:

@@ -24,8 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from intake_spark import datatypes as dt
-from intake_spark.readers import BaseReader
-from intake_spark.session import local_frame
+from intake_spark.readers import BaseReader, binary_files
+from intake_spark.session import local_frame, map_in_pandas
 
 
 class Markdown(dt.FileData):
@@ -68,12 +68,7 @@ class MarkdownReader(BaseReader):
     implements = {Markdown}
 
     def _read(self, spark, **kwargs):
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
-        files = spark.read.format("binaryFile").option("pathGlobFilter", "*.md").load(
-            self.data.url
-        ) if "*" not in self.data.url else spark.read.format("binaryFile").load(self.data.url)
+        files = binary_files(spark, self.data.url, "*.md")
 
         schema = T.StructType(
             [
@@ -97,7 +92,7 @@ class MarkdownReader(BaseReader):
                     }
                 )
 
-        return files.select("path", "content").mapInPandas(parse, schema=schema)
+        return map_in_pandas(files.select("path", "content"), parse, schema=schema)
 
 
 def _flatten(d: dict, prefix: str = "") -> Iterator[tuple[str, str]]:
@@ -348,14 +343,7 @@ class PDFTextReader(BaseReader):
     implements = {dt.PDF}
 
     def _read(self, spark, glob: str = "*.pdf", **kwargs):
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
-        files = (
-            spark.read.format("binaryFile").load(self.data.url)
-            if "*" in self.data.url
-            else spark.read.format("binaryFile").option("pathGlobFilter", glob).load(self.data.url)
-        )
+        files = binary_files(spark, self.data.url, glob)
         schema = T.StructType(
             [
                 T.StructField("path", T.StringType()),
@@ -375,7 +363,7 @@ class PDFTextReader(BaseReader):
                     }
                 )
 
-        return files.select("path", "content").mapInPandas(parse, schema=schema)
+        return map_in_pandas(files.select("path", "content"), parse, schema=schema)
 
 
 class DOCX(dt.FileData):
@@ -449,16 +437,7 @@ class _BinaryTextReader(BaseReader):
     glob = "*"
 
     def _read(self, spark, **kwargs):
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
-        url = self.data.url
-        reader = spark.read.format("binaryFile")
-        import os
-
-        if os.path.isdir(url):
-            reader = reader.option("pathGlobFilter", self.glob)
-        files = reader.load(url)
+        files = binary_files(spark, self.data.url, self.glob)
         schema = T.StructType(
             [
                 T.StructField("path", T.StringType()),
@@ -475,7 +454,7 @@ class _BinaryTextReader(BaseReader):
                     {"path": pdf["path"], "text": texts, "n_chars": texts.map(len)}
                 )
 
-        return files.select("path", "content").mapInPandas(parse, schema=schema)
+        return map_in_pandas(files.select("path", "content"), parse, schema=schema)
 
 
 class DOCXReader(_BinaryTextReader):
@@ -980,9 +959,6 @@ class MessagePackReader(BaseReader):
         import glob as _glob
         import os
 
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
         url = self.data.url
         if os.path.isdir(url):
             listing = sorted(_glob.glob(os.path.join(url, self.glob)))
@@ -1029,10 +1005,7 @@ class MessagePackReader(BaseReader):
         names = list(cols)
         kinds = dict(cols)
 
-        reader = spark.read.format("binaryFile")
-        if os.path.isdir(url):
-            reader = reader.option("pathGlobFilter", self.glob)
-        files = reader.load(url)
+        files = binary_files(spark, url, self.glob)
 
         def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             import json as _json
@@ -1076,7 +1049,7 @@ class MessagePackReader(BaseReader):
                         data[k] = [cell(r.get(k), kinds[k]) for r in rows]
                     yield pd.DataFrame(data)
 
-        return files.select("path", "content").mapInPandas(parse, schema=schema)
+        return map_in_pandas(files.select("path", "content"), parse, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1458,10 +1431,7 @@ class ReStructuredTextReader(BaseReader):
     implements = {ReStructuredText}
 
     def _read(self, spark, **kwargs):
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
-        files = _binary_glob(spark, self.data.url, "*.rst")
+        files = binary_files(spark, self.data.url, "*.rst")
         schema = T.StructType(
             [
                 T.StructField("path", T.StringType()),
@@ -1500,7 +1470,7 @@ class ReStructuredTextReader(BaseReader):
                     }
                 )
 
-        return files.select("path", "content").mapInPandas(parse, schema=schema)
+        return map_in_pandas(files.select("path", "content"), parse, schema=schema)
 
 
 class SVG(dt.FileData):
@@ -1519,10 +1489,7 @@ class SVGReader(BaseReader):
     implements = {SVG}
 
     def _read(self, spark, **kwargs):
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
-        files = _binary_glob(spark, self.data.url, "*.svg")
+        files = binary_files(spark, self.data.url, "*.svg")
         schema = T.StructType(
             [
                 T.StructField("path", T.StringType()),
@@ -1554,7 +1521,7 @@ class SVGReader(BaseReader):
                     rows["element_counts"].append(counts)
                 yield pd.DataFrame({"path": pdf["path"], **rows})
 
-        return files.select("path", "content").mapInPandas(parse, schema=schema)
+        return map_in_pandas(files.select("path", "content"), parse, schema=schema)
 
 
 class SDF(dt.FileData):
@@ -1573,10 +1540,7 @@ class SDFReader(BaseReader):
     implements = {SDF}
 
     def _read(self, spark, **kwargs):
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
-        files = _binary_glob(spark, self.data.url, "*.sdf")
+        files = binary_files(spark, self.data.url, "*.sdf")
         schema = T.StructType(
             [
                 T.StructField("path", T.StringType()),
@@ -1625,7 +1589,7 @@ class SDFReader(BaseReader):
                         out["properties"].append(props)
                 yield pd.DataFrame(out)
 
-        return files.select("path", "content").mapInPandas(parse, schema=schema)
+        return map_in_pandas(files.select("path", "content"), parse, schema=schema)
 
 
 class YAMLFile(dt.FileData):
@@ -1645,12 +1609,9 @@ class YAMLConfigReader(BaseReader):
     def _read(self, spark, **kwargs):
         import yaml as _yaml
 
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
         # both spellings — the YAMLFile filepattern accepts .yml too, and
         # Hadoop glob syntax supports alternation
-        files = _binary_glob(spark, self.data.url, "*.{yaml,yml}")
+        files = binary_files(spark, self.data.url, "*.{yaml,yml}")
         schema = T.StructType(
             [
                 T.StructField("path", T.StringType()),
@@ -1671,7 +1632,7 @@ class YAMLConfigReader(BaseReader):
                             vals.append(v)
                 yield pd.DataFrame({"path": paths, "key": keys, "value": vals})
 
-        return files.select("path", "content").mapInPandas(parse, schema=schema)
+        return map_in_pandas(files.select("path", "content"), parse, schema=schema)
 
 
 class PythonSourceCode(dt.FileData):
@@ -1687,10 +1648,7 @@ class PythonSourceReader(BaseReader):
     implements = {PythonSourceCode}
 
     def _read(self, spark, **kwargs):
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
-        files = _binary_glob(spark, self.data.url, "*.py")
+        files = binary_files(spark, self.data.url, "*.py")
         schema = T.StructType(
             [
                 T.StructField("path", T.StringType()),
@@ -1734,7 +1692,7 @@ class PythonSourceReader(BaseReader):
                         rows["syntax_ok"].append(False)
                 yield pd.DataFrame({"path": pdf["path"], **rows})
 
-        return files.select("path", "content").mapInPandas(parse, schema=schema)
+        return map_in_pandas(files.select("path", "content"), parse, schema=schema)
 
 
 class PickleFile(dt.FileData):
@@ -1798,9 +1756,3 @@ class PythonModuleReader(BaseReader):
             mod = ModuleType(module_name)
             exec(compile(f.read(), url, "exec"), mod.__dict__)
             return mod
-
-
-def _binary_glob(spark, url: str, glob: str):
-    if "*" in url:
-        return spark.read.format("binaryFile").load(url)
-    return spark.read.format("binaryFile").option("pathGlobFilter", glob).load(url)

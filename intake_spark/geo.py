@@ -18,8 +18,8 @@ from pyspark.sql import types as T
 
 from intake_spark import datatypes as dt
 from intake_spark.compress import read_uvarint
-from intake_spark.readers import BaseReader
-from intake_spark.session import local_frame
+from intake_spark.readers import BaseReader, binary_files
+from intake_spark.session import local_frame, map_in_pandas
 
 
 class KML(dt.FileData):
@@ -87,14 +87,7 @@ class KMLReader(BaseReader):
     implements = {KML}
 
     def _read(self, spark, glob: str = "*.kml", **kwargs):
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
-        files = (
-            spark.read.format("binaryFile").load(self.data.url)
-            if "*" in self.data.url
-            else spark.read.format("binaryFile").option("pathGlobFilter", glob).load(self.data.url)
-        )
+        files = binary_files(spark, self.data.url, glob)
 
         def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
@@ -107,7 +100,7 @@ class KMLReader(BaseReader):
                     columns=["path", "name", "description", "geom_type", "coordinates"],
                 )
 
-        return files.select("path", "content").mapInPandas(parse, schema=_KML_SCHEMA)
+        return map_in_pandas(files.select("path", "content"), parse, schema=_KML_SCHEMA)
 
 
 _GPX_SCHEMA = T.StructType(
@@ -169,14 +162,7 @@ class GPXReader(BaseReader):
     implements = {GPX}
 
     def _read(self, spark, glob: str = "*.gpx", **kwargs):
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
-        files = (
-            spark.read.format("binaryFile").load(self.data.url)
-            if "*" in self.data.url
-            else spark.read.format("binaryFile").option("pathGlobFilter", glob).load(self.data.url)
-        )
+        files = binary_files(spark, self.data.url, glob)
 
         def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
@@ -189,7 +175,7 @@ class GPXReader(BaseReader):
                     columns=["path", "track", "segment", "lat", "lon", "ele", "time"],
                 )
 
-        return files.select("path", "content").mapInPandas(parse, schema=_GPX_SCHEMA)
+        return map_in_pandas(files.select("path", "content"), parse, schema=_GPX_SCHEMA)
 
 
 class MBTilesReader(BaseReader):
@@ -208,8 +194,6 @@ class MBTilesReader(BaseReader):
     def _read(self, spark, table: str = "tiles", zoom: int | None = None, rows_per_task: int = 10_000, **kwargs):
         import sqlite3
 
-        from intake_spark.session import ensure_py_deps
-
         url = self.data.url
         if table == "metadata":
             con = sqlite3.connect(url)
@@ -219,7 +203,6 @@ class MBTilesReader(BaseReader):
                 con.close()
             return local_frame(spark, rows or [("", "")], "name string, value string")
 
-        ensure_py_deps(spark)
         where = f" WHERE zoom_level = {int(zoom)}" if zoom is not None else ""
         con = sqlite3.connect(url)
         try:
@@ -338,7 +321,7 @@ class MBTilesReader(BaseReader):
                         T.StructField("tile_data", T.BinaryType()),
                     ]
                 )
-                return wdf.mapInPandas(fetch_view, schema=vschema)
+                return map_in_pandas(wdf, fetch_view, schema=vschema)
             lo_hi = con.execute(
                 f"SELECT MIN(rowid), MAX(rowid) FROM tiles{where}"
             ).fetchone()
@@ -383,7 +366,7 @@ class MBTilesReader(BaseReader):
                 T.StructField("tile_data", T.BinaryType()),
             ]
         )
-        return mdf.mapInPandas(fetch, schema=schema)
+        return map_in_pandas(mdf, fetch, schema=schema)
 
 
 class PMTiles(dt.FileData):
@@ -507,9 +490,6 @@ class PMTilesReader(BaseReader):
 
         # directories are small (driver); tile payloads decode on executors
         # via a byte-range manifest — blobs never pass through the driver
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
         manifest = [
             (tid, data_off + off, ln, max(run, 1)) for tid, off, ln, run in entries
         ]
@@ -544,7 +524,7 @@ class PMTilesReader(BaseReader):
                 T.StructField("tile_data", T.BinaryType()),
             ]
         )
-        return mdf.mapInPandas(fetch, schema=schema)
+        return map_in_pandas(mdf, fetch, schema=schema)
 
 
 class OSMPBF(dt.FileData):
@@ -769,8 +749,6 @@ class OSMPBFReader(BaseReader):
     implements = {OSMPBF}
 
     def _read(self, spark, elements: str = "nodes", **kwargs):
-        from intake_spark.session import ensure_py_deps
-
         schemas = {
             "nodes": (_OSM_SCHEMA, ["id", "lat", "lon", "tags"]),
             "ways": (_OSM_WAY_SCHEMA, ["id", "refs", "tags"]),
@@ -779,7 +757,6 @@ class OSMPBFReader(BaseReader):
         if elements not in schemas:
             raise ValueError(f"elements must be one of {sorted(schemas)}")
         schema, cols = schemas[elements]
-        ensure_py_deps(spark)
         url = self.data.url
         manifest = [
             (off, ln) for btype, off, ln in _osm_blob_manifest(url) if btype == "OSMData"
@@ -797,7 +774,7 @@ class OSMPBFReader(BaseReader):
                         rows.extend(_parse_primitive_block(f.read(int(r.len)), elements))
                 yield pd.DataFrame(rows, columns=cols)
 
-        return mdf.mapInPandas(decode, schema=schema)
+        return map_in_pandas(mdf, decode, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -934,8 +911,6 @@ class ShapefileReader(BaseReader):
     def _read(self, spark, records_per_task: int = 10_000, **kwargs):
         import os
 
-        from intake_spark.session import ensure_py_deps
-
         shp = self.data.url
         stem = shp[:-4] if shp.lower().endswith(".shp") else shp
         shx, dbf = stem + ".shx", stem + ".dbf"
@@ -956,7 +931,6 @@ class ShapefileReader(BaseReader):
         )
         if not index:
             return local_frame(spark, [], schema)
-        ensure_py_deps(spark)
         ranges = [
             (start, min(start + records_per_task, len(index)))
             for start in range(0, len(index), records_per_task)
@@ -1004,7 +978,7 @@ class ShapefileReader(BaseReader):
                 if fdbf is not None:
                     fdbf.close()
 
-        return mdf.mapInPandas(decode, schema=schema)
+        return map_in_pandas(mdf, decode, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1101,8 +1075,6 @@ class GeoPackageReader(BaseReader):
     def _read(self, spark, table: str | None = None, rows_per_task: int = 10_000, **kwargs):
         import sqlite3
 
-        from intake_spark.session import ensure_py_deps
-
         url = self.data.url
         con = sqlite3.connect(f"file:{url}?mode=ro", uri=True)
         try:
@@ -1146,7 +1118,6 @@ class GeoPackageReader(BaseReader):
         )
         if lo_hi is None or lo_hi[0] is None:
             return local_frame(spark, [], schema)
-        ensure_py_deps(spark)
         lo, hi = lo_hi
         ranges = [
             (start, min(start + rows_per_task - 1, hi))
@@ -1192,7 +1163,7 @@ class GeoPackageReader(BaseReader):
             finally:
                 vcon.close()
 
-        return mdf.mapInPandas(fetch, schema=schema)
+        return map_in_pandas(mdf, fetch, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1231,8 +1202,6 @@ class GeoParquetReader(BaseReader):
         import json as _json
         import os as _os
 
-        from intake_spark.session import ensure_py_deps
-
         url = self.data.url
         if geometry_col is None:
             # driver peek at the parquet footer's key-value metadata
@@ -1258,7 +1227,6 @@ class GeoParquetReader(BaseReader):
             raise ValueError(
                 f"geometry column {geometry_col!r} not in {df.columns}"
             )
-        ensure_py_deps(spark)
         others = [c for c in df.columns if c != geometry_col]
         out_schema = T.StructType(
             [df.schema[c] for c in others]
@@ -1290,7 +1258,7 @@ class GeoParquetReader(BaseReader):
                 out["geometry"] = geoms
                 yield out
 
-        return df.mapInPandas(decode, schema=out_schema)
+        return map_in_pandas(df, decode, schema=out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1531,8 +1499,6 @@ class FlatGeobufReader(BaseReader):
     implements = {FlatGeobuf}
 
     def _read(self, spark, features_per_task: int = 10_000, **kwargs):
-        from intake_spark.session import ensure_py_deps
-
         url = self.data.url
         with open(url, "rb") as f:
             magic = f.read(8)
@@ -1566,7 +1532,6 @@ class FlatGeobufReader(BaseReader):
         )
         if not index:
             return local_frame(spark, [], schema)
-        ensure_py_deps(spark)
         # each manifest ROW carries only ITS slice of (offset, size) pairs
         # — capturing the whole index in the decode closure would ship the
         # full manifest to every task (hundreds of MB at 10M features)
@@ -1621,7 +1586,7 @@ class FlatGeobufReader(BaseReader):
                             columns=["id", "geometry_type", "geometry", "properties"],
                         )
 
-        return mdf.mapInPandas(decode, schema=schema)
+        return map_in_pandas(mdf, decode, schema=schema)
 
 
 class FBBuilder:
@@ -1963,9 +1928,6 @@ def decode_wkt_column(df, wkt_col: str = "wkt"):
     executor parse, mapper-only."""
     import json as _json
 
-    from intake_spark.session import ensure_py_deps
-
-    ensure_py_deps(df.sparkSession)
     others = [c for c in df.columns if c != wkt_col]
     out_schema = T.StructType(
         [df.schema[c] for c in others]
@@ -1991,4 +1953,4 @@ def decode_wkt_column(df, wkt_col: str = "wkt"):
             out["geometry"] = geoms
             yield out
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_in_pandas(df, decode, schema=out_schema)

@@ -29,7 +29,7 @@ import struct
 
 from intake_spark import datatypes as dt
 from intake_spark.readers import BaseReader
-from intake_spark.session import local_frame
+from intake_spark.session import local_frame, map_in_pandas
 
 _SIG = b"\x89HDF\r\n\x1a\n"
 _UNDEF = 0xFFFFFFFFFFFFFFFF
@@ -480,9 +480,7 @@ def _chunked_h5_df(spark, url, dtype, shape, chunk_dims, filters, index, base, f
     import numpy as np
 
     from intake_spark.arrays import CHUNK_SCHEMA
-    from intake_spark.session import ensure_py_deps
 
-    ensure_py_deps(spark)
     slabs: dict[int, list] = {}
     for coords, addr, nbytes, mask in index:
         slabs.setdefault(coords[0], []).append((list(coords), base + addr, nbytes, mask))
@@ -533,7 +531,7 @@ def _chunked_h5_df(spark, url, dtype, shape, chunk_dims, filters, index, base, f
                     )
             yield pd.DataFrame(out, columns=["chunk_id", "offset0", "shape", "values"])
 
-    return mdf.mapInPandas(decode, schema=CHUNK_SCHEMA)
+    return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
 
 
 class HDF5Reader(BaseReader):

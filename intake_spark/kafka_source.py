@@ -266,19 +266,19 @@ def register_kafka_wire(spark) -> None:
     Two transports make the source importable everywhere it runs:
     ``ensure_py_deps`` ships the package zip to batch planner + executor
     workers (addPyFile), and cloudpickle BY-VALUE registration of this
-    module and :mod:`intake_spark.wire` covers the streaming source
-    runner — a separate long-lived Python process that does NOT receive
-    addPyFile includes, so a by-reference pickle of the DataSource class
-    would die there with ModuleNotFoundError."""
+    module and the engine modules it reaches (:mod:`intake_spark.wire`
+    and the codecs it imports from :mod:`intake_spark.compress`) covers
+    the streaming source runner — a separate long-lived Python process
+    that does NOT receive addPyFile includes, so a by-reference pickle of
+    any of them would die there with ModuleNotFoundError."""
     import sys
 
     from pyspark import cloudpickle
 
+    from intake_spark import compress, wire
     from intake_spark.session import ensure_py_deps
 
     ensure_py_deps(spark)
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    cloudpickle.register_pickle_by_value(
-        sys.modules[KafkaWireClient.__module__]
-    )
+    for module in (sys.modules[__name__], wire, compress):
+        cloudpickle.register_pickle_by_value(module)
     spark.dataSource.register(KafkaWireDataSource)

@@ -36,7 +36,7 @@ import zlib
 from intake_spark import datatypes as dt
 from intake_spark.compress import read_uvarint, uvarint
 from intake_spark.readers import BaseReader
-from intake_spark.session import local_frame
+from intake_spark.session import ensure_py_deps, local_frame, map_in_pandas
 
 # --------------------------------------------------------------------------
 # Avro binary decoding (spec: https://avro.apache.org/docs/ spec — varint
@@ -423,8 +423,6 @@ class AvroOCFReader(BaseReader):
 
         import pandas as pd
 
-        from intake_spark.session import ensure_py_deps
-
         url = self.data.url
         if os.path.isdir(url):  # Spark writers emit directories of part files
             url = os.path.join(url, "*.avro")
@@ -468,7 +466,6 @@ class AvroOCFReader(BaseReader):
                 manifest.append((p, codec, sj, json.dumps(run)))
         cols = [f.name for f in spark_schema.fields]
         self.data.metadata.update({"avro_schema": schema0, "codec": codec0})
-        ensure_py_deps(spark)
         mdf = local_frame(
             spark, manifest, "path string, codec string, wschema string, runs string"
         )
@@ -493,7 +490,7 @@ class AvroOCFReader(BaseReader):
                         [[row.get(c) for c in cols] for row in rows], columns=cols
                     )
 
-        out = mdf.mapInPandas(decode, schema=spark_schema)
+        out = map_in_pandas(mdf, decode, schema=spark_schema)
         # top-level UTC-timestamp logical types: convert the epoch longs
         # to LTZ instants JVM-side (timestamp_micros is timezone-proof;
         # naive datetimes through Arrow would shift under non-UTC
@@ -1333,7 +1330,7 @@ def _apply_delta_dvs(spark, base, dv_adds: list, root: str, col_order):
                     )
                 yield pd.DataFrame({"__file": fp, "__dpos": positions})
 
-    dels = dv_df.mapInPandas(expand, schema="__file string, __dpos long")
+    dels = map_in_pandas(dv_df, expand, schema="__file string, __dpos long")
     cond = (base["__file"] == dels["__file"]) & (
         base["__pos"] == dels["__dpos"]
     )
@@ -1963,6 +1960,7 @@ def _probe_partition_cols(spark, files: list[str], pnames: list[str]) -> dict:
             yield p, all(c in ns for c in pn)
 
     nslices = max(1, len(files) // 256)
+    ensure_py_deps(spark)
     return dict(
         spark.sparkContext.parallelize(files, nslices)
         .mapPartitions(_probe)

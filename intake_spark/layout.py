@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from intake_spark.session import map_in_pandas
+
 
 def zorder_key_n(cols, bits: int = 16):
     """Interleave the low ``bits`` bits of N non-negative integer columns
@@ -97,9 +99,6 @@ def with_hilbert_key(
     Morton's independent bit interleave)."""
     from pyspark.sql import types as T
 
-    from intake_spark.session import ensure_py_deps
-
-    ensure_py_deps(df.sparkSession)
     schema = T.StructType(list(df.schema.fields) + [T.StructField(out_col, T.LongType())])
 
     hi = 1 << order
@@ -131,4 +130,4 @@ def with_hilbert_key(
             pdf[out_col] = keys
             yield pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_in_pandas(df, run, schema=schema)

@@ -27,7 +27,7 @@ from pyspark.sql.window import Window
 
 from intake_spark.llm.dedup import shingles
 from intake_spark.llm.sampling import _BUCKETS, hash_bucket
-from intake_spark.session import materialize
+from intake_spark.session import map_in_pandas, materialize
 
 
 def decontaminate(
@@ -380,10 +380,7 @@ def bloom_decontaminate(
     Returns the CLEAN corpus (docs with no benchmark shingle), exactly
     equal to the one-phase exact anti-join — verified in pytest — but
     with the corpus-sized work all mapper-side."""
-    from intake_spark.session import ensure_py_deps
-
     spark = corpus.sparkSession
-    ensure_py_deps(spark)
     sh_bench = shingles(benchmark, id_col=id_col, text_col=text_col, k=k).select(
         "shingle"
     )
@@ -416,7 +413,7 @@ def bloom_decontaminate(
         )
 
     merged = (
-        sh_b.mapInPandas(part_bloom, schema="w_idx long, w long")
+        map_in_pandas(sh_b, part_bloom, schema="w_idx long, w long")
         .groupBy("w_idx")
         .agg(F.expr("bit_or(w)").alias("w"))
         .collect()
@@ -452,7 +449,7 @@ def bloom_decontaminate(
         ]
     )
     maybe_ids = (
-        sh_corpus.mapInPandas(flag, schema=schema)
+        map_in_pandas(sh_corpus, flag, schema=schema)
         .filter(F.col("maybe") == 1)
         .select(id_col)
         .distinct()

@@ -282,9 +282,8 @@ def audio_meta_features(df, content_col: str = "content", keep_cols=None):
     import pandas as pd
     from pyspark.sql import types as T
 
-    from intake_spark.session import ensure_py_deps
+    from intake_spark.session import map_in_pandas
 
-    ensure_py_deps(df.sparkSession)
     keep = keep_cols if keep_cols is not None else [c for c in df.columns if c != content_col]
     out_schema = T.StructType(
         [df.schema[c] for c in keep]
@@ -322,4 +321,4 @@ def audio_meta_features(df, content_col: str = "content", keep_cols=None):
             out["err"] = cols["err"]
             yield out
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_in_pandas(df, run, schema=out_schema)

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from intake_spark.session import materialize
+from intake_spark.session import map_in_pandas, materialize
 
 __all__ = ["landmarks", "audio_landmarks", "landmark_match_pairs"]
 
@@ -115,9 +115,6 @@ def audio_landmarks(
     codecs and emit its distinct landmark hashes. Undecodable blobs
     become a single err row (triage convention), never a batch
     failure."""
-    from intake_spark.session import ensure_py_deps
-
-    ensure_py_deps(df.sparkSession)
     # The mapper emits ONE array row per recording and the explode to
     # (id, landmark) rows happens JVM-side: a recording carries ~100+
     # landmarks, so per-landmark Python tuples + the Arrow transpose of
@@ -154,11 +151,8 @@ def audio_landmarks(
                     errs.append(f"{type(exc).__name__}: {exc}")
             yield pd.DataFrame({id_col: ids, "lms": arrs, "err": errs})
 
-    return (
-        df.select(id_col, audio_col)
-        .mapInPandas(run, mid_schema)
-        .select(id_col, F.explode("lms").alias("landmark"), "err")
-    )
+    return map_in_pandas(df.select(id_col, audio_col), run, mid_schema).select(
+        id_col, F.explode("lms").alias("landmark"), "err")
 
 
 def landmark_match_pairs(

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from intake_spark.session import materialize
+from intake_spark.session import map_in_pandas, materialize
 from intake_spark.utils import trunc_div
 
 # documents per dense chunk in the Gram accumulation — bounds the
@@ -196,7 +196,7 @@ def _gram_pairs(
         co = x.repartition(parts, F_.col(id_col))
     else:
         co = x.repartition(F_.col(id_col))
-    parts_df = co.mapInPandas(gram_part, "bl long, br long, h long")
+    parts_df = map_in_pandas(co, gram_part, "bl long, br long, h long")
     return parts_df.groupBy("bl", "br").agg(
         F_.sum(F_.col("h").cast("decimal(38,0)")).alias("h")
     )

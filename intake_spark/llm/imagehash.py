@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from intake_spark.session import materialize
+from intake_spark.session import map_in_pandas, materialize
 
 __all__ = [
     "ahash64",
@@ -168,13 +168,10 @@ def image_hashes(
     stdlib codecs and hash. Arrow-batched mapInPandas; blobs never
     leave the executor, corrupt/gated blobs become err rows instead of
     failing the batch (the triage convention of media_meta_features)."""
-    from intake_spark.session import ensure_py_deps
-
     bad = sorted(set(algos) - set(_ALGOS))
     if bad:
         raise ValueError(f"unknown image hash algo(s) {bad}; "
                          f"known: {sorted(_ALGOS)}")
-    ensure_py_deps(df.sparkSession)
     out_schema = T.StructType(
         [df.schema[id_col]] + list(IMAGE_HASH_SCHEMA.fields)
     )
@@ -203,7 +200,7 @@ def image_hashes(
                 rows, columns=[id_col, "algo", "hash", "err"]
             )
 
-    return df.select(id_col, image_col).mapInPandas(run, out_schema)
+    return map_in_pandas(df.select(id_col, image_col), run, out_schema)
 
 
 def hamming_band_pairs(

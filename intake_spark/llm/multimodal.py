@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from intake_spark.session import map_in_pandas
+
 IMAGE_META_SCHEMA = T.StructType(
     [
         T.StructField("byte_len", T.LongType()),
@@ -631,9 +633,6 @@ def image_features(
     ``decoded=0``, the gate/parse message in ``err``) rather than
     failing the whole batch. Direct :func:`decode_image` calls keep the
     named gate."""
-    from intake_spark.session import ensure_py_deps
-
-    ensure_py_deps(df.sparkSession)
     keep = keep_cols if keep_cols is not None else [c for c in df.columns if c != content_col]
     out_schema = T.StructType([df.schema[c] for c in keep] + list(IMAGE_FEATURES_SCHEMA.fields))
     feat_keys = (
@@ -663,7 +662,7 @@ def image_features(
             out["err"] = rows["err"]
             yield out
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_in_pandas(df, run, schema=out_schema)
 
 
 def _fake_meta(content: bytes) -> tuple[int, str, int, int, int]:
@@ -684,9 +683,6 @@ def fake_decode_meta(
     """Arrow-batched ``mapInPandas`` 'decode' stage producing IMAGE_META_SCHEMA
     columns from the binary column. Swap ``_fake_meta`` for a real codec and
     the plumbing (schema, batching, parallelism) is unchanged."""
-    from intake_spark.session import ensure_py_deps
-
-    ensure_py_deps(df.sparkSession)
     keep = keep_cols if keep_cols is not None else [c for c in df.columns if c != content_col]
     out_schema = T.StructType(
         [df.schema[c] for c in keep] + list(IMAGE_META_SCHEMA.fields)
@@ -703,7 +699,7 @@ def fake_decode_meta(
             out["n_channels"] = pd.array([m[4] for m in meta], dtype="int32")
             yield out
 
-    return df.mapInPandas(decode_batches, schema=out_schema)
+    return map_in_pandas(df, decode_batches, schema=out_schema)
 
 
 CODEC_ROUNDTRIP_SCHEMA = T.StructType(
@@ -749,9 +745,6 @@ def transcode_images(
     converts media via PIL writers (output.py:268+)."""
     import numpy as np
 
-    from intake_spark.session import ensure_py_deps
-
-    ensure_py_deps(df.sparkSession)
     if to not in ("webp", "png", "jpeg2000"):
         raise ValueError("transcode_images supports webp/png/jpeg2000")
     keep = keep_cols if keep_cols is not None else [
@@ -853,7 +846,7 @@ def transcode_images(
                 rows, columns=list(keep) + [f.name for f in TRANSCODE_SCHEMA]
             )
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_in_pandas(df, run, schema=out_schema)
 
 
 def transcode_audio(
@@ -879,9 +872,6 @@ def transcode_audio(
     samples never leave the executor."""
     import numpy as np
 
-    from intake_spark.session import ensure_py_deps
-
-    ensure_py_deps(df.sparkSession)
     if to != "flac":
         raise ValueError("transcode_audio supports to='flac'")
     keep = keep_cols if keep_cols is not None else [
@@ -939,7 +929,7 @@ def transcode_audio(
                 rows, columns=list(keep) + [f.name for f in TRANSCODE_SCHEMA]
             )
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_in_pandas(df, run, schema=out_schema)
 
 
 def codec_roundtrip_stats(
@@ -960,9 +950,6 @@ def codec_roundtrip_stats(
     binary codec path (q30's fake-decode plumbing check, upgraded to
     the real coders). Arrow-batched mapInPandas; encoded images never
     leave the executor."""
-    from intake_spark.session import ensure_py_deps
-
-    ensure_py_deps(df.sparkSession)
     n_px = size * size
     out_schema = T.StructType(
         [df.schema[id_col]] + list(CODEC_ROUNDTRIP_SCHEMA.fields)
@@ -1051,11 +1038,8 @@ def codec_roundtrip_stats(
     # spread even and deterministic under retries; the shuffle moves
     # only (id, text).
     par = df.sparkSession.sparkContext.defaultParallelism
-    return (
-        df.select(id_col, text_col)
-        .repartition(par)
-        .mapInPandas(run, schema=out_schema)
-    )
+    return map_in_pandas(
+        df.select(id_col, text_col).repartition(par), run, schema=out_schema)
 
 
 def frame_sample_plan(df: DataFrame, content_col: str = "content", every_n: int = 30) -> DataFrame:
@@ -1894,9 +1878,6 @@ def audio_features(
     ``decoded=1`` features) → decode-free container probe
     (:func:`intake_spark.llm.audio_meta.audio_meta` rate/channels/
     duration, ``decoded=0``, the gate message in ``err``)."""
-    from intake_spark.session import ensure_py_deps
-
-    ensure_py_deps(df.sparkSession)
     keep = keep_cols if keep_cols is not None else [c for c in df.columns if c != content_col]
     out_schema = T.StructType([df.schema[c] for c in keep] + list(AUDIO_FEATURES_SCHEMA.fields))
     feat_keys = (
@@ -1924,7 +1905,7 @@ def audio_features(
             out["err"] = cols["err"]
             yield out
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_in_pandas(df, run, schema=out_schema)
 
 
 def image_meta(content: bytes) -> dict:
@@ -2062,9 +2043,7 @@ def media_meta_features(
     crawled blob column to the right decode pipeline."""
     from intake_spark.llm.audio_meta import audio_meta
     from intake_spark.llm.video import video_meta
-    from intake_spark.session import ensure_py_deps
 
-    ensure_py_deps(df.sparkSession)
     keep = keep_cols if keep_cols is not None else [c for c in df.columns if c != content_col]
     out_schema = T.StructType(
         [df.schema[c] for c in keep]
@@ -2121,7 +2100,7 @@ def media_meta_features(
             out["err"] = cols["err"]
             yield out
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_in_pandas(df, run, schema=out_schema)
 
 
 def lzw_decode_gif(data: bytes, min_code_size: int) -> bytes:

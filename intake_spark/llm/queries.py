@@ -24,7 +24,7 @@ from intake_spark.benchqueries import register
 from intake_spark.llm import assembly, dedup, multimodal, sampling, similarity, sketches, text
 from intake_spark.llm.dedup import MINHASH_P, _affine_coeffs
 from intake_spark.llm.text import LANG_ORDER, STOPWORDS
-from intake_spark.session import load_table, local_frame, materialize
+from intake_spark.session import load_table, local_frame, map_in_pandas, materialize
 
 # --- shared SQL fragments -------------------------------------------------
 
@@ -1480,22 +1480,6 @@ def _shared_build_seconds(spark: SparkSession, sf_dir: str, label: str) -> float
     if isinstance(got, DataFrame):
         got.count()
     return time.perf_counter() - t0
-
-
-def prewarm_shared(spark: SparkSession, sf_dir: str) -> "dict[str, float | str]":
-    """Eagerly build every registered shared table for ``sf_dir`` and
-    return {label: build_seconds}; a build that raises maps to its
-    ``"Type: message"`` instead, and the remaining labels still build.
-    Building before any consumer runs keeps a consumer's timing from
-    absorbing the build (q22 billed 109× its steady state when it ran
-    first)."""
-    out: "dict[str, float | str]" = {}
-    for label in _SHARED_BUILDERS:
-        try:
-            out[label] = _shared_build_seconds(spark, sf_dir, label)
-        except Exception as exc:  # noqa: BLE001 — reported, not dropped
-            out[label] = f"{type(exc).__name__}: {exc}"
-    return out
 
 
 def shared_labels() -> "list[str]":
@@ -3647,9 +3631,7 @@ def q132_image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the twin set. Deterministic 1-in-10 sample (doc_id % 10 =
     6); image bytes never leave the executors."""
     from intake_spark.llm import imagehash
-    from intake_spark.session import ensure_py_deps
 
-    ensure_py_deps(spark)
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 == 6
     )
@@ -3699,8 +3681,8 @@ def q132_image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that inherits its partitioning) across the executors — the sample
     # otherwise lands in one parquet split's single task
     par = spark.sparkContext.defaultParallelism
-    images = docs.select("doc_id").repartition(par).mapInPandas(
-        gen, img_schema
+    images = map_in_pandas(
+        docs.select("doc_id").repartition(par), gen, img_schema
     )
     pairs = imagehash.phash_pairs(
         images, image_col="image", id_col="image_id",
@@ -3739,9 +3721,7 @@ def q133_audio_landmark_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     far below the 800 pm gate. Deterministic 1-in-10 sample (doc_id %
     10 = 7); audio bytes never leave the executors."""
     from intake_spark.llm import audiofp
-    from intake_spark.session import ensure_py_deps
 
-    ensure_py_deps(spark)
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 == 7
     )
@@ -3803,8 +3783,8 @@ def q133_audio_landmark_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["audio_id", "audio"])
 
     par = spark.sparkContext.defaultParallelism
-    audio = docs.select("doc_id").repartition(par).mapInPandas(
-        gen, wav_schema
+    audio = map_in_pandas(
+        docs.select("doc_id").repartition(par), gen, wav_schema
     )
     lm = audiofp.audio_landmarks(audio, audio_col="audio",
                                  id_col="audio_id")
@@ -3852,9 +3832,7 @@ def q134_transcode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     dispatch. Deterministic 1-in-10 sample (doc_id % 10 = 9); blobs
     never leave the executors."""
     from intake_spark.llm import multimodal
-    from intake_spark.session import ensure_py_deps
 
-    ensure_py_deps(spark)
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 == 9
     )
@@ -3894,8 +3872,8 @@ def q134_transcode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["doc_id", "kind", "content"])
 
     par = spark.sparkContext.defaultParallelism
-    media = docs.select("doc_id", "text").repartition(par).mapInPandas(
-        gen, media_schema
+    media = map_in_pandas(
+        docs.select("doc_id", "text").repartition(par), gen, media_schema
     )
     img_out = multimodal.transcode_images(
         media.filter(F.col("kind") == "image"), to="webp"
@@ -3943,9 +3921,11 @@ def q134_transcode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # err rows carry content=NULL: dropping them (instead of crashing
     # the sum stage) makes a failed transcode surface as a ROW-COUNT
     # mismatch against the oracle — loud in the driver compare
-    return both.filter(F.col("content").isNotNull()).select(
-        "doc_id", "kind", "src_format", "lossless", "content"
-    ).mapInPandas(sums, sum_schema)
+    return map_in_pandas(
+        both.filter(F.col("content").isNotNull()).select(
+            "doc_id", "kind", "src_format", "lossless", "content"),
+        sums, sum_schema,
+    )
 
 
 @shared_table("shared:q135_store")
@@ -4421,9 +4401,7 @@ def q139_stream_guard_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Image bytes never leave the executors; state is one long per
     distinct band bucket."""
     from intake_spark import streaming as stg
-    from intake_spark.session import ensure_py_deps
 
-    ensure_py_deps(spark)
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 == 6
     )
@@ -4463,8 +4441,8 @@ def q139_stream_guard_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["image_id", "image"])
 
     par = spark.sparkContext.defaultParallelism
-    images = docs.select("doc_id").repartition(par).mapInPandas(
-        gen, img_schema
+    images = map_in_pandas(
+        docs.select("doc_id").repartition(par), gen, img_schema
     )
     flags = stg.stream_phash_dup_flags(
         images, id_col="image_id", image_col="image", bands=4
@@ -4493,9 +4471,6 @@ def _q140_corpus_root(spark: SparkSession, sf_dir: str, root: str) -> str:
     local mode the shared tempdir plays that role."""
     import os as _os
 
-    from intake_spark.session import ensure_py_deps
-
-    ensure_py_deps(spark)
     for sub in ("csv", "csvgz", "parquet", "png", "wav", "npy"):
         _os.makedirs(_os.path.join(root, sub), exist_ok=True)
 
@@ -4549,7 +4524,7 @@ def _q140_corpus_root(spark: SparkSession, sf_dir: str, root: str) -> str:
             yield pd.DataFrame({"n": [n]})
 
     par = spark.sparkContext.defaultParallelism
-    docs.repartition(par).mapInPandas(write_files, "n long").agg(
+    map_in_pandas(docs.repartition(par), write_files, "n long").agg(
         F.sum("n")
     ).collect()
     return root
@@ -4645,9 +4620,7 @@ def q141_stream_guard_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference has no streaming dedup; this is the rebuild's
     scale-mandated streaming twin (SURVEY §2.8)."""
     from intake_spark import streaming as stg
-    from intake_spark.session import ensure_py_deps
 
-    ensure_py_deps(spark)
     src = _q141_store(spark, sf_dir)
     stream = spark.readStream.schema("id long, text string").parquet(src)
     flags = stg.stream_near_dup_flags(

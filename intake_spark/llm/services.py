@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from intake_spark.session import map_in_pandas
+
 
 def _post_json(url: str, payload: dict, timeout_s: float = 60.0) -> dict:
     import urllib.request
@@ -68,9 +70,6 @@ def llm_complete(
     """Append a completion column computed per row via the LLM service.
     Chat completions are inherently one request per prompt (the protocol
     has no multi-prompt form); embeddings batch for real in llm_embed."""
-    from intake_spark.session import ensure_py_deps
-
-    ensure_py_deps(df.sparkSession)
     out_schema = T.StructType(list(df.schema.fields) + [T.StructField(out_col, T.StringType())])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -100,7 +99,7 @@ def llm_complete(
             res[out_col] = outs
             yield res
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_in_pandas(df, run, schema=out_schema)
 
 
 def llm_embed(
@@ -115,9 +114,6 @@ def llm_embed(
 ) -> DataFrame:
     """Append an embedding column (array<float>) per row — feeds directly
     into intake_spark.llm.similarity operators."""
-    from intake_spark.session import ensure_py_deps
-
-    ensure_py_deps(df.sparkSession)
     out_schema = T.StructType(
         list(df.schema.fields) + [T.StructField(out_col, T.ArrayType(T.FloatType()))]
     )
@@ -141,4 +137,4 @@ def llm_embed(
             res[out_col] = vecs
             yield res
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_in_pandas(df, run, schema=out_schema)

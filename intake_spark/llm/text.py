@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from intake_spark.session import materialize
+from intake_spark.session import map_in_pandas, materialize
 
 # A small, fixed stopword list per language used by the heuristic
 # language-ID scorer and the quality scorer. Deliberately tiny and
@@ -1142,15 +1142,6 @@ def gopher_repetition(
     at scan speed or at n-gram-sort speed."""
     import pyspark.sql.types as T
 
-    from intake_spark.session import ensure_py_deps
-
-    # the mapInPandas closure references _rep_stats_batch BY MODULE
-    # REFERENCE, and pyspark snapshots sc._python_includes when
-    # mapInPandas WRAPS the function — ship the package zip FIRST or a
-    # driver launched outside the repo dies executor-side with
-    # ModuleNotFoundError (the q132/q133/q134 pattern)
-    ensure_py_deps(df.sparkSession)
-
     id_field = df.schema[id_col]
     carry_fields = [df.schema[c] for c in carry]
     schema = T.StructType(
@@ -1181,7 +1172,7 @@ def gopher_repetition(
     # carry may name text_col itself (curation_funnel threads the text
     # through every stage) — select each input column once
     in_cols = [icol, tcol] + [c for c in cc if c not in (icol, tcol)]
-    return df.select(*in_cols).mapInPandas(rep, schema)
+    return map_in_pandas(df.select(*in_cols), rep, schema)
 
 
 def blocklist_filter(

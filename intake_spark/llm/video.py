@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from intake_spark.session import map_in_pandas
+
 __all__ = ["parse_avi", "parse_y4m", "parse_video", "decode_y4m_frame", "sample_video_frames", "video_frame_features", "VIDEO_FRAME_SCHEMA"]
 
 
@@ -331,9 +333,6 @@ def sample_video_frames(
     payloads; without PyAV, unknown containers keep the named error and
     non-MJPEG AVIs still demux their encoded frames (metadata + bytes,
     decode gated downstream)."""
-    from intake_spark.session import ensure_py_deps
-
-    ensure_py_deps(df.sparkSession)
     keep = keep_cols if keep_cols is not None else [c for c in df.columns if c != content_col]
     out_schema = T.StructType([df.schema[c] for c in keep] + list(VIDEO_FRAME_SCHEMA.fields))
     step = max(1, int(every_n))
@@ -428,7 +427,7 @@ def sample_video_frames(
                     )
             yield pd.DataFrame(out_rows, columns=list(keep) + [f.name for f in VIDEO_FRAME_SCHEMA])
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_in_pandas(df, run, schema=out_schema)
 
 
 def video_frame_features(
@@ -446,9 +445,7 @@ def video_frame_features(
     with the frame geometry carried on the sampled rows — same feature
     contract either way."""
     from intake_spark.llm.multimodal import resize_nearest, IMAGE_FEATURES_SCHEMA
-    from intake_spark.session import ensure_py_deps
 
-    ensure_py_deps(df.sparkSession)
     frames = sample_video_frames(df, content_col=content_col, every_n=every_n,
                                  keep_cols=keep_cols)
     keep = [c for c in frames.columns if c != "frame_bytes"]
@@ -495,7 +492,7 @@ def video_frame_features(
                 columns=keep + [f.name for f in IMAGE_FEATURES_SCHEMA],
             )
 
-    return frames.mapInPandas(run, schema=out_schema)
+    return map_in_pandas(frames, run, schema=out_schema)
 
 
 def _bmff_boxes(content: bytes, start: int, end: int):

@@ -19,7 +19,8 @@ from pyspark.sql import types as T
 
 from intake_spark import datatypes as dt
 from intake_spark.compress import crc32c, read_uvarint, uvarint
-from intake_spark.readers import BaseReader
+from intake_spark.readers import BaseReader, binary_files
+from intake_spark.session import map_in_pandas
 
 
 class TFRecord(dt.FileData):
@@ -158,14 +159,7 @@ class TFRecordReader(BaseReader):
     implements = {TFRecord}
 
     def _read(self, spark, glob: str = "*.tfrecord*", **kwargs):
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
-        files = (
-            spark.read.format("binaryFile").load(self.data.url)
-            if "*" in self.data.url
-            else spark.read.format("binaryFile").option("pathGlobFilter", glob).load(self.data.url)
-        )
+        files = binary_files(spark, self.data.url, glob)
 
         cols = ["path", "record_idx", "key", "bytes_vals", "float_vals", "int64_vals"]
 
@@ -197,7 +191,7 @@ class TFRecordReader(BaseReader):
                 if rows:
                     yield pd.DataFrame(rows, columns=cols)
 
-        return files.select("path").mapInPandas(parse, schema=_TFRECORD_SCHEMA)
+        return map_in_pandas(files.select("path"), parse, schema=_TFRECORD_SCHEMA)
 
 
 class SKLearnExample(dt.BaseData):
@@ -466,12 +460,9 @@ def to_tfrecord(df, url: str) -> TFRecord:
 
     from pyspark.sql import types as T_
 
-    from intake_spark.session import ensure_py_deps
-
     from intake_spark.output import clean_stale_parts
 
     clean_stale_parts(url, "part-", ".tfrecord")
-    ensure_py_deps(df.sparkSession)
 
     kinds = {}
     for f_ in df.schema.fields:
@@ -575,7 +566,7 @@ def to_tfrecord(df, url: str) -> TFRecord:
         yield pd_.DataFrame({"rows": [n]})
 
     total = (
-        df.mapInPandas(write_part, schema="rows long").agg(F_.sum("rows")).first()[0]
+        map_in_pandas(df, write_part, schema="rows long").agg(F_.sum("rows")).first()[0]
     )
     out_dt = TFRecord(url=url)
     out_dt.metadata["rows_written"] = int(total or 0)
@@ -624,16 +615,7 @@ class WebDatasetReader(BaseReader):
     implements = {WebDatasetShards}
 
     def _read(self, spark, glob: str = "*.tar", **kwargs):
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
-        files = (
-            spark.read.format("binaryFile").load(self.data.url)
-            if "*" in self.data.url
-            else spark.read.format("binaryFile")
-            .option("pathGlobFilter", glob)
-            .load(self.data.url)
-        )
+        files = binary_files(spark, self.data.url, glob)
 
         cols = ["shard", "key", "ext", "content", "size"]
 
@@ -672,7 +654,7 @@ class WebDatasetReader(BaseReader):
                 if rows:
                     yield pd.DataFrame(rows, columns=cols)
 
-        return files.select("path").mapInPandas(parse, schema=_WDS_SCHEMA)
+        return map_in_pandas(files.select("path"), parse, schema=_WDS_SCHEMA)
 
 
 def to_webdataset(
@@ -690,12 +672,9 @@ def to_webdataset(
     (``df.repartition(n, 'key')``). Round-trips with WebDatasetReader."""
     import os as _os
 
-    from intake_spark.session import ensure_py_deps
-
     from intake_spark.output import clean_stale_parts
 
     clean_stale_parts(url, "shard-", ".tar")
-    ensure_py_deps(df.sparkSession)
 
     def write_part(batches):
         import io
@@ -743,8 +722,8 @@ def to_webdataset(
     from pyspark.sql import functions as F_
 
     total = (
-        df.select(key_col, ext_col, content_col)
-        .mapInPandas(write_part, schema="rows long")
+        map_in_pandas(df.select(key_col, ext_col, content_col), write_part,
+                      schema="rows long")
         .agg(F_.sum("rows"))
         .first()[0]
     )

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from intake_spark import datatypes as dt
+from intake_spark.session import ensure_py_deps, map_in_pandas
 
 
 def _guard_single_file(df: DataFrame, sink: str, max_bytes: int | None) -> list[int]:
@@ -317,10 +318,8 @@ def to_zarr(df: DataFrame, url: str, compressor: str | None = "zlib") -> dt.Zarr
     import json
     import os
 
-    from intake_spark.session import ensure_py_deps
-
     # the write closure imports intake_spark.compress executor-side for
-    # the blosc-lz4 branch — ship the package like every other sink does
+    # the blosc-lz4 branch: ship the package before foreachPartition
     ensure_py_deps(df.sparkSession)
 
     # Block geometry via ONE aggregate row — never one driver-side row per
@@ -1069,8 +1068,6 @@ def to_avro(df: DataFrame, url: str, codec: str = "deflate") -> "dt.AVRO":
     from pyspark.sql import functions as F_
     from pyspark.sql import types as T  # noqa: F401
 
-    from intake_spark.session import ensure_py_deps
-
     if codec not in ("deflate", "snappy", "null"):
         raise ValueError("codec must be 'deflate', 'snappy' or 'null'")
     kinds = []
@@ -1145,7 +1142,6 @@ def to_avro(df: DataFrame, url: str, codec: str = "deflate") -> "dt.AVRO":
     import os as _os
 
     clean_stale_parts(url, "part-", ".avro")
-    ensure_py_deps(df.sparkSession)
 
     def write_part(batches):
         import hashlib as _hashlib
@@ -1199,7 +1195,7 @@ def to_avro(df: DataFrame, url: str, codec: str = "deflate") -> "dt.AVRO":
                 f.write(blob)
         yield pd.DataFrame({"rows": [n_rows]})
 
-    written = df.mapInPandas(write_part, schema="rows long")
+    written = map_in_pandas(df, write_part, schema="rows long")
     total = written.agg(F.sum("rows")).first()[0]
     out = dt.AVRO(url=url)
     out.metadata["rows_written"] = int(total or 0)
@@ -1214,11 +1210,8 @@ def to_msgpack(df: DataFrame, url: str) -> "object":
     bool/str/bytes/nil)."""
     import os as _os
 
-    from intake_spark.session import ensure_py_deps
-
     clean_stale_parts(url, "part-", ".msgpack")
     names = [f_.name for f_ in df.schema.fields]
-    ensure_py_deps(df.sparkSession)
 
     def mp_cell(v):
         import struct as _struct
@@ -1270,7 +1263,7 @@ def to_msgpack(df: DataFrame, url: str) -> "object":
                 f.write(bytes(out))
         yield pd.DataFrame({"rows": [n]})
 
-    written = df.mapInPandas(write_part, schema="rows long")
+    written = map_in_pandas(df, write_part, schema="rows long")
     total = written.agg(F.sum("rows")).first()[0]
     from intake_spark.documents import MessagePack
 
@@ -1324,12 +1317,8 @@ def to_flatgeobuf(
                 {"k": list(seen), "t": list(seen.values())}
             )
 
-        from intake_spark.session import ensure_py_deps as _epd
-
-        _epd(df.sparkSession)
         rows = (
-            df.select("properties")
-            .mapInPandas(infer, "k string, t int")
+            map_in_pandas(df.select("properties"), infer, "k string, t int")
             .groupBy("k")
             .agg(F.max("t").alias("t"))
             .collect()
@@ -1418,10 +1407,6 @@ def to_geoparquet(
         }
     )
 
-    from intake_spark.session import ensure_py_deps
-
-    ensure_py_deps(df.sparkSession)
-
     # one EXPLICIT arrow schema for every part: without it, a partition
     # whose batch happens to contain a null in an int column infers
     # float64 (NaN) while null-free partitions infer int64 — a directory
@@ -1487,7 +1472,7 @@ def to_geoparquet(
                 )
         yield _pd.DataFrame({"rows": [n]})
 
-    written = df.mapInPandas(write_part, schema="rows long")
+    written = map_in_pandas(df, write_part, schema="rows long")
     total = written.agg(F.sum("rows")).first()[0]
     from intake_spark.geo import GeoParquet
 
@@ -1669,7 +1654,7 @@ def _parse_partition_spec(pcols: list, by_name: dict) -> list[dict]:
     return out
 
 
-def _ipart_expr(spec: dict, itype: str):
+def _ipart_expr(spark, spec: dict, itype: str):
     """Spark Column computing one partition-transform value (identity /
     day / month / year / hour / bucket[N] / truncate[W]) per Iceberg
     semantics: time transforms count units since epoch (UTC for
@@ -1735,6 +1720,8 @@ def _ipart_expr(spec: dict, itype: str):
         # annotations` stringifies inline hints and pandas_udf cannot
         # resolve 'pd.Series' against this module's globals
         _bucket.__annotations__ = {"s": pd.Series, "return": pd.Series}
+        # _bucket calls intake_spark.utils on the executors
+        ensure_py_deps(spark)
         return pandas_udf(_bucket, "int")(c)
     raise ValueError(f"unknown transform {tr!r}")
 
@@ -1880,7 +1867,7 @@ def to_iceberg(
         for p in pspecs:
             wdf = wdf.withColumn(
                 f"__ipart__{p['name']}",
-                _ipart_expr(p, by_name[p["source"]]["type"]),
+                _ipart_expr(df.sparkSession, p, by_name[p["source"]]["type"]),
             )
         w = wdf.write.mode("overwrite").options(**options)
         w = w.partitionBy(*[f"__ipart__{p['name']}" for p in pspecs])

@@ -14,8 +14,24 @@ from typing import Any
 
 from intake_spark import datatypes as dt
 from intake_spark.pipeline import PipelineMixin
-from intake_spark.session import get_session, local_frame
+from intake_spark.session import get_session, local_frame, map_in_pandas
 from intake_spark.utils import Tokenizable, import_name, qname, subclasses
+
+
+def binary_files(spark, url: str, glob: str):
+    """binaryFile rows (path, modificationTime, length, content) for a URL
+    that is a glob, a single file or a directory: the listing rule of
+    every per-file reader. ``pathGlobFilter`` narrows a directory listing
+    to ``glob``; a URL that contains ``*`` or names an existing file is
+    read as given, since filtering a file its datatype accepts against
+    the glob could drop it (``notes.markdown`` against ``*.md``,
+    ``PLACES.KML`` against ``*.kml``)."""
+    import os
+
+    reader = spark.read.format("binaryFile")
+    if "*" not in url and not os.path.isfile(url):
+        reader = reader.option("pathGlobFilter", glob)
+    return reader.load(url)
 
 
 class BaseReader(PipelineMixin, Tokenizable):
@@ -345,7 +361,6 @@ class SparkJDBC(BaseReader):
 
     def _read_db_wire(self, spark, dialect, partition_column,
                       num_partitions, lower_bound, upper_bound, max_rows):
-        from intake_spark.session import ensure_py_deps
         from intake_spark.wire import MySQLWireClient, PostgresWireClient
 
         cli_cls = (PostgresWireClient if dialect == "postgres"
@@ -384,7 +399,6 @@ class SparkJDBC(BaseReader):
             )
 
         # distributed: one range predicate per task, executed on executors
-        ensure_py_deps(spark)
         preds = self._pg_predicates(
             partition_column, lower_bound, upper_bound, num_partitions
         )
@@ -416,7 +430,7 @@ class SparkJDBC(BaseReader):
         tasks = local_frame(
             spark, [(p,) for p in preds], "pred string"
         ).repartition(len(preds))
-        return tasks.mapInPandas(fetch_ranges, schema)
+        return map_in_pandas(tasks, fetch_ranges, schema)
 
 
 class SparkKafkaBatch(BaseReader):
@@ -533,9 +547,7 @@ class ZarrReader(BaseReader):
         import os as _os
 
         from intake_spark.arrays import CHUNK_SCHEMA
-        from intake_spark.session import ensure_py_deps
 
-        ensure_py_deps(spark)
         root = self.data.url.rstrip("/")
         if _os.path.exists(f"{root}/zarr.json"):
             # zarr v3: single JSON doc, named dtypes, codec pipeline,
@@ -847,7 +859,7 @@ class ZarrReader(BaseReader):
                     )
                 yield pd.DataFrame(out, columns=["chunk_id", "offset0", "shape", "values"])
 
-        return mdf.mapInPandas(decode, schema=CHUNK_SCHEMA)
+        return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
 
 
 _V2_FILTERS = {"delta", "shuffle", "fixedscaleoffset", "astype", "quantize"}
@@ -1179,8 +1191,6 @@ class SQLiteReader(BaseReader):
 
         from pyspark.sql import types as T
 
-        from intake_spark.session import ensure_py_deps
-
         url = self.data.url
         con = sqlite3.connect(f"file:{url}?mode=ro", uri=True)
         try:
@@ -1254,7 +1264,6 @@ class SQLiteReader(BaseReader):
                 con.close()
             return local_frame(spark, recs, schema)
 
-        ensure_py_deps(spark)
         lo, hi = lo_hi
         # size the range count by the ROW count, not the rowid SPAN: a
         # sparse rowid space (e.g. epoch-millis INTEGER PRIMARY KEYs) would
@@ -1293,7 +1302,7 @@ class SQLiteReader(BaseReader):
             finally:
                 vcon.close()
 
-        return mdf.mapInPandas(fetch, schema=schema)
+        return map_in_pandas(mdf, fetch, schema=schema)
 
 
 def sqlite_catalog(url: str) -> "object":

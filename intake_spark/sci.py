@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 
 from intake_spark import datatypes as dt
 from intake_spark.readers import BaseReader
-from intake_spark.session import local_frame
+from intake_spark.session import local_frame, map_in_pandas
 
 
 class FITS(dt.FileData):
@@ -72,9 +72,7 @@ def _chunked_array_df(spark, url: str, dtype: str, shape: list[int], data_off: i
     import numpy as np
 
     from intake_spark.arrays import CHUNK_SCHEMA
-    from intake_spark.session import ensure_py_deps
 
-    ensure_py_deps(spark)
     row_elems = 1
     for s in shape[1:]:
         row_elems *= s
@@ -108,7 +106,7 @@ def _chunked_array_df(spark, url: str, dtype: str, shape: list[int], data_off: i
                     )
             yield pd.DataFrame(out, columns=["chunk_id", "offset0", "shape", "values"])
 
-    return mdf.mapInPandas(decode, schema=CHUNK_SCHEMA)
+    return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
 
 
 class FITSReader(BaseReader):
@@ -546,7 +544,6 @@ class TIFFReader(BaseReader):
         import numpy as np  # noqa: F401
 
         from intake_spark.arrays import CHUNK_SCHEMA
-        from intake_spark.session import ensure_py_deps
 
         url = self.data.url
         with open(url, "rb") as f:
@@ -574,7 +571,6 @@ class TIFFReader(BaseReader):
                            geo["ry"], geo["sy"], geo["oy"]],
                 "geokeys": geo["geokeys"],
             }
-        ensure_py_deps(spark)
         if meta["tiled"]:
             # COG-style layout: each manifest row stitches one tile-row
             # band (ceil(W/tile_width) tiles) into a [nrows, W] chunk
@@ -652,7 +648,7 @@ class TIFFReader(BaseReader):
                         out.append(row)
                     yield pd.DataFrame(out, columns=cols)
 
-        return mdf.mapInPandas(decode, schema=out_schema)
+        return map_in_pandas(mdf, decode, schema=out_schema)
 
 
 
@@ -663,9 +659,7 @@ def _inflated_chunk_df(
     chunk rows: one executor inflates the stream, then slices first-axis
     slabs — shared by both readers so the chunk math lives once."""
     from intake_spark.arrays import CHUNK_SCHEMA
-    from intake_spark.session import ensure_py_deps
 
-    ensure_py_deps(spark)
     mdf = local_frame(spark, [(data_off,)], "data_off long")
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -700,7 +694,7 @@ def _inflated_chunk_df(
                     out, columns=["chunk_id", "offset0", "shape", "values"]
                 )
 
-    return mdf.mapInPandas(decode, schema=CHUNK_SCHEMA)
+    return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
 
 
 class NetCDF3(dt.FileData):
@@ -1007,7 +1001,6 @@ class MatlabMatReader(BaseReader):
 
     def _read(self, spark, variable: str | None = None, rows_per_chunk: int = 4096, **kwargs):
         from intake_spark.arrays import CHUNK_SCHEMA
-        from intake_spark.session import ensure_py_deps
 
         url = self.data.url
         variables = _mat_toplevel(url)
@@ -1023,7 +1016,6 @@ class MatlabMatReader(BaseReader):
             pick = match[0]
         name, off, nb, compressed = pick
         self.data.metadata.update({"variable": name, "variables": names})
-        ensure_py_deps(spark)
         mdf = local_frame(spark, [(off, nb, compressed)], "off long, nb long, comp boolean")
 
         def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1066,7 +1058,7 @@ class MatlabMatReader(BaseReader):
                         out, columns=["chunk_id", "offset0", "shape", "values"]
                     )
 
-        return mdf.mapInPandas(decode, schema=CHUNK_SCHEMA)
+        return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1727,13 +1719,10 @@ class GRIB2Reader(BaseReader):
     implements = {GRIB2}
 
     def _read(self, spark, **kwargs):
-        from intake_spark.session import ensure_py_deps
-
         url = self.data.url
         manifest = _grib_messages(url)
         if not manifest:
             return local_frame(spark, [], _GRIB_SCHEMA)
-        ensure_py_deps(spark)
         mdf = local_frame(
             spark, [(i, off, ln) for i, (off, ln) in enumerate(manifest)],
             "msg_id int, msg_off long, msg_len long",
@@ -1770,7 +1759,7 @@ class GRIB2Reader(BaseReader):
                         ],
                     )
 
-        return mdf.mapInPandas(decode, schema=_GRIB_SCHEMA)
+        return map_in_pandas(mdf, decode, schema=_GRIB_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2120,9 +2109,7 @@ class DicomReader(BaseReader):
         with the package's OWN codecs (packbits / baseline-JPEG DCT /
         T.87 LOCO-I, llm/jpegls.py) — no external codec plugins."""
         from intake_spark.arrays import CHUNK_SCHEMA
-        from intake_spark.session import ensure_py_deps
 
-        ensure_py_deps(spark)
         transfer = meta["transfer"]
         frames = t.get("number_of_frames", 1)
         frags = meta["fragments"]
@@ -2236,7 +2223,7 @@ class DicomReader(BaseReader):
                     out, columns=["chunk_id", "offset0", "shape", "values"]
                 )
 
-        return mdf.mapInPandas(decode, schema=CHUNK_SCHEMA)
+        return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2299,8 +2286,6 @@ class LASReader(BaseReader):
     implements = {LAS}
 
     def _read(self, spark, points_per_task: int = 1_000_000, **kwargs):
-        from intake_spark.session import ensure_py_deps
-
         url = self.data.url
         with open(url, "rb") as f:
             hdr = _las_header(f)
@@ -2325,7 +2310,6 @@ class LASReader(BaseReader):
         )
         if not hdr["n"]:
             return local_frame(spark, [], schema)
-        ensure_py_deps(spark)
         ranges = [
             (start, min(start + points_per_task, hdr["n"]))
             for start in range(0, hdr["n"], points_per_task)
@@ -2367,7 +2351,7 @@ class LASReader(BaseReader):
                             )
                         yield pd.DataFrame(out, columns=cols)
 
-        return mdf.mapInPandas(decode, schema=schema)
+        return map_in_pandas(mdf, decode, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2657,8 +2641,6 @@ class OpenEXRReader(BaseReader):
     implements = {OpenEXR}
 
     def _read(self, spark, **kwargs):
-        from intake_spark.session import ensure_py_deps
-
         url = self.data.url
         hdr = _exr_header(url)
         self.data.metadata.update(
@@ -2668,7 +2650,6 @@ class OpenEXRReader(BaseReader):
                 "compression": hdr["compression"],
             }
         )
-        ensure_py_deps(spark)
         schema = T.StructType(
             [
                 T.StructField("y", T.IntegerType()),
@@ -2699,7 +2680,7 @@ class OpenEXRReader(BaseReader):
                         )
                     yield pd.DataFrame(rows, columns=["y", "channel", "values"])
 
-        return mdf.mapInPandas(decode, schema=schema)
+        return map_in_pandas(mdf, decode, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -3262,9 +3243,6 @@ class E57PointsReader(BaseReader):
     def _read(self, spark, scan_idx: "int | None" = None, **kwargs):
         import json as _json
 
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
         url = self.data.url
         hdr, root = _e57_xml(url)
         self.data.metadata.update(hdr)
@@ -3318,4 +3296,4 @@ class E57PointsReader(BaseReader):
                         out.insert(0, "scan_idx", int(r.scan_idx))
                         yield out
 
-        return mdf.mapInPandas(decode, schema=schema)
+        return map_in_pandas(mdf, decode, schema=schema)

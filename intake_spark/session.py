@@ -10,6 +10,7 @@ timestamp semantics are stable across engines.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -131,30 +132,36 @@ def get_session(app_name: str = "intake_spark", cpus: int | None = None) -> Spar
     )
 
 
-_PYFILES_ADDED: set[tuple] = set()
+# SparkContexts the package zip has been added to. Keyed by the context
+# object: a repeat call sends no py4j command, and a stopped context's
+# entry goes with the object.
+_SHIPPED_TO: weakref.WeakSet = weakref.WeakSet()
 
 
 def ensure_py_deps(spark: SparkSession) -> None:
     """Make ``intake_spark`` importable on executor Python workers.
 
-    Any Python-UDF stage (mapInPandas / pandas_udf) pickles references to
-    functions in this package; executors must be able to import it even when
-    the driver process was launched outside the repo. Zips the package once
-    per SparkContext and ships it with ``addPyFile`` — works identically in
-    local mode and on a real cluster.
+    Any Python-function stage (mapInPandas, applyInPandasWithState,
+    pandas_udf, an RDD map) pickles references to functions in this
+    package; executors must be able to import it even when the driver
+    process was launched outside the repo. PySpark reads the include list
+    (``sc._python_includes``) when it WRAPS the function, not when the job
+    runs, so this must run before the stage is built: ``map_in_pandas``
+    does it for every mapInPandas stage, and each other stage calls this
+    in its own function (``tests/test_py_deps.py`` checks both). Zips the
+    package once per SparkContext and ships it with ``addPyFile``, which
+    works identically in local mode and on a real cluster.
     """
     sc = spark.sparkContext
-    # applicationId disambiguates a recycled id() after a context restart;
-    # the per-pid zip name avoids cross-process write races on a shared
-    # tempdir (two drivers rewriting one file mid-addPyFile)
-    key = (id(sc), sc.applicationId)
-    if key in _PYFILES_ADDED:
+    if sc in _SHIPPED_TO:
         return
     import tempfile
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
+    # per-pid zip name: two drivers on one tempdir never rewrite one file
+    # mid-addPyFile
     zpath = os.path.join(
         tempfile.gettempdir(), f"intake_spark_pyfiles_{os.getpid()}.zip"
     )
@@ -164,8 +171,16 @@ def ensure_py_deps(spark: SparkSession) -> None:
                 if f.endswith(".py"):
                     full = os.path.join(dirpath, f)
                     z.write(full, os.path.relpath(full, root))
-    spark.sparkContext.addPyFile(zpath)
-    _PYFILES_ADDED.add(key)
+    sc.addPyFile(zpath)
+    _SHIPPED_TO.add(sc)
+
+
+def map_in_pandas(df, fn, schema, **kw):
+    """``df.mapInPandas(fn, schema, **kw)`` with the package shipped to
+    the executors first (``ensure_py_deps``), so the stage can import
+    ``intake_spark`` on any session. The engine's only mapInPandas call."""
+    ensure_py_deps(df.sparkSession)
+    return df.mapInPandas(fn, schema, **kw)
 
 
 def local_frame(spark: SparkSession, rows, schema):

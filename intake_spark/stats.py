@@ -17,6 +17,7 @@ import pandas as pd
 
 from intake_spark import datatypes as dt
 from intake_spark.readers import BaseReader
+from intake_spark.session import map_in_pandas
 
 
 class Stata(dt.FileData):
@@ -51,9 +52,6 @@ class _PandasFileReader(BaseReader):
         if "*" not in url:
             pdf = type(self)._parse(open(url, "rb").read(), **kwargs)
             return spark.createDataFrame(pdf)
-        from intake_spark.session import ensure_py_deps
-
-        ensure_py_deps(spark)
         # driver-side glob resolves the file list once (no Spark job) and
         # feeds BOTH the schema probe and the distributed read, so the two
         # can't diverge (a glob that matches a subdirectory would otherwise
@@ -82,7 +80,7 @@ class _PandasFileReader(BaseReader):
                 for content in b["content"]:
                     yield parse_fn(content, **kw)
 
-        return files.select("content").mapInPandas(parse, schema=schema)
+        return map_in_pandas(files.select("content"), parse, schema=schema)
 
 
 class StataReader(_PandasFileReader):

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from intake_spark import datatypes as dt
 from intake_spark.readers import BaseReader
 from intake_spark.benchqueries import dsum
+from intake_spark.session import ensure_py_deps, map_in_pandas
 
 
 class KafkaStream(BaseReader):
@@ -223,8 +224,6 @@ def stateful_running_max(
     from pyspark.sql import types as T
     import pandas as pd
 
-    from intake_spark.session import ensure_py_deps
-
     ensure_py_deps(events.sparkSession)
 
     # the key keeps ITS OWN type — a hardcoded LongType crashed string
@@ -353,8 +352,6 @@ def _first_claim_band_flags(banded: DataFrame, id_col: str) -> DataFrame:
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from intake_spark.session import ensure_py_deps
-
     ensure_py_deps(df.sparkSession)
 
     out_schema = T.StructType(
@@ -459,6 +456,18 @@ def stream_phash_dup_flags(
 RETRY_COUNT = 0
 
 
+def _await_drain(q, timeout_s: float, what: str) -> None:
+    """Wait for an available-now query to finish. A query still running
+    after ``timeout_s`` is stopped (left running, it would keep filling
+    a sink the caller takes as complete) and raises TimeoutError."""
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"{what} did not drain within {timeout_s}s; stopped, so its "
+            "sink is partial"
+        )
+
+
 def drain_stream(start_fn, timeout_s: float = 300.0, what: str = "stream"):
     """Start and fully drain an available-now micro-stream, retrying (up
     to three times — 4 attempts total, 5/10/15 s growing backoff) when
@@ -492,11 +501,7 @@ def drain_stream(start_fn, timeout_s: float = 300.0, what: str = "stream"):
     for attempt in range(attempts):
         q = start_fn()
         try:
-            if not q.awaitTermination(timeout_s):
-                q.stop()
-                raise TimeoutError(
-                    f"{what} did not drain within {timeout_s}s"
-                )
+            _await_drain(q, timeout_s, what)
             return
         except Exception as exc:  # noqa: BLE001 — match on message below
             if attempt < attempts - 1 and any(
@@ -527,13 +532,7 @@ def run_stream_to_memory(
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(timeout_s):
-        # a silent timeout would hand the caller a PARTIAL memory table
-        # while the query keeps running unreferenced
-        q.stop()
-        raise TimeoutError(
-            f"stream {query_name!r} did not drain within {timeout_s}s"
-        )
+    _await_drain(q, timeout_s, f"stream {query_name!r}")
 
 
 def stream_file_source_demo(spark: SparkSession, src_dir: str, schema) -> DataFrame:
@@ -564,16 +563,8 @@ def stream_to_parquet(
         w = w.partitionBy(*partition_by)
     if available_now:
         q = w.trigger(availableNow=True).start()
-        finished = q.awaitTermination(timeout_s if timeout_s is not None else 300)
-        if not finished:
-            # stopping mid-drain leaves a PARTIAL sink that looks complete;
-            # surface it like run_stream_to_memory does
-            q.stop()
-            raise TimeoutError(
-                f"stream_to_parquet: available-now drain into {path!r} did "
-                f"not finish within {timeout_s or 300}s — sink is partial"
-            )
-        q.stop()
+        _await_drain(q, 300.0 if timeout_s is None else timeout_s,
+                     f"stream_to_parquet into {path!r}")
         return q
     return w.start()
 
@@ -637,14 +628,8 @@ def stream_to_delta(
     )
     if available_now:
         q = w.trigger(availableNow=True).start()
-        finished = q.awaitTermination(timeout_s if timeout_s is not None else 300)
-        if not finished:
-            q.stop()
-            raise TimeoutError(
-                f"stream_to_delta: available-now drain into {path!r} did "
-                f"not finish within {timeout_s or 300}s — sink is partial"
-            )
-        q.stop()
+        _await_drain(q, 300.0 if timeout_s is None else timeout_s,
+                     f"stream_to_delta into {path!r}")
         return q
     return w.start()
 
@@ -699,8 +684,6 @@ def stream_winnow_dup_flags(
     import pandas as pd
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from intake_spark.session import ensure_py_deps
 
     ensure_py_deps(df.sparkSession)
 
@@ -844,8 +827,6 @@ def stream_semantic_dup_flags(
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from intake_spark.session import ensure_py_deps
-
     ensure_py_deps(df.sparkSession)
 
     assigned = seeded_clusters(df, id_col, vec_col, n_seeds, seeds=seeds).select(
@@ -953,9 +934,7 @@ def stream_decontaminate_flags(
     import pandas as pd
 
     from intake_spark.llm.dedup import shingles
-    from intake_spark.session import ensure_py_deps
 
-    ensure_py_deps(df.sparkSession)
     distinct_sh = (
         shingles(benchmark, id_col, text_col, k)
         .select("shingle")
@@ -1004,7 +983,7 @@ def stream_decontaminate_flags(
                 }
             )
 
-    return df.mapInPandas(run, schema)
+    return map_in_pandas(df, run, schema)
 
 
 def stream_incremental_dedup_flags(
@@ -1037,9 +1016,7 @@ def stream_incremental_dedup_flags(
     import pandas as pd
 
     from intake_spark.llm.dedup import shingles
-    from intake_spark.session import ensure_py_deps
 
-    ensure_py_deps(df.sparkSession)
     # persisted: counted for the cap, then collected — one scan
     arch_sh = shingles(archive, id_col, text_col, k).persist()
     n_arch = arch_sh.count()
@@ -1118,4 +1095,4 @@ def stream_incremental_dedup_flags(
                 }
             )
 
-    return df.mapInPandas(run, schema)
+    return map_in_pandas(df, run, schema)

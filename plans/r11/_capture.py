@@ -26,9 +26,10 @@ from intake_spark.session import get_session  # noqa: E402
 spark = get_session("intake_spark_plan_capture")
 spark.sparkContext.setLogLevel("ERROR")
 
-from intake_spark.llm.queries import prewarm_shared  # noqa: E402
+from intake_spark.llm.queries import shared, shared_labels  # noqa: E402
 
-prewarm_shared(spark, sf_dir)
+for label in shared_labels():
+    shared(spark, sf_dir, label)
 
 queries = get_queries()
 names = sorted(queries)

@@ -1581,3 +1581,26 @@ def test_dicom_rle_truncation_named_errors():
         _dicom_rle_decode(b"\x01\x00", 2, 2, 8, 1, False)
     with _pytest.raises(ValueError, match="truncated"):
         packbits_decode(b"\xfe")  # repeat marker, no fill byte
+
+
+def test_single_file_url_is_read_as_given(spark, tmp_path):
+    """A URL that names one file is read whatever its spelling: only a
+    directory listing is filtered by the reader's glob. Filtered against
+    ``*.md`` / ``*.kml``, ``notes.markdown`` (a Markdown file) and
+    ``PLACES.KML`` were each read as 0 rows."""
+    from intake_spark.documents import Markdown, MarkdownReader
+    from intake_spark.geo import KML as KmlType
+    from intake_spark.geo import KMLReader
+
+    md = tmp_path / "notes.markdown"
+    md.write_text("# Title\n\nbody\n")
+    reader = Markdown(url=str(md)).to_reader()
+    assert isinstance(reader, MarkdownReader)
+    assert [r.title for r in reader.read(spark=spark).collect()] == ["Title"]
+
+    kml = tmp_path / "PLACES.KML"
+    kml.write_text(KML)
+    rows = KMLReader(data=KmlType(url=str(kml))).read(spark=spark).collect()
+    assert {r.name for r in rows} == {"pin", "line"}
+    # the same file in a directory listing is still filtered out
+    assert KMLReader(data=KmlType(url=str(tmp_path))).read(spark=spark).count() == 0

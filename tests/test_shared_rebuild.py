@@ -92,32 +92,6 @@ def test_specs_cover_every_prewarm_label(spark):
         assert callable(build), label
 
 
-def test_prewarm_shared_reports_a_failed_build(spark):
-    from intake_spark.llm import queries as q
-
-    saved = dict(q._SHARED_BUILDERS)
-    try:
-        q._SHARED_BUILDERS.clear()
-
-        @q.shared_table("shared:t_boom")
-        def _boom(spark, sf_dir):
-            raise ValueError("no documents table")
-
-        @q.shared_table("shared:t_ok")
-        def _ok(spark, sf_dir):
-            return sf_dir
-
-        got = q.prewarm_shared(spark, "t_dir")
-        # the failure is reported under its label, and the label after
-        # it still builds
-        assert got["shared:t_boom"] == "ValueError: no documents table"
-        assert isinstance(got["shared:t_ok"], float)
-    finally:
-        q._SHARED_BUILDERS.clear()
-        q._SHARED_BUILDERS.update(saved)
-        q._SHARED_BUILT.pop("shared:t_ok", None)
-
-
 def test_third_sf_dir_evicts_oldest_entry_of_that_label_only(
     spark, throwaway
 ):
