@@ -94,6 +94,7 @@ def thumbnail(df: DataFrame, size: int = 8) -> list[list[float]] | None:
     the stdlib decoders); anything else → None. Grayscale, nearest-neighbor
     downsampled to at most ``size``×``size``."""
     import numpy as np
+    from pyspark.sql import types as T
 
     from intake_spark.llm.multimodal import decode_image, resize_nearest
 
@@ -111,7 +112,9 @@ def thumbnail(df: DataFrame, size: int = 8) -> list[list[float]] | None:
                     arr = arr.reshape(arr.shape[0], arr.shape[1], -1).mean(axis=2)
             else:
                 arr = vals.reshape(1, -1)
-        elif "content" in cols:
+        elif "content" in cols and isinstance(
+            df.schema["content"].dataType, T.BinaryType
+        ):
             row = df.select("content").first()
             if row is None:
                 return None
@@ -123,7 +126,10 @@ def thumbnail(df: DataFrame, size: int = 8) -> list[list[float]] | None:
             arr, min(size, arr.shape[0]), min(size, arr.shape[1])
         )
         return [[float(v) for v in r] for r in out]
-    except Exception:
+    except (ValueError, NotImplementedError, OSError):
+        # bytes that are not a decodable image (the codec gates raise
+        # NotImplementedError, malformed images ValueError/OSError) or a
+        # chunk whose values do not fit its shape: no thumbnail
         return None
 
 

@@ -38,6 +38,13 @@ from intake_spark.compress import read_uvarint, uvarint
 from intake_spark.readers import BaseReader
 from intake_spark.session import ensure_py_deps, local_frame, map_in_pandas
 
+
+class ConcurrentWriteError(FileExistsError):
+    """A concurrent writer committed the table version this write was
+    about to claim. Commits are put-if-absent (``open(..., 'x')``), so
+    the version file already exists: the loser removes what it staged
+    and raises; a retry against the new table state can succeed."""
+
 # --------------------------------------------------------------------------
 # Avro binary decoding (spec: https://avro.apache.org/docs/ spec — varint
 # zigzag longs, little-endian floats, length-prefixed bytes/strings)
@@ -314,6 +321,47 @@ def decode_avro_file(path: str) -> list[dict]:
             for _ in range(count):
                 out.append(_avro_decode(buf, schema, dict(names)))
     return out
+
+
+def write_avro_ocf(
+    path: str,
+    schema: dict,
+    count: int,
+    body: bytes,
+    sync: bytes,
+    codec: str = "null",
+    meta: dict | None = None,
+) -> None:
+    """THE Avro OCF writer: one object container file holding ``count``
+    records already encoded in ``body`` as one block — the ``Obj\\x01``
+    header, the metadata map (writer schema, codec, then ``meta``), the
+    16-byte ``sync`` marker, and the block. The inverse of
+    :func:`decode_avro_file`. ``codec`` is "null", "deflate" (raw
+    deflate) or "snappy", whose blocks end with a big-endian CRC32 of
+    the uncompressed data (Avro spec)."""
+    if codec == "deflate":
+        co = zlib.compressobj(6, zlib.DEFLATED, -15)
+        body = co.compress(body) + co.flush()
+    elif codec == "snappy":
+        from intake_spark.compress import snappy_compress
+
+        crc = zlib.crc32(body) & 0xFFFFFFFF
+        body = snappy_compress(body) + crc.to_bytes(4, "big")
+    elif codec != "null":
+        raise ValueError(f"unsupported avro codec {codec!r} (null/deflate/snappy only)")
+    hdr_meta = {b"avro.schema": json.dumps(schema).encode(), b"avro.codec": codec.encode()}
+    for k, v in (meta or {}).items():
+        hdr_meta[k.encode() if isinstance(k, str) else k] = (
+            v.encode() if isinstance(v, str) else v
+        )
+    out = bytearray(b"Obj\x01")
+    out += _avro_zz(len(hdr_meta))
+    for k, v in hdr_meta.items():
+        out += _avro_zz(len(k)) + k + _avro_zz(len(v)) + v
+    out += b"\x00" + sync
+    out += _avro_zz(count) + _avro_zz(len(body)) + bytes(body) + sync
+    with open(path, "wb") as f:
+        f.write(bytes(out))
 
 
 def _avro_to_spark_type(schema, names: dict):
@@ -819,6 +867,189 @@ def delta_checkpoint(url: str, spark=None) -> int:
     return version
 
 
+class StagedWrite:
+    """The data files one :func:`stage_parquet` call moved into a table:
+    ``files`` holds (path relative to ``root``, decoded hive partition
+    values, size in bytes), sorted by path; ``dirs`` holds the
+    directories the move created."""
+
+    def __init__(self, root: str):
+        self.root = root
+        self.files: list[tuple[str, dict, int]] = []
+        self.dirs: list[str] = []
+
+    def discard(self) -> None:
+        """Undo the move-in: delete the moved files, then each directory
+        the move created (deepest first) if it is empty. A directory
+        that was already there is never removed."""
+        for rel, _pvals, _size in self.files:
+            p = os.path.join(self.root, rel)
+            if os.path.exists(p):
+                os.remove(p)
+        for d in sorted(set(self.dirs), key=len, reverse=True):
+            if os.path.isdir(d) and not os.listdir(d):
+                os.rmdir(d)
+
+
+def stage_parquet(
+    df,
+    root: str,
+    partition_by=(),
+    options: dict | None = None,
+    dest: str = "",
+    file_prefix: str = "",
+    key_prefix: str = "",
+) -> StagedWrite:
+    """THE staged write behind every jar-free lakehouse sink: one
+    distributed parquet write of ``df`` into ``<root>/_staging_<uuid>``,
+    then each data file moves to
+    ``<root>/<dest><partition dirs>/<file_prefix><name>`` and the stage
+    is removed. ``key_prefix`` is stripped from partition-directory
+    keys (``to_iceberg`` partitions by derived ``__ipart__<name>``
+    columns). Partition values decode with Spark's own rules
+    (:func:`unescape_hive_segment`); directory names keep Spark's
+    escaping. A failure part-way through discards what was moved."""
+    import shutil
+    import uuid
+
+    stage = os.path.join(root, f"_staging_{uuid.uuid4().hex[:12]}")
+    out = StagedWrite(root)
+    try:
+        w = df.write.mode("overwrite").options(**(options or {}))
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(stage)
+        for dirpath, _dirs, files in os.walk(stage):
+            rel_dir = os.path.relpath(dirpath, stage)
+            segs, pvals = [], {}
+            for seg in [] if rel_dir == "." else rel_dir.split(os.sep):
+                k, eq, v = seg.partition("=")
+                if eq:
+                    k = k.removeprefix(key_prefix)
+                    pvals[k] = unescape_hive_segment(v)
+                    seg = f"{k}={v}"
+                segs.append(seg)
+            for fn in files:
+                if not fn.endswith(".parquet"):
+                    continue
+                rel = dest + "/".join(segs + [file_prefix + fn])
+                dst = os.path.join(root, rel)
+                d = os.path.dirname(dst)
+                while d != root and not os.path.isdir(d):
+                    out.dirs.append(d)
+                    d = os.path.dirname(d)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.replace(os.path.join(dirpath, fn), dst)
+                out.files.append((rel, pvals, os.path.getsize(dst)))
+    except BaseException:
+        out.discard()
+        raise
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+    out.files.sort(key=lambda f: f[0])
+    return out
+
+
+def delta_commit(
+    root: str,
+    version: int,
+    actions: list[dict],
+    staged: StagedWrite | None = None,
+    operation: str = "write",
+) -> None:
+    """THE Delta commit: ``actions`` become ``_delta_log/<version>.json``,
+    created put-if-absent as the protocol requires. When a concurrent
+    writer claimed ``version`` first, the winner's commit stays as it
+    is: this commit's staged files are discarded and
+    :class:`ConcurrentWriteError` raises."""
+    log = os.path.join(root, "_delta_log")
+    os.makedirs(log, exist_ok=True)
+    try:
+        with open(os.path.join(log, f"{version:020d}.json"), "x") as f:
+            f.write("".join(json.dumps(a) + "\n" for a in actions))
+    except FileExistsError:
+        if staged is not None:
+            staged.discard()
+        raise ConcurrentWriteError(
+            f"{operation} lost the commit race for version {version} of "
+            f"{root}; its staged files were removed — re-run it against "
+            "the new table state"
+        ) from None
+
+
+def delta_scan(spark, root: str, schema, part_cols: list[str], files: dict):
+    """THE Delta file-set scan: ``files`` maps each data file's disk path
+    (relative to ``root``) to its add action. The log's partitionValues
+    are authoritative; the hive-style dir layout is only a convention.
+    When every path encodes its own partition values hive-style (the
+    layout every mainstream writer produces), read via basePath: the
+    full table schema pins partition column types so filters prune
+    statically at the file listing. Otherwise read each partition group
+    with literal columns (constant-folded, so partition filters still
+    prune whole branches at plan time). Deletion vectors on the adds
+    apply as a LEFT ANTI join on ``_metadata.row_index``."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    paths = [os.path.join(root, p) for p in sorted(files)]
+    names = [f.name for f in schema.fields]
+    dv_adds = [
+        (os.path.join(root, p), a["deletionVector"])
+        for p, a in sorted(files.items())
+        if a.get("deletionVector")
+    ]
+
+    def with_dvs(out):
+        if not dv_adds:
+            return out
+        out = out.withColumn(
+            "__file",
+            F.regexp_replace(F.col("_metadata.file_path"), _FILE_URI_RE, "/"),
+        ).withColumn("__pos", F.col("_metadata.row_index"))
+        return _apply_delta_dvs(spark, out, dv_adds, root, names)
+
+    if not part_cols:
+        return with_dvs(spark.read.schema(schema).parquet(*paths))
+
+    def hive_consistent(p: str, pv: dict) -> bool:
+        segs = dict(s.split("=", 1) for s in p.split("/")[:-1] if "=" in s)
+        # __HIVE_DEFAULT_PARTITION__ decodes to None and must pair with a
+        # null partitionValues entry (log null != empty string)
+        return all(
+            c in segs and unescape_hive_segment(segs[c]) == pv.get(c)
+            for c in part_cols
+        )
+
+    if all(
+        hive_consistent(p, a.get("partitionValues") or {})
+        for p, a in files.items()
+    ):
+        out = spark.read.schema(schema).option("basePath", root).parquet(*paths)
+        return with_dvs(out).select(*names)
+    if dv_adds:
+        raise ValueError(
+            "Delta deletion vectors on a non-hive-laid-out partitioned "
+            "table are not supported (no mainstream writer produces "
+            "this combination)"
+        )
+    data_schema = T.StructType([f for f in schema.fields if f.name not in part_cols])
+    groups: dict[tuple, list[str]] = {}
+    for p, a in files.items():
+        pv = a.get("partitionValues") or {}
+        groups.setdefault(tuple(pv.get(c) for c in part_cols), []).append(
+            os.path.join(root, p)
+        )
+    out = None
+    # str() sort key: a null partition value makes tuples unorderable
+    for pv, gpaths in sorted(groups.items(), key=lambda kv: str(kv[0])):
+        g = spark.read.schema(data_schema).parquet(*sorted(gpaths))
+        for c, v in zip(part_cols, pv):
+            g = g.withColumn(c, F.lit(v).cast(schema[c].dataType))
+        g = g.select(*names)
+        out = g if out is None else out.unionByName(g)
+    return out
+
+
 class DeltaLakeReader(BaseReader):
     """Delta table → DataFrame by replaying ``_delta_log`` stdlib-side
     (parity: SparkDeltaLake, reference readers.py:550, which needs the
@@ -893,87 +1124,14 @@ class DeltaLakeReader(BaseReader):
         self.data.metadata.update(
             {"partition_columns": lpart_cols, "n_files": len(adds)}
         )
-
-        def _done(df):
-            return _delta_cm_rename(df, logical_schema) if mapped else df
-
         if not adds:
             return local_frame(spark, [], logical_schema)
         from urllib.parse import unquote
 
         # add.path is RFC 2396 URI-encoded per the Delta protocol
         rel = {unquote(p): a for p, a in adds.items()}
-        paths = [os.path.join(root, p) for p in sorted(rel)]
-        dv_adds = [
-            (os.path.join(root, p), a["deletionVector"])
-            for p, a in sorted(rel.items())
-            if a.get("deletionVector")
-        ]
-        from pyspark.sql import functions as F
-
-        def _with_dvs(out):
-            if not dv_adds:
-                return out
-            out = out.withColumn(
-                "__file",
-                F.regexp_replace(F.col("_metadata.file_path"), _FILE_URI_RE, "/"),
-            ).withColumn("__pos", F.col("_metadata.row_index"))
-            return _apply_delta_dvs(
-                spark, out, dv_adds, root, [f.name for f in schema.fields]
-            )
-
-        if not part_cols:
-            return _done(_with_dvs(spark.read.schema(schema).parquet(*paths)))
-        # The log's partitionValues are authoritative; the hive-style dir
-        # layout is only a convention. When every path encodes its own
-        # partition values hive-style (the layout every mainstream writer
-        # produces), read via basePath: the FULL table schema pins partition
-        # column types so filters prune statically at the file listing.
-        # Otherwise fall back to per-partition-group reads with literal
-        # columns (constant-folded, so partition filters still prune whole
-        # branches at plan time).
-        def hive_consistent(p: str, pv: dict) -> bool:
-            segs = dict(
-                s.split("=", 1) for s in p.split("/")[:-1] if "=" in s
-            )
-            for c in part_cols:
-                if c not in segs:
-                    return False
-                # Spark's own dir unescape; __HIVE_DEFAULT_PARTITION__
-                # decodes to None and must pair with a null
-                # partitionValues entry (log null != empty string)
-                if unescape_hive_segment(segs[c]) != pv.get(c):
-                    return False
-            return True
-
-        if all(
-            hive_consistent(p, a.get("partitionValues") or {}) for p, a in rel.items()
-        ):
-            out = spark.read.schema(schema).option("basePath", root).parquet(*paths)
-            return _done(_with_dvs(out).select(*[f.name for f in schema.fields]))
-        if dv_adds:
-            raise ValueError(
-                "Delta deletion vectors on a non-hive-laid-out partitioned "
-                "table are not supported (no mainstream writer produces "
-                "this combination)"
-            )
-        data_schema = T.StructType([f for f in schema.fields if f.name not in part_cols])
-        groups: dict[tuple, list[str]] = {}
-        for p, a in rel.items():
-            pv = a.get("partitionValues") or {}
-            groups.setdefault(tuple(pv.get(c) for c in part_cols), []).append(
-                os.path.join(root, p)
-            )
-        out = None
-        # str() sort key: a null partition value makes tuples unorderable
-        for pv, gpaths in sorted(groups.items(), key=lambda kv: str(kv[0])):
-            g = spark.read.schema(data_schema).parquet(*sorted(gpaths))
-            for c, v in zip(part_cols, pv):
-                f = schema[c]
-                g = g.withColumn(c, F.lit(v).cast(f.dataType))
-            g = g.select(*[f.name for f in schema.fields])
-            out = g if out is None else out.unionByName(g)
-        return _done(out)
+        out = delta_scan(spark, root, schema, part_cols, rel)
+        return _delta_cm_rename(out, logical_schema) if mapped else out
 
 
 _CM_KEY = "delta.columnMapping.physicalName"
@@ -1391,6 +1549,74 @@ def _iceberg_to_spark_type(t):
     raise ValueError(f"unknown iceberg type {t!r}")
 
 
+def iceberg_metadata(root: str) -> "tuple[int, str | None, dict | None]":
+    """THE Iceberg current-metadata load: ``(version, path, metadata)``,
+    or ``(0, None, None)`` for a table with no metadata file yet.
+    ``version-hint.text`` names the version when present; a hint that
+    lags (a writer stopped between its commit and the hint update)
+    advances past every ``v<n+1>.metadata.json`` on disk. Without a hint
+    the highest-numbered ``*.metadata.json`` is current."""
+    mdir = os.path.join(root, "metadata")
+    hint = os.path.join(mdir, "version-hint.text")
+    if os.path.exists(hint):
+        with open(hint) as f:
+            v = int(f.read().strip())
+        while os.path.exists(os.path.join(mdir, f"v{v + 1}.metadata.json")):
+            v += 1
+        name = f"v{v}.metadata.json"
+    else:
+        cands = [
+            f for f in (os.listdir(mdir) if os.path.isdir(mdir) else [])
+            if f.endswith(".metadata.json")
+        ]
+        if not cands:
+            return 0, None, None
+
+        def _meta_key(name: str):
+            # numeric version sort: 'v10' > 'v9' (lexicographic gets
+            # this wrong); '00010-uuid' style is zero-padded already
+            head = name.split(".", 1)[0].split("-", 1)[0].lstrip("v")
+            return (int(head), name) if head.isdigit() else (-1, name)
+
+        name = max(cands, key=_meta_key)
+        v = _meta_key(name)[0]
+    path = os.path.join(mdir, name)
+    with open(path) as f:
+        return v, path, json.load(f)
+
+
+def iceberg_commit(
+    root: str,
+    version: int,
+    meta: dict,
+    staged: StagedWrite | None = None,
+    written: "list[str] | tuple" = (),
+) -> None:
+    """THE Iceberg commit: ``meta`` becomes ``metadata/v<version>.metadata.json``,
+    created put-if-absent, and then ``version-hint.text`` points at it.
+    When a concurrent writer claimed ``version`` first, the winner's file
+    stays byte-identical: this commit's staged data files and the
+    manifests / manifest lists it wrote (``written``) are deleted and
+    :class:`ConcurrentWriteError` raises."""
+    mdir = os.path.join(root, "metadata")
+    try:
+        with open(os.path.join(mdir, f"v{version}.metadata.json"), "x") as f:
+            json.dump(meta, f)
+    except FileExistsError:
+        for p in written:
+            if os.path.exists(p):
+                os.remove(p)
+        if staged is not None:
+            staged.discard()
+        raise ConcurrentWriteError(
+            f"Iceberg commit of {root} lost the commit race for version "
+            f"{version}; its new files were removed — re-run it against "
+            "the new table state"
+        ) from None
+    with open(os.path.join(mdir, "version-hint.text"), "w") as f:
+        f.write(str(version))
+
+
 class IcebergTableReader(BaseReader):
     """Iceberg table → DataFrame, stdlib-only (parity: SparkIceberg; the
     reference needs the iceberg-spark runtime jar). Walks table metadata
@@ -1419,25 +1645,9 @@ class IcebergTableReader(BaseReader):
         mdir = os.path.join(root, "metadata")
         if not os.path.isdir(mdir):
             raise ValueError(f"{root} has no metadata/ dir — not an Iceberg table")
-        hint = os.path.join(mdir, "version-hint.text")
-        if os.path.exists(hint):
-            with open(hint) as f:
-                v = f.read().strip()
-            meta_path = os.path.join(mdir, f"v{v}.metadata.json")
-        else:
-            cands = [f for f in os.listdir(mdir) if f.endswith(".metadata.json")]
-            if not cands:
-                raise ValueError(f"no *.metadata.json under {mdir}")
-
-            def _meta_key(name: str):
-                # numeric version sort: 'v10' > 'v9' (lexicographic gets
-                # this wrong); '00010-uuid' style is zero-padded already
-                head = name.split(".", 1)[0].split("-", 1)[0].lstrip("v")
-                return (int(head), name) if head.isdigit() else (-1, name)
-
-            meta_path = os.path.join(mdir, max(cands, key=_meta_key))
-        with open(meta_path) as f:
-            meta = json.load(f)
+        _version, meta_path, meta = iceberg_metadata(root)
+        if meta is None:
+            raise ValueError(f"no *.metadata.json under {mdir}")
         loc = meta.get("location", root).rstrip("/").removeprefix("file://")
 
         def local(p: str) -> str:
@@ -2317,8 +2527,8 @@ def _avro_logical_raw(lt: str, value, schema):
 
 def write_avro_records(path: str, schema: dict, records: list, meta: dict | None = None) -> None:
     """Driver-side Avro OCF writer for small metadata files (Iceberg
-    manifests / manifest lists) — null codec, one block, the inverse of
-    :func:`decode_avro_file` and round-tripped against it in tests."""
+    manifests / manifest lists) — null codec, one block, round-tripped
+    against :func:`decode_avro_file` in tests."""
     import hashlib
 
     body = bytearray()
@@ -2327,16 +2537,4 @@ def write_avro_records(path: str, schema: dict, records: list, meta: dict | None
     for rec in records:
         _avro_encode_datum(schema, rec, body, dict(names))
     sync = hashlib.md5(path.encode()).digest()
-    hdr_meta = {b"avro.schema": json.dumps(schema).encode(), b"avro.codec": b"null"}
-    for k, v in (meta or {}).items():
-        hdr_meta[k.encode() if isinstance(k, str) else k] = (
-            v.encode() if isinstance(v, str) else v
-        )
-    out = bytearray(b"Obj\x01")
-    out += _avro_zz(len(hdr_meta))
-    for k, v in hdr_meta.items():
-        out += _avro_zz(len(k)) + k + _avro_zz(len(v)) + v
-    out += b"\x00" + sync
-    out += _avro_zz(len(records)) + _avro_zz(len(body)) + bytes(body) + sync
-    with open(path, "wb") as f:
-        f.write(bytes(out))
+    write_avro_ocf(path, schema, len(records), bytes(body), sync, meta=meta)

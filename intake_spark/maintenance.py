@@ -3,19 +3,28 @@ vacuum, snapshot expiry — the operational layer a 100 TB table needs and
 the reference delegates to delta-rs / the Iceberg runtime.
 
 Design notes:
+- Every write here goes through the same ``lakehouse`` primitives as the
+  sinks: ``stage_parquet`` (staged write, then move-in), and the
+  put-if-absent ``delta_commit`` / ``iceberg_commit``. Losing a commit
+  race removes what this operation staged and raises
+  ``ConcurrentWriteError`` (re-exported here); the table stays as the
+  winner left it. Table state comes from ``delta_log_state`` and
+  ``iceberg_metadata``.
 - ``delta_optimize`` bin-packs small files per partition group (or
   Z-order-rewrites every group) and commits ``remove``+``add`` with
   ``dataChange: false`` — the protocol's compaction form, so streaming
-  consumers skip the commit. Deletion-vector tables take the full
-  rewrite path (REORG/PURGE): the DV-aware reader materializes the live
-  rows, the new files carry no DVs.
+  consumers skip the commit. The files are read through the reader's
+  own ``delta_scan``. Deletion-vector tables take the full rewrite path
+  (REORG/PURGE): the DV-aware reader materializes the live rows, the new
+  files carry no DVs.
 - ``delta_vacuum`` deletes data files that are BOTH unreferenced by the
   current state and older than the retention window (mtime) — the
   standard two-condition rule that keeps time travel within retention
   working.
-- ``iceberg_expire_snapshots`` drops all but the newest N snapshots from
-  the metadata and deletes manifests/manifest-lists/data files reachable
-  only from expired snapshots.
+- ``iceberg_expire_snapshots`` commits metadata without the expired
+  snapshots first, and only then deletes manifests/manifest-lists/data
+  files reachable only from them — so no committed metadata ever names
+  a deleted file.
 - ``iceberg_compact`` rewrites the current snapshot through
   ``to_iceberg`` (same partition spec, optional Z-order), which keeps
   prior snapshots time-travelable.
@@ -32,11 +41,8 @@ import math
 import os
 import time
 
-
-class ConcurrentWriteError(RuntimeError):
-    """A concurrent writer committed the Delta log version this
-    operation was about to claim (the ``open(..., 'x')`` commit is the
-    optimistic-concurrency primitive; losing the race is retryable)."""
+from intake_spark import lakehouse
+from intake_spark.lakehouse import ConcurrentWriteError  # noqa: F401
 
 
 def _zorder_sorted(df, zorder_by: list[str], n_out: int, part_cols: list[str],
@@ -104,7 +110,6 @@ def delta_optimize(
     from urllib.parse import quote as _quote
     from urllib.parse import unquote as _unquote
 
-    from intake_spark.lakehouse import delta_log_state
     from intake_spark.session import get_session
 
     spark = spark or get_session()
@@ -112,7 +117,7 @@ def delta_optimize(
     log = os.path.join(root, "_delta_log")
     if not os.path.isdir(log):
         raise ValueError(f"{root} has no _delta_log — not a Delta table")
-    state = delta_log_state(log, spark)
+    state = lakehouse.delta_log_state(log, spark)
     adds, meta, version = state["adds"], state["meta"], state["version"]
     if meta is None:
         raise ValueError("Delta log contains no metaData action")
@@ -144,11 +149,10 @@ def delta_optimize(
     if not rewrite:
         return {"removed": 0, "added": 0, "version": version}
 
-    rel_paths = [_unquote(p) for p in rewrite]
-    abs_paths = [os.path.join(root, p) for p in rel_paths]
     total_bytes = sum(
-        int(adds[p].get("size") or 0) or os.path.getsize(ap)
-        for p, ap in zip(rewrite, abs_paths)
+        int(adds[p].get("size") or 0)
+        or os.path.getsize(os.path.join(root, _unquote(p)))
+        for p in rewrite
     )
     n_out = max(1, math.ceil(total_bytes / target_file_size))
 
@@ -156,59 +160,15 @@ def delta_optimize(
         # REORG/PURGE: the DV-aware reader materializes live rows only.
         # Correct only as a FULL rewrite, which `rewrite` already is.
         from intake_spark import datatypes as dt
-        from intake_spark.lakehouse import DeltaLakeReader
 
-        df = DeltaLakeReader(data=dt.DeltalakeTable(url=root)).read(spark=spark)
+        df = lakehouse.DeltaLakeReader(
+            data=dt.DeltalakeTable(url=root)
+        ).read(spark=spark)
     else:
-        if part_cols:
-            # The log's partitionValues are authoritative; basePath hive
-            # discovery is only safe when every rewrite path encodes the
-            # SAME values hive-style (the reader makes the identical
-            # check). A non-hive table read via basePath would rewrite
-            # with null partition columns — silent partition loss.
-            from intake_spark.lakehouse import unescape_hive_segment as _uh
-
-            def hive_consistent(relp: str, pv: dict) -> bool:
-                segs = dict(
-                    s.split("=", 1) for s in relp.split("/")[:-1] if "=" in s
-                )
-                return all(
-                    c in segs and _uh(segs[c]) == pv.get(c)
-                    for c in part_cols
-                )
-
-            if all(
-                hive_consistent(rp, adds[p].get("partitionValues") or {})
-                for p, rp in zip(rewrite, rel_paths)
-            ):
-                df = (
-                    spark.read.schema(schema)
-                    .option("basePath", root)
-                    .parquet(*abs_paths)
-                )
-            else:
-                from pyspark.sql import functions as F
-
-                data_schema = T.StructType(
-                    [f for f in schema.fields if f.name not in part_cols]
-                )
-                pgroups: dict[tuple, list[str]] = {}
-                for p, ap in zip(rewrite, abs_paths):
-                    pv = adds[p].get("partitionValues") or {}
-                    pgroups.setdefault(
-                        tuple(pv.get(c) for c in part_cols), []
-                    ).append(ap)
-                df = None
-                for pv, gpaths in sorted(
-                    pgroups.items(), key=lambda kv: str(kv[0])
-                ):
-                    g = spark.read.schema(data_schema).parquet(*sorted(gpaths))
-                    for c, v in zip(part_cols, pv):
-                        g = g.withColumn(c, F.lit(v).cast(schema[c].dataType))
-                    g = g.select(*[f.name for f in schema.fields])
-                    df = g if df is None else df.unionByName(g)
-        else:
-            df = spark.read.schema(schema).parquet(*abs_paths)
+        df = lakehouse.delta_scan(
+            spark, root, schema, part_cols,
+            {_unquote(p): adds[p] for p in rewrite},
+        )
 
     if zorder_by:
         df = _zorder_sorted(df, zorder_by, n_out, part_cols, bits)
@@ -217,100 +177,37 @@ def delta_optimize(
     else:
         df = df.repartition(n_out)
 
-    # stage-write + move in (same convention as to_delta)
-    import shutil
-    import uuid as _uuid
-
-    from intake_spark.lakehouse import unescape_hive_segment
-
-    stage = os.path.join(root, f"_staging_{_uuid.uuid4().hex[:12]}")
-    w = df.write.mode("overwrite")
-    if part_cols:
-        w = w.partitionBy(*part_cols)
-    w.parquet(stage)
-    new_adds = []
-    created_dirs: list[str] = []  # dirs THIS op created, for lost-race cleanup
+    staged = lakehouse.stage_parquet(df, root, part_cols)
     now_ms = int(time.time() * 1000)
-    for dirpath, _dirs, files in os.walk(stage):
-        rel_dir = os.path.relpath(dirpath, stage)
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            rel = fn if rel_dir == "." else f"{rel_dir}/{fn}"
-            dst = os.path.join(root, rel)
-            d = os.path.dirname(dst)
-            missing = []
-            while d != root and not os.path.isdir(d):
-                missing.append(d)
-                d = os.path.dirname(d)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            created_dirs.extend(missing)
-            os.replace(os.path.join(dirpath, fn), dst)
-            pvals = {}
-            if rel_dir != ".":
-                for seg in rel_dir.split(os.sep):
-                    k, eq, v = seg.partition("=")
-                    if eq:
-                        pvals[k] = unescape_hive_segment(v)
-            new_adds.append(
-                {
-                    "path": _quote(rel.replace(os.sep, "/"), safe="/"),
-                    "partitionValues": pvals,
-                    "size": os.path.getsize(dst),
-                    "modificationTime": now_ms,
-                    "dataChange": False,
-                }
-            )
-    shutil.rmtree(stage, ignore_errors=True)
-    new_adds.sort(key=lambda a: a["path"])
-
-    lines = []
-    for p in rewrite:
-        lines.append(json.dumps({"remove": {
-            "path": p, "deletionTimestamp": now_ms, "dataChange": False,
-        }}))
-    for a in new_adds:
-        lines.append(json.dumps({"add": a}))
-    lines.append(json.dumps({"commitInfo": {
+    actions = [
+        {"remove": {"path": p, "deletionTimestamp": now_ms, "dataChange": False}}
+        for p in rewrite
+    ]
+    actions += [
+        {"add": {
+            "path": _quote(rel, safe="/"),
+            "partitionValues": pvals,
+            "size": size,
+            "modificationTime": now_ms,
+            "dataChange": False,
+        }}
+        for rel, pvals, size in staged.files
+    ]
+    actions.append({"commitInfo": {
         "timestamp": now_ms,
         "operation": "OPTIMIZE",
         "operationParameters": {
             "zOrderBy": json.dumps(zorder_by or []),
             "targetSize": target_file_size,
         },
-    }}))
-    new_version = version + 1
-    try:
-        with open(os.path.join(log, f"{new_version:020d}.json"), "x") as f:
-            f.write("\n".join(lines) + "\n")
-    except FileExistsError:
-        # A concurrent writer claimed this version. The rewritten files
-        # were already moved into the table root but are referenced by
-        # no commit — delete them (the ORIGINAL files are untouched, so
-        # the table stays intact at the winner's version) instead of
-        # leaving unreferenced orphans behind.
-        for a in new_adds:
-            ap = os.path.join(root, _unquote(a["path"]))
-            if os.path.exists(ap):
-                os.remove(ap)
-        # Only prune directories THIS operation created (deepest first) —
-        # never sweep the whole root, which could delete pre-existing
-        # empty partition directories that belong to the table.
-        for d in sorted(set(created_dirs), key=len, reverse=True):
-            try:
-                if os.path.isdir(d) and not os.listdir(d):
-                    os.rmdir(d)
-            except OSError:
-                pass
-        raise ConcurrentWriteError(
-            f"delta_optimize lost the commit race for version "
-            f"{new_version} of {root}; staged files were cleaned up — "
-            "re-run delta_optimize against the new table state"
-        ) from None
+    }})
+    # a lost race deletes the rewritten files; the ORIGINAL files are
+    # untouched, so the table stays intact at the winner's version
+    lakehouse.delta_commit(root, version + 1, actions, staged, "delta_optimize")
     return {
         "removed": len(rewrite),
-        "added": len(new_adds),
-        "version": new_version,
+        "added": len(staged.files),
+        "version": version + 1,
     }
 
 
@@ -342,7 +239,6 @@ def delta_vacuum(
         )
     from urllib.parse import unquote as _unquote
 
-    from intake_spark.lakehouse import delta_log_state
     from intake_spark.session import get_session
 
     spark = spark or get_session()
@@ -350,15 +246,13 @@ def delta_vacuum(
     log = os.path.join(root, "_delta_log")
     if not os.path.isdir(log):
         raise ValueError(f"{root} has no _delta_log — not a Delta table")
-    state = delta_log_state(log, spark)
+    state = lakehouse.delta_log_state(log, spark)
     live = {_unquote(p) for p in state["adds"]}
     # DV files referenced by live adds must survive too
-    from intake_spark.lakehouse import _delta_dv_local_path
-
     for a in state["adds"].values():
         dv = a.get("deletionVector")
         if dv and dv.get("storageType") != "i":
-            p, _ = _delta_dv_local_path(dv, root)
+            p, _ = lakehouse._delta_dv_local_path(dv, root)
             live.add(os.path.relpath(p, root))
     cutoff = time.time() - retention_hours * 3600
     out = []
@@ -396,19 +290,15 @@ def iceberg_expire_snapshots(
     """Drop all but the newest ``keep_last`` snapshots (the current one
     always survives) from the table metadata, and delete manifest
     lists, manifests and data files reachable ONLY from expired
-    snapshots. Writes the next vN.metadata.json + version-hint."""
-    from intake_spark.lakehouse import decode_avro_file
-
+    snapshots. The next vN.metadata.json commits (put-if-absent) BEFORE
+    anything is deleted: losing the commit race raises
+    ConcurrentWriteError with every file still in place."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     root = url.rstrip("/")
-    mdir = os.path.join(root, "metadata")
-    hint = os.path.join(mdir, "version-hint.text")
-    with open(hint) as f:
-        v = int(f.read().strip())
-    meta_path = os.path.join(mdir, f"v{v}.metadata.json")
-    with open(meta_path) as f:
-        meta = json.load(f)
+    v, _path, meta = lakehouse.iceberg_metadata(root)
+    if meta is None:
+        raise ValueError(f"{root} has no Iceberg metadata")
     loc = meta.get("location", root).rstrip("/").removeprefix("file://")
 
     def local(p: str) -> str:
@@ -432,10 +322,10 @@ def iceberg_expire_snapshots(
         for s in snapshots:
             ml = local(s["manifest-list"])
             metas.add(ml)
-            for m in decode_avro_file(ml):
+            for m in lakehouse.decode_avro_file(ml):
                 mp = local(m["manifest_path"])
                 metas.add(mp)
-                for e in decode_avro_file(mp):
+                for e in lakehouse.decode_avro_file(mp):
                     if e.get("status") == 2:
                         continue
                     datas.add(local(e["data_file"]["file_path"]))
@@ -457,19 +347,16 @@ def iceberg_expire_snapshots(
         else:
             skipped.append(p)
     if not dry_run:
-        for p in doomed:
-            if os.path.exists(p):
-                os.remove(p)
         new_meta = dict(meta)
         new_meta["snapshots"] = keep
         new_meta["snapshot-log"] = [
             e for e in (meta.get("snapshot-log") or [])
             if e.get("snapshot-id") in keep_ids
         ]
-        with open(os.path.join(mdir, f"v{v + 1}.metadata.json"), "w") as f:
-            json.dump(new_meta, f)
-        with open(hint, "w") as f:
-            f.write(str(v + 1))
+        lakehouse.iceberg_commit(root, v + 1, new_meta)
+        for p in doomed:
+            if os.path.exists(p):
+                os.remove(p)
     return {
         "expired": len(expired),
         "deleted_files": doomed,
@@ -489,17 +376,14 @@ def iceberg_compact(
     and commit an overwrite snapshot under the SAME partition spec —
     prior snapshots stay time-travelable until expired."""
     from intake_spark import datatypes as dt
-    from intake_spark.lakehouse import IcebergTableReader
     from intake_spark.output import to_iceberg
     from intake_spark.session import get_session
 
     spark = spark or get_session()
     root = url.rstrip("/")
-    mdir = os.path.join(root, "metadata")
-    with open(os.path.join(mdir, "version-hint.text")) as f:
-        v = int(f.read().strip())
-    with open(os.path.join(mdir, f"v{v}.metadata.json")) as f:
-        meta = json.load(f)
+    _v, _path, meta = lakehouse.iceberg_metadata(root)
+    if meta is None:
+        raise ValueError(f"{root} has no Iceberg metadata")
     spec = next(
         (
             sp
@@ -526,8 +410,7 @@ def iceberg_compact(
             partition_by.append(f"truncate({tr[9:-1]}, {src})")
         else:
             raise ValueError(f"cannot recompose transform {tr!r}")
-    df = IcebergTableReader(data=dt.IcebergDataset(url=root)).read(spark=spark)
-    n_rows = None
+    df = lakehouse.IcebergTableReader(data=dt.IcebergDataset(url=root)).read(spark=spark)
     if zorder_by:
         sizes = sum(
             os.path.getsize(os.path.join(dp, fn))

@@ -81,12 +81,16 @@ def to_delta(
     **options,
 ) -> dt.DeltalakeTable:
     """Delta Lake sink WITHOUT the delta-spark jar: data files write as
-    ordinary distributed parquet (into a staging dir, then renamed in),
-    and the driver appends ONE ``_delta_log`` JSON commit — protocol +
-    metaData + add actions for version 0, remove+add for ``overwrite``
-    of an existing table, adds only for ``append``. The commit is
-    metadata-only driver work (one small JSON line per data file); the
-    bytes never touch the driver.
+    ordinary distributed parquet through ``lakehouse.stage_parquet``
+    (a staging dir, then moved in), and the driver appends ONE
+    ``_delta_log`` JSON commit through ``lakehouse.delta_commit`` —
+    protocol + metaData + add actions for version 0, remove+add for
+    ``overwrite`` of an existing table, adds only for ``append``. The
+    commit is put-if-absent: when a concurrent writer claimed the same
+    version, this write's moved-in files are deleted and
+    ``ConcurrentWriteError`` raises; the winner's table is untouched.
+    The commit is metadata-only driver work (one small JSON line per
+    data file); the bytes never touch the driver.
 
     Round-trips with ``DeltaLakeReader`` (same module's stdlib log
     replay), including ``version=`` time travel across appends and
@@ -100,11 +104,12 @@ def to_delta(
     interoperates on the same log.)
     """
     import hashlib
-    import json as _json
     import os
-    import shutil
+    import time
     import uuid as _uuid
     from urllib.parse import quote as _quote
+
+    from intake_spark import lakehouse
 
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite/append, got {mode!r}")
@@ -120,9 +125,7 @@ def to_delta(
     prev_adds: list[str] = []
     prev_meta = None
     if os.path.isdir(log_dir):
-        from intake_spark.lakehouse import delta_log_state
-
-        state = delta_log_state(log_dir, df.sparkSession)
+        state = lakehouse.delta_log_state(log_dir, df.sparkSession)
         prev_version = state["version"]
         prev_adds = sorted(state["adds"])
         prev_meta = state["meta"]
@@ -135,58 +138,12 @@ def to_delta(
         if mode == "append":
             part_cols = list(prev_meta.get("partitionColumns") or [])
 
-    # 1. distributed parquet write into a staging dir
-    stage = os.path.join(root, f"_staging_{_uuid.uuid4().hex[:12]}")
-    w = df.write.mode("overwrite")
-    if part_cols:
-        w = w.partitionBy(*part_cols)
-    w.options(**options).parquet(stage)
+    staged = lakehouse.stage_parquet(df, root, part_cols, options)
+    now_ms = int(time.time() * 1000)
 
-    # 2. move data files into the table root, preserving hive partition
-    #    subdirs; collect (relative path, size, partitionValues)
-    adds = []
-    now_ms = int(os.stat(stage).st_mtime * 1000)
-    for dirpath, _dirs, files in os.walk(stage):
-        rel_dir = os.path.relpath(dirpath, stage)
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            rel = fn if rel_dir == "." else f"{rel_dir}/{fn}"
-            dst = os.path.join(root, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(os.path.join(dirpath, fn), dst)
-            pvals = {}
-            if rel_dir != ".":
-                for seg in rel_dir.split(os.sep):
-                    k, eq, v = seg.partition("=")
-                    if eq:
-                        # Spark's escapePathName percent-escapes specials in
-                        # the dir name ('100%' -> '100%25'); the log records
-                        # the LOGICAL value, null as None. Decoded with
-                        # Spark's own unescape rules (shared helper), not
-                        # urllib unquote.
-                        from intake_spark.lakehouse import (
-                            unescape_hive_segment,
-                        )
-
-                        pvals[k] = unescape_hive_segment(v)
-            adds.append(
-                {
-                    # the protocol says add.path is RFC 2396 URI-encoded;
-                    # readers (ours included) unquote it to the disk path
-                    "path": _quote(rel.replace(os.sep, "/"), safe="/"),
-                    "partitionValues": pvals,
-                    "size": os.path.getsize(dst),
-                    "modificationTime": now_ms,
-                    "dataChange": True,
-                }
-            )
-    shutil.rmtree(stage)
-    adds.sort(key=lambda a: a["path"])
-
-    # 3. one commit: protocol+metaData on create; removes on overwrite
+    # one commit: protocol+metaData on create; removes on overwrite
     version = prev_version + 1
-    lines = []
+    actions: list[dict] = []
     if version == 0 or mode == "overwrite":
         if prev_meta is not None and mode == "overwrite":
             table_id = prev_meta.get("id")
@@ -194,53 +151,49 @@ def to_delta(
             table_id = str(
                 _uuid.UUID(hashlib.md5(root.encode()).hexdigest())
             )
-        lines.append(_json.dumps({"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}))
-        lines.append(
-            _json.dumps(
-                {
-                    "metaData": {
-                        "id": table_id,
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": df.schema.json(),
-                        "partitionColumns": part_cols,
-                        "configuration": {},
-                        "createdTime": now_ms,
-                    }
-                }
-            )
-        )
-    if mode == "overwrite":
-        for p in prev_adds:
-            lines.append(
-                _json.dumps(
-                    {"remove": {"path": p, "deletionTimestamp": now_ms, "dataChange": True}}
-                )
-            )
-    for a in adds:
-        lines.append(_json.dumps({"add": a}))
-    if txn is not None:
-        # protocol txn action: {appId, version} — streaming writers use
-        # the per-app version ladder for idempotent batch replay
-        lines.append(_json.dumps({"txn": {
-            "appId": str(txn[0]), "version": int(txn[1]),
-        }}))
-    lines.append(
-        _json.dumps(
+        actions.append({"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}})
+        actions.append(
             {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "WRITE",
-                    "operationParameters": {"mode": mode.upper()},
+                "metaData": {
+                    "id": table_id,
+                    "format": {"provider": "parquet", "options": {}},
+                    "schemaString": df.schema.json(),
+                    "partitionColumns": part_cols,
+                    "configuration": {},
+                    "createdTime": now_ms,
                 }
             }
         )
+    if mode == "overwrite":
+        for p in prev_adds:
+            actions.append(
+                {"remove": {"path": p, "deletionTimestamp": now_ms, "dataChange": True}}
+            )
+    for rel, pvals, size in staged.files:
+        actions.append({"add": {
+            # the protocol says add.path is RFC 2396 URI-encoded;
+            # readers (ours included) unquote it to the disk path. The
+            # log records the LOGICAL partition value, null as None.
+            "path": _quote(rel, safe="/"),
+            "partitionValues": pvals,
+            "size": size,
+            "modificationTime": now_ms,
+            "dataChange": True,
+        }})
+    if txn is not None:
+        # protocol txn action: {appId, version} — streaming writers use
+        # the per-app version ladder for idempotent batch replay
+        actions.append({"txn": {"appId": str(txn[0]), "version": int(txn[1])}})
+    actions.append(
+        {
+            "commitInfo": {
+                "timestamp": now_ms,
+                "operation": "WRITE",
+                "operationParameters": {"mode": mode.upper()},
+            }
+        }
     )
-    os.makedirs(log_dir, exist_ok=True)
-    # put-if-absent (protocol requirement): a concurrent writer that
-    # computed the same version must fail loudly, not silently clobber
-    # the winner's commit and orphan its data files
-    with open(os.path.join(log_dir, f"{version:020d}.json"), "x") as f:
-        f.write("\n".join(lines) + "\n")
+    lakehouse.delta_commit(root, version, actions, staged, "to_delta")
     return dt.DeltalakeTable(url=url)
 
 
@@ -887,9 +840,10 @@ _AVRO_TYPES = {
 }
 
 
-# single zigzag-varint implementation, shared with the generic Avro
-# encoder (lakehouse does not import this module — no cycle)
+# single zigzag-varint implementation and OCF writer, shared with the
+# generic Avro encoder (lakehouse does not import this module — no cycle)
 from intake_spark.lakehouse import _avro_zz as _avro_zigzag  # noqa: E402
+from intake_spark.lakehouse import write_avro_ocf  # noqa: E402
 
 
 def _spark_to_avro_nested(dt_, name: str, used: set | None = None):
@@ -1063,8 +1017,6 @@ def to_avro(df: DataFrame, url: str, codec: str = "deflate") -> "dt.AVRO":
     (unix_micros / datediff / NTZ timestampdiff) before the Arrow hop —
     exact and timezone-proof, where naive datetimes through pandas would
     shift under non-UTC sessions."""
-    import json as _json
-
     from pyspark.sql import functions as F_
     from pyspark.sql import types as T  # noqa: F401
 
@@ -1136,17 +1088,12 @@ def to_avro(df: DataFrame, url: str, codec: str = "deflate") -> "dt.AVRO":
                 "struct columns first)"
             )
     df = sdf.select(*proj)
-    schema_json = _json.dumps(
-        {"type": "record", "name": "spark_row", "fields": avro_fields}
-    )
-    import os as _os
-
+    avro_schema = {"type": "record", "name": "spark_row", "fields": avro_fields}
     clean_stale_parts(url, "part-", ".avro")
 
     def write_part(batches):
         import hashlib as _hashlib
         import os
-        import zlib as _zlib
 
         import pandas as pd
         from pyspark import TaskContext
@@ -1163,36 +1110,14 @@ def to_avro(df: DataFrame, url: str, codec: str = "deflate") -> "dt.AVRO":
                         rows_bytes += b"\x02" + _avro_encode_cell(v, kind)
                 n_rows += 1
         if n_rows:
-            payload = bytes(rows_bytes)
-            if codec == "deflate":
-                co = _zlib.compressobj(6, _zlib.DEFLATED, -15)  # raw deflate
-                payload = co.compress(payload) + co.flush()
-            elif codec == "snappy":
-                from intake_spark.compress import snappy_compress
-
-                # Avro spec: snappy blocks end with a big-endian CRC32 of
-                # the UNCOMPRESSED data
-                crc = _zlib.crc32(payload) & 0xFFFFFFFF
-                payload = snappy_compress(payload) + crc.to_bytes(4, "big")
-            sync = _hashlib.md5(f"spark-graft-{pid}".encode()).digest()
-            meta = {
-                b"avro.schema": schema_json.encode(),
-                b"avro.codec": codec.encode(),
-            }
-            hdr = bytearray(b"Obj\x01")
-            hdr += _avro_zigzag(len(meta))
-            for k, v in meta.items():
-                hdr += _avro_zigzag(len(k)) + k + _avro_zigzag(len(v)) + v
-            hdr += b"\x00" + sync
-            blob = (
-                bytes(hdr)
-                + _avro_zigzag(n_rows)
-                + _avro_zigzag(len(payload))
-                + payload
-                + sync
+            write_avro_ocf(
+                os.path.join(url, f"part-{pid:05d}.avro"),
+                avro_schema,
+                n_rows,
+                bytes(rows_bytes),
+                _hashlib.md5(f"spark-graft-{pid}".encode()).digest(),
+                codec,
             )
-            with open(os.path.join(url, f"part-{pid:05d}.avro"), "wb") as f:
-                f.write(blob)
         yield pd.DataFrame({"rows": [n_rows]})
 
     written = map_in_pandas(df, write_part, schema="rows long")
@@ -1768,9 +1693,16 @@ def to_iceberg(
 ) -> "dt.IcebergDataset":
     """Iceberg v1 table sink WITHOUT the iceberg-spark jar (the write
     twin of ``IcebergTableReader``): data files write as ordinary
-    distributed parquet; the driver then writes one manifest (Avro, spec
-    field-ids), one manifest list, and the next ``vN.metadata.json`` +
-    ``version-hint.text``. Primitive column types (same restriction as
+    distributed parquet through ``lakehouse.stage_parquet``; the driver
+    then writes one manifest (Avro, spec field-ids) and one manifest
+    list, and commits the next ``vN.metadata.json`` put-if-absent
+    through ``lakehouse.iceberg_commit``, which then updates
+    ``version-hint.text``. The current table comes from
+    ``lakehouse.iceberg_metadata`` (the reader's load), so a table
+    without a hint is appended to, not replaced. A concurrent writer
+    that claimed vN first keeps its file: this write's data files and
+    manifests are deleted and ``ConcurrentWriteError`` raises.
+    Primitive column types (same restriction as
     ``to_avro``); ``mode``: "overwrite" (new snapshot references only
     the new files — prior snapshots stay readable via ``snapshot_id=``
     time travel) or "append" (the new manifest list re-references the
@@ -1797,23 +1729,17 @@ def to_iceberg(
     import time as _time
     import uuid as _uuid
 
-    from intake_spark.lakehouse import decode_avro_file, write_avro_records
+    from intake_spark import lakehouse
+    from intake_spark.lakehouse import decode_avro_file
 
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite/append, got {mode!r}")
     fields = _iceberg_schema_fields(df.schema)
     root = url.rstrip("/")
     mdir = os.path.join(root, "metadata")
-    ddir = os.path.join(root, "data")
 
-    prev_meta = None
-    prev_version = 0
-    hint = os.path.join(mdir, "version-hint.text")
-    if os.path.exists(hint):
-        with open(hint) as f:
-            prev_version = int(f.read().strip())
-        with open(os.path.join(mdir, f"v{prev_version}.metadata.json")) as f:
-            prev_meta = _json.load(f)
+    prev_version, _path, prev_meta = lakehouse.iceberg_metadata(root)
+    if prev_meta is not None:
         prev_fields = None
         if "schemas" in prev_meta:
             sid = prev_meta.get("current-schema-id", 0)
@@ -1856,63 +1782,30 @@ def to_iceberg(
                 f"{prev_sig}"
             )
 
-    # 1. distributed parquet write into a staging dir, then move to data/
-    stage = os.path.join(root, f"_staging_{_uuid.uuid4().hex[:12]}")
+    # 1. distributed parquet write, moved under data/
+    commit_uuid = _uuid.uuid4().hex
     if has_transforms:
         # transform partitioning (standard-writer convention): partition
         # by DERIVED columns so every source column stays in the data
         # files; identity entries in a transform spec get a derived copy
-        # for the same reason. Spark drops only the derived dir columns.
+        # for the same reason. Spark drops only the derived dir columns,
+        # whose __ipart__ prefix the move strips from the dir names.
         wdf = df
         for p in pspecs:
             wdf = wdf.withColumn(
                 f"__ipart__{p['name']}",
                 _ipart_expr(df.sparkSession, p, by_name[p["source"]]["type"]),
             )
-        w = wdf.write.mode("overwrite").options(**options)
-        w = w.partitionBy(*[f"__ipart__{p['name']}" for p in pspecs])
+        wcols = [f"__ipart__{p['name']}" for p in pspecs]
     else:
         # all-identity spec: hive layout with the source columns dropped
         # from the files (the migrated-table convention; the reader
         # fills them from the manifest tuples)
-        w = df.write.mode("overwrite").options(**options)
-        if pcols:
-            w = w.partitionBy(*pcols)
-    w.parquet(stage)
-    os.makedirs(ddir, exist_ok=True)
-    commit_uuid = _uuid.uuid4().hex
-    moved: list[tuple[str, dict]] = []  # (path, raw hive partition values)
-    from intake_spark.lakehouse import unescape_hive_segment
-
-    for dirpath, _dirs, files in os.walk(stage):
-        rel_dir = os.path.relpath(dirpath, stage)
-        pvals: dict = {}
-        out_segs: list[str] = []
-        if rel_dir != ".":
-            for seg in rel_dir.split(os.sep):
-                k, eq, v = seg.partition("=")
-                if eq:
-                    # Spark's own unescape rules (shared helper; sentinel
-                    # decodes to None), not urllib unquote. Derived
-                    # transform columns drop their __ipart__ prefix both
-                    # in the tuple key and the final dir name.
-                    name = k.removeprefix("__ipart__")
-                    pvals[name] = unescape_hive_segment(v)
-                    out_segs.append(f"{name}={v}")
-                else:
-                    out_segs.append(seg)
-        for fn in sorted(files):
-            if not fn.endswith(".parquet"):
-                continue
-            sub = "" if not out_segs else os.sep.join(out_segs) + os.sep
-            dst = os.path.join(ddir, sub + f"{commit_uuid[:8]}-{fn}")
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(os.path.join(dirpath, fn), dst)
-            moved.append((dst, pvals))
-    import shutil as _shutil
-
-    _shutil.rmtree(stage, ignore_errors=True)
-
+        wdf, wcols = df, pcols
+    staged = lakehouse.stage_parquet(
+        wdf, root, wcols, options, dest="data/",
+        file_prefix=f"{commit_uuid[:8]}-", key_prefix="__ipart__",
+    )
     def _ptuple(pvals: dict) -> dict:
         # hive dir strings -> typed Iceberg partition values
         import datetime as _dtm
@@ -1946,7 +1839,8 @@ def to_iceberg(
     now_ms = int(_time.time() * 1000)
     entries = []
     added_rows = 0
-    for p, pvals in moved:
+    for rel, pvals, size in staged.files:
+        p = os.path.join(root, rel)
         n = _pq.ParquetFile(p).metadata.num_rows
         added_rows += n
         entries.append(
@@ -1958,7 +1852,7 @@ def to_iceberg(
                     "file_format": "PARQUET",
                     "partition": _ptuple(pvals),
                     "record_count": n,
-                    "file_size_in_bytes": os.path.getsize(p),
+                    "file_size_in_bytes": size,
                     "block_size_in_bytes": 1 << 26,
                 },
             }
@@ -2009,18 +1903,23 @@ def to_iceberg(
     # field ids may have been remapped by the schema-history logic above:
     # partition-spec source-ids must reference the FINAL ids
     by_name = {f["name"]: f for f in fields}
+    written: list[str] = []  # manifests + manifest lists of this commit
+
+    def write_manifest(path: str, entries: list) -> None:
+        lakehouse.write_avro_records(path, man_schema, entries, meta={
+            "schema": _json.dumps(schema_obj), "partition-spec": "[]",
+            "format-version": "1", "content": "data",
+        })
+        written.append(path)
+
+    def write_manifest_list(path: str, rows: list, snapshot_id) -> None:
+        lakehouse.write_avro_records(path, _ICEBERG_MANIFEST_FILE, rows, meta={
+            "format-version": "1", "snapshot-id": str(snapshot_id),
+        })
+        written.append(path)
+
     man_path = os.path.join(mdir, f"{commit_uuid}-m0.avro")
-    write_avro_records(
-        man_path,
-        man_schema,
-        entries,
-        meta={
-            "schema": _json.dumps(schema_obj),
-            "partition-spec": "[]",
-            "format-version": "1",
-            "content": "data",
-        },
-    )
+    write_manifest(man_path, entries)
     manifests = [
         {
             "manifest_path": man_path,
@@ -2085,17 +1984,7 @@ def to_iceberg(
                     )
             if old_entries:
                 man2 = os.path.join(mdir, f"{commit_uuid}-m1.avro")
-                write_avro_records(
-                    man2,
-                    man_schema,
-                    old_entries,
-                    meta={
-                        "schema": _json.dumps(schema_obj),
-                        "partition-spec": "[]",
-                        "format-version": "1",
-                        "content": "data",
-                    },
-                )
+                write_manifest(man2, old_entries)
                 manifests.append(
                     {
                         "manifest_path": man2,
@@ -2111,12 +2000,7 @@ def to_iceberg(
                     }
                 )
     ml_path = os.path.join(mdir, f"snap-{snap_id}-1-{commit_uuid}.avro")
-    write_avro_records(
-        ml_path,
-        _ICEBERG_MANIFEST_FILE,
-        manifests,
-        meta={"format-version": "1", "snapshot-id": str(snap_id)},
-    )
+    write_manifest_list(ml_path, manifests, snap_id)
 
     snapshots = []
     if prev_meta is not None:
@@ -2162,17 +2046,7 @@ def to_iceberg(
                     new_mp = os.path.join(
                         mdir, f"{commit_uuid}-rb{s['snapshot-id']}-m{k}.avro"
                     )
-                    write_avro_records(
-                        new_mp,
-                        man_schema,
-                        entries,
-                        meta={
-                            "schema": _json.dumps(schema_obj),
-                            "partition-spec": "[]",
-                            "format-version": "1",
-                            "content": "data",
-                        },
-                    )
+                    write_manifest(new_mp, entries)
                     new_rows.append(
                         {
                             "manifest_path": new_mp,
@@ -2196,15 +2070,7 @@ def to_iceberg(
                 new_ml = os.path.join(
                     mdir, f"{commit_uuid}-rb{s['snapshot-id']}-list.avro"
                 )
-                write_avro_records(
-                    new_ml,
-                    _ICEBERG_MANIFEST_FILE,
-                    new_rows,
-                    meta={
-                        "format-version": "1",
-                        "snapshot-id": str(s["snapshot-id"]),
-                    },
-                )
+                write_manifest_list(new_ml, new_rows, s["snapshot-id"])
                 s["manifest-list"] = new_ml
             snapshots.append(s)
     snapshots.append(
@@ -2268,13 +2134,10 @@ def to_iceberg(
         "metadata-log": [],
     }
     version = prev_version + 1
-    with open(os.path.join(mdir, f"v{version}.metadata.json"), "w") as f:
-        _json.dump(meta, f)
-    with open(hint, "w") as f:
-        f.write(str(version))
+    lakehouse.iceberg_commit(root, version, meta, staged, written)
     out = dt.IcebergDataset(url=root)
     out.metadata.update(
-        {"snapshot_id": snap_id, "version": version, "n_files": len(moved)}
+        {"snapshot_id": snap_id, "version": version, "n_files": len(staged.files)}
     )
     return out
 

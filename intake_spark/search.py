@@ -83,7 +83,9 @@ class Importable(SearchBase):
         cls_str = payload.get("cls") or payload.get("reader", {}).get("cls", "")
         try:
             return import_name(cls_str).check_importable()
-        except Exception:
+        except (ImportError, AttributeError, ValueError):
+            # missing module / attribute (or no check_importable), or an
+            # empty class string: the entry's reader is not importable
             return False
 
 
@@ -215,9 +217,12 @@ class EnvironmentSatisfied(SearchBase):
         )
         if not env:
             return True
+        import yaml
+
         try:
             return self._is_consistent(env)
-        except Exception:
+        except (OSError, yaml.YAMLError):
+            # unreadable environment file, or text that is not YAML
             return False
 
     @staticmethod
@@ -232,10 +237,17 @@ class EnvironmentSatisfied(SearchBase):
             import yaml
 
             env = yaml.safe_load(env)
+        if not isinstance(env or {}, dict):
+            return False  # not an environment mapping
         deps = (env or {}).get("dependencies") or []
+        if not isinstance(deps, list):
+            return False
         for dep in deps:
             if isinstance(dep, dict):  # nested {"pip": [...]} section
-                for sub in dep.get("pip") or []:
+                pips = dep.get("pip") or []
+                if not isinstance(pips, list):
+                    return False
+                for sub in pips:
                     if not _spec_satisfied(str(sub)):
                         return False
                 continue

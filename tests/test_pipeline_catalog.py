@@ -656,3 +656,63 @@ def test_open_catalog_ttl_reload(spark, tmp_path, li_reader):
     assert "third" not in slow
     slow.refresh()  # explicit refresh bypasses the window
     assert "third" in slow
+
+
+def test_importable_false_only_for_missing_readers(monkeypatch):
+    """Importable is False for a missing module, a missing attribute or
+    an empty class string; any other error from the import propagates."""
+    import intake_spark.utils as utils
+
+    imp = Importable()
+    assert not imp({"cls": "no_such_module_xyz.Reader"})
+    assert not imp({"cls": "intake_spark.readers.NoSuchReader"})
+    assert not imp({"cls": ""})
+    assert imp({"cls": "intake_spark.readers.SparkParquet"})
+
+    def broken(name):
+        raise TypeError("bug in the import hook")
+
+    monkeypatch.setattr(utils, "import_name", broken)
+    with pytest.raises(TypeError, match="import hook"):
+        imp({"cls": "intake_spark.readers.SparkParquet"})
+
+
+def test_environment_satisfied_false_only_for_malformed_env(tmp_path, monkeypatch):
+    """EnvironmentSatisfied is False for an unreadable file, text that is
+    not YAML and an environment of the wrong shape; any other error
+    propagates."""
+    from intake_spark.search import EnvironmentSatisfied
+
+    es = EnvironmentSatisfied()
+    for env in ("dependencies: [unclosed", "- just\n- a list\n",
+                {"dependencies": 5}, {"dependencies": [{"pip": 3}]}):
+        assert not es({"metadata": {"environment": env}}), env
+    unreadable = tmp_path / "env_dir.yml"
+    unreadable.mkdir()  # exists, but open() raises IsADirectoryError
+    assert not es({"metadata": {"environment": str(unreadable)}})
+
+    def broken(env):
+        raise TypeError("bug in the checker")
+
+    monkeypatch.setattr(EnvironmentSatisfied, "_is_consistent", staticmethod(broken))
+    with pytest.raises(TypeError, match="checker"):
+        es({"metadata": {"environment": "dependencies: []"}})
+
+
+def test_thumbnail_none_only_for_undecodable_content(spark, monkeypatch):
+    """thumbnail is None for bytes that are not a decodable image; any
+    other error from the decoder propagates."""
+    import intake_spark.llm.multimodal as mm
+    from intake_spark import inspection
+
+    df = spark.createDataFrame([(bytearray(b"not an image"),)], "content binary")
+    assert inspection.thumbnail(df) is None
+    text = spark.createDataFrame([("plain text",)], "content string")
+    assert inspection.thumbnail(text) is None
+
+    def broken(content):
+        raise TypeError("bug in the decoder")
+
+    monkeypatch.setattr(mm, "decode_image", broken)
+    with pytest.raises(TypeError, match="decoder"):
+        inspection.thumbnail(df)
