@@ -14,14 +14,29 @@ shape. Operations:
 
 This is how NumpyFile/Zarr/HDF5 data enters the engine (reference readers
 readers.py:1305-1440) without a driver-side ndarray.
+
+Python code builds chunk rows, or reads them back into an array, only
+here (``output.to_zarr``'s executor-side block writes aside):
+
+- :func:`cut_axis0` — the encoder: an in-memory block → chunk rows. Every
+  reader that holds decoded arrays (MAT, DICOM, TIFF, HDF5, Zarr, DAP2,
+  NPZ, compressed NRRD/MetaImage) builds its rows through it.
+- :func:`byte_range_df` — the byte-range decoder: a raw array at a file
+  offset → chunk rows, decoded on executors.
+- :func:`stream_axis0` — the driver-side stream: chunk rows → float64
+  blocks in ``offset0`` order, size-guarded and coverage-checked. Every
+  single-file array sink and ``convert.chunk_rows_to_numpy`` read
+  through it.
 """
 
 from __future__ import annotations
 
 import ast
+import math
 import struct
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -60,16 +75,145 @@ def _parse_npy_header(buf: bytes) -> tuple[str, bool, tuple[int, ...], int]:
     return d["descr"], d["fortran_order"], tuple(d["shape"]), off + hlen
 
 
-_DTYPE_STRUCT = {
-    "<f8": ("d", 8), "<f4": ("f", 4), "<i8": ("q", 8), "<i4": ("i", 4),
-    "<i2": ("h", 2), "<u1": ("B", 1), "|u1": ("B", 1), "<u4": ("I", 4),
-}
+def _npy_dtype(descr: str, fortran: bool):
+    """The numpy dtype of a .npy/.npz member that the chunk-row model
+    decodes: C-order, numeric (bool, int, uint or float)."""
+    if fortran:
+        raise ValueError("fortran-order npy not supported")
+    dtype = np.dtype(descr)
+    if dtype.kind not in "biuf":
+        raise ValueError(f"npy dtype {descr!r} is not numeric")
+    return dtype
+
+
+def cut_axis0(
+    block, shape, offset0: int = 0, chunk_id: int = 0, rows_per_chunk: int | None = None
+) -> list[dict]:
+    """The one chunk-row encoder: an in-memory C-order block whose axis 0
+    holds global rows ``offset0, offset0 + 1, ...`` → chunk rows of
+    ``rows_per_chunk`` rows (default: the whole block in one row),
+    numbered from ``chunk_id``. Every row carries the global ``shape``
+    and its values as float64."""
+    a = np.atleast_1d(np.asarray(block, dtype=np.float64))
+    step = rows_per_chunk or len(a)
+    starts = range(0, len(a), step) if rows_per_chunk else [0]
+    shape = [int(s) for s in shape]
+    return [
+        {
+            "chunk_id": int(chunk_id) + i,
+            "offset0": int(offset0) + start,
+            "shape": shape,
+            "values": a[start : start + step].ravel().tolist(),
+        }
+        for i, start in enumerate(starts)
+    ]
+
+
+def byte_range_df(
+    spark, url: str, dtype, shape: list[int], data_off: int, rows_per_chunk: int
+) -> DataFrame:
+    """The one byte-range decoder: a raw C-order array stored at
+    ``data_off`` in ``url`` → chunk rows. The driver builds a manifest of
+    ``rows_per_chunk``-row slabs; executors seek, read and decode each
+    slab (``np.frombuffer`` of ``dtype``) — per-chunk parallelism, no
+    payload byte on the driver. .npy, FITS, NIfTI, NetCDF-3, NRRD,
+    DICOM, ASDF, MetaImage and contiguous HDF5 payloads read through it."""
+    np_dtype = np.dtype(dtype)
+    row_elems = math.prod(shape[1:])
+    n0 = shape[0] if shape else 1
+    manifest = [
+        (i, start, min(start + rows_per_chunk, n0))
+        for i, start in enumerate(range(0, n0, rows_per_chunk))
+    ]
+    mdf = local_frame(
+        spark, manifest, "chunk_id long, row_start long, row_end long"
+    )
+
+    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            with open(url, "rb") as f:
+                for _, r in pdf.iterrows():
+                    n_el = int(r.row_end - r.row_start) * row_elems
+                    f.seek(data_off + int(r.row_start) * row_elems * np_dtype.itemsize)
+                    vals = np.frombuffer(f.read(n_el * np_dtype.itemsize), dtype=np_dtype)
+                    out += cut_axis0(vals, shape, r.row_start, r.chunk_id)
+            yield pd.DataFrame(out, columns=CHUNK_SCHEMA.names)
+
+    return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
+
+
+def stream_axis0(
+    df: DataFrame, sink: str, max_bytes: int | None, need_shape: bool = True
+) -> "tuple[list[int] | None, Iterator]":
+    """The one driver-side chunk-row decoder, behind every single-file
+    array sink and ``convert.chunk_rows_to_numpy``. Returns ``(shape,
+    blocks)``.
+
+    The size guard runs first: the array's byte size comes free from the
+    chunk-row ``shape`` (one ``first()``), and above ``max_bytes`` it
+    raises naming the distributed alternative. A sink that writes no
+    shape-dependent header passes ``need_shape=False``: with
+    ``max_bytes=None`` it then runs no job before the stream, and
+    ``shape`` is None.
+
+    ``blocks`` streams the rows in ``offset0`` order through
+    ``toLocalIterator`` (one partition in driver memory at a time) and
+    yields each row's values as a float64 ndarray. It raises naming
+    ``sink`` when a row does not start where the previous one ended (a
+    gap or an overlap) or the element total is not ``prod(shape)``. The
+    first row's ``offset0`` is the base, so ``slice_axis0`` frames, which
+    keep global offsets, stream too. A frame without a ``shape`` column
+    (only allowed with ``need_shape=False`` and ``max_bytes=None``) is a
+    1-D stream whose ``offset0`` counts values."""
+    shape = None
+    if need_shape or max_bytes is not None:
+        first = df.select("shape").first()
+        if first is None:
+            raise ValueError("empty chunk DataFrame")
+        shape = [int(s) for s in first["shape"]]
+        n = math.prod(shape)
+        if max_bytes is not None and n * 8 > max_bytes:
+            raise ValueError(
+                f"{sink}: array is {n * 8} bytes (> max_bytes={max_bytes}); "
+                "single-file driver-streamed sinks are for bounded artifacts — "
+                "use to_zarr (distributed chunk writes) or to_parquet for data "
+                "this size, or pass max_bytes=None to override deliberately"
+            )
+    cols = ["offset0", "values"] + (["shape"] if "shape" in df.columns else [])
+
+    def blocks():
+        declared, base, written = shape, None, 0
+        for row in df.select(*cols).orderBy("offset0").toLocalIterator():
+            if declared is None and "shape" in cols:
+                declared = [int(s) for s in row["shape"]]
+            total = math.prod(declared) if declared is not None else math.inf
+            off = int(row["offset0"])
+            base = off if base is None else base
+            at = (off - base) * (math.prod(declared[1:]) if declared else 1)
+            vals = np.asarray(row["values"], dtype=np.float64)
+            if at != written or written + vals.size > total:
+                raise ValueError(
+                    f"{sink}: the chunk row at offset0={off} covers elements "
+                    f"[{at}, {at + vals.size}) but the rows before it end at "
+                    f"element {written} of {total} — a gap, an overlap or an "
+                    "overrun in the chunk frame"
+                )
+            written += vals.size
+            yield vals
+        if declared is not None and written != math.prod(declared):
+            raise ValueError(
+                f"{sink}: streamed {written} elements but shape "
+                f"{tuple(declared)} declares {math.prod(declared)} — refusing "
+                "to leave a truncated file (was the chunk frame filtered?)"
+            )
+
+    return shape, blocks()
 
 
 class NumpyArrayReader(BaseReader):
     """.npy → chunk-row DataFrame. The file is read once driver-side for the
-    header, then chunk byte-ranges are decoded in executors via mapInPandas
-    over a chunk-manifest DataFrame — per-chunk parallelism without numpy."""
+    header; chunk byte-ranges decode in executors (:func:`byte_range_df`)."""
 
     implements = {dt.NumpyFile}
 
@@ -78,45 +222,8 @@ class NumpyArrayReader(BaseReader):
         with open(url, "rb") as f:
             head = f.read(4096)
         descr, fortran, shape, data_off = _parse_npy_header(head)
-        if fortran:
-            raise ValueError("fortran-order npy not supported")
-        fmt, itemsize = _DTYPE_STRUCT[descr]
-        row_elems = 1
-        for s in shape[1:]:
-            row_elems *= s
-        n0 = shape[0] if shape else 1
-
-        manifest = [
-            (i, start, min(start + rows_per_chunk, n0))
-            for i, start in enumerate(range(0, n0, rows_per_chunk))
-        ]
-        mdf = local_frame(
-            spark, manifest, "chunk_id long, row_start long, row_end long"
-        )
-
-        shape_l = list(shape)
-
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                out = []
-                with open(url, "rb") as f:
-                    for _, r in pdf.iterrows():
-                        n_rows = int(r.row_end - r.row_start)
-                        n_el = n_rows * row_elems
-                        f.seek(data_off + int(r.row_start) * row_elems * itemsize)
-                        raw = f.read(n_el * itemsize)
-                        vals = list(struct.unpack(f"<{n_el}{fmt}", raw))
-                        out.append(
-                            {
-                                "chunk_id": int(r.chunk_id),
-                                "offset0": int(r.row_start),
-                                "shape": shape_l,
-                                "values": [float(v) for v in vals],
-                            }
-                        )
-                yield pd.DataFrame(out, columns=["chunk_id", "offset0", "shape", "values"])
-
-        return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
+        dtype = _npy_dtype(descr, fortran)
+        return byte_range_df(spark, url, dtype, list(shape), data_off, rows_per_chunk)
 
 
 class NPZ(dt.FileData):
@@ -136,7 +243,6 @@ class NPZReader(BaseReader):
     implements = {NPZ}
 
     def _read(self, spark, **kwargs):
-        import io
         import zipfile
 
         with zipfile.ZipFile(self.data.url) as z:
@@ -144,20 +250,9 @@ class NPZReader(BaseReader):
             member = self.data.member or names[0].removesuffix(".npy")
             buf = z.read(member + ".npy")
         descr, fortran, shape, off = _parse_npy_header(buf)
-        if fortran:
-            raise ValueError("fortran-order npy not supported")
-        fmt, itemsize = _DTYPE_STRUCT[descr]
-        n = 1
-        for s in shape:
-            n *= s
-        vals = struct.unpack(f"<{n}{fmt}", buf[off : off + n * itemsize])
-        row = {
-            "chunk_id": 0,
-            "offset0": 0,
-            "shape": list(shape),
-            "values": [float(v) for v in vals],
-        }
-        return local_frame(spark, [row], schema=CHUNK_SCHEMA)
+        dtype = _npy_dtype(descr, fortran)
+        vals = np.frombuffer(buf, dtype=dtype, count=math.prod(shape), offset=off)
+        return local_frame(spark, cut_axis0(vals, shape), CHUNK_SCHEMA)
 
 
 def elementwise(df: DataFrame, expr: str) -> DataFrame:

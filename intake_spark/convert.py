@@ -151,40 +151,20 @@ def chunk_rows_to_numpy(df, max_bytes: int | None = 1 << 30):
     driver in offset order (guarded: this is the materialization edge —
     the XarrayToPandas/ToNumpy converter class of the reference's graph;
     distributed work should stay in chunk rows or go through the array
-    sinks)."""
+    sinks). The rows stream through ``arrays.stream_axis0``: a gap, an
+    overlap or a short frame raises instead of leaving memory unset."""
+    import math
+
     import numpy as np
 
-    first = df.select("shape").first()
-    if first is None:
-        raise ValueError("empty chunk DataFrame")
-    shape = tuple(int(s) for s in first["shape"])
-    n = 1
-    for s in shape:
-        n *= s
-    if max_bytes is not None and n * 8 > max_bytes:
-        raise ValueError(
-            f"array is {n * 8} bytes (> max_bytes={max_bytes}); driver "
-            "materialization is for bounded arrays — use the chunk-row "
-            "operators or to_zarr for data this size"
-        )
-    flat = np.empty(n, dtype="f8")
-    row_len = n // shape[0] if shape else 1
-    pos_check = 0
-    # offsets are rebased to the minimum so sliced chunk frames
-    # (slice_axis0 keeps GLOBAL offsets while shape[0] reflects the
-    # sliced length) assemble correctly alongside unsliced ones
-    base = None
-    for row in df.select("offset0", "values").orderBy("offset0").toLocalIterator():
-        vals = np.asarray(row["values"], dtype="f8")
-        if base is None:
-            base = int(row["offset0"])
-        start = (int(row["offset0"]) - base) * row_len
-        flat[start : start + len(vals)] = vals
-        pos_check += len(vals)
-    if pos_check != n:
-        raise ValueError(
-            f"chunk rows supply {pos_check} values but shape {shape} needs {n}"
-        )
+    from intake_spark.arrays import stream_axis0
+
+    shape, blocks = stream_axis0(df, "chunk_rows_to_numpy", max_bytes)
+    flat = np.empty(math.prod(shape), dtype="f8")
+    pos = 0
+    for block in blocks:
+        flat[pos : pos + block.size] = block
+        pos += block.size
     return flat.reshape(shape)
 
 

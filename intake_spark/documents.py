@@ -808,8 +808,8 @@ class JoblibMetadataReader(BaseReader):
                         del stack[-2:]
                 elif op.name == "STOP":
                     break
-        except Exception:
-            pass  # truncated/corrupt tail: report what was walked
+        except ValueError:
+            pass  # genops on a truncated/corrupt tail: report what was walked
         seen: list[str] = []
         for c in classes:
             if c not in seen:

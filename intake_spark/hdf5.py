@@ -479,7 +479,7 @@ def _chunked_h5_df(spark, url, dtype, shape, chunk_dims, filters, index, base, f
 
     import numpy as np
 
-    from intake_spark.arrays import CHUNK_SCHEMA
+    from intake_spark.arrays import CHUNK_SCHEMA, cut_axis0
 
     slabs: dict[int, list] = {}
     for coords, addr, nbytes, mask in index:
@@ -521,15 +521,8 @@ def _chunked_h5_df(spark, url, dtype, shape, chunk_dims, filters, index, base, f
                             for ax, (c, d, s) in enumerate(zip(coords, chunk_dims, shape))
                         )
                         slab[dest] = chunk[sel]
-                    out.append(
-                        {
-                            "chunk_id": int(r.chunk_id),
-                            "offset0": r0,
-                            "shape": list(shape),
-                            "values": slab.ravel().tolist(),
-                        }
-                    )
-            yield pd.DataFrame(out, columns=["chunk_id", "offset0", "shape", "values"])
+                    out += cut_axis0(slab, shape, r0, r.chunk_id)
+            yield pd.DataFrame(out, columns=CHUNK_SCHEMA.names)
 
     return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
 
@@ -541,7 +534,7 @@ class HDF5Reader(BaseReader):
 
     ``dataset`` selects by path (e.g. ``"group/temps"``); default is the
     first dataset in path-sorted order. Contiguous payloads decode on
-    executors via the shared byte-range manifest (sci._chunked_array_df);
+    executors via the shared byte-range manifest (arrays.byte_range_df);
     compact payloads (≤64 KiB inline) decode driver-side by spec."""
 
     implements = {dt.HDF5}
@@ -549,7 +542,7 @@ class HDF5Reader(BaseReader):
     def _read(self, spark, dataset: str | None = None, rows_per_chunk: int = 4096, **kwargs):
         import numpy as np
 
-        from intake_spark.sci import _chunked_array_df
+        from intake_spark.arrays import CHUNK_SCHEMA, byte_range_df, cut_axis0
 
         url = self.data.url
         with open(url, "rb") as f:
@@ -572,15 +565,11 @@ class HDF5Reader(BaseReader):
             fill = float(np.frombuffer(fill_raw[: np.dtype(dtype).itemsize], np.dtype(dtype))[0])
         self.data.metadata.update({"dataset": key, "dtype": dtype, "shape": shape})
         if layout[0] == "compact":
-            from intake_spark.arrays import CHUNK_SCHEMA
-
-            vals = np.frombuffer(layout[1], dtype=np.dtype(dtype))
             n = 1
             for s in shape:
                 n *= s
-            return local_frame(
-                spark, [(0, 0, shape, vals[:n].astype(np.float64).tolist())], CHUNK_SCHEMA
-            )
+            vals = np.frombuffer(layout[1], dtype=np.dtype(dtype))[:n]
+            return local_frame(spark, cut_axis0(vals, shape), CHUNK_SCHEMA)
         if layout[0] == "chunked":
             if layout[1] == _UNDEF:
                 index = []  # no chunks ever written — all-fill dataset
@@ -594,7 +583,7 @@ class HDF5Reader(BaseReader):
         _, data_addr, _nbytes = layout
         if data_addr == _UNDEF:
             raise ValueError(f"dataset {key!r} has no allocated storage")
-        return _chunked_array_df(
+        return byte_range_df(
             spark, url, dtype, shape, meta.base + data_addr, rows_per_chunk
         )
 

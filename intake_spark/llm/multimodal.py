@@ -21,6 +21,7 @@ tasks. Feature outputs (fixed-width arrays) are shuffle-friendly.
 from __future__ import annotations
 
 import hashlib
+import struct
 from typing import Iterator
 
 import pandas as pd
@@ -544,6 +545,12 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
 )
 
 
+# what a header probe (image_meta / audio_meta) raises on a malformed,
+# truncated or unrecognized blob: its own ValueErrors, short-buffer
+# struct.error, an index or tag past the end, a gated variant
+_PROBE_ERRORS = (ValueError, LookupError, NotImplementedError, struct.error)
+
+
 def _optional_image_decode(blob: bytes):
     """Widest rung of the :func:`image_features` ladder: give pillow
     (via :func:`_pil_decode`, the reference's PILImageReader surface)
@@ -554,7 +561,7 @@ def _optional_image_decode(blob: bytes):
     fails too; the caller then emits the ``decoded=0`` probe row."""
     try:
         return _pil_decode(blob)
-    except Exception:
+    except Exception:  # pillow raises arbitrary types on arbitrary bytes
         return None
 
 
@@ -566,7 +573,7 @@ def _optional_audio_decode(blob: bytes):
     fails too."""
     try:
         rate, data, bits = _lib_audio_decode(blob)
-    except Exception:
+    except Exception:  # soundfile raises arbitrary types on arbitrary bytes
         return None
     import numpy as np
 
@@ -588,7 +595,7 @@ def _image_feature_cells(blob: bytes, thumb_size: int) -> dict:
             try:
                 m = image_meta(blob)
                 w, h, fmt = m["width"], m["height"], m["format"]
-            except Exception:
+            except _PROBE_ERRORS:
                 pass
             return {
                 "width": w, "height": h, "n_channels": None,
@@ -599,7 +606,7 @@ def _image_feature_cells(blob: bytes, thumb_size: int) -> dict:
         # gate message is gone — decoded=1 says the pixels are real)
         try:
             fmt = image_meta(blob)["format"]
-        except Exception:
+        except _PROBE_ERRORS:
             fmt = None
     gray = arr.mean(axis=2)
     thumb = resize_nearest(arr, thumb_size, thumb_size).mean(axis=2)
@@ -1833,7 +1840,7 @@ def _audio_feature_cells(blob: bytes) -> dict:
             rate, x = got
             try:
                 fmt = _audio_meta(blob)["format"]
-            except Exception:
+            except _PROBE_ERRORS:
                 fmt = None
             return _audio_float_cells(rate, x, fmt, 1, None)
         err_label = f"{type(exc).__name__}: {exc}"
@@ -1842,7 +1849,7 @@ def _audio_feature_cells(blob: bytes) -> dict:
             m = _audio_meta(blob)
             sr, ch = m["sample_rate"], m["channels"]
             dur, fmt = m["duration_s"], m["format"]
-        except Exception:
+        except _PROBE_ERRORS:
             pass
         return {
             "sample_rate": sr, "n_channels": ch, "n_frames": None,

@@ -5,6 +5,9 @@ output.py:1-7 — "all return a new datatype instance").
 
 from __future__ import annotations
 
+import contextlib
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -12,31 +15,19 @@ from intake_spark import datatypes as dt
 from intake_spark.session import ensure_py_deps, map_in_pandas
 
 
-def _guard_single_file(df: DataFrame, sink: str, max_bytes: int | None) -> list[int]:
-    """Driver-streamed single-file sinks are by-contract bounded artifacts
-    (thumbnails, arrays, QA exports). This guard keeps them honest at
-    scale: the array's total byte size comes free from the chunk-row
-    ``shape`` metadata, and anything above ``max_bytes`` raises with the
-    distributed alternative named — same pattern as
-    embedding_near_dup_pairs' max_rows guard. Returns the shape so sinks
-    don't re-run the same first() action."""
-    first = df.select("shape").first()
-    if first is None:
-        raise ValueError("empty chunk DataFrame")
-    shape = [int(s) for s in first["shape"]]
-    if max_bytes is None:
-        return shape
-    n = 1
-    for s in shape:
-        n *= s
-    if n * 8 > max_bytes:
-        raise ValueError(
-            f"{sink}: array is {n * 8} bytes (> max_bytes={max_bytes}); "
-            "single-file driver-streamed sinks are for bounded artifacts — "
-            "use to_zarr (distributed chunk writes) or to_parquet for data "
-            "this size, or pass max_bytes=None to override deliberately"
-        )
-    return shape
+@contextlib.contextmanager
+def _new_file(url: str):
+    """``open(url, "wb")`` for the single-file array sinks: when the body
+    raises (a gap or a short frame found mid-stream, a value that does
+    not convert), the partial file is removed, so a failed sink leaves
+    no file behind."""
+    try:
+        with open(url, "wb") as f:
+            yield f
+    except BaseException:
+        with contextlib.suppress(OSError):
+            os.remove(url)
+        raise
 
 
 def to_parquet(df: DataFrame, url: str, mode: str = "overwrite", partition_by: list[str] | None = None, **options) -> dt.Parquet:
@@ -375,26 +366,6 @@ def to_zarr(df: DataFrame, url: str, compressor: str | None = "zlib") -> dt.Zarr
     return dt.Zarr(url=url)
 
 
-def _check_written_elems(written: int, shape, sink: str, url: str) -> None:
-    """Refuse to leave a truncated file behind: the header declares
-    ``shape``, so the streamed element count must match exactly."""
-    import os as _os
-
-    expected = 1
-    for v in shape:
-        expected *= int(v)
-    if written != expected:
-        try:
-            _os.remove(url)
-        except OSError:
-            pass
-        raise ValueError(
-            f"{sink}: streamed {written} elements but the header shape "
-            f"{tuple(shape)} declares {expected} — refusing to leave a "
-            "truncated file (was the chunk frame filtered?)"
-        )
-
-
 def to_npy(df: DataFrame, url: str, max_bytes: int | None = 1 << 30) -> dt.NumpyFile:
     """Chunk-row DataFrame → .npy (v1 header + C-order float64 data),
     streamed through the driver in offset order (``toLocalIterator`` — one
@@ -403,17 +374,16 @@ def to_npy(df: DataFrame, url: str, max_bytes: int | None = 1 << 30) -> dt.Numpy
     through the driver."""
     import struct as _struct
 
-    shape = tuple(_guard_single_file(df, "to_npy", max_bytes))
-    header = "{'descr': '<f8', 'fortran_order': False, 'shape': %s, }" % (str(shape),)
+    from intake_spark.arrays import stream_axis0
+
+    shape, blocks = stream_axis0(df, "to_npy", max_bytes)
+    header = "{'descr': '<f8', 'fortran_order': False, 'shape': %s, }" % (str(tuple(shape)),)
     pad = (64 - (10 + len(header) + 1) % 64) % 64
     header = header + " " * pad + "\n"
-    written = 0
-    with open(url, "wb") as f:
+    with _new_file(url) as f:
         f.write(b"\x93NUMPY\x01\x00" + _struct.pack("<H", len(header)) + header.encode())
-        for row in df.select("offset0", "values").orderBy("offset0").toLocalIterator():
-            f.write(_struct.pack(f"<{len(row['values'])}d", *row["values"]))
-            written += len(row["values"])
-    _check_written_elems(written, shape, "to_npy", url)
+        for block in blocks:
+            f.write(block.astype("<f8").tobytes())
     return dt.NumpyFile(url=url)
 
 
@@ -460,44 +430,42 @@ def to_png(df: DataFrame, url: str, max_bytes: int | None = 1 << 30) -> dt.PNG:
     NumpyToPNG output.py:268+, which needs PIL. Media are driver-edge
     artifacts (thumbnails, QA), so a driver-side write is the right cost
     model; like to_npy, only one partition is in driver memory at a time."""
-    shape = list(_guard_single_file(df, "to_png", max_bytes))
+    from intake_spark.arrays import stream_axis0
+
+    shape, blocks = stream_axis0(df, "to_png", max_bytes)
     if len(shape) != 2:
         raise ValueError(f"to_png needs a 2-D array, got shape {shape}")
     w = shape[1]
     arr = []
-    for row in df.select("offset0", "values").orderBy("offset0").toLocalIterator():
-        vals = [max(0, min(255, int(v))) for v in row["values"]]
+    for block in blocks:
+        vals = [max(0, min(255, int(v))) for v in block.tolist()]
         arr.extend(vals[i * w : (i + 1) * w] for i in range(len(vals) // w))
-    if len(arr) != shape[0]:
-        raise ValueError(
-            f"chunk rows reconstruct {len(arr)} image rows but shape says "
-            f"{shape[0]} — refusing to write a truncated PNG"
-        )
-    with open(url, "wb") as f:
+    with _new_file(url) as f:
         f.write(_png_bytes(arr))
     return dt.PNG(url=url)
 
 
 def to_wav(df: DataFrame, url: str, rate: int = 16000, max_bytes: int | None = 1 << 30) -> dt.WAV:
     """Chunk rows → 16-bit mono WAV via the stdlib ``wave`` module (parity:
-    NumpyToWAV output.py:300-ish). Values expected in [-1, 1]; streamed in
-    offset order."""
+    NumpyToWAV output.py:300-ish). Values expected in [-1, 1] (scaled by
+    32767, clipped to int16). Rows stream in offset order through
+    ``arrays.stream_axis0``: a gap, an overlap or a short frame raises
+    and leaves no file. The header needs no shape, so with
+    ``max_bytes=None`` no Spark job runs before the stream, an empty frame
+    writes an empty WAV, and a frame without a ``shape`` column is read as
+    1-D samples whose ``offset0`` counts samples."""
     import struct as _struct
     import wave
 
-    # to_wav never needs the shape, so the guard (and its Spark action)
-    # only runs when a byte cap is actually set — max_bytes=None keeps the
-    # documented no-extra-job, empty-df-writes-empty-file behavior
-    if max_bytes is not None:
-        _guard_single_file(df, "to_wav", max_bytes)
-    with wave.open(url, "wb") as w:
+    from intake_spark.arrays import stream_axis0
+
+    _, blocks = stream_axis0(df, "to_wav", max_bytes, need_shape=False)
+    with _new_file(url) as f, wave.open(f, "wb") as w:
         w.setnchannels(1)
         w.setsampwidth(2)
         w.setframerate(rate)
-        for row in df.select("offset0", "values").orderBy("offset0").toLocalIterator():
-            samples = [
-                max(-32768, min(32767, int(float(v) * 32767.0))) for v in row["values"]
-            ]
+        for block in blocks:
+            samples = [max(-32768, min(32767, int(v * 32767.0))) for v in block.tolist()]
             w.writeframes(_struct.pack(f"<{len(samples)}h", *samples))
     return dt.WAV(url=url)
 
@@ -507,23 +475,23 @@ def to_ogg(df: DataFrame, url: str, rate: int = 16000,
     """Chunk rows → OGG/Vorbis via the native encoder (llm/vorbis.py):
     a real lossy encode (MDCT + flat floor-1 + lattice-VQ residue) that
     round-trips through :func:`intake_spark.llm.vorbis.decode_vorbis`.
-    Values expected in [-1, 1]; streamed in offset order. For corpus-
-    scale audio keep blobs in a binary column instead of driver-side
-    single files (same posture as to_wav)."""
+    Values expected in [-1, 1]. Rows stream in offset order through
+    ``arrays.stream_axis0`` (a gap, an overlap or a short frame raises),
+    and the whole signal is gathered on the driver before the one encode
+    and write, so a failed sink leaves no file. ``max_bytes=None``
+    behaves as in :func:`to_wav`: no job before the stream, an empty frame
+    writes an empty stream, a frame without ``shape`` is 1-D samples. For
+    corpus-scale audio keep blobs in a binary column instead of
+    driver-side single files."""
     import numpy as np
 
+    from intake_spark.arrays import stream_axis0
     from intake_spark.llm.vorbis import encode_vorbis
 
-    if max_bytes is not None:
-        _guard_single_file(df, "to_ogg", max_bytes)
-    chunks = [
-        np.asarray([float(v) for v in row["values"]])
-        for row in df.select("offset0", "values")
-        .orderBy("offset0")
-        .toLocalIterator()
-    ]
+    _, blocks = stream_axis0(df, "to_ogg", max_bytes, need_shape=False)
+    chunks = list(blocks)
     samples = np.concatenate(chunks) if chunks else np.zeros(0)
-    with open(url, "wb") as f:
+    with _new_file(url) as f:
         f.write(encode_vorbis(samples, rate))
     return dt.OGG(url=url)
 
@@ -537,9 +505,10 @@ def to_netcdf(df: DataFrame, url: str, variable: str = "data", max_bytes: int | 
     use to_zarr's distributed chunk writes above the guard."""
     import struct as st
 
+    from intake_spark.arrays import stream_axis0
     from intake_spark.sci import NetCDF3
 
-    shape = list(_guard_single_file(df, "to_netcdf", max_bytes))
+    shape, blocks = stream_axis0(df, "to_netcdf", max_bytes)
 
     def name(s: str) -> bytes:
         b = s.encode()
@@ -563,13 +532,10 @@ def to_netcdf(df: DataFrame, url: str, variable: str = "data", max_bytes: int | 
         + st.pack(">II", 0x0B, 1) + var_entry
     )
     begin = len(header) + 4
-    written = 0
-    with open(url, "wb") as f:
+    with _new_file(url) as f:
         f.write(header + st.pack(">I", begin))
-        for row in df.select("offset0", "values").orderBy("offset0").toLocalIterator():
-            f.write(st.pack(f">{len(row['values'])}d", *row["values"]))
-            written += len(row["values"])
-    _check_written_elems(written, shape, "to_netcdf", url)
+        for block in blocks:
+            f.write(block.astype(">f8").tobytes())
     return NetCDF3(url=url, variable=variable)
 
 
@@ -587,7 +553,9 @@ def to_hdf5(
     the same ``max_bytes`` guard; round-trips with hdf5.HDF5Reader."""
     import struct as st
 
-    shape = list(_guard_single_file(df, "to_hdf5", max_bytes))
+    from intake_spark.arrays import stream_axis0
+
+    shape, blocks = stream_axis0(df, "to_hdf5", max_bytes)
     nbytes = 8
     for s in shape:
         nbytes *= s
@@ -635,7 +603,7 @@ def to_hdf5(
     head += st.pack("<Q", 0) + UNDEF + st.pack("<Q", eof) + UNDEF
     head += st.pack("<QQII", 0, root_addr, 0, 0) + b"\x00" * 16
     layout = msg(0x08, st.pack("<BBQQ", 3, 1, data_addr, nbytes))
-    with open(url, "wb") as f:
+    with _new_file(url) as f:
         f.write(head)
         f.write(oh_v1([msg(0x11, st.pack("<QQ", btree_addr, heap_addr))]))
         f.write(
@@ -647,18 +615,8 @@ def to_hdf5(
         f.write(b"SNOD" + bytes([1, 0]) + st.pack("<H", 1))
         f.write(st.pack("<QQII", 8, ds_addr, 0, 0) + b"\x00" * 16)
         f.write(oh_v1([space, dtype_msg, layout]))
-        import struct as _struct
-
-        written = 0
-        for row in df.select("offset0", "values").orderBy("offset0").toLocalIterator():
-            vals = row["values"]
-            f.write(_struct.pack(f"<{len(vals)}d", *vals))
-            written += len(vals) * 8
-        if written != nbytes:
-            raise ValueError(
-                f"chunk rows wrote {written} bytes but shape implies {nbytes} — "
-                "refusing to leave a truncated dataset"
-            )
+        for block in blocks:
+            f.write(block.astype("<f8").tobytes())
     return dt.HDF5(url=url)
 
 
@@ -669,18 +627,15 @@ def to_tiff(df: DataFrame, url: str, max_bytes: int | None = 1 << 30) -> "dt.TIF
     needs PIL. Driver-edge artifact sink, same cost model as to_png."""
     import struct as _struct
 
-    shape = list(_guard_single_file(df, "to_tiff", max_bytes))
+    from intake_spark.arrays import stream_axis0
+
+    shape, blocks = stream_axis0(df, "to_tiff", max_bytes)
     if len(shape) != 2:
         raise ValueError(f"to_tiff needs a 2-D array, got shape {shape}")
     h, w = shape
     data = bytearray()
-    for row in df.select("offset0", "values").orderBy("offset0").toLocalIterator():
-        data.extend(max(0, min(255, int(v))) for v in row["values"])
-    if len(data) != h * w:
-        raise ValueError(
-            f"chunk rows reconstruct {len(data)} pixels but shape says "
-            f"{h * w} — refusing to write a truncated TIFF"
-        )
+    for block in blocks:
+        data.extend(max(0, min(255, int(v))) for v in block.tolist())
     # layout: 8-byte header | IFD | strip data
     tags = [
         (256, 3, 1, w),        # ImageWidth
@@ -703,7 +658,7 @@ def to_tiff(df: DataFrame, url: str, max_bytes: int | None = 1 << 30) -> "dt.TIF
         out += _struct.pack("<HHI", tag, typ, cnt) + _struct.pack("<I", val)
     out += _struct.pack("<I", 0)  # next IFD
     out += bytes(data)
-    with open(url, "wb") as f:
+    with _new_file(url) as f:
         f.write(out)
     return dt.TIFF(url=url)
 
@@ -723,22 +678,18 @@ def to_jpeg2000(
     to_png/to_tiff."""
     import numpy as np
 
+    from intake_spark.arrays import stream_axis0
     from intake_spark.llm.jpeg2000 import encode_jpeg2000
 
-    shape = list(_guard_single_file(df, "to_jpeg2000", max_bytes))
+    shape, blocks = stream_axis0(df, "to_jpeg2000", max_bytes)
     if len(shape) != 2:
         raise ValueError(f"to_jpeg2000 needs a 2-D array, got shape {shape}")
     h, w = shape
     flat: list[int] = []
-    for row in df.select("offset0", "values").orderBy("offset0").toLocalIterator():
-        flat.extend(max(0, min(65535, int(v))) for v in row["values"])
-    if len(flat) != h * w:
-        raise ValueError(
-            f"chunk rows reconstruct {len(flat)} pixels but shape says "
-            f"{h * w} — refusing to write a truncated JPEG 2000"
-        )
+    for block in blocks:
+        flat.extend(max(0, min(65535, int(v))) for v in block.tolist())
     arr = np.asarray(flat, dtype=np.int64).reshape(h, w)
-    with open(url, "wb") as f:
+    with _new_file(url) as f:
         f.write(encode_jpeg2000(arr, levels=levels, irreversible=irreversible))
     return dt.JPEG2000(url=url)
 
@@ -755,22 +706,18 @@ def to_webp(
     Driver-edge artifact sink, same cost model as to_png."""
     import numpy as np
 
+    from intake_spark.arrays import stream_axis0
     from intake_spark.llm.webp import encode_webp
 
-    shape = list(_guard_single_file(df, "to_webp", max_bytes))
+    shape, blocks = stream_axis0(df, "to_webp", max_bytes)
     if len(shape) != 2:
         raise ValueError(f"to_webp needs a 2-D array, got shape {shape}")
     h, w = shape
     flat: list[int] = []
-    for row in df.select("offset0", "values").orderBy("offset0").toLocalIterator():
-        flat.extend(max(0, min(255, int(v))) for v in row["values"])
-    if len(flat) != h * w:
-        raise ValueError(
-            f"chunk rows reconstruct {len(flat)} pixels but shape says "
-            f"{h * w} — refusing to write a truncated WebP"
-        )
+    for block in blocks:
+        flat.extend(max(0, min(255, int(v))) for v in block.tolist())
     arr = np.asarray(flat, dtype=np.uint8).reshape(h, w)
-    with open(url, "wb") as f:
+    with _new_file(url) as f:
         f.write(encode_webp(arr))
     return dt.WEBP(url=url)
 
@@ -780,11 +727,10 @@ def to_nrrd(df: DataFrame, url: str, max_bytes: int | None = 1 << 30) -> "dt.Bas
     written fastest-axis-first per the NRRD spec (reverse of the C-order
     shape), so the file round-trips with sci.NRRDReader — parity:
     SimpleITKToNRRD (reference output.py), which needs SimpleITK."""
-    import struct as _struct
-
     from intake_spark import sci as _sci
+    from intake_spark.arrays import stream_axis0
 
-    shape = list(_guard_single_file(df, "to_nrrd", max_bytes))
+    shape, blocks = stream_axis0(df, "to_nrrd", max_bytes)
     header = (
         "NRRD0004\n"
         "type: double\n"
@@ -794,13 +740,10 @@ def to_nrrd(df: DataFrame, url: str, max_bytes: int | None = 1 << 30) -> "dt.Bas
         "encoding: raw\n"
         "\n"
     )
-    written = 0
-    with open(url, "wb") as f:
+    with _new_file(url) as f:
         f.write(header.encode())
-        for row in df.select("offset0", "values").orderBy("offset0").toLocalIterator():
-            f.write(_struct.pack(f"<{len(row['values'])}d", *row["values"]))
-            written += len(row["values"])
-    _check_written_elems(written, shape, "to_nrrd", url)
+        for block in blocks:
+            f.write(block.astype("<f8").tobytes())
     return _sci.NRRD(url=url)
 
 
@@ -809,11 +752,10 @@ def to_metaimage(df: DataFrame, url: str, max_bytes: int | None = 1 << 30) -> "d
     LOCAL). DimSize is fastest-axis-first (reverse of C-order shape);
     round-trips with sci.MetaImageReader — parity: SimpleITKToMetaImage
     (reference output.py)."""
-    import struct as _struct
-
     from intake_spark import sci as _sci
+    from intake_spark.arrays import stream_axis0
 
-    shape = list(_guard_single_file(df, "to_metaimage", max_bytes))
+    shape, blocks = stream_axis0(df, "to_metaimage", max_bytes)
     header = (
         "ObjectType = Image\n"
         f"NDims = {len(shape)}\n"
@@ -823,13 +765,10 @@ def to_metaimage(df: DataFrame, url: str, max_bytes: int | None = 1 << 30) -> "d
         "ElementType = MET_DOUBLE\n"
         "ElementDataFile = LOCAL\n"
     )
-    written = 0
-    with open(url, "wb") as f:
+    with _new_file(url) as f:
         f.write(header.encode())
-        for row in df.select("offset0", "values").orderBy("offset0").toLocalIterator():
-            f.write(_struct.pack(f"<{len(row['values'])}d", *row["values"]))
-            written += len(row["values"])
-    _check_written_elems(written, shape, "to_metaimage", url)
+        for block in blocks:
+            f.write(block.astype("<f8").tobytes())
     return _sci.MetaImage(url=url)
 
 

@@ -546,7 +546,7 @@ class ZarrReader(BaseReader):
         import json as _json
         import os as _os
 
-        from intake_spark.arrays import CHUNK_SCHEMA
+        from intake_spark.arrays import CHUNK_SCHEMA, cut_axis0
 
         root = self.data.url.rstrip("/")
         if _os.path.exists(f"{root}/zarr.json"):
@@ -849,15 +849,8 @@ class ZarrReader(BaseReader):
                         return np.concatenate(blocks, axis=axis)
 
                     block = parts[()] if len(shape) == 1 else stitch(1, ())
-                    out.append(
-                        {
-                            "chunk_id": i0,
-                            "offset0": i0 * chunks[0],
-                            "shape": shape,
-                            "values": block.astype(np.float64).ravel().tolist(),
-                        }
-                    )
-                yield pd.DataFrame(out, columns=["chunk_id", "offset0", "shape", "values"])
+                    out += cut_axis0(block, shape, i0 * chunks[0], i0)
+                yield pd.DataFrame(out, columns=CHUNK_SCHEMA.names)
 
         return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
 

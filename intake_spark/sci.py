@@ -6,8 +6,8 @@ three on astropy/nibabel/pydicom).
 
 Both real readers emit the engine's chunk-row encoding
 (arrays.CHUNK_SCHEMA): the header parses driver-side (tiny), the payload
-decodes on executors via a byte-range manifest — same distributed recipe
-as NumpyArrayReader.
+decodes on executors via a byte-range manifest (arrays.byte_range_df,
+the same distributed recipe as NumpyArrayReader).
 """
 
 from __future__ import annotations
@@ -19,6 +19,7 @@ import pandas as pd
 from pyspark.sql import types as T
 
 from intake_spark import datatypes as dt
+from intake_spark.arrays import CHUNK_SCHEMA, byte_range_df, cut_axis0
 from intake_spark.readers import BaseReader
 from intake_spark.session import local_frame, map_in_pandas
 
@@ -66,49 +67,6 @@ def _parse_fits_header(f) -> tuple[dict, int]:
     return cards, off
 
 
-def _chunked_array_df(spark, url: str, dtype: str, shape: list[int], data_off: int, rows_per_chunk: int):
-    """Byte-range manifest → mapInPandas decode → chunk rows. Shared by
-    FITS/NIfTI (same shape as NumpyArrayReader, arrays.py)."""
-    import numpy as np
-
-    from intake_spark.arrays import CHUNK_SCHEMA
-
-    row_elems = 1
-    for s in shape[1:]:
-        row_elems *= s
-    n0 = shape[0] if shape else 1
-    itemsize = np.dtype(dtype).itemsize
-    manifest = [
-        (i, start, min(start + rows_per_chunk, n0))
-        for i, start in enumerate(range(0, n0, rows_per_chunk))
-    ]
-    mdf = local_frame(
-        spark, manifest, "chunk_id long, row_start long, row_end long"
-    )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            with open(url, "rb") as f:
-                for _, r in pdf.iterrows():
-                    n_el = int(r.row_end - r.row_start) * row_elems
-                    f.seek(data_off + int(r.row_start) * row_elems * itemsize)
-                    vals = np.frombuffer(f.read(n_el * itemsize), dtype=np.dtype(dtype))
-                    out.append(
-                        {
-                            "chunk_id": int(r.chunk_id),
-                            "offset0": int(r.row_start),
-                            "shape": shape,
-                            "values": vals.astype(np.float64).tolist(),
-                        }
-                    )
-            yield pd.DataFrame(out, columns=["chunk_id", "offset0", "shape", "values"])
-
-    return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
-
-
 class FITSReader(BaseReader):
     """FITS primary-HDU image → chunk-row DataFrame. Header cards land in
     the data's ``metadata`` dict; data is big-endian per BITPIX."""
@@ -127,13 +85,11 @@ class FITSReader(BaseReader):
             # header-only primary HDU (data lives in extensions): there IS
             # no data array — emit an empty chunk frame, never read the
             # bytes after the header (they are the next HDU's header)
-            from intake_spark.arrays import CHUNK_SCHEMA
-
             return local_frame(spark, [], CHUNK_SCHEMA)
         # FITS axis order is fortran-like: NAXIS1 varies fastest → reverse
         shape = [int(cards[f"NAXIS{i}"]) for i in range(naxis, 0, -1)]
         dtype = _FITS_BITPIX[int(cards["BITPIX"])]
-        return _chunked_array_df(spark, url, dtype, shape, data_off, rows_per_chunk)
+        return byte_range_df(spark, url, dtype, shape, data_off, rows_per_chunk)
 
 
 _NIFTI_DTYPES = {2: "<u1", 4: "<i2", 8: "<i4", 16: "<f4", 64: "<f8", 256: "<i1", 512: "<u2"}
@@ -167,7 +123,7 @@ class NIfTIReader(BaseReader):
         if datatype not in _NIFTI_DTYPES:
             raise ValueError(f"unsupported NIfTI datatype code {datatype}")
         (vox_offset,) = struct.unpack("<f", hdr[108:112])
-        return _chunked_array_df(
+        return byte_range_df(
             spark, url, _NIFTI_DTYPES[datatype], shape, int(vox_offset), rows_per_chunk
         )
 
@@ -543,8 +499,6 @@ class TIFFReader(BaseReader):
     def _read(self, spark, page: int = 0, **kwargs):
         import numpy as np  # noqa: F401
 
-        from intake_spark.arrays import CHUNK_SCHEMA
-
         url = self.data.url
         with open(url, "rb") as f:
             meta = tiff_meta(f, page=page)
@@ -621,8 +575,6 @@ class TIFFReader(BaseReader):
             out_schema = CHUNK_SCHEMA
 
         def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import numpy as np
-
             cols = [f.name for f in out_schema.fields]
             with open(url, "rb") as fh:
                 for pdf in batches:
@@ -633,12 +585,7 @@ class TIFFReader(BaseReader):
                         else:
                             fh.seek(int(r.off))
                             arr = _tiff_strip_array(fh.read(int(r.cnt)), meta, int(r.nrows))
-                        row = {
-                            "chunk_id": int(r.chunk_id),
-                            "offset0": int(r.row_start),
-                            "shape": shape,
-                            "values": arr.astype(np.float64).ravel().tolist(),
-                        }
+                        (row,) = cut_axis0(arr, shape, r.row_start, r.chunk_id)
                         if axis_aligned:
                             r0 = int(r.row_start)
                             row["xs"] = [gox + (c + half) * gsx for c in range(w)]
@@ -656,10 +603,8 @@ def _inflated_chunk_df(
     spark, url: str, dtype, shape, data_off: int, rows_per_chunk: int, codec: str
 ):
     """Whole-payload-compressed array (NRRD gzip / MetaImage zlib) →
-    chunk rows: one executor inflates the stream, then slices first-axis
-    slabs — shared by both readers so the chunk math lives once."""
-    from intake_spark.arrays import CHUNK_SCHEMA
-
+    chunk rows: one executor inflates the stream, then cuts first-axis
+    slabs (arrays.cut_axis0) — shared by both readers."""
     mdf = local_frame(spark, [(data_off,)], "data_off long")
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -674,25 +619,9 @@ def _inflated_chunk_df(
                 with open(url, "rb") as fh:
                     fh.seek(int(r["data_off"]))
                     raw = inflate(fh.read())
-                vals = np.frombuffer(raw, dtype=np.dtype(dtype))
-                out = []
-                n0 = shape[0] if shape else 1
-                row_elems = int(vals.size // max(n0, 1))
-                for ci, start in enumerate(range(0, n0, rows_per_chunk)):
-                    stop = min(start + rows_per_chunk, n0)
-                    out.append(
-                        {
-                            "chunk_id": ci,
-                            "offset0": start,
-                            "shape": shape,
-                            "values": vals[start * row_elems : stop * row_elems]
-                            .astype(np.float64)
-                            .tolist(),
-                        }
-                    )
-                yield pd.DataFrame(
-                    out, columns=["chunk_id", "offset0", "shape", "values"]
-                )
+                vals = np.frombuffer(raw, dtype=np.dtype(dtype)).reshape(shape)
+                out = cut_axis0(vals, shape, rows_per_chunk=rows_per_chunk)
+                yield pd.DataFrame(out, columns=CHUNK_SCHEMA.names)
 
     return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
 
@@ -809,7 +738,7 @@ class NetCDF3Reader(BaseReader):
                 "reads not supported by this stdlib reader"
             )
         self.data.metadata.update({"dims": hdr["dims"], "variable": var})
-        return _chunked_array_df(
+        return byte_range_df(
             spark, url, meta["dtype"], meta["shape"] or [1], meta["begin"], rows_per_chunk
         )
 
@@ -1000,8 +929,6 @@ class MatlabMatReader(BaseReader):
     implements = {MatlabMat}
 
     def _read(self, spark, variable: str | None = None, rows_per_chunk: int = 4096, **kwargs):
-        from intake_spark.arrays import CHUNK_SCHEMA
-
         url = self.data.url
         variables = _mat_toplevel(url)
         if not variables:
@@ -1040,23 +967,9 @@ class MatlabMatReader(BaseReader):
                     if mtype not in _MAT_MI_DTYPES:
                         raise ValueError(f"unsupported MAT data type {mtype}")
                     arr = np.frombuffer(data, dtype="<" + _MAT_MI_DTYPES[mtype])
-                    arr = arr.reshape(dims, order="F").astype(np.float64)
-                    arr = np.ascontiguousarray(arr)
-                    n0 = dims[0] if dims else 1
-                    out = []
-                    for ci, start in enumerate(range(0, n0, rows_per_chunk)):
-                        block = arr[start : start + rows_per_chunk]
-                        out.append(
-                            {
-                                "chunk_id": ci,
-                                "offset0": start,
-                                "shape": dims,
-                                "values": block.ravel().tolist(),
-                            }
-                        )
-                    yield pd.DataFrame(
-                        out, columns=["chunk_id", "offset0", "shape", "values"]
-                    )
+                    arr = arr.reshape(dims, order="F")
+                    out = cut_axis0(arr, dims, rows_per_chunk=rows_per_chunk)
+                    yield pd.DataFrame(out, columns=CHUNK_SCHEMA.names)
 
         return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
 
@@ -1834,7 +1747,7 @@ class NRRDReader(BaseReader):
         enc = fields.get("encoding", "raw")
         self.data.metadata.update({"fields": fields, "shape": shape})
         if enc == "raw":
-            return _chunked_array_df(spark, url, dtype, shape, data_off, rows_per_chunk)
+            return byte_range_df(spark, url, dtype, shape, data_off, rows_per_chunk)
         if enc in ("gz", "gzip"):
             return _inflated_chunk_df(
                 spark, url, dtype, shape, data_off, rows_per_chunk, "gzip"
@@ -2098,7 +2011,7 @@ class DicomReader(BaseReader):
         self.data.metadata.update({**t, "transfer_syntax": meta["transfer"]})
         if "fragments" in meta:
             return self._read_encapsulated(spark, url, meta, t, shape)
-        return _chunked_array_df(
+        return byte_range_df(
             spark, url, dtype, shape, meta["pixel_off"], rows_per_chunk
         )
 
@@ -2108,8 +2021,6 @@ class DicomReader(BaseReader):
         raise, named), decoded executor-side from a byte-range manifest
         with the package's OWN codecs (packbits / baseline-JPEG DCT /
         T.87 LOCO-I, llm/jpegls.py) — no external codec plugins."""
-        from intake_spark.arrays import CHUNK_SCHEMA
-
         transfer = meta["transfer"]
         frames = t.get("number_of_frames", 1)
         frags = meta["fragments"]
@@ -2210,18 +2121,8 @@ class DicomReader(BaseReader):
                                 f"decoded frame shape {tuple(arr.shape)} != "
                                 f"tag-declared {exp_frame}"
                             )
-                        fshape = list(arr.shape)
-                        out.append(
-                            {
-                                "chunk_id": int(r.frame),
-                                "offset0": int(r.frame) if multi else 0,
-                                "shape": ([frames] + fshape) if multi else fshape,
-                                "values": arr.astype("float64").ravel().tolist(),
-                            }
-                        )
-                yield pd_.DataFrame(
-                    out, columns=["chunk_id", "offset0", "shape", "values"]
-                )
+                        out += cut_axis0(arr, shape, r.frame if multi else 0, r.frame)
+                yield pd_.DataFrame(out, columns=CHUNK_SCHEMA.names)
 
         return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
 
@@ -2474,7 +2375,7 @@ class ASDFReader(BaseReader):
         order = ">" if desc.get("byteorder", "little") == "big" else "<"
         shape = [int(s) for s in desc["shape"]]
         self.data.metadata.update({"array": key, "arrays": sorted(arrays), "shape": shape})
-        return _chunked_array_df(
+        return byte_range_df(
             spark, url, order + _ASDF_DTYPES[dkey], shape, blk["offset"], rows_per_chunk
         )
 
@@ -2768,7 +2669,7 @@ class MetaImageReader(BaseReader):
         compressed = fields.get("CompressedData", "False").lower() == "true"
         self.data.metadata.update({"fields": fields, "shape": shape, "dtype": dtype})
         if not compressed:
-            return _chunked_array_df(spark, data_url, dtype, shape, data_off, rows_per_chunk)
+            return byte_range_df(spark, data_url, dtype, shape, data_off, rows_per_chunk)
 
         return _inflated_chunk_df(
             spark, data_url, dtype, shape, data_off, rows_per_chunk, "zlib"

@@ -1523,7 +1523,7 @@ class OpenDAPReader(BaseReader):
 
         import numpy as np
 
-        from intake_spark.arrays import CHUNK_SCHEMA
+        from intake_spark.arrays import CHUNK_SCHEMA, cut_axis0
 
         fetch = fetch or _dap_fetch
         base = self.data.url.rstrip("/")
@@ -1556,22 +1556,8 @@ class OpenDAPReader(BaseReader):
         if n1 != want:
             raise ValueError(f"XDR count {n1} != DDS shape product {want}")
         arr = np.frombuffer(payload, dtype=np.dtype(npdt), count=want, offset=8)
-        vals = arr.astype(np.float64)
         rows_per_chunk = max(1, shape[0] // max(1, spark.sparkContext.defaultParallelism))
-        row_elems = want // shape[0]
-        out = []
-        cid = 0
-        for r0 in range(0, shape[0], rows_per_chunk):
-            nrows = min(rows_per_chunk, shape[0] - r0)
-            out.append(
-                {
-                    "chunk_id": cid,
-                    "offset0": r0,
-                    "shape": [int(s) for s in shape],
-                    "values": vals[r0 * row_elems : (r0 + nrows) * row_elems].tolist(),
-                }
-            )
-            cid += 1
+        out = cut_axis0(arr.reshape(shape), shape, rows_per_chunk=rows_per_chunk)
         return local_frame(spark, out, CHUNK_SCHEMA)
 
 

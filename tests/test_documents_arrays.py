@@ -716,6 +716,30 @@ def test_joblib_metadata_reader_no_execution(spark, tmp_path):
     assert row.protocol >= 2 and row.n_ops > 5
 
 
+def test_joblib_metadata_reader_lets_unrelated_errors_propagate(
+    spark, tmp_path, monkeypatch
+):
+    """Only genops' ValueError on a truncated/corrupt tail is swallowed
+    (the walked prefix is reported); an unrelated TypeError propagates."""
+    import pickle
+    import pickletools
+
+    from intake_spark.documents import JoblibFile, JoblibMetadataReader
+
+    p = tmp_path / "model.pkl"
+    p.write_bytes(pickle.dumps({"w": [1.0, 2.0]})[:-3])
+    reader = JoblibMetadataReader(data=JoblibFile(url=str(p)))
+    assert reader.read(spark=spark).first().n_ops > 0
+
+    def boom(blob):
+        raise TypeError("unrelated")
+        yield
+
+    monkeypatch.setattr(pickletools, "genops", boom)
+    with pytest.raises(TypeError, match="unrelated"):
+        JoblibMetadataReader(data=JoblibFile(url=str(p))).read(spark=spark)
+
+
 def test_pdf_indirect_length_reference(spark, tmp_path):
     """'/Length 5 0 R' is an object reference, not a byte count — the
     stream must fall back to EOL-strip, not truncate to 5 bytes."""

@@ -954,6 +954,39 @@ def test_features_ladder_delegates_before_probe_rows(monkeypatch):
     assert cells["zero_cross_rate"] == 0.0
 
 
+@pytest.mark.parametrize(
+    "site", ["image_probe", "image_format", "audio_probe", "audio_format"]
+)
+def test_feature_ladder_probes_let_unrelated_errors_propagate(monkeypatch, site):
+    """The header-probe rungs of the image/audio feature ladders catch
+    only what a probe raises on a malformed blob: an unrelated TypeError
+    from image_meta/audio_meta propagates, whether the probe fills the
+    decoded=0 row or names the format of a delegated decode."""
+    from intake_spark.llm import audio_meta
+    from intake_spark.llm import multimodal as mm
+
+    def boom(blob):
+        raise TypeError("unrelated")
+
+    decoded = site.endswith("format")
+    if site.startswith("image"):
+        monkeypatch.setattr(mm, "image_meta", boom)
+        monkeypatch.setattr(
+            mm, "_optional_image_decode",
+            lambda b: np.zeros((2, 2, 3)) if decoded else None,
+        )
+        with pytest.raises(TypeError, match="unrelated"):
+            mm._image_feature_cells(b"not an image", 4)
+    else:
+        monkeypatch.setattr(audio_meta, "audio_meta", boom)
+        monkeypatch.setattr(
+            mm, "_optional_audio_decode",
+            lambda b: (8000, np.zeros((4, 1))) if decoded else None,
+        )
+        with pytest.raises(TypeError, match="unrelated"):
+            mm._audio_feature_cells(b"not audio")
+
+
 def test_codec_roundtrip_stats_operator(spark):
     """Real J2K/JPEG-LS encode+decode inside mapInPandas: exact=1 and the
     pixel sum equals the text-derived truth (the q130 operator)."""

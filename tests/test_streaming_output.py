@@ -233,6 +233,126 @@ def test_single_file_sink_size_guard(spark, tmp_path):
     np.testing.assert_array_equal(np.load(out.url), arr)
 
 
+# every single-file array sink: (name, sink, file suffix, extra kwargs);
+# to_wav runs twice, since max_bytes=None skips its shape pre-pass
+ARRAY_SINKS = [
+    ("to_npy", output.to_npy, ".npy", {}),
+    ("to_png", output.to_png, ".png", {}),
+    ("to_wav", output.to_wav, ".wav", {}),
+    ("to_wav", output.to_wav, ".nocap.wav", {"max_bytes": None}),
+    ("to_ogg", output.to_ogg, ".ogg", {}),
+    ("to_netcdf", output.to_netcdf, ".nc", {}),
+    ("to_hdf5", output.to_hdf5, ".h5", {}),
+    ("to_tiff", output.to_tiff, ".tif", {}),
+    ("to_jpeg2000", output.to_jpeg2000, ".j2k", {}),
+    ("to_webp", output.to_webp, ".webp", {}),
+    ("to_nrrd", output.to_nrrd, ".nrrd", {}),
+    ("to_metaimage", output.to_metaimage, ".mha", {}),
+]
+
+
+def _grid_chunks(spark, tmp_path, arr, rows_per_chunk):
+    import numpy as np
+
+    from intake_spark.arrays import NumpyArrayReader
+
+    npy = str(tmp_path / f"grid{arr.size}.npy")
+    np.save(npy, arr)
+    return NumpyArrayReader(data=dt.NumpyFile(url=npy)).read(
+        spark=spark, rows_per_chunk=rows_per_chunk
+    )
+
+
+def test_array_sinks_refuse_incomplete_frames(spark, tmp_path):
+    """A frame missing a chunk makes every array sink raise, naming the
+    sink, and leave no file (to_wav and to_ogg used to write the short
+    signal, to_hdf5 kept its truncated file). A duplicated chunk that
+    hides a gap (offsets 0, 0, 80 of 100 values) raises from to_npy and
+    chunk_rows_to_numpy instead of filling rows 40-80 with unset
+    memory."""
+    import os
+
+    import numpy as np
+    from pyspark.sql import functions as F_
+
+    from intake_spark.convert import chunk_rows_to_numpy
+
+    arr = (np.arange(16 * 8) % 200).astype("<f8").reshape(16, 8) / 256.0
+    holed = _grid_chunks(spark, tmp_path, arr, 4).filter(F_.col("offset0") != 4)
+    for name, sink, suffix, kw in ARRAY_SINKS:
+        url = str(tmp_path / f"holed{suffix}")
+        with pytest.raises(ValueError, match=name):
+            sink(holed, url, **kw)
+        assert not os.path.exists(url), name
+
+    sig = _grid_chunks(spark, tmp_path, np.linspace(-1, 1, 100), 40)
+    c0 = sig.filter(F_.col("offset0") == 0)
+    dup_gap = c0.unionByName(c0).unionByName(sig.filter(F_.col("offset0") == 80))
+    with pytest.raises(ValueError, match="to_npy"):
+        output.to_npy(dup_gap, str(tmp_path / "dup.npy"))
+    assert not os.path.exists(str(tmp_path / "dup.npy"))
+    with pytest.raises(ValueError, match="chunk_rows_to_numpy"):
+        chunk_rows_to_numpy(dup_gap)
+
+
+def test_array_sinks_stream_axis0_slices(spark, tmp_path):
+    """slice_axis0 keeps global offsets (the first row starts at 3) while
+    shape[0] is the sliced length: every array sink still streams it,
+    and the .npy and the driver array hold exactly the sliced rows."""
+    import numpy as np
+
+    from intake_spark.arrays import slice_axis0
+    from intake_spark.convert import chunk_rows_to_numpy
+
+    arr = (np.arange(16 * 8) % 200).astype("<f8").reshape(16, 8) / 256.0
+    sliced = slice_axis0(_grid_chunks(spark, tmp_path, arr, 4), 3, 11)
+    for _name, sink, suffix, kw in ARRAY_SINKS:
+        sink(sliced, str(tmp_path / f"sliced{suffix}"), **kw)
+    np.testing.assert_array_equal(np.load(str(tmp_path / "sliced.npy")), arr[3:11])
+    np.testing.assert_array_equal(chunk_rows_to_numpy(sliced), arr[3:11])
+
+
+def test_chunk_rows_encoded_and_decoded_only_in_arrays():
+    """arrays.py owns the chunk-row codec (cut_axis0, byte_range_df,
+    stream_axis0). Anywhere else in the package, a dict literal with an
+    "offset0" key, a frame built with a literal chunk-row ``columns=``
+    list, an ``orderBy("offset0")`` or a ``toLocalIterator`` over chunk
+    rows is a second hand-written copy of it."""
+    import ast
+    import pathlib
+
+    from tests.conftest import method_calls
+
+    def names_offset0(node, consts=("offset0",)):
+        return any(
+            isinstance(n, ast.Constant) and n.value in consts for n in ast.walk(node)
+        )
+
+    root = pathlib.Path(output.__file__).parent
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "arrays.py":
+            continue
+        rel = path.relative_to(root.parent)
+        tree = ast.parse(path.read_text())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Dict) and any(
+                k is not None and names_offset0(k) for k in node.keys
+            ):
+                bad.append(f"{rel}:{node.lineno} chunk-row dict literal")
+            if (isinstance(node, ast.keyword) and node.arg == "columns"
+                    and isinstance(node.value, (ast.List, ast.Tuple))
+                    and names_offset0(node.value)):
+                bad.append(f"{rel}:{node.lineno} chunk-row columns list")
+        for fn, call in method_calls(tree, "orderBy"):
+            if any(names_offset0(a) for a in call.args):
+                bad.append(f"{rel}:{call.lineno} orderBy(offset0) in {fn}")
+        for fn, call in method_calls(tree, "toLocalIterator"):
+            if names_offset0(call.func.value, ("offset0", "values", "shape")):
+                bad.append(f"{rel}:{call.lineno} chunk-row toLocalIterator in {fn}")
+    assert not bad, bad
+
+
 def test_png_sink_multi_chunk(spark, tmp_path):
     """to_png must stitch ALL chunk rows in offset order — a 16-row image
     read as 4-row chunks writes a full 16-row PNG, not the first chunk."""
