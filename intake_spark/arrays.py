@@ -37,14 +37,13 @@ import struct
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from intake_spark import datatypes as dt
 from intake_spark.readers import BaseReader
-from intake_spark.session import local_frame, map_in_pandas
+from intake_spark.session import local_frame, manifest_rows
 
 CHUNK_SCHEMA = T.StructType(
     [
@@ -125,22 +124,16 @@ def byte_range_df(
         (i, start, min(start + rows_per_chunk, n0))
         for i, start in enumerate(range(0, n0, rows_per_chunk))
     ]
-    mdf = local_frame(
-        spark, manifest, "chunk_id long, row_start long, row_end long"
+    def decode(r, f):
+        n_el = (r.row_end - r.row_start) * row_elems
+        f.seek(data_off + r.row_start * row_elems * np_dtype.itemsize)
+        vals = np.frombuffer(f.read(n_el * np_dtype.itemsize), dtype=np_dtype)
+        yield cut_axis0(vals, shape, r.row_start, r.chunk_id)
+
+    return manifest_rows(
+        spark, manifest, "chunk_id long, row_start long, row_end long",
+        CHUNK_SCHEMA, decode, url,
     )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            with open(url, "rb") as f:
-                for _, r in pdf.iterrows():
-                    n_el = int(r.row_end - r.row_start) * row_elems
-                    f.seek(data_off + int(r.row_start) * row_elems * np_dtype.itemsize)
-                    vals = np.frombuffer(f.read(n_el * np_dtype.itemsize), dtype=np_dtype)
-                    out += cut_axis0(vals, shape, r.row_start, r.chunk_id)
-            yield pd.DataFrame(out, columns=CHUNK_SCHEMA.names)
-
-    return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
 
 
 def stream_axis0(

@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 
 from intake_spark import datatypes as dt
 from intake_spark.readers import BaseReader, binary_files
-from intake_spark.session import local_frame, map_in_pandas
+from intake_spark.session import local_frame, manifest_rows, map_in_pandas
 
 
 class FASTA(dt.FileData):
@@ -337,33 +337,22 @@ class BigWigReader(BaseReader):
         if not leaves:
             return local_frame(spark, [], _BIGWIG_SCHEMA)
         compressed = hdr["compressed"]
-        mdf = local_frame(spark, leaves, "blk_off long, blk_len long")
-        if len(leaves) > 1:
-            mdf = mdf.repartition(min(len(leaves), spark.sparkContext.defaultParallelism))
 
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def decode(r, fh):
             import zlib
 
-            with open(url, "rb") as fh:
-                for pdf in batches:
-                    rows = []
-                    for _, r in pdf.iterrows():
-                        fh.seek(int(r["blk_off"]))
-                        buf = fh.read(int(r["blk_len"]))
-                        if compressed:
-                            buf = zlib.decompress(buf)
-                        for cid, s, e, v in _bw_decode_block(buf, bo):
-                            rows.append(
-                                {
-                                    "chrom": chroms.get(cid, str(cid)),
-                                    "start": s,
-                                    "end": e,
-                                    "value": v,
-                                }
-                            )
-                    yield pd.DataFrame(rows, columns=["chrom", "start", "end", "value"])
+            fh.seek(r.blk_off)
+            buf = fh.read(r.blk_len)
+            if compressed:
+                buf = zlib.decompress(buf)
+            yield [
+                (chroms.get(cid, str(cid)), st, e, v)
+                for cid, st, e, v in _bw_decode_block(buf, bo)
+            ]
 
-        return map_in_pandas(mdf, decode, schema=_BIGWIG_SCHEMA)
+        return manifest_rows(
+            spark, leaves, "blk_off long, blk_len long", _BIGWIG_SCHEMA, decode, url
+        )
 
 
 class PDB(dt.FileData):
@@ -492,11 +481,6 @@ class DCDReader(BaseReader):
         )
         idxs = list(range(0, int(n), max(1, frame_stride)))
         manifest = [(i, hdr["first"] + i * hdr["frame_bytes"]) for i in idxs]
-        mdf = local_frame(spark, manifest, "frame int, offset long")
-        if len(manifest) > 1:
-            mdf = mdf.repartition(
-                min(len(manifest), spark.sparkContext.defaultParallelism)
-            )
         endian, natoms, cell_b = hdr["endian"], hdr["natoms"], hdr["cell_bytes"]
 
         schema = T.StructType(
@@ -509,29 +493,24 @@ class DCDReader(BaseReader):
             ]
         )
 
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def decode(r, fh):
             import numpy as np
 
-            with open(url, "rb") as fh:
-                for pdf in batches:
-                    for _, r in pdf.iterrows():
-                        fh.seek(int(r.offset) + cell_b + 4)
-                        xs = np.frombuffer(fh.read(4 * natoms), dtype=endian + "f4")
-                        fh.read(8)
-                        ys = np.frombuffer(fh.read(4 * natoms), dtype=endian + "f4")
-                        fh.read(8)
-                        zs = np.frombuffer(fh.read(4 * natoms), dtype=endian + "f4")
-                        yield pd.DataFrame(
-                            {
-                                "frame": np.full(natoms, int(r.frame), dtype="int32"),
-                                "atom": np.arange(natoms, dtype="int32"),
-                                "x": xs.astype("f8"),
-                                "y": ys.astype("f8"),
-                                "z": zs.astype("f8"),
-                            }
-                        )
+            fh.seek(r.offset + cell_b + 4)
+            xs = np.frombuffer(fh.read(4 * natoms), dtype=endian + "f4")
+            fh.read(8)
+            ys = np.frombuffer(fh.read(4 * natoms), dtype=endian + "f4")
+            fh.read(8)
+            zs = np.frombuffer(fh.read(4 * natoms), dtype=endian + "f4")
+            yield {
+                "frame": np.full(natoms, r.frame, dtype="int32"),
+                "atom": np.arange(natoms, dtype="int32"),
+                "x": xs.astype("f8"),
+                "y": ys.astype("f8"),
+                "z": zs.astype("f8"),
+            }
 
-        return map_in_pandas(mdf, decode, schema=schema)
+        return manifest_rows(spark, manifest, "frame int, offset long", schema, decode, url)
 
 
 # ---------------------------------------------------------------------------
@@ -762,11 +741,6 @@ class XTCReader(BaseReader):
         if frames is not None:
             manifest = manifest[:frames]
         self.data.metadata.update({"natoms": natoms, "nframes": len(manifest)})
-        mdf = local_frame(spark, manifest, "frame int, offset long, nbytes long")
-        if len(manifest) > 1:
-            mdf = mdf.repartition(
-                min(len(manifest), spark.sparkContext.defaultParallelism)
-            )
         schema = T.StructType(
             [
                 T.StructField("frame", T.IntegerType()),
@@ -779,32 +753,26 @@ class XTCReader(BaseReader):
             ]
         )
 
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def decode(r, fh):
             import numpy as np
 
-            with open(url, "rb") as fh:
-                for pdf in batches:
-                    for _, r in pdf.iterrows():
-                        # subscript access: .nbytes is a pandas Series
-                        # attribute and would shadow the column
-                        fh.seek(int(r["offset"]))
-                        buf = fh.read(int(r["nbytes"]))
-                        step, time, _prec, coords = _xtc_decode_frame(buf)
-                        arr = np.asarray(coords, dtype="f8")
-                        n = len(coords)
-                        yield pd.DataFrame(
-                            {
-                                "frame": np.full(n, int(r["frame"]), dtype="int32"),
-                                "step": np.full(n, step, dtype="int32"),
-                                "time_ps": np.full(n, float(time), dtype="f8"),
-                                "atom": np.arange(n, dtype="int32"),
-                                "x": arr[:, 0],
-                                "y": arr[:, 1],
-                                "z": arr[:, 2],
-                            }
-                        )
+            fh.seek(r.offset)
+            step, time, _prec, coords = _xtc_decode_frame(fh.read(r.nbytes))
+            arr = np.asarray(coords, dtype="f8")
+            n = len(coords)
+            yield {
+                "frame": np.full(n, r.frame, dtype="int32"),
+                "step": np.full(n, step, dtype="int32"),
+                "time_ps": np.full(n, float(time), dtype="f8"),
+                "atom": np.arange(n, dtype="int32"),
+                "x": arr[:, 0],
+                "y": arr[:, 1],
+                "z": arr[:, 2],
+            }
 
-        return map_in_pandas(mdf, decode, schema=schema)
+        return manifest_rows(
+            spark, manifest, "frame int, offset long, nbytes long", schema, decode, url
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -901,13 +869,6 @@ class TRRReader(BaseReader):
         self.data.metadata.update(
             {"nframes": len(manifest), "natoms": manifest[0][3] if manifest else 0}
         )
-        mdf = local_frame(
-            spark, manifest,
-            "frame int, step int, time_ps double, natoms int, real int, "
-            "data_off long, skip long, x_size long, v_size long, f_size long",
-        )
-        if len(manifest) > 1:
-            mdf = mdf.repartition(min(len(manifest), spark.sparkContext.defaultParallelism))
         schema = T.StructType(
             [
                 T.StructField("frame", T.IntegerType()),
@@ -926,32 +887,32 @@ class TRRReader(BaseReader):
             ]
         )
 
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def decode(r, fh):
             import numpy as np
 
-            with open(url, "rb") as fh:
-                for pdf in batches:
-                    for _, r in pdf.iterrows():
-                        n = int(r["natoms"])
-                        dt_ = ">f8" if int(r["real"]) == 8 else ">f4"
-                        fh.seek(int(r["data_off"]) + int(r["skip"]))
-                        cols = {}
-                        for tag, size in (("", r["x_size"]), ("v", r["v_size"]), ("f", r["f_size"])):
-                            if int(size):
-                                arr = np.frombuffer(fh.read(int(size)), dtype=dt_).reshape(n, 3).astype("f8")
-                            else:
-                                arr = np.full((n, 3), np.nan)
-                            names = ("x", "y", "z") if tag == "" else (tag + "x", tag + "y", tag + "z")
-                            for j, nm in enumerate(names):
-                                cols[nm] = arr[:, j]
-                        yield pd.DataFrame(
-                            {
-                                "frame": np.full(n, int(r["frame"]), dtype="int32"),
-                                "step": np.full(n, int(r["step"]), dtype="int32"),
-                                "time_ps": np.full(n, float(r["time_ps"]), dtype="f8"),
-                                "atom": np.arange(n, dtype="int32"),
-                                **cols,
-                            }
-                        )
+            n = r.natoms
+            dt_ = ">f8" if r.real == 8 else ">f4"
+            fh.seek(r.data_off + r.skip)
+            cols = {}
+            for tag, size in (("", r.x_size), ("v", r.v_size), ("f", r.f_size)):
+                if size:
+                    arr = np.frombuffer(fh.read(size), dtype=dt_).reshape(n, 3).astype("f8")
+                else:
+                    arr = np.full((n, 3), np.nan)
+                names = ("x", "y", "z") if tag == "" else (tag + "x", tag + "y", tag + "z")
+                for j, nm in enumerate(names):
+                    cols[nm] = arr[:, j]
+            yield {
+                "frame": np.full(n, r.frame, dtype="int32"),
+                "step": np.full(n, r.step, dtype="int32"),
+                "time_ps": np.full(n, r.time_ps, dtype="f8"),
+                "atom": np.arange(n, dtype="int32"),
+                **cols,
+            }
 
-        return map_in_pandas(mdf, decode, schema=schema)
+        return manifest_rows(
+            spark, manifest,
+            "frame int, step int, time_ps double, natoms int, real int, "
+            "data_off long, skip long, x_size long, v_size long, f_size long",
+            schema, decode, url,
+        )

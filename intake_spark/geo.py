@@ -19,7 +19,7 @@ from pyspark.sql import types as T
 from intake_spark import datatypes as dt
 from intake_spark.compress import read_uvarint
 from intake_spark.readers import BaseReader, binary_files
-from intake_spark.session import local_frame, map_in_pandas
+from intake_spark.session import local_frame, manifest_rows, map_in_pandas
 
 
 class KML(dt.FileData):
@@ -178,6 +178,9 @@ class GPXReader(BaseReader):
         return map_in_pandas(files.select("path", "content"), parse, schema=_GPX_SCHEMA)
 
 
+_TILE_SCHEMA = "zoom_level int, tile_column int, tile_row int, tile_data binary"
+
+
 class MBTilesReader(BaseReader):
     """MBTiles → tile rows (zoom_level, tile_column, tile_row, tile_data)
     or the metadata table (``table="metadata"``). Stdlib sqlite3.
@@ -204,6 +207,10 @@ class MBTilesReader(BaseReader):
             return local_frame(spark, rows or [("", "")], "name string, value string")
 
         where = f" WHERE zoom_level = {int(zoom)}" if zoom is not None else ""
+
+        def connect():  # one read-only connection per executor task
+            return sqlite3.connect(f"file:{url}?mode=ro", uri=True)
+
         con = sqlite3.connect(url)
         try:
             # `tiles` may be a VIEW (map+images dedup layout): views have no
@@ -241,11 +248,8 @@ class MBTilesReader(BaseReader):
                 ).fetchone()
                 con.close()
                 con = None
-                tile_schema = (
-                    "zoom_level int, tile_column int, tile_row int, tile_data binary"
-                )
                 if not bounds and not n_nulls:
-                    return local_frame(spark, [], tile_schema)
+                    return local_frame(spark, [], _TILE_SCHEMA)
                 windows = [
                     bounds[i]
                     + (bounds[i + 1] if i + 1 < len(bounds) else (None, None, None))
@@ -258,70 +262,43 @@ class MBTilesReader(BaseReader):
                     # OFFSET path (NULL-keyed rows are broken-join debris
                     # but they belong to the caller, not to the pager)
                     windows.append((None, None, None, None, None, None, 1))
-                wdf = local_frame(
+                base_cond = where + (" AND " if where else " WHERE ")
+
+                def fetch_view(r, vcon):
+                    if r.null_win == 1:
+                        cond = (
+                            "(zoom_level IS NULL OR tile_column IS NULL "
+                            "OR tile_row IS NULL)"
+                        )
+                        args = []
+                    else:
+                        # row-value comparison short-circuits on the
+                        # leading column, so a partially-NULL key CAN
+                        # satisfy a range — exclude them here; they belong
+                        # to the null window
+                        cond = (
+                            "zoom_level IS NOT NULL AND tile_column IS NOT NULL "
+                            "AND tile_row IS NOT NULL "
+                            "AND (zoom_level, tile_column, tile_row) >= (?, ?, ?)"
+                        )
+                        args = [int(r.lo_z), int(r.lo_c), int(r.lo_r)]
+                        if r.hi_z == r.hi_z:  # not NaN: a next window exists
+                            cond += (
+                                " AND (zoom_level, tile_column, tile_row) < (?, ?, ?)"
+                            )
+                            args += [int(r.hi_z), int(r.hi_c), int(r.hi_r)]
+                    yield vcon.execute(
+                        "SELECT zoom_level, tile_column, tile_row, "
+                        f"tile_data FROM tiles{base_cond}{cond}",
+                        args,
+                    ).fetchall()
+
+                return manifest_rows(
                     spark, windows,
                     "lo_z long, lo_c long, lo_r long, hi_z long, hi_c long, hi_r long, "
                     "null_win long",
+                    _TILE_SCHEMA, fetch_view, connect,
                 )
-                if len(windows) > 1:
-                    wdf = wdf.repartition(
-                        min(len(windows), spark.sparkContext.defaultParallelism)
-                    )
-                base_cond = where + (" AND " if where else " WHERE ")
-
-                def fetch_view(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                    vcon = sqlite3.connect(f"file:{url}?mode=ro", uri=True)
-                    try:
-                        for pdf in batches:
-                            for _, r in pdf.iterrows():
-                                if r.null_win == 1:
-                                    cond = (
-                                        "(zoom_level IS NULL OR tile_column IS NULL "
-                                        "OR tile_row IS NULL)"
-                                    )
-                                    args = []
-                                else:
-                                    # row-value comparison short-circuits on
-                                    # the leading column, so a partially-NULL
-                                    # key CAN satisfy a range — exclude them
-                                    # here; they belong to the null window
-                                    cond = (
-                                        "zoom_level IS NOT NULL AND tile_column IS NOT NULL "
-                                        "AND tile_row IS NOT NULL "
-                                        "AND (zoom_level, tile_column, tile_row) >= (?, ?, ?)"
-                                    )
-                                    args = [int(r.lo_z), int(r.lo_c), int(r.lo_r)]
-                                    if r.hi_z == r.hi_z:  # not NaN: a next window exists
-                                        cond += (
-                                            " AND (zoom_level, tile_column, tile_row) < (?, ?, ?)"
-                                        )
-                                        args += [int(r.hi_z), int(r.hi_c), int(r.hi_r)]
-                                rows = vcon.execute(
-                                    "SELECT zoom_level, tile_column, tile_row, "
-                                    f"tile_data FROM tiles{base_cond}{cond}",
-                                    args,
-                                ).fetchall()
-                                yield pd.DataFrame(
-                                    rows,
-                                    columns=[
-                                        "zoom_level",
-                                        "tile_column",
-                                        "tile_row",
-                                        "tile_data",
-                                    ],
-                                )
-                    finally:
-                        vcon.close()
-
-                vschema = T.StructType(
-                    [
-                        T.StructField("zoom_level", T.IntegerType()),
-                        T.StructField("tile_column", T.IntegerType()),
-                        T.StructField("tile_row", T.IntegerType()),
-                        T.StructField("tile_data", T.BinaryType()),
-                    ]
-                )
-                return map_in_pandas(wdf, fetch_view, schema=vschema)
             lo_hi = con.execute(
                 f"SELECT MIN(rowid), MAX(rowid) FROM tiles{where}"
             ).fetchone()
@@ -329,44 +306,21 @@ class MBTilesReader(BaseReader):
             if con is not None:
                 con.close()
         if lo_hi is None or lo_hi[0] is None:
-            return local_frame(
-                spark, [], "zoom_level int, tile_column int, tile_row int, tile_data binary"
-            )
+            return local_frame(spark, [], _TILE_SCHEMA)
         lo, hi = lo_hi
         ranges = [
             (start, min(start + rows_per_task - 1, hi))
             for start in range(lo, hi + 1, rows_per_task)
         ]
-        mdf = local_frame(spark, ranges, "lo long, hi long")
-        if len(ranges) > 1:
-            mdf = mdf.repartition(min(len(ranges), spark.sparkContext.defaultParallelism))
 
-        def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            con = sqlite3.connect(f"file:{url}?mode=ro", uri=True)
-            try:
-                for pdf in batches:
-                    for _, r in pdf.iterrows():
-                        rows = con.execute(
-                            "SELECT zoom_level, tile_column, tile_row, tile_data "
-                            f"FROM tiles{where}{' AND' if where else ' WHERE'} "
-                            f"rowid BETWEEN {int(r.lo)} AND {int(r.hi)}"
-                        ).fetchall()
-                        yield pd.DataFrame(
-                            rows,
-                            columns=["zoom_level", "tile_column", "tile_row", "tile_data"],
-                        )
-            finally:
-                con.close()
+        def fetch(r, con):
+            yield con.execute(
+                "SELECT zoom_level, tile_column, tile_row, tile_data "
+                f"FROM tiles{where}{' AND' if where else ' WHERE'} "
+                f"rowid BETWEEN {int(r.lo)} AND {int(r.hi)}"
+            ).fetchall()
 
-        schema = T.StructType(
-            [
-                T.StructField("zoom_level", T.IntegerType()),
-                T.StructField("tile_column", T.IntegerType()),
-                T.StructField("tile_row", T.IntegerType()),
-                T.StructField("tile_data", T.BinaryType()),
-            ]
-        )
-        return map_in_pandas(mdf, fetch, schema=schema)
+        return manifest_rows(spark, ranges, "lo long, hi long", _TILE_SCHEMA, fetch, connect)
 
 
 class PMTiles(dt.FileData):
@@ -445,7 +399,8 @@ class PMTilesReader(BaseReader):
     package): fixed 127-byte header, gzip varint directories, Hilbert
     tile addressing. Root + one level of leaf directories supported.
     Driver parses only the (small) directories; tile payloads decode on
-    executors from a byte-range manifest — distributed like OSMPBFReader."""
+    executors from a byte-range manifest — distributed like OSMPBFReader,
+    ``batch`` directory entries per manifest row."""
 
     implements = {PMTiles}
 
@@ -489,42 +444,31 @@ class PMTilesReader(BaseReader):
                     entries.append((tid, off, ln, run))
 
         # directories are small (driver); tile payloads decode on executors
-        # via a byte-range manifest — blobs never pass through the driver
-        manifest = [
-            (tid, data_off + off, ln, max(run, 1)) for tid, off, ln, run in entries
-        ]
-        mdf = local_frame(spark, manifest, "tid long, off long, len long, run long")
-        if len(manifest) > 1:
-            mdf = mdf.repartition(min(1 + len(manifest) // batch, spark.sparkContext.defaultParallelism))
+        # via a byte-range manifest of `batch` entries a row — blobs never
+        # pass through the driver
+        manifest = []
+        for i in range(0, len(entries), batch):
+            tids, offs, lens, runs = zip(*entries[i : i + batch])
+            manifest.append(
+                (tids, [data_off + o for o in offs], lens, [max(r, 1) for r in runs])
+            )
 
-        def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import gzip as _gzip
+        def fetch(r, fh):
+            rows = []
+            for tid, off, ln, run in zip(r.tids, r.offs, r.lens, r.runs):
+                fh.seek(int(off))
+                payload = fh.read(int(ln))
+                if tile_comp == 2:  # gzip tile payloads → raw bytes
+                    payload = gzip.decompress(payload)
+                for k in range(int(tid), int(tid) + int(run)):
+                    rows.append((*_tileid_to_zxy(k), k, payload))
+            yield rows
 
-            with open(url, "rb") as fh:
-                for pdf in batches:
-                    rows = []
-                    for _, e in pdf.iterrows():
-                        fh.seek(int(e.off))
-                        payload = fh.read(int(e.len))
-                        if tile_comp == 2:  # gzip tile payloads → raw bytes
-                            payload = _gzip.decompress(payload)
-                        for r in range(int(e.run)):
-                            z, x, y = _tileid_to_zxy(int(e.tid) + r)
-                            rows.append((z, x, y, int(e.tid) + r, payload))
-                    yield pd.DataFrame(
-                        rows, columns=["z", "x", "y", "tile_id", "tile_data"]
-                    )
-
-        schema = T.StructType(
-            [
-                T.StructField("z", T.IntegerType()),
-                T.StructField("x", T.IntegerType()),
-                T.StructField("y", T.IntegerType()),
-                T.StructField("tile_id", T.LongType()),
-                T.StructField("tile_data", T.BinaryType()),
-            ]
+        return manifest_rows(
+            spark, manifest,
+            "tids array<long>, offs array<long>, lens array<long>, runs array<long>",
+            "z int, x int, y int, tile_id long, tile_data binary", fetch, url,
         )
-        return map_in_pandas(mdf, fetch, schema=schema)
 
 
 class OSMPBF(dt.FileData):
@@ -750,31 +694,22 @@ class OSMPBFReader(BaseReader):
 
     def _read(self, spark, elements: str = "nodes", **kwargs):
         schemas = {
-            "nodes": (_OSM_SCHEMA, ["id", "lat", "lon", "tags"]),
-            "ways": (_OSM_WAY_SCHEMA, ["id", "refs", "tags"]),
-            "relations": (_OSM_REL_SCHEMA, ["id", "members", "tags"]),
+            "nodes": _OSM_SCHEMA, "ways": _OSM_WAY_SCHEMA, "relations": _OSM_REL_SCHEMA,
         }
         if elements not in schemas:
             raise ValueError(f"elements must be one of {sorted(schemas)}")
-        schema, cols = schemas[elements]
         url = self.data.url
         manifest = [
             (off, ln) for btype, off, ln in _osm_blob_manifest(url) if btype == "OSMData"
         ]
-        mdf = local_frame(spark, manifest, "off long, len long")
-        if len(manifest) > 1:
-            mdf = mdf.repartition(min(len(manifest), spark.sparkContext.defaultParallelism))
 
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                with open(url, "rb") as f:
-                    for _, r in pdf.iterrows():
-                        f.seek(int(r.off))
-                        rows.extend(_parse_primitive_block(f.read(int(r.len)), elements))
-                yield pd.DataFrame(rows, columns=cols)
+        def decode(r, fh):
+            fh.seek(r.off)
+            yield _parse_primitive_block(fh.read(r.len), elements)
 
-        return map_in_pandas(mdf, decode, schema=schema)
+        return manifest_rows(
+            spark, manifest, "off long, len long", schemas[elements], decode, url
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -900,6 +835,9 @@ def _dbf_value(raw: bytes, ftype: str, decimals: int):
     return s  # C (character), D (YYYYMMDD date) kept as text
 
 
+_FEATURE_SCHEMA = "id string, geometry_type string, geometry string, properties string"
+
+
 class ShapefileReader(BaseReader):
     """Shapefile → canonical geometry rows (GeoJSONReader-compatible):
     ``id`` = record number, ``geometry`` = GeoJSON text, ``properties`` =
@@ -921,64 +859,43 @@ class ShapefileReader(BaseReader):
         else:
             nrec, hsize, rsize, fields = 0, 0, 0, []
 
-        schema = T.StructType(
-            [
-                T.StructField("id", T.StringType()),
-                T.StructField("geometry_type", T.StringType()),
-                T.StructField("geometry", T.StringType()),
-                T.StructField("properties", T.StringType()),
-            ]
-        )
         if not index:
-            return local_frame(spark, [], schema)
+            return local_frame(spark, [], _FEATURE_SCHEMA)
         ranges = [
             (start, min(start + records_per_task, len(index)))
             for start in range(0, len(index), records_per_task)
         ]
-        mdf = local_frame(spark, ranges, "rec_start long, rec_end long")
-        if len(ranges) > 1:
-            mdf = mdf.repartition(min(len(ranges), spark.sparkContext.defaultParallelism))
 
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def decode(rg, fshp):
             import json as _json
 
             fdbf = open(dbf, "rb") if has_dbf else None
             try:
-                with open(shp, "rb") as fshp:
-                    for pdf in batches:
-                        for _, rg in pdf.iterrows():
-                            rows = []
-                            for rec in range(int(rg.rec_start), int(rg.rec_end)):
-                                off, ln = index[rec]
-                                fshp.seek(off)
-                                gtype, geom = _shape_to_geojson(fshp.read(ln))
-                                props: dict = {}
-                                if fdbf is not None and rec < nrec:
-                                    fdbf.seek(hsize + rec * rsize)
-                                    raw = fdbf.read(rsize)
-                                    pos = 1  # deletion flag byte
-                                    for name, ftype, flen, fdec in fields:
-                                        props[name] = _dbf_value(
-                                            raw[pos : pos + flen], ftype, fdec
-                                        )
-                                        pos += flen
-                                rows.append(
-                                    {
-                                        "id": str(rec),
-                                        "geometry_type": gtype,
-                                        "geometry": _json.dumps(geom, sort_keys=True),
-                                        "properties": _json.dumps(props, sort_keys=True),
-                                    }
-                                )
-                            yield pd.DataFrame(
-                                rows,
-                                columns=["id", "geometry_type", "geometry", "properties"],
-                            )
+                rows = []
+                for rec in range(rg.rec_start, rg.rec_end):
+                    off, ln = index[rec]
+                    fshp.seek(off)
+                    gtype, geom = _shape_to_geojson(fshp.read(ln))
+                    props: dict = {}
+                    if fdbf is not None and rec < nrec:
+                        fdbf.seek(hsize + rec * rsize)
+                        raw = fdbf.read(rsize)
+                        pos = 1  # deletion flag byte
+                        for name, ftype, flen, fdec in fields:
+                            props[name] = _dbf_value(raw[pos : pos + flen], ftype, fdec)
+                            pos += flen
+                    rows.append(
+                        (str(rec), gtype, _json.dumps(geom, sort_keys=True),
+                         _json.dumps(props, sort_keys=True))
+                    )
             finally:
                 if fdbf is not None:
                     fdbf.close()
+            yield rows
 
-        return map_in_pandas(mdf, decode, schema=schema)
+        return manifest_rows(
+            spark, ranges, "rec_start long, rec_end long", _FEATURE_SCHEMA, decode, shp
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -1108,62 +1025,41 @@ class GeoPackageReader(BaseReader):
             con.close()
         self.data.metadata.update({"layers": layers, "layer": table, "geometry_column": geom_col})
 
-        schema = T.StructType(
-            [
-                T.StructField("id", T.StringType()),
-                T.StructField("geometry_type", T.StringType()),
-                T.StructField("geometry", T.StringType()),
-                T.StructField("properties", T.StringType()),
-            ]
-        )
         if lo_hi is None or lo_hi[0] is None:
-            return local_frame(spark, [], schema)
+            return local_frame(spark, [], _FEATURE_SCHEMA)
         lo, hi = lo_hi
         ranges = [
             (start, min(start + rows_per_task - 1, hi))
             for start in range(lo, hi + 1, rows_per_task)
         ]
-        mdf = local_frame(spark, ranges, "lo long, hi long")
-        if len(ranges) > 1:
-            mdf = mdf.repartition(min(len(ranges), spark.sparkContext.defaultParallelism))
         qgeom = geom_col.replace('"', '""')
         sel = ", ".join(
             ["rowid", f'"{qgeom}"'] + ['"{}"'.format(c.replace('"', '""')) for c in attr_cols]
         )
 
-        def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def fetch(rg, vcon):
             import json as _json
 
-            vcon = sqlite3.connect(f"file:{url}?mode=ro", uri=True)
-            try:
-                for pdf in batches:
-                    for _, rg in pdf.iterrows():
-                        rows = []
-                        for rec in vcon.execute(
-                            f'SELECT {sel} FROM "{qtable}" WHERE rowid '
-                            f"BETWEEN {int(rg.lo)} AND {int(rg.hi)}"
-                        ):
-                            gtype, geom = gpkg_blob_to_geojson(rec[1])
-                            props = {
-                                c: (v.hex() if isinstance(v, bytes) else v)
-                                for c, v in zip(attr_cols, rec[2:])
-                            }
-                            rows.append(
-                                {
-                                    "id": str(rec[0]),
-                                    "geometry_type": gtype,
-                                    "geometry": _json.dumps(geom, sort_keys=True),
-                                    "properties": _json.dumps(props, sort_keys=True),
-                                }
-                            )
-                        yield pd.DataFrame(
-                            rows,
-                            columns=["id", "geometry_type", "geometry", "properties"],
-                        )
-            finally:
-                vcon.close()
+            rows = []
+            for rec in vcon.execute(
+                f'SELECT {sel} FROM "{qtable}" WHERE rowid '
+                f"BETWEEN {int(rg.lo)} AND {int(rg.hi)}"
+            ):
+                gtype, geom = gpkg_blob_to_geojson(rec[1])
+                props = {
+                    c: (v.hex() if isinstance(v, bytes) else v)
+                    for c, v in zip(attr_cols, rec[2:])
+                }
+                rows.append(
+                    (str(rec[0]), gtype, _json.dumps(geom, sort_keys=True),
+                     _json.dumps(props, sort_keys=True))
+                )
+            yield rows
 
-        return map_in_pandas(mdf, fetch, schema=schema)
+        return manifest_rows(
+            spark, ranges, "lo long, hi long", _FEATURE_SCHEMA, fetch,
+            lambda: sqlite3.connect(f"file:{url}?mode=ro", uri=True),
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -1522,14 +1418,7 @@ class FlatGeobufReader(BaseReader):
                 index.append((f.tell(), fsize))
                 f.seek(fsize, 1)
 
-        schema = T.StructType(
-            [
-                T.StructField("id", T.LongType()),
-                T.StructField("geometry_type", T.StringType()),
-                T.StructField("geometry", T.StringType()),
-                T.StructField("properties", T.StringType()),
-            ]
-        )
+        schema = "id long, geometry_type string, geometry string, properties string"
         if not index:
             return local_frame(spark, [], schema)
         # each manifest ROW carries only ITS slice of (offset, size) pairs
@@ -1543,50 +1432,30 @@ class FlatGeobufReader(BaseReader):
             )
             for start in range(0, len(index), features_per_task)
         ]
-        mdf = local_frame(
-            spark, ranges, "rec_start long, offs array<long>, lens array<long>"
-        )
-        if len(ranges) > 1:
-            mdf = mdf.repartition(
-                min(len(ranges), spark.sparkContext.defaultParallelism)
-            )
 
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def decode(rg, fh):
             import json as _json
 
-            with open(url, "rb") as fh:
-                for pdf in batches:
-                    for _, rg in pdf.iterrows():
-                        rows = []
-                        for i, (off, ln) in enumerate(zip(rg.offs, rg.lens)):
-                            rec = int(rg.rec_start) + i
-                            off, ln = int(off), int(ln)
-                            fh.seek(off)
-                            fbuf = fh.read(ln)
-                            fpos = _fb_root(fbuf)
-                            gpos = _fb_indirect(fbuf, fpos, 0)
-                            if gpos is None:
-                                gname, doc = "Unknown", None
-                            else:
-                                gname, coords = _fgb_geometry(fbuf, gpos, gtype)
-                                key = (
-                                    "geometries"
-                                    if gname == "GeometryCollection"
-                                    else "coordinates"
-                                )
-                                doc = _json.dumps(
-                                    {"type": gname, key: coords}, sort_keys=True
-                                )
-                            props = _fgb_properties(fbuf, fpos, columns)
-                            rows.append(
-                                (rec, gname, doc, _json.dumps(props, sort_keys=True))
-                            )
-                        yield pd.DataFrame(
-                            rows,
-                            columns=["id", "geometry_type", "geometry", "properties"],
-                        )
+            rows = []
+            for rec, (off, ln) in enumerate(zip(rg.offs, rg.lens), rg.rec_start):
+                fh.seek(int(off))
+                fbuf = fh.read(int(ln))
+                fpos = _fb_root(fbuf)
+                gpos = _fb_indirect(fbuf, fpos, 0)
+                if gpos is None:
+                    gname, doc = "Unknown", None
+                else:
+                    gname, coords = _fgb_geometry(fbuf, gpos, gtype)
+                    key = "geometries" if gname == "GeometryCollection" else "coordinates"
+                    doc = _json.dumps({"type": gname, key: coords}, sort_keys=True)
+                props = _fgb_properties(fbuf, fpos, columns)
+                rows.append((rec, gname, doc, _json.dumps(props, sort_keys=True)))
+            yield rows
 
-        return map_in_pandas(mdf, decode, schema=schema)
+        return manifest_rows(
+            spark, ranges, "rec_start long, offs array<long>, lens array<long>",
+            schema, decode, url,
+        )
 
 
 class FBBuilder:

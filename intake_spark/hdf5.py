@@ -29,7 +29,7 @@ import struct
 
 from intake_spark import datatypes as dt
 from intake_spark.readers import BaseReader
-from intake_spark.session import local_frame, map_in_pandas
+from intake_spark.session import local_frame, manifest_rows
 
 _SIG = b"\x89HDF\r\n\x1a\n"
 _UNDEF = 0xFFFFFFFFFFFFFFFF
@@ -490,41 +490,31 @@ def _chunked_h5_df(spark, url, dtype, shape, chunk_dims, filters, index, base, f
     ]
     if not manifest:  # zero-length dataspace
         return local_frame(spark, [], CHUNK_SCHEMA)
-    mdf = local_frame(
-        spark, manifest, "chunk_id long, row_start long, chunks_json string"
-    )
     np_dtype = np.dtype(dtype)
 
-    def decode(batches):
-        import json
+    def decode(r, f):
+        r0 = r.row_start
+        r1 = min(r0 + chunk_dims[0], shape[0])
+        slab = np.full([r1 - r0] + list(shape[1:]), fill, dtype=np.float64)
+        for coords, addr, nbytes, mask in json.loads(r.chunks_json):
+            f.seek(addr)
+            raw = _defilter(f.read(nbytes), filters or [], mask, dtype)
+            chunk = np.frombuffer(raw, dtype=np_dtype).reshape(chunk_dims)
+            sel = tuple(
+                slice(0, min(c + d, s) - c)
+                for c, d, s in zip(coords, chunk_dims, shape)
+            )
+            dest = tuple(
+                slice(c - (r0 if ax == 0 else 0), min(c + d, s) - (r0 if ax == 0 else 0))
+                for ax, (c, d, s) in enumerate(zip(coords, chunk_dims, shape))
+            )
+            slab[dest] = chunk[sel]
+        yield cut_axis0(slab, shape, r0, r.chunk_id)
 
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            with open(url, "rb") as f:
-                for _, r in pdf.iterrows():
-                    r0 = int(r.row_start)
-                    r1 = min(r0 + chunk_dims[0], shape[0])
-                    slab = np.full([r1 - r0] + list(shape[1:]), fill, dtype=np.float64)
-                    for coords, addr, nbytes, mask in json.loads(r.chunks_json):
-                        f.seek(addr)
-                        raw = _defilter(f.read(nbytes), filters or [], mask, dtype)
-                        chunk = np.frombuffer(raw, dtype=np_dtype).reshape(chunk_dims)
-                        sel = tuple(
-                            slice(0, min(c + d, s) - c)
-                            for c, d, s in zip(coords, chunk_dims, shape)
-                        )
-                        dest = tuple(
-                            slice(c - (r0 if ax == 0 else 0), min(c + d, s) - (r0 if ax == 0 else 0))
-                            for ax, (c, d, s) in enumerate(zip(coords, chunk_dims, shape))
-                        )
-                        slab[dest] = chunk[sel]
-                    out += cut_axis0(slab, shape, r0, r.chunk_id)
-            yield pd.DataFrame(out, columns=CHUNK_SCHEMA.names)
-
-    return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
+    return manifest_rows(
+        spark, manifest, "chunk_id long, row_start long, chunks_json string",
+        CHUNK_SCHEMA, decode, url,
+    )
 
 
 class HDF5Reader(BaseReader):

@@ -36,7 +36,7 @@ import zlib
 from intake_spark import datatypes as dt
 from intake_spark.compress import read_uvarint, uvarint
 from intake_spark.readers import BaseReader
-from intake_spark.session import ensure_py_deps, local_frame, map_in_pandas
+from intake_spark.session import ensure_py_deps, local_frame, manifest_rows
 
 
 class ConcurrentWriteError(FileExistsError):
@@ -469,8 +469,6 @@ class AvroOCFReader(BaseReader):
     def _read(self, spark, blocks_per_task: int = 64, **kwargs):
         import glob as _glob
 
-        import pandas as pd
-
         url = self.data.url
         if os.path.isdir(url):  # Spark writers emit directories of part files
             url = os.path.join(url, "*.avro")
@@ -512,33 +510,26 @@ class AvroOCFReader(BaseReader):
             for i in range(0, len(blocks), blocks_per_task):
                 run = blocks[i : i + blocks_per_task]
                 manifest.append((p, codec, sj, json.dumps(run)))
-        cols = [f.name for f in spark_schema.fields]
         self.data.metadata.update({"avro_schema": schema0, "codec": codec0})
-        mdf = local_frame(
-            spark, manifest, "path string, codec string, wschema string, runs string"
+
+        def decode(r, _fh):
+            rows = []
+            writer_schema = json.loads(r.wschema)
+            with open(r.path, "rb") as f:
+                for off, size, count in json.loads(r.runs):
+                    f.seek(off)
+                    raw = _avro_block_bytes(f.read(size), r.codec)
+                    buf = _Buf(raw)
+                    base: dict = {}
+                    _register_names(writer_schema, base)
+                    for _i in range(count):
+                        rows.append(_avro_decode(buf, writer_schema, base))
+            yield rows
+
+        out = manifest_rows(
+            spark, manifest, "path string, codec string, wschema string, runs string",
+            spark_schema, decode,
         )
-
-        def decode(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                for _, r in pdf.iterrows():
-                    rows = []
-                    writer_schema = json.loads(r.wschema)
-                    with open(r.path, "rb") as f:
-                        for off, size, count in json.loads(r.runs):
-                            f.seek(off)
-                            raw = _avro_block_bytes(f.read(size), r.codec)
-                            buf = _Buf(raw)
-                            base: dict = {}
-                            _register_names(writer_schema, base)
-                            for _i in range(count):
-                                rows.append(_avro_decode(buf, writer_schema, base))
-                    yield pd.DataFrame(
-                        [[row.get(c) for c in cols] for row in rows], columns=cols
-                    )
-
-        out = map_in_pandas(mdf, decode, schema=spark_schema)
         # top-level UTC-timestamp logical types: convert the epoch longs
         # to LTZ instants JVM-side (timestamp_micros is timezone-proof;
         # naive datetimes through Arrow would shift under non-UTC
@@ -1462,33 +1453,26 @@ def _apply_delta_dvs(spark, base, dv_adds: list, root: str, col_order):
                 int(desc.get("cardinality") or -1),
             )
         )
-    dv_df = local_frame(
+
+    def expand(r, _fh):
+        if r.inline is not None and len(r.inline):
+            positions = _roaring64_positions(bytes(r.inline))
+        else:
+            positions = _dv_file_positions(
+                r.dv_path, None if pd.isna(r.offset) else int(r.offset), r.size
+            )
+        if r.card >= 0 and len(positions) != r.card:
+            raise ValueError(
+                f"DV cardinality mismatch for {r.file}: "
+                f"decoded {len(positions)}, descriptor {r.card}"
+            )
+        yield {"__file": r.file, "__dpos": positions}
+
+    dels = manifest_rows(
         spark, rows,
-        "__file string, dv_path string, inline binary, "
-        "offset long, size long, card long",
+        "file string, dv_path string, inline binary, offset long, size long, card long",
+        "__file string, __dpos long", expand,
     )
-
-    def expand(batches):
-        for pdf in batches:
-            for fp, dvp, inline, offset, size, card in zip(
-                pdf["__file"], pdf["dv_path"], pdf["inline"],
-                pdf["offset"], pdf["size"], pdf["card"],
-            ):
-                if inline is not None and len(inline):
-                    positions = _roaring64_positions(bytes(inline))
-                else:
-                    positions = _dv_file_positions(
-                        dvp, None if pd.isna(offset) else int(offset),
-                        int(size),
-                    )
-                if card >= 0 and len(positions) != card:
-                    raise ValueError(
-                        f"DV cardinality mismatch for {fp}: "
-                        f"decoded {len(positions)}, descriptor {card}"
-                    )
-                yield pd.DataFrame({"__file": fp, "__dpos": positions})
-
-    dels = map_in_pandas(dv_df, expand, schema="__file string, __dpos long")
     cond = (base["__file"] == dels["__file"]) & (
         base["__pos"] == dels["__dpos"]
     )
@@ -1648,11 +1632,7 @@ class IcebergTableReader(BaseReader):
         _version, meta_path, meta = iceberg_metadata(root)
         if meta is None:
             raise ValueError(f"no *.metadata.json under {mdir}")
-        loc = meta.get("location", root).rstrip("/").removeprefix("file://")
-
-        def local(p: str) -> str:
-            p = p.removeprefix("file://")
-            return root + p[len(loc) :] if p.startswith(loc) else p
+        local = iceberg_rebase(root, meta)
 
         if "schemas" in meta:
             sid = meta.get("current-schema-id", 0)
@@ -2242,6 +2222,22 @@ def _norm_file_uri(p: str) -> str:
     import re as _re
 
     return _re.sub(r"^file:/+", "/", p)
+
+
+def iceberg_rebase(root: str, meta: dict):
+    """The path map of an Iceberg table found at ``root``: its metadata
+    ``meta`` names files by absolute paths under the table's
+    ``location``, which a moved table no longer matches; a path under
+    ``location`` maps to the same path under ``root``, any other path
+    is returned as is. Both sides go through :func:`_norm_file_uri`, so
+    ``file:///t``, ``file:/t`` and ``/t`` spell one location."""
+    loc = _norm_file_uri(meta.get("location", root).rstrip("/"))
+
+    def rebase(p: str) -> str:
+        p = _norm_file_uri(p)
+        return root + p[len(loc) :] if p.startswith(loc + "/") else p
+
+    return rebase
 
 
 # Spark-side twin of _norm_file_uri: regexp_replace(col, _FILE_URI_RE, "/")

@@ -43,12 +43,12 @@ IMAGE_META_SCHEMA = T.StructType(
 
 
 def read_binary_dir(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
-    """Ingest a directory of media files as (path, modificationTime, length,
-    content) rows — Spark's binaryFile source; one task per file group."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
+    """Ingest media files as (path, modificationTime, length, content)
+    rows: :func:`intake_spark.readers.binary_files` under its old name,
+    with ``glob`` as the caller's own ``pathGlobFilter``."""
+    from intake_spark.readers import binary_files
+
+    return binary_files(spark, path, **({"pathGlobFilter": glob} if glob else {}))
 
 
 def binary_from_text(df: DataFrame, text_col: str = "text", out_col: str = "content") -> DataFrame:
@@ -750,8 +750,6 @@ def transcode_images(
     Scale: Arrow-batched mapInPandas, embarrassingly parallel per file;
     pixels never leave the executor. Parity surface: the reference
     converts media via PIL writers (output.py:268+)."""
-    import numpy as np
-
     if to not in ("webp", "png", "jpeg2000"):
         raise ValueError("transcode_images supports webp/png/jpeg2000")
     keep = keep_cols if keep_cols is not None else [
@@ -762,98 +760,106 @@ def transcode_images(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from intake_spark.llm.jpeg2000 import (
-            decode_jpeg2000,
-            encode_jpeg2000,
-        )
-        from intake_spark.llm.webp import decode_webp, encode_webp
-        from intake_spark.output import _png_bytes
-
-        def enc_webp(arr):
-            # every channel count maps faithfully into RGBA: gray ->
-            # replicated RGB, gray+alpha -> replicated RGB + alpha; the
-            # lossless check covers EVERY source channel (an RGBA
-            # source that lost its alpha must not claim lossless=1)
-            c = arr.shape[2]
-            if c == 1:
-                src = arr[:, :, 0]
-                blob = encode_webp(src)
-                back = decode_webp(blob)
-                ok = (back[:, :, 0] == src).all() and (
-                    back[:, :, 1] == src).all() and (back[:, :, 2] == src).all()
-            elif c == 2:  # gray + alpha
-                g = arr[:, :, 0]
-                rgba = np.stack([g, g, g, arr[:, :, 1]], axis=-1)
-                blob = encode_webp(rgba)
-                back = decode_webp(blob)
-                ok = (back == rgba).all()
-            else:
-                blob = encode_webp(arr)
-                back = decode_webp(blob)
-                ok = (back[:, :, :c] == arr).all() and (
-                    c == 4 or (back[:, :, 3] == 255).all()
-                )
-            return blob, bool(ok)
-
-        def enc_png(arr):
-            if arr.shape[2] != 1:
-                raise NotImplementedError(
-                    "png transcode path is grayscale-only here — use webp "
-                    "for color"
-                )
-            blob = _png_bytes(arr[:, :, 0].tolist())
-            back = decode_png(blob)
-            return blob, bool((back[:, :, 0] == arr[:, :, 0]).all())
-
-        def enc_j2k(arr):
-            # ALL channels travel as components (4-component = RGB+A
-            # with no MCT) — dropping a plane must not claim lossless
-            planes = [arr[:, :, i].astype(np.int64)
-                      for i in range(arr.shape[2])]
-            blob = encode_jpeg2000(
-                planes if len(planes) > 1 else planes[0], levels=2
-            )
-            back = decode_jpeg2000(blob)
-            if back.ndim == 2:
-                back = back[:, :, None]
-            return blob, bool((back == arr).all())
-
-        enc = {"webp": enc_webp, "png": enc_png, "jpeg2000": enc_j2k}[to]
         for pdf in batches:
-            rows = []
-            keep_iters = [pdf[c] for c in keep]
-            for vals in zip(pdf[content_col], *keep_iters):
-                blob = bytes(vals[0])
-                base = tuple(vals[1:])
-                try:
-                    fmt = image_meta(blob).get("format")
-                except Exception:
-                    fmt = None
-                try:
-                    arr = decode_image(blob)
-                    if arr.dtype != np.uint8 and to != "jpeg2000":
-                        # VP8L/this PNG path are 8-bit codecs; J2K keeps
-                        # any precision losslessly (the 16-bit medical
-                        # normalization case)
-                        raise NotImplementedError(
-                            "transcode of >8-bit sources needs the "
-                            "jpeg2000 target (webp/png would silently "
-                            "narrow)"
-                        )
-                    out, ok = enc(arr)
-                    rows.append(base + (out, fmt, len(blob), len(out),
-                                        int(ok), None))
-                except Exception as exc:  # noqa: BLE001 — per-row err
-                    # contract: corrupt blobs (zlib.error, struct.error,
-                    # IndexError from truncation, pillow's OSError...)
-                    # become err rows, never a failed Spark task
-                    rows.append(base + (None, fmt, len(blob), None, 0,
-                                        f"{type(exc).__name__}: {exc}"))
+            rows = [
+                tuple(vals[1:]) + _image_transcode_cells(bytes(vals[0]), to)
+                for vals in zip(pdf[content_col], *[pdf[c] for c in keep])
+            ]
             yield pd.DataFrame(
                 rows, columns=list(keep) + [f.name for f in TRANSCODE_SCHEMA]
             )
 
     return map_in_pandas(df, run, schema=out_schema)
+
+
+def _transcode_webp(arr):
+    import numpy as np
+
+    from intake_spark.llm.webp import decode_webp, encode_webp
+
+    # every channel count maps faithfully into RGBA: gray -> replicated
+    # RGB, gray+alpha -> replicated RGB + alpha; the lossless check
+    # covers EVERY source channel (an RGBA source that lost its alpha
+    # must not claim lossless=1)
+    c = arr.shape[2]
+    if c == 1:
+        src = arr[:, :, 0]
+        blob = encode_webp(src)
+        back = decode_webp(blob)
+        ok = (back[:, :, 0] == src).all() and (
+            back[:, :, 1] == src).all() and (back[:, :, 2] == src).all()
+    elif c == 2:  # gray + alpha
+        g = arr[:, :, 0]
+        rgba = np.stack([g, g, g, arr[:, :, 1]], axis=-1)
+        blob = encode_webp(rgba)
+        back = decode_webp(blob)
+        ok = (back == rgba).all()
+    else:
+        blob = encode_webp(arr)
+        back = decode_webp(blob)
+        ok = (back[:, :, :c] == arr).all() and (
+            c == 4 or (back[:, :, 3] == 255).all()
+        )
+    return blob, bool(ok)
+
+
+def _transcode_png(arr):
+    from intake_spark.output import _png_bytes
+
+    if arr.shape[2] != 1:
+        raise NotImplementedError(
+            "png transcode path is grayscale-only here — use webp for color"
+        )
+    blob = _png_bytes(arr[:, :, 0].tolist())
+    back = decode_png(blob)
+    return blob, bool((back[:, :, 0] == arr[:, :, 0]).all())
+
+
+def _transcode_j2k(arr):
+    import numpy as np
+
+    from intake_spark.llm.jpeg2000 import decode_jpeg2000, encode_jpeg2000
+
+    # ALL channels travel as components (4-component = RGB+A with no
+    # MCT) — dropping a plane must not claim lossless
+    planes = [arr[:, :, i].astype(np.int64) for i in range(arr.shape[2])]
+    blob = encode_jpeg2000(planes if len(planes) > 1 else planes[0], levels=2)
+    back = decode_jpeg2000(blob)
+    if back.ndim == 2:
+        back = back[:, :, None]
+    return blob, bool((back == arr).all())
+
+
+_IMAGE_TRANSCODERS = {
+    "webp": _transcode_webp, "png": _transcode_png, "jpeg2000": _transcode_j2k,
+}
+
+
+def _image_transcode_cells(blob: bytes, to: str) -> tuple:
+    """Per-blob TRANSCODE_SCHEMA cells for :func:`transcode_images` —
+    module-level so the header probe is unit-testable driver-side."""
+    import numpy as np
+
+    try:
+        fmt = image_meta(blob).get("format")
+    except _PROBE_ERRORS:
+        fmt = None
+    try:
+        arr = decode_image(blob)
+        if arr.dtype != np.uint8 and to != "jpeg2000":
+            # VP8L/this PNG path are 8-bit codecs; J2K keeps any
+            # precision losslessly (the 16-bit medical normalization case)
+            raise NotImplementedError(
+                "transcode of >8-bit sources needs the jpeg2000 target "
+                "(webp/png would silently narrow)"
+            )
+        out, ok = _IMAGE_TRANSCODERS[to](arr)
+        return (out, fmt, len(blob), len(out), int(ok), None)
+    except Exception as exc:  # noqa: BLE001 — per-row err
+        # contract: corrupt blobs (zlib.error, struct.error, IndexError
+        # from truncation, pillow's OSError...) become err rows, never a
+        # failed Spark task
+        return (None, fmt, len(blob), None, 0, f"{type(exc).__name__}: {exc}")
 
 
 def transcode_audio(
@@ -877,8 +883,6 @@ def transcode_audio(
     samples (8-bit unsigned WAV promotes to the next signed width
     rather than shifting the values). Arrow-batched mapInPandas;
     samples never leave the executor."""
-    import numpy as np
-
     if to != "flac":
         raise ValueError("transcode_audio supports to='flac'")
     keep = keep_cols if keep_cols is not None else [
@@ -889,54 +893,58 @@ def transcode_audio(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from intake_spark.llm.audio_meta import audio_meta
-        from intake_spark.llm.flac import decode_flac, encode_flac
-
-        def enc(rate, arr, bits):
-            arr = np.asarray(arr)
-            if arr.ndim == 1:
-                arr = arr[:, None]
-            lo = int(arr.min()) if arr.size else 0
-            hi = int(arr.max()) if arr.size else 0
-            bps = next(
-                (b for b in (8, 12, 16, 20, 24, 32)
-                 if b >= bits and -(1 << (b - 1)) <= lo
-                 and hi < (1 << (b - 1))),
-                None,
-            )
-            if bps is None:
-                raise ValueError("samples exceed FLAC's 32-bit range")
-            blob = encode_flac(arr.astype(np.int64), rate, bps=bps)
-            r2, back, _b2 = decode_flac(blob)
-            ok = r2 == rate and back.shape == arr.shape and (
-                back == arr).all()
-            return blob, bool(ok)
-
         for pdf in batches:
-            rows = []
-            keep_iters = [pdf[c] for c in keep]
-            for vals in zip(pdf[content_col], *keep_iters):
-                blob = bytes(vals[0])
-                base = tuple(vals[1:])
-                try:
-                    fmt = audio_meta(blob).get("format")
-                except Exception:
-                    fmt = None
-                try:
-                    rate, arr, bits = decode_audio_full(blob)
-                    out, ok = enc(rate, arr, bits)
-                    rows.append(base + (out, fmt, len(blob), len(out),
-                                        int(ok), None))
-                except Exception as exc:  # noqa: BLE001 — per-row err
-                    # same contract as transcode_images: corrupt blobs
-                    # become err rows, never a failed Spark task
-                    rows.append(base + (None, fmt, len(blob), None, 0,
-                                        f"{type(exc).__name__}: {exc}"))
+            rows = [
+                tuple(vals[1:]) + _audio_transcode_cells(bytes(vals[0]))
+                for vals in zip(pdf[content_col], *[pdf[c] for c in keep])
+            ]
             yield pd.DataFrame(
                 rows, columns=list(keep) + [f.name for f in TRANSCODE_SCHEMA]
             )
 
     return map_in_pandas(df, run, schema=out_schema)
+
+
+def _transcode_flac(rate, arr, bits):
+    import numpy as np
+
+    from intake_spark.llm.flac import decode_flac, encode_flac
+
+    arr = np.asarray(arr)
+    if arr.ndim == 1:
+        arr = arr[:, None]
+    lo = int(arr.min()) if arr.size else 0
+    hi = int(arr.max()) if arr.size else 0
+    bps = next(
+        (b for b in (8, 12, 16, 20, 24, 32)
+         if b >= bits and -(1 << (b - 1)) <= lo and hi < (1 << (b - 1))),
+        None,
+    )
+    if bps is None:
+        raise ValueError("samples exceed FLAC's 32-bit range")
+    blob = encode_flac(arr.astype(np.int64), rate, bps=bps)
+    r2, back, _b2 = decode_flac(blob)
+    ok = r2 == rate and back.shape == arr.shape and (back == arr).all()
+    return blob, bool(ok)
+
+
+def _audio_transcode_cells(blob: bytes) -> tuple:
+    """Per-blob TRANSCODE_SCHEMA cells for :func:`transcode_audio` —
+    module-level so the header probe is unit-testable driver-side."""
+    from intake_spark.llm.audio_meta import audio_meta as _audio_meta
+
+    try:
+        fmt = _audio_meta(blob).get("format")
+    except _PROBE_ERRORS:
+        fmt = None
+    try:
+        rate, arr, bits = decode_audio_full(blob)
+        out, ok = _transcode_flac(rate, arr, bits)
+        return (out, fmt, len(blob), len(out), int(ok), None)
+    except Exception as exc:  # noqa: BLE001 — per-row err
+        # same contract as transcode_images: corrupt blobs become err
+        # rows, never a failed Spark task
+        return (None, fmt, len(blob), None, 0, f"{type(exc).__name__}: {exc}")
 
 
 def codec_roundtrip_stats(
@@ -2793,21 +2801,7 @@ def decode_wav_adpcm(content: bytes):
 
     import numpy as np
 
-    if content[:4] != b"RIFF" or content[8:12] != b"WAVE":
-        raise ValueError("not a WAV file")
-    pos, end = 12, min(len(content), 8 + _s.unpack_from("<I", content, 4)[0])
-    fmt = None
-    data = None
-    while pos + 8 <= end:
-        cid = content[pos : pos + 4]
-        (clen,) = _s.unpack_from("<I", content, pos + 4)
-        if cid == b"fmt ":
-            fmt = content[pos + 8 : pos + 8 + clen]
-        elif cid == b"data":
-            data = content[pos + 8 : pos + 8 + clen]
-        pos += 8 + clen + (clen & 1)
-    if fmt is None or data is None:
-        raise ValueError("WAV missing fmt/data chunk")
+    fmt, data = _wav_chunks(content)
     tag, nch, rate = _s.unpack_from("<HHI", fmt, 0)
     (block_align,) = _s.unpack_from("<H", fmt, 12)
     if tag == 0xFFFE and len(fmt) >= 26:

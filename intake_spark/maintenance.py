@@ -299,11 +299,7 @@ def iceberg_expire_snapshots(
     v, _path, meta = lakehouse.iceberg_metadata(root)
     if meta is None:
         raise ValueError(f"{root} has no Iceberg metadata")
-    loc = meta.get("location", root).rstrip("/").removeprefix("file://")
-
-    def local(p: str) -> str:
-        p = p.removeprefix("file://")
-        return root + p[len(loc):] if p.startswith(loc) else p
+    local = lakehouse.iceberg_rebase(root, meta)
 
     snaps = sorted(
         meta.get("snapshots") or [], key=lambda s: int(s.get("timestamp-ms", 0))

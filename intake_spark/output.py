@@ -1881,12 +1881,7 @@ def to_iceberg(
             None,
         )
         if prev_snap is not None:
-            loc = prev_meta.get("location", root).rstrip("/")
-
-            def rebase(p: str) -> str:
-                p = p.removeprefix("file://")
-                return root + p[len(loc):] if p.startswith(loc) else p
-
+            rebase = lakehouse.iceberg_rebase(root, prev_meta)
             # re-manifest the prior snapshot's live files as EXISTING
             # entries under the CURRENT root, instead of re-referencing
             # the old manifest files verbatim: verbatim references embed
@@ -1943,11 +1938,11 @@ def to_iceberg(
 
     snapshots = []
     if prev_meta is not None:
-        loc0 = prev_meta.get("location", root).rstrip("/")
+        rebase = lakehouse.iceberg_rebase(root, prev_meta)
         for s in prev_meta.get("snapshots") or []:
             s = dict(s)
-            mlp = s["manifest-list"].removeprefix("file://")
-            if loc0 != root and mlp.startswith(loc0):
+            mlp = lakehouse._norm_file_uri(s["manifest-list"])
+            if rebase(mlp) != mlp:
                 # the table was RELOCATED since this snapshot was written:
                 # its manifest-list/manifest/data paths are absolute under
                 # the old location, and this commit records location=root,
@@ -1955,21 +1950,17 @@ def to_iceberg(
                 # reach them — rewrite the snapshot's metadata chain under
                 # the new root (O(metadata), once per move; data files are
                 # rebased in place, never copied)
-                def _rb(p: str) -> str:
-                    p = p.removeprefix("file://")
-                    return root + p[len(loc0):] if p.startswith(loc0) else p
-
                 new_rows = []
-                for k, mf in enumerate(decode_avro_file(_rb(mlp))):
+                for k, mf in enumerate(decode_avro_file(rebase(mlp))):
                     entries = []
-                    for e in decode_avro_file(_rb(mf["manifest_path"])):
+                    for e in decode_avro_file(rebase(mf["manifest_path"])):
                         d = e.get("data_file") or {}
                         entries.append(
                             {
                                 "status": e.get("status", 1),
                                 "snapshot_id": e.get("snapshot_id"),
                                 "data_file": {
-                                    "file_path": _rb(d.get("file_path", "")),
+                                    "file_path": rebase(d.get("file_path", "")),
                                     "file_format": d.get("file_format", "PARQUET"),
                                     "partition": d.get("partition") or {},
                                     "record_count": int(d.get("record_count") or 0),

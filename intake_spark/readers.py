@@ -14,24 +14,31 @@ from typing import Any
 
 from intake_spark import datatypes as dt
 from intake_spark.pipeline import PipelineMixin
-from intake_spark.session import get_session, local_frame, map_in_pandas
+from intake_spark.session import get_session, local_frame, manifest_rows, map_in_pandas
 from intake_spark.utils import Tokenizable, import_name, qname, subclasses
 
 
-def binary_files(spark, url: str, glob: str):
+def binary_files(spark, url: str, glob: str | None = None, **options):
     """binaryFile rows (path, modificationTime, length, content) for a URL
-    that is a glob, a single file or a directory: the listing rule of
-    every per-file reader. ``pathGlobFilter`` narrows a directory listing
-    to ``glob``; a URL that contains ``*`` or names an existing file is
-    read as given, since filtering a file its datatype accepts against
-    the glob could drop it (``notes.markdown`` against ``*.md``,
-    ``PLACES.KML`` against ``*.kml``)."""
+    that is a glob, a single file or a directory: the engine's one
+    binaryFile listing, behind every per-file reader.
+
+    ``glob`` is a datatype's file glob (None: no filter); it narrows a
+    directory listing through Spark's case-sensitive ``pathGlobFilter``.
+    A URL that contains ``*`` is read as given, since the caller's
+    pattern already names the files and the datatype may accept more
+    extensions than its glob (``notes.markdown`` against ``*.md``).
+    ``options`` are DataFrameReader options, applied as given; a caller's
+    own ``pathGlobFilter`` among them narrows a wildcard URL too. A URL
+    that names an existing file is read whatever its name: neither
+    filter applies."""
     import os
 
-    reader = spark.read.format("binaryFile")
-    if "*" not in url and not os.path.isfile(url):
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(url)
+    if os.path.isfile(url):
+        options.pop("pathGlobFilter", None)
+    elif glob and "*" not in url:
+        options.setdefault("pathGlobFilter", glob)
+    return spark.read.format("binaryFile").options(**options).load(url)
 
 
 class BaseReader(PipelineMixin, Tokenizable):
@@ -196,11 +203,8 @@ class SparkBinary(FileReader):
     implements = {dt.PNG, dt.JPEG, dt.GIF, dt.TIFF, dt.BMP, dt.WAV, dt.FLAC, dt.MP3, dt.OGG, dt.MP4, dt.AVI, dt.WebM, dt.WEBP, dt.PDF, dt.GGUF, dt.NumpyFile, dt.HDF5}
     spark_format = "binaryFile"
 
-    def _read(self, spark, pathGlobFilter: str | None = None, **kwargs):
-        reader = spark.read.format("binaryFile")
-        if pathGlobFilter:
-            reader = reader.option("pathGlobFilter", pathGlobFilter)
-        return reader.options(**kwargs).load(self.data.url)
+    def _read(self, spark, **kwargs):
+        return binary_files(spark, self.data.url, **kwargs)
 
 
 class AVIFrameReader(BaseReader):
@@ -217,7 +221,8 @@ class AVIFrameReader(BaseReader):
     def _read(self, spark, every_n: int = 30, **kwargs):
         from intake_spark.llm.video import sample_video_frames
 
-        binary = spark.read.format("binaryFile").load(self.data.url)
+        # camera and FAT media name clips CLIP2.AVI: match the extension in any case
+        binary = binary_files(spark, self.data.url, "*.[aA][vV][iI]")
         return sample_video_frames(
             binary.select("path", "content"), every_n=every_n
         )
@@ -731,13 +736,8 @@ class ZarrReader(BaseReader):
                 for rest in itertools.product(*trailing_grid)
             ]
             manifest.append((i0, names))
-        mdf = local_frame(spark, manifest, "chunk_id long, chunk_files array<string>")
-        if len(manifest) > 1:
-            mdf = mdf.repartition(min(len(manifest), spark.sparkContext.defaultParallelism))
 
-        import pandas as pd
-
-        def decode(batches):
+        def decode(r, _fh):
             import zlib
 
             import numpy as np
@@ -800,59 +800,57 @@ class ZarrReader(BaseReader):
                     shard[sl] = ich
                 return shard
 
-            for pdf in batches:
-                out = []
-                for _, r in pdf.iterrows():
-                    i0 = int(r.chunk_id)
-                    parts = {}
-                    for name in r.chunk_files:
-                        key = name[len(prefix):] if prefix else name
-                        coords = tuple(int(x) for x in key.split(sep))
-                        path = f"{root}/{name}"
-                        if _os.path.exists(path) and inner_chunks is not None:
-                            with open(path, "rb") as f:
-                                blob = f.read()
-                            arr = _read_shard(blob)
-                        elif _os.path.exists(path):
-                            with open(path, "rb") as f:
-                                raw = f.read()
-                            if comp in ("zlib", "gzip"):
-                                raw = zlib.decompress(raw, 47)  # auto-detect zlib/gzip
-                            elif comp == "blosc":
-                                from intake_spark.compress import blosc_decompress
+            i0 = r.chunk_id
+            parts = {}
+            for name in r.chunk_files:
+                key = name[len(prefix):] if prefix else name
+                coords = tuple(int(x) for x in key.split(sep))
+                path = f"{root}/{name}"
+                if _os.path.exists(path) and inner_chunks is not None:
+                    with open(path, "rb") as f:
+                        blob = f.read()
+                    arr = _read_shard(blob)
+                elif _os.path.exists(path):
+                    with open(path, "rb") as f:
+                        raw = f.read()
+                    if comp in ("zlib", "gzip"):
+                        raw = zlib.decompress(raw, 47)  # auto-detect zlib/gzip
+                    elif comp == "blosc":
+                        from intake_spark.compress import blosc_decompress
 
-                                raw = blosc_decompress(raw)
-                            if v2_filters:
-                                flat_ = decode_zarr_v2_filters(
-                                    raw, v2_filters, dtype
-                                )
-                            else:
-                                flat_ = np.frombuffer(
-                                    raw, dtype=np.dtype(dtype)
-                                )
-                            arr = _unt(flat_)
-                        else:
-                            arr = np.full(chunks, fill, dtype=np.dtype(dtype))
-                        # trim edge chunks to the valid extent in every dim
-                        slices = tuple(
-                            slice(0, min(c, s - ci * c))
-                            for ci, c, s in zip(coords, chunks, shape)
+                        raw = blosc_decompress(raw)
+                    if v2_filters:
+                        flat_ = decode_zarr_v2_filters(
+                            raw, v2_filters, dtype
                         )
-                        parts[coords[1:]] = arr[slices]
-                    # stitch trailing axes in C order: concatenate innermost first
-                    def stitch(axis: int, prefix: tuple) -> "np.ndarray":
-                        if axis > len(shape) - 1:
-                            return parts[prefix]
-                        blocks = [
-                            stitch(axis + 1, (*prefix, i)) for i in range(grid[axis])
-                        ]
-                        return np.concatenate(blocks, axis=axis)
+                    else:
+                        flat_ = np.frombuffer(
+                            raw, dtype=np.dtype(dtype)
+                        )
+                    arr = _unt(flat_)
+                else:
+                    arr = np.full(chunks, fill, dtype=np.dtype(dtype))
+                # trim edge chunks to the valid extent in every dim
+                slices = tuple(
+                    slice(0, min(c, s - ci * c))
+                    for ci, c, s in zip(coords, chunks, shape)
+                )
+                parts[coords[1:]] = arr[slices]
+            # stitch trailing axes in C order: concatenate innermost first
+            def stitch(axis: int, prefix: tuple) -> "np.ndarray":
+                if axis > len(shape) - 1:
+                    return parts[prefix]
+                blocks = [
+                    stitch(axis + 1, (*prefix, i)) for i in range(grid[axis])
+                ]
+                return np.concatenate(blocks, axis=axis)
 
-                    block = parts[()] if len(shape) == 1 else stitch(1, ())
-                    out += cut_axis0(block, shape, i0 * chunks[0], i0)
-                yield pd.DataFrame(out, columns=CHUNK_SCHEMA.names)
+            block = parts[()] if len(shape) == 1 else stitch(1, ())
+            yield cut_axis0(block, shape, i0 * chunks[0], i0)
 
-        return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
+        return manifest_rows(
+            spark, manifest, "chunk_id long, chunk_files array<string>", CHUNK_SCHEMA, decode
+        )
 
 
 _V2_FILTERS = {"delta", "shuffle", "fixedscaleoffset", "astype", "quantize"}
@@ -1272,30 +1270,21 @@ class SQLiteReader(BaseReader):
             (start, min(start + step - 1, hi))
             for start in range(lo, hi + 1, step)
         ]
-        mdf = local_frame(spark, ranges, "lo long, hi long")
-        if len(ranges) > 1:
-            mdf = mdf.repartition(min(len(ranges), spark.sparkContext.defaultParallelism))
 
-        def fetch(batches):
-            import pandas as pd
+        def fetch(rg, vcon):
+            recs = vcon.execute(
+                f'SELECT {sel} FROM "{qtable}" WHERE rowid '
+                f"BETWEEN {int(rg.lo)} AND {int(rg.hi)}"
+            ).fetchall()
+            yield {
+                n: [coerce_cell(r[i], kinds[i]) for r in recs]
+                for i, n in enumerate(names)
+            }
 
-            vcon = sqlite3.connect(f"file:{url}?mode=ro", uri=True)
-            try:
-                for pdf in batches:
-                    for _, rg in pdf.iterrows():
-                        recs = vcon.execute(
-                            f'SELECT {sel} FROM "{qtable}" WHERE rowid '
-                            f"BETWEEN {int(rg.lo)} AND {int(rg.hi)}"
-                        ).fetchall()
-                        data = {
-                            n: [coerce_cell(r[i], kinds[i]) for r in recs]
-                            for i, n in enumerate(names)
-                        }
-                        yield pd.DataFrame(data, columns=names)
-            finally:
-                vcon.close()
-
-        return map_in_pandas(mdf, fetch, schema=schema)
+        return manifest_rows(
+            spark, ranges, "lo long, hi long", schema, fetch,
+            lambda: sqlite3.connect(f"file:{url}?mode=ro", uri=True),
+        )
 
 
 def sqlite_catalog(url: str) -> "object":

@@ -13,15 +13,13 @@ the same distributed recipe as NumpyArrayReader).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import types as T
 
 from intake_spark import datatypes as dt
 from intake_spark.arrays import CHUNK_SCHEMA, byte_range_df, cut_axis0
 from intake_spark.readers import BaseReader
-from intake_spark.session import local_frame, map_in_pandas
+from intake_spark.session import local_frame, manifest_rows
 
 
 class FITS(dt.FileData):
@@ -544,13 +542,6 @@ class TIFFReader(BaseReader):
                 nrows = min(meta["rows_per_strip"], h - row)
                 manifest.append((i, row, nrows, off, cnt))
                 row += nrows
-        mdf = local_frame(
-            spark, manifest, "chunk_id int, row_start long, nrows int, off long, cnt long"
-        )
-        if len(manifest) > 1:
-            mdf = mdf.repartition(
-                min(len(manifest), spark.sparkContext.defaultParallelism)
-            )
         tiled = meta["tiled"]
         if axis_aligned:
             # coordinate columns at pixel centers (PixelIsArea, geokey
@@ -574,28 +565,24 @@ class TIFFReader(BaseReader):
         else:
             out_schema = CHUNK_SCHEMA
 
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cols = [f.name for f in out_schema.fields]
-            with open(url, "rb") as fh:
-                for pdf in batches:
-                    out = []
-                    for _, r in pdf.iterrows():
-                        if tiled:
-                            arr = _tiff_tile_band(fh, meta, int(r.chunk_id), int(r.nrows))
-                        else:
-                            fh.seek(int(r.off))
-                            arr = _tiff_strip_array(fh.read(int(r.cnt)), meta, int(r.nrows))
-                        (row,) = cut_axis0(arr, shape, r.row_start, r.chunk_id)
-                        if axis_aligned:
-                            r0 = int(r.row_start)
-                            row["xs"] = [gox + (c + half) * gsx for c in range(w)]
-                            row["ys"] = [
-                                goy + (r0 + i + half) * gsy for i in range(int(r.nrows))
-                            ]
-                        out.append(row)
-                    yield pd.DataFrame(out, columns=cols)
+        def decode(r, fh):
+            if tiled:
+                arr = _tiff_tile_band(fh, meta, r.chunk_id, r.nrows)
+            else:
+                fh.seek(r.off)
+                arr = _tiff_strip_array(fh.read(r.cnt), meta, r.nrows)
+            (row,) = cut_axis0(arr, shape, r.row_start, r.chunk_id)
+            if axis_aligned:
+                row["xs"] = [gox + (c + half) * gsx for c in range(w)]
+                row["ys"] = [
+                    goy + (r.row_start + i + half) * gsy for i in range(r.nrows)
+                ]
+            yield [row]
 
-        return map_in_pandas(mdf, decode, schema=out_schema)
+        return manifest_rows(
+            spark, manifest, "chunk_id int, row_start long, nrows int, off long, cnt long",
+            out_schema, decode, url,
+        )
 
 
 
@@ -605,25 +592,18 @@ def _inflated_chunk_df(
     """Whole-payload-compressed array (NRRD gzip / MetaImage zlib) →
     chunk rows: one executor inflates the stream, then cuts first-axis
     slabs (arrays.cut_axis0) — shared by both readers."""
-    mdf = local_frame(spark, [(data_off,)], "data_off long")
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def decode(r, fh):
         import gzip as _gzip
         import zlib as _zlib
 
         import numpy as np
 
         inflate = _gzip.decompress if codec == "gzip" else _zlib.decompress
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                with open(url, "rb") as fh:
-                    fh.seek(int(r["data_off"]))
-                    raw = inflate(fh.read())
-                vals = np.frombuffer(raw, dtype=np.dtype(dtype)).reshape(shape)
-                out = cut_axis0(vals, shape, rows_per_chunk=rows_per_chunk)
-                yield pd.DataFrame(out, columns=CHUNK_SCHEMA.names)
+        fh.seek(r.data_off)
+        vals = np.frombuffer(inflate(fh.read()), dtype=np.dtype(dtype)).reshape(shape)
+        yield cut_axis0(vals, shape, rows_per_chunk=rows_per_chunk)
 
-    return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
+    return manifest_rows(spark, [(data_off,)], "data_off long", CHUNK_SCHEMA, decode, url)
 
 
 class NetCDF3(dt.FileData):
@@ -943,35 +923,32 @@ class MatlabMatReader(BaseReader):
             pick = match[0]
         name, off, nb, compressed = pick
         self.data.metadata.update({"variable": name, "variables": names})
-        mdf = local_frame(spark, [(off, nb, compressed)], "off long, nb long, comp boolean")
-
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def decode(r, fh):
             import zlib
 
             import numpy as np
 
-            for pdf in batches:
-                for _, r in pdf.iterrows():
-                    with open(url, "rb") as f:
-                        f.seek(int(r.off))
-                        buf = f.read(int(r.nb))
-                    if bool(r.comp):
-                        buf = zlib.decompress(buf)
-                        buf = buf[8:]  # skip the inner miMATRIX tag
-                    vname, mxclass, dims, mtype, data = _mat_matrix_info(buf)
-                    if mxclass not in _MAT_NUMERIC_CLASSES:
-                        raise ValueError(
-                            f"variable {vname!r} has class {mxclass} — only "
-                            "numeric arrays supported (no cell/struct/sparse/char)"
-                        )
-                    if mtype not in _MAT_MI_DTYPES:
-                        raise ValueError(f"unsupported MAT data type {mtype}")
-                    arr = np.frombuffer(data, dtype="<" + _MAT_MI_DTYPES[mtype])
-                    arr = arr.reshape(dims, order="F")
-                    out = cut_axis0(arr, dims, rows_per_chunk=rows_per_chunk)
-                    yield pd.DataFrame(out, columns=CHUNK_SCHEMA.names)
+            fh.seek(r.off)
+            buf = fh.read(r.nb)
+            if r.comp:
+                buf = zlib.decompress(buf)
+                buf = buf[8:]  # skip the inner miMATRIX tag
+            vname, mxclass, dims, mtype, data = _mat_matrix_info(buf)
+            if mxclass not in _MAT_NUMERIC_CLASSES:
+                raise ValueError(
+                    f"variable {vname!r} has class {mxclass} — only "
+                    "numeric arrays supported (no cell/struct/sparse/char)"
+                )
+            if mtype not in _MAT_MI_DTYPES:
+                raise ValueError(f"unsupported MAT data type {mtype}")
+            arr = np.frombuffer(data, dtype="<" + _MAT_MI_DTYPES[mtype])
+            arr = arr.reshape(dims, order="F")
+            yield cut_axis0(arr, dims, rows_per_chunk=rows_per_chunk)
 
-        return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
+        return manifest_rows(
+            spark, [(off, nb, compressed)], "off long, nb long, comp boolean",
+            CHUNK_SCHEMA, decode, url,
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -1636,43 +1613,18 @@ class GRIB2Reader(BaseReader):
         manifest = _grib_messages(url)
         if not manifest:
             return local_frame(spark, [], _GRIB_SCHEMA)
-        mdf = local_frame(
+        def decode(r, fh):
+            fh.seek(r.msg_off)
+            yield [
+                (r.msg_id, fld["category"], fld["parameter"], fld["ref_time"],
+                 fld["ni"], fld["nj"], fld["lat0"], fld["lon0"], fld["values"].tolist())
+                for fld in _grib_decode_message(fh.read(r.msg_len))
+            ]
+
+        return manifest_rows(
             spark, [(i, off, ln) for i, (off, ln) in enumerate(manifest)],
-            "msg_id int, msg_off long, msg_len long",
+            "msg_id int, msg_off long, msg_len long", _GRIB_SCHEMA, decode, url,
         )
-        if len(manifest) > 1:
-            mdf = mdf.repartition(min(len(manifest), spark.sparkContext.defaultParallelism))
-
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            with open(url, "rb") as fh:
-                for pdf in batches:
-                    rows = []
-                    for _, r in pdf.iterrows():
-                        fh.seek(int(r["msg_off"]))
-                        buf = fh.read(int(r["msg_len"]))
-                        for fld in _grib_decode_message(buf):
-                            rows.append(
-                                {
-                                    "msg_id": int(r["msg_id"]),
-                                    "category": fld["category"],
-                                    "parameter": fld["parameter"],
-                                    "ref_time": fld["ref_time"],
-                                    "ni": fld["ni"],
-                                    "nj": fld["nj"],
-                                    "lat0": fld["lat0"],
-                                    "lon0": fld["lon0"],
-                                    "values": fld["values"].tolist(),
-                                }
-                            )
-                    yield pd.DataFrame(
-                        rows,
-                        columns=[
-                            "msg_id", "category", "parameter", "ref_time",
-                            "ni", "nj", "lat0", "lon0", "values",
-                        ],
-                    )
-
-        return map_in_pandas(mdf, decode, schema=_GRIB_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2048,7 +2000,6 @@ class DicomReader(BaseReader):
                 (i, _json.dumps([[off, nb]]))
                 for i, (off, nb) in enumerate(frags)
             ]
-        mdf = local_frame(spark, manifest, "frame long, frags string")
         multi = frames > 1
         # the driver-validated per-frame shape: every decoded frame is
         # cross-checked against it (an spp mismatch between the tags and
@@ -2056,75 +2007,69 @@ class DicomReader(BaseReader):
         # were compared before)
         exp_frame = tuple(shape[1:]) if multi else tuple(shape)
 
-        def decode(batches):
+        def decode(r, fh):
             import json as _j
 
-            import numpy as np  # noqa: F401
-            import pandas as pd_
+            import numpy as np
 
             from intake_spark.sci import _dicom_rle_decode
 
-            for pdf in batches:
-                out = []
-                with open(url, "rb") as f:
-                    for _, r in pdf.iterrows():
-                        blob = b""
-                        for off, nb in _j.loads(r.frags):
-                            f.seek(int(off))
-                            blob += f.read(int(nb))
-                        if transfer == _DICOM_RLE:
-                            arr = _dicom_rle_decode(blob, rows, cols, bits, spp, signed)
-                        elif transfer in (_DICOM_JPEG_LS, _DICOM_JPEG_LS_NEAR):
-                            from intake_spark.llm.jpegls import decode_jpegls
+            blob = b""
+            for off, nb in _j.loads(r.frags):
+                fh.seek(off)
+                blob += fh.read(nb)
+            if transfer == _DICOM_RLE:
+                arr = _dicom_rle_decode(blob, rows, cols, bits, spp, signed)
+            elif transfer in (_DICOM_JPEG_LS, _DICOM_JPEG_LS_NEAR):
+                from intake_spark.llm.jpegls import decode_jpegls
 
-                            arr = decode_jpegls(blob)
-                            if signed and arr.dtype == np.uint16:
-                                arr = arr.view(np.int16)
-                            elif signed and arr.dtype == np.uint8:
-                                arr = arr.view(np.int8)
-                        elif transfer in (
-                            _DICOM_JPEG_LOSSLESS, _DICOM_JPEG_LOSSLESS_SV1
-                        ):
-                            from intake_spark.llm.multimodal import (
-                                decode_jpeg_lossless,
-                            )
+                arr = decode_jpegls(blob)
+                if signed and arr.dtype == np.uint16:
+                    arr = arr.view(np.int16)
+                elif signed and arr.dtype == np.uint8:
+                    arr = arr.view(np.int8)
+            elif transfer in (
+                _DICOM_JPEG_LOSSLESS, _DICOM_JPEG_LOSSLESS_SV1
+            ):
+                from intake_spark.llm.multimodal import (
+                    decode_jpeg_lossless,
+                )
 
-                            arr = decode_jpeg_lossless(blob)
-                            if signed and arr.dtype == np.uint16:
-                                arr = arr.view(np.int16)
-                            elif signed and arr.dtype == np.uint8:
-                                arr = arr.view(np.int8)
-                        elif transfer in (_DICOM_J2K_LOSSLESS, _DICOM_J2K):
-                            from intake_spark.llm.jpeg2000 import (
-                                decode_jpeg2000,
-                            )
+                arr = decode_jpeg_lossless(blob)
+                if signed and arr.dtype == np.uint16:
+                    arr = arr.view(np.int16)
+                elif signed and arr.dtype == np.uint8:
+                    arr = arr.view(np.int8)
+            elif transfer in (_DICOM_J2K_LOSSLESS, _DICOM_J2K):
+                from intake_spark.llm.jpeg2000 import (
+                    decode_jpeg2000,
+                )
 
-                            # .90 lossless (5/3) and .91 incl. lossy (9/7 +
-                            # quantized QCD) both decode natively
-                            arr = decode_jpeg2000(blob)
-                            if signed and arr.dtype == np.uint16:
-                                arr = arr.view(np.int16)
-                            elif signed and arr.dtype == np.uint8:
-                                arr = arr.view(np.int8)
-                        else:
-                            # .4.50 baseline (SOF0) and .4.51 extended
-                            # (SOF1, 12-bit) through the same DCT decoder
-                            from intake_spark.llm.multimodal import decode_jpeg
+                # .90 lossless (5/3) and .91 incl. lossy (9/7 +
+                # quantized QCD) both decode natively
+                arr = decode_jpeg2000(blob)
+                if signed and arr.dtype == np.uint16:
+                    arr = arr.view(np.int16)
+                elif signed and arr.dtype == np.uint8:
+                    arr = arr.view(np.int8)
+            else:
+                # .4.50 baseline (SOF0) and .4.51 extended
+                # (SOF1, 12-bit) through the same DCT decoder
+                from intake_spark.llm.multimodal import decode_jpeg
 
-                            arr = decode_jpeg(blob)
-                            if signed and arr.dtype == np.uint16:
-                                arr = arr.view(np.int16)
-                            elif signed and arr.dtype == np.uint8:
-                                arr = arr.view(np.int8)
-                        if tuple(arr.shape) != exp_frame:
-                            raise ValueError(
-                                f"decoded frame shape {tuple(arr.shape)} != "
-                                f"tag-declared {exp_frame}"
-                            )
-                        out += cut_axis0(arr, shape, r.frame if multi else 0, r.frame)
-                yield pd_.DataFrame(out, columns=CHUNK_SCHEMA.names)
+                arr = decode_jpeg(blob)
+                if signed and arr.dtype == np.uint16:
+                    arr = arr.view(np.int16)
+                elif signed and arr.dtype == np.uint8:
+                    arr = arr.view(np.int8)
+            if tuple(arr.shape) != exp_frame:
+                raise ValueError(
+                    f"decoded frame shape {tuple(arr.shape)} != "
+                    f"tag-declared {exp_frame}"
+                )
+            yield cut_axis0(arr, shape, r.frame if multi else 0, r.frame)
 
-        return map_in_pandas(mdf, decode, schema=CHUNK_SCHEMA)
+        return manifest_rows(spark, manifest, "frame long, frags string", CHUNK_SCHEMA, decode, url)
 
 
 # ---------------------------------------------------------------------------
@@ -2215,44 +2160,33 @@ class LASReader(BaseReader):
             (start, min(start + points_per_task, hdr["n"]))
             for start in range(0, hdr["n"], points_per_task)
         ]
-        mdf = local_frame(spark, ranges, "p_start long, p_end long")
-        if len(ranges) > 1:
-            mdf = mdf.repartition(min(len(ranges), spark.sparkContext.defaultParallelism))
-        cols = ["x", "y", "z", "intensity", "classification", "point_source_id"] + extra
         point_off, rec_len = hdr["point_off"], hdr["rec_len"]
         scales, offsets = hdr["scales"], hdr["offsets"]
 
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def decode(r, fh):
             import numpy as np
 
             dt_np = np.dtype(fields)
-            with open(url, "rb") as fh:
-                for pdf in batches:
-                    for _, r in pdf.iterrows():
-                        n_pts = int(r["p_end"] - r["p_start"])
-                        fh.seek(point_off + int(r["p_start"]) * rec_len)
-                        raw = fh.read(n_pts * rec_len)
-                        # honour rec_len (may exceed the format's core size:
-                        # extra bytes per point are vendor extensions)
-                        arr = np.frombuffer(raw, dtype=np.uint8).reshape(n_pts, rec_len)
-                        rec = np.frombuffer(
-                            arr[:, : dt_np.itemsize].tobytes(), dtype=dt_np
-                        )
-                        out = {
-                            "x": rec["X"] * scales[0] + offsets[0],
-                            "y": rec["Y"] * scales[1] + offsets[1],
-                            "z": rec["Z"] * scales[2] + offsets[2],
-                            "intensity": rec["intensity"].astype("int32"),
-                            "classification": rec["classification"].astype("int32"),
-                            "point_source_id": rec["point_source_id"].astype("int32"),
-                        }
-                        for c in extra:
-                            out[c] = (
-                                rec[c] if c == "gps_time" else rec[c].astype("int32")
-                            )
-                        yield pd.DataFrame(out, columns=cols)
+            n_pts = r.p_end - r.p_start
+            fh.seek(point_off + r.p_start * rec_len)
+            raw = fh.read(n_pts * rec_len)
+            # honour rec_len (may exceed the format's core size: extra
+            # bytes per point are vendor extensions)
+            arr = np.frombuffer(raw, dtype=np.uint8).reshape(n_pts, rec_len)
+            rec = np.frombuffer(arr[:, : dt_np.itemsize].tobytes(), dtype=dt_np)
+            out = {
+                "x": rec["X"] * scales[0] + offsets[0],
+                "y": rec["Y"] * scales[1] + offsets[1],
+                "z": rec["Z"] * scales[2] + offsets[2],
+                "intensity": rec["intensity"].astype("int32"),
+                "classification": rec["classification"].astype("int32"),
+                "point_source_id": rec["point_source_id"].astype("int32"),
+            }
+            for c in extra:
+                out[c] = rec[c] if c == "gps_time" else rec[c].astype("int32")
+            yield out
 
-        return map_in_pandas(mdf, decode, schema=schema)
+        return manifest_rows(spark, ranges, "p_start long, p_end long", schema, decode, url)
 
 
 # ---------------------------------------------------------------------------
@@ -2560,28 +2494,16 @@ class OpenEXRReader(BaseReader):
         )
         if not hdr["block_offsets"]:
             return local_frame(spark, [], schema)
-        mdf = local_frame(
-            spark, [(int(o),) for o in hdr["block_offsets"]], "blk_off long"
+        def decode(r, fh):
+            fh.seek(r.blk_off)
+            head = fh.read(8)
+            (_, size) = struct.unpack("<ii", head)
+            yield _exr_decode_block(head + fh.read(size), hdr)
+
+        return manifest_rows(
+            spark, [(int(o),) for o in hdr["block_offsets"]], "blk_off long",
+            schema, decode, url,
         )
-        if len(hdr["block_offsets"]) > 1:
-            mdf = mdf.repartition(
-                min(len(hdr["block_offsets"]), spark.sparkContext.defaultParallelism)
-            )
-
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            with open(url, "rb") as fh:
-                for pdf in batches:
-                    rows = []
-                    for _, r in pdf.iterrows():
-                        fh.seek(int(r["blk_off"]))
-                        head = fh.read(8)
-                        (_, size) = struct.unpack("<ii", head)
-                        rows.extend(
-                            _exr_decode_block(head + fh.read(size), hdr)
-                        )
-                    yield pd.DataFrame(rows, columns=["y", "channel", "values"])
-
-        return map_in_pandas(mdf, decode, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -3175,26 +3097,15 @@ class E57PointsReader(BaseReader):
         schema = "scan_idx int, " + ", ".join(
             f"`{fd['name']}` {spark_type[fd['kind']]}" for fd in f0
         )
-        mdf = local_frame(
-            spark, scans, "scan_idx int, rc long, off long, fields string"
-        )
-
-        def decode(batches):
+        def decode(r, fh):
             import json as _j
-
-            import pandas as pd_
 
             from intake_spark.sci import _e57_decode_section
 
-            for pdf in batches:
-                with open(url, "rb") as fh:
-                    for _, r in pdf.iterrows():
-                        flds = _j.loads(r.fields)
-                        cols = _e57_decode_section(
-                            fh, page_size, int(r.off), int(r.rc), flds
-                        )
-                        out = pd_.DataFrame(cols)
-                        out.insert(0, "scan_idx", int(r.scan_idx))
-                        yield out
+            cols = _e57_decode_section(fh, page_size, r.off, r.rc, _j.loads(r.fields))
+            yield {"scan_idx": r.scan_idx, **cols}
 
-        return map_in_pandas(mdf, decode, schema=schema)
+        return manifest_rows(
+            spark, scans, "scan_idx int, rc long, off long, fields string",
+            schema, decode, url,
+        )

@@ -301,6 +301,58 @@ def _arrow_adapter(dtype):
     return None
 
 
+def manifest_rows(spark: SparkSession, manifest, ddl, schema, decode, source=None):
+    """The engine's one fan-out of a driver-built manifest to executors.
+
+    ``manifest`` is a small list of work units (byte ranges, blocks,
+    frames, rowid windows) typed by ``ddl``; it becomes a
+    :func:`local_frame` under one :func:`map_in_pandas`. Each Python task
+    walks its units in order and calls ``decode(task, fh)`` on each:
+    ``task`` is the unit as a namedtuple from ``itertuples`` (typed
+    fields, no per-row Series; so unit field names are identifiers that
+    do not start with ``_``). With ``source`` the task opens it once,
+    passes the handle as ``fh`` and closes it when done: a path opens
+    with ``open(source, "rb")``, a zero-argument callable (a sqlite
+    connect) is called. Without it ``fh`` is None and ``decode`` opens
+    what it needs. ``decode`` is a generator; every item it yields (a
+    list of row tuples, a list of dicts or a dict of column arrays) is
+    framed as ``pd.DataFrame(item, columns=schema.names)``. ``schema`` is
+    a DDL string or a ``StructType``.
+
+    No repartition: the ``LocalTableScan`` of ``n`` units already runs
+    min(n, ``defaultParallelism``) tasks, slicing the units in order.
+    Measured at local[4]: 1, 2, 3, 10 and 100 units ran 1, 2, 3, 4 and 4
+    tasks; a ``repartition`` on top added a ``RoundRobinPartitioning``
+    exchange and left the task count as it was. That holds while the
+    manifest stays under ``spark.sql.execution.arrow.localRelationThreshold``
+    (48 MB by default); past it ``local_frame`` plans the Arrow batches
+    as a JVM RDD, which this slicing does not describe. Manifests are
+    kilobytes."""
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    names = schema.names
+
+    def run(batches):
+        import pandas as pd
+
+        if source is None:
+            fh = None
+        else:
+            fh = source() if callable(source) else open(source, "rb")
+        try:
+            for pdf in batches:
+                for task in pdf.itertuples(index=False):
+                    for item in decode(task, fh):
+                        yield pd.DataFrame(item, columns=names)
+        finally:
+            if fh is not None:
+                fh.close()
+
+    return map_in_pandas(local_frame(spark, manifest, ddl), run, schema)
+
+
 TABLE_NAMES = (
     "region",
     "nation",

@@ -56,7 +56,9 @@ class _PandasFileReader(BaseReader):
         # feeds BOTH the schema probe and the distributed read, so the two
         # can't diverge (a glob that matches a subdirectory would otherwise
         # make binaryFile list that directory's children into the parse);
-        # non-posix URLs fall back to binaryFile's own resolution.
+        # non-posix URLs fall back to binaryFile's own resolution. The
+        # one binaryFile load outside readers.binary_files: that takes
+        # one URL, and this loads the resolved path list.
         import glob as _glob
 
         matches = sorted(p for p in _glob.glob(url) if os.path.isfile(p))

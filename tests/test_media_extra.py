@@ -955,13 +955,15 @@ def test_features_ladder_delegates_before_probe_rows(monkeypatch):
 
 
 @pytest.mark.parametrize(
-    "site", ["image_probe", "image_format", "audio_probe", "audio_format"]
+    "site", ["image_probe", "image_format", "audio_probe", "audio_format",
+             "image_transcode", "audio_transcode"]
 )
 def test_feature_ladder_probes_let_unrelated_errors_propagate(monkeypatch, site):
-    """The header-probe rungs of the image/audio feature ladders catch
-    only what a probe raises on a malformed blob: an unrelated TypeError
-    from image_meta/audio_meta propagates, whether the probe fills the
-    decoded=0 row or names the format of a delegated decode."""
+    """The header-probe rungs of the image/audio feature ladders and of
+    the two transcodes catch only what a probe raises on a malformed
+    blob: an unrelated TypeError from image_meta/audio_meta propagates,
+    whether the probe fills the decoded=0 row, names the format of a
+    delegated decode or names a transcode's source format."""
     from intake_spark.llm import audio_meta
     from intake_spark.llm import multimodal as mm
 
@@ -976,7 +978,10 @@ def test_feature_ladder_probes_let_unrelated_errors_propagate(monkeypatch, site)
             lambda b: np.zeros((2, 2, 3)) if decoded else None,
         )
         with pytest.raises(TypeError, match="unrelated"):
-            mm._image_feature_cells(b"not an image", 4)
+            if site == "image_transcode":
+                mm._image_transcode_cells(b"not an image", "webp")
+            else:
+                mm._image_feature_cells(b"not an image", 4)
     else:
         monkeypatch.setattr(audio_meta, "audio_meta", boom)
         monkeypatch.setattr(
@@ -984,7 +989,23 @@ def test_feature_ladder_probes_let_unrelated_errors_propagate(monkeypatch, site)
             lambda b: (8000, np.zeros((4, 1))) if decoded else None,
         )
         with pytest.raises(TypeError, match="unrelated"):
-            mm._audio_feature_cells(b"not audio")
+            if site == "audio_transcode":
+                mm._audio_transcode_cells(b"not audio")
+            else:
+                mm._audio_feature_cells(b"not audio")
+
+
+@pytest.mark.parametrize("kind", ["image", "audio"])
+def test_transcode_cells_keep_malformed_blobs_as_err_rows(kind):
+    """What a probe raises on a malformed blob still leaves an err row
+    with a null format, not a failed task."""
+    from intake_spark.llm import multimodal as mm
+
+    cells = (mm._image_transcode_cells(b"junk", "webp") if kind == "image"
+             else mm._audio_transcode_cells(b"junk"))
+    content, fmt, src_bytes, out_bytes, lossless, err = cells
+    assert (content, fmt, src_bytes, out_bytes, lossless) == (None, None, 4, None, 0)
+    assert err
 
 
 def test_codec_roundtrip_stats_operator(spark):
