@@ -22,13 +22,17 @@ from __future__ import annotations
 
 __version__ = "0.1.0"
 
-from intake_spark.session import get_session  # noqa: F401
-
 
 def __getattr__(name):
     # Lazy module-level conveniences (mirrors the reference's dynamic
     # ``intake.open_<driver>`` surface, intake/__init__.py:58-93, without
-    # importing Spark at package-import time).
+    # importing Spark at package-import time: the worker daemon runs as
+    # ``python -m intake_spark.daemon_prewarm`` and must pick where
+    # pyspark comes from before anything imports it).
+    if name == "get_session":
+        from intake_spark.session import get_session
+
+        return get_session
     if name == "cat":
         # out-of-box combo catalog (≡ intake.cat, the lazily-built
         # "builtin" catalog — intake/__init__.py:50 + catalog/default.py):

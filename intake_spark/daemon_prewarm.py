@@ -28,7 +28,40 @@ session that uses one starts the second daemon.)
 only when the package is plainly filesystem-importable by a fresh
 ``python -m`` (local mode with PYTHONPATH exported) — on a cluster
 where workers get the package via addPyFile, the stock daemon is kept,
-because a daemon module that fails to import kills every task.
+because a daemon module that fails to import kills every task. So the
+two import-system changes below hold for local sessions only.
+
+Before anything imports pyspark, the daemon removes two costs that
+pyspark itself puts on every Python task, and its forked workers
+inherit both changes:
+
+- **Lazy zip invalidation** (:func:`lazy_zip_invalidation`). pyspark's
+  ``worker_util.setup_spark_files`` calls ``importlib.invalidate_caches()``
+  at the start of every task. Before Python 3.13 a ``zipimporter``
+  answers that by re-reading its archive's whole central directory, and
+  a worker holds one importer per zip package directory it imported
+  from: 12 on ``pyspark.zip`` (1,328 entries each) and 2 on the
+  spark-core jar (5,359 entries each), 112-249 ms per task, the floor of
+  every Python task (a stock pyspark session shows it too). Python 3.13
+  (``zipimport.zipimporter._get_files`` / ``invalidate_caches``) only
+  drops the archive's ``_zip_directory_cache`` entry and re-reads the
+  table the next time something looks inside that archive; on older
+  interpreters the daemon gives ``zipimporter`` exactly that behaviour.
+  A worker's ``invalidate_caches()`` went to 0.1-0.2 ms.
+- **Installed pyspark over the zip** (:func:`drop_pyspark_zip`). Spark
+  puts ``$SPARK_HOME/python/lib/pyspark.zip`` first on the workers'
+  ``PYTHONPATH``. A zip holds no bytecode cache, so importing pyspark
+  from it compiles every module (0.9-1.0 s against 0.2 s from an
+  installed package). When the pyspark found on the interpreter's own
+  path has the same ``__version__`` as the zip, the daemon drops the
+  zip from its ``sys.path``; when the versions differ, or no other
+  pyspark is found, the zip stays, since the JVM speaks the zip's
+  version.
+
+Together, at local[4] on a 4-core host: the daemon's imports 1.55-1.79 s
+-> 0.70-0.82 s, the first Python job of a session 4.29-4.44 s ->
+2.96-3.22 s, and a warm 8-partition identity ``mapInPandas`` job
+0.54-0.75 s -> 0.19-0.26 s (PERF.md "The Python-task floor").
 
 All imports are best-effort: a missing optional dependency must not
 take down the daemon (the worker will surface the real ImportError on
@@ -49,9 +82,81 @@ only task-created objects, and the prewarmed pages stay shared
 
 from __future__ import annotations
 
+import os
+import re
+import sys
+
+_VERSION = re.compile(r"""^__version__\s*(?::\s*str\s*)?=\s*['"]([^'"]+)['"]""", re.M)
+
+
+def lazy_zip_invalidation() -> None:
+    """Give ``zipimport.zipimporter`` Python 3.13's lazy cache
+    invalidation on older interpreters: ``invalidate_caches`` only pops
+    the archive's ``_zip_directory_cache`` entry, and the file table is
+    read again the next time an importer looks inside the archive. The
+    table lives only in that cache; the property replaces the
+    ``_files`` attribute that 3.11/3.12 keep per importer (their
+    ``__init__`` has already cached the table when it sets it)."""
+    import zipimport
+
+    if sys.version_info >= (3, 13):
+        return
+
+    def files(self):
+        cache = zipimport._zip_directory_cache
+        try:
+            return cache[self.archive]
+        except KeyError:
+            try:
+                table = cache[self.archive] = zipimport._read_directory(self.archive)
+            except zipimport.ZipImportError:
+                table = {}
+            return table
+
+    def invalidate_caches(self):
+        """Invalidates the cache of file data of the archive path."""
+        zipimport._zip_directory_cache.pop(self.archive, None)
+
+    zipimport.zipimporter._files = property(files, lambda self, table: None)
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+def drop_pyspark_zip(path: list[str]) -> list[str]:
+    """``path`` without its ``pyspark.zip`` entries when the pyspark that
+    the rest of ``path`` imports has the zip's ``__version__``;
+    otherwise ``path`` unchanged."""
+    import importlib.machinery
+    import zipfile
+
+    zips = [p for p in path if os.path.basename(p) == "pyspark.zip"]
+    if not zips:
+        return path
+    rest = [p for p in path if p not in zips]
+    spec = importlib.machinery.PathFinder.find_spec("pyspark", rest)
+    if spec is None or not spec.submodule_search_locations:
+        return path
+    try:
+        with open(os.path.join(spec.submodule_search_locations[0], "version.py")) as f:
+            installed = _version(f.read())
+        zipped = set()
+        for z in zips:
+            with zipfile.ZipFile(z) as zf:
+                zipped.add(_version(zf.read("pyspark/version.py").decode()))
+    except (OSError, KeyError, zipfile.BadZipFile):
+        return path
+    return rest if installed is not None and zipped == {installed} else path
+
+
+def _version(text: str) -> str | None:
+    m = _VERSION.search(text)
+    return m.group(1) if m else None
+
+
 if __name__ == "__main__":
     import importlib
-    import sys as _sys
+
+    lazy_zip_invalidation()
+    sys.path[:] = drop_pyspark_zip(sys.path)
 
     _failed: list[str] = []
     for _mod in (
@@ -85,13 +190,13 @@ if __name__ == "__main__":
             "intake_spark.daemon_prewarm: %d prewarm import(s) failed "
             "(workers will re-import on first use): %s"
             % (len(_failed), "; ".join(_failed)),
-            file=_sys.stderr,
+            file=sys.stderr,
             flush=True,
         )
     else:
         print(
             "intake_spark.daemon_prewarm: engaged (all prewarm imports ok)",
-            file=_sys.stderr,
+            file=sys.stderr,
             flush=True,
         )
 

@@ -838,6 +838,24 @@ def _dbf_value(raw: bytes, ftype: str, decimals: int):
 _FEATURE_SCHEMA = "id string, geometry_type string, geometry string, properties string"
 
 
+_RANGE_DDL = "rec_start long, offs array<long>, lens array<long>"
+
+
+def _range_manifest(index, per_task: int) -> list[tuple]:
+    """Manifest rows ``(rec_start, offs, lens)`` over a record index of
+    (offset, length) pairs, ``per_task`` records a row. Each row carries
+    only its own slice of the index: a decode closure over the whole
+    index would ship it to every task (hundreds of MB at 10M records)."""
+    return [
+        (
+            start,
+            [o for o, _l in index[start : start + per_task]],
+            [l for _o, l in index[start : start + per_task]],
+        )
+        for start in range(0, len(index), per_task)
+    ]
+
+
 class ShapefileReader(BaseReader):
     """Shapefile → canonical geometry rows (GeoJSONReader-compatible):
     ``id`` = record number, ``geometry`` = GeoJSON text, ``properties`` =
@@ -861,21 +879,15 @@ class ShapefileReader(BaseReader):
 
         if not index:
             return local_frame(spark, [], _FEATURE_SCHEMA)
-        ranges = [
-            (start, min(start + records_per_task, len(index)))
-            for start in range(0, len(index), records_per_task)
-        ]
-
         def decode(rg, fshp):
             import json as _json
 
             fdbf = open(dbf, "rb") if has_dbf else None
             try:
                 rows = []
-                for rec in range(rg.rec_start, rg.rec_end):
-                    off, ln = index[rec]
-                    fshp.seek(off)
-                    gtype, geom = _shape_to_geojson(fshp.read(ln))
+                for rec, (off, ln) in enumerate(zip(rg.offs, rg.lens), rg.rec_start):
+                    fshp.seek(int(off))
+                    gtype, geom = _shape_to_geojson(fshp.read(int(ln)))
                     props: dict = {}
                     if fdbf is not None and rec < nrec:
                         fdbf.seek(hsize + rec * rsize)
@@ -894,7 +906,8 @@ class ShapefileReader(BaseReader):
             yield rows
 
         return manifest_rows(
-            spark, ranges, "rec_start long, rec_end long", _FEATURE_SCHEMA, decode, shp
+            spark, _range_manifest(index, records_per_task), _RANGE_DDL,
+            _FEATURE_SCHEMA, decode, shp,
         )
 
 
@@ -1421,18 +1434,6 @@ class FlatGeobufReader(BaseReader):
         schema = "id long, geometry_type string, geometry string, properties string"
         if not index:
             return local_frame(spark, [], schema)
-        # each manifest ROW carries only ITS slice of (offset, size) pairs
-        # — capturing the whole index in the decode closure would ship the
-        # full manifest to every task (hundreds of MB at 10M features)
-        ranges = [
-            (
-                start,
-                [o for o, _l in index[start : start + features_per_task]],
-                [l for _o, l in index[start : start + features_per_task]],
-            )
-            for start in range(0, len(index), features_per_task)
-        ]
-
         def decode(rg, fh):
             import json as _json
 
@@ -1453,7 +1454,7 @@ class FlatGeobufReader(BaseReader):
             yield rows
 
         return manifest_rows(
-            spark, ranges, "rec_start long, offs array<long>, lens array<long>",
+            spark, _range_manifest(index, features_per_task), _RANGE_DDL,
             schema, decode, url,
         )
 

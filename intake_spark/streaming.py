@@ -488,6 +488,13 @@ def drain_stream(start_fn, timeout_s: float = 300.0, what: str = "stream"):
     growing pause between them. Every
     other failure, including a drain timeout, stays fatal and loud.
 
+    The streaming source runners and the Python data-source planners are
+    fresh ``python`` processes, not forks of the worker daemon, so
+    ``daemon_prewarm``'s changes do not reach them: each still imports
+    pyspark from ``pyspark.zip`` (no bytecode cache) and re-reads every
+    zip directory when its task invalidates the import caches (ROADMAP
+    item 6).
+
     Every retry increments the module-level ``RETRY_COUNT`` (monotonic,
     never reset here): harnesses that time streaming queries can sample
     it around each run so a retry — which happens INSIDE the timed

@@ -155,3 +155,29 @@ def test_recommend_picks_shapefile(tmp_path):
     url = make_shapefile(tmp_path, "rec", [POINT])
     kinds = [c.__name__ if isinstance(c, type) else type(c).__name__ for c in recommend(url)]
     assert any("Shapefile" in k for k in kinds)
+
+
+def test_shapefile_decode_does_not_carry_the_record_index(tmp_path, monkeypatch):
+    """Each manifest row carries its own (offset, length) pairs, so the
+    pickled decode every task receives does not grow with the record
+    count."""
+    import intake_spark.geo as geo
+    from pyspark import cloudpickle
+
+    def capture(spark, manifest, ddl, schema, decode, source=None):
+        return decode, manifest
+
+    monkeypatch.setattr(geo, "manifest_rows", capture)
+    sizes, units = [], []
+    for n in (10, 2000):
+        (tmp_path / f"{n:05d}").mkdir()  # equal path lengths
+        url = make_shapefile(
+            tmp_path / f"{n:05d}", "s", [_shp_record(1, [float(i), 0.0]) for i in range(n)]
+        )
+        decode, manifest = ShapefileReader(data=Shapefile(url=url))._read(
+            None, records_per_task=5
+        )
+        sizes.append(len(cloudpickle.dumps(decode)))
+        units.append(sum(len(offs) for _start, offs, _lens in manifest))
+    assert units == [10, 2000]
+    assert sizes[0] == sizes[1]
