@@ -1,70 +1,19 @@
-"""Stdlib decoders for container-level compression formats the engine's
-readers meet in the wild: LZ4 block format and the Blosc1 frame (the
-default zarr v2 compressor — numcodecs' ``{"id": "blosc", "cname":
-"lz4"}``), both from their public specs.
+"""Byte codecs for the container formats the engine's readers and sinks
+meet: raw snappy and LZ4 blocks (thin wrappers over pyarrow's bundled
+codecs), the Blosc1 frame (the default zarr v2 compressor — numcodecs'
+``{"id": "blosc", "cname": "lz4"}``, parsed and written here from the
+public c-blosc layout), CRC-32C and LEB128 varints.
 
 Executor-safe: pure functions over bytes, importable worker-side via
-``ensure_py_deps``. Raw snappy blocks decode AND encode here (reached
-from Avro ``avro.codec: snappy`` and blosc ``cname: snappy``). Blosc's
-remaining codecs (blosclz, zstd) and bit-shuffle raise named gates;
-zlib-in-blosc delegates to the stdlib.
+``ensure_py_deps``. Blosc decodes and encodes the codecs of
+:data:`BLOSC_CODES` (zlib through the stdlib); its other codecs
+(blosclz, zstd) and bit-shuffle raise named gates.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
-
-
-def lz4_block_decompress(src: bytes, dest_size: int) -> bytes:
-    """LZ4 BLOCK format (not the frame format): token-driven sequences of
-    [literals][offset, match], 15-run length extensions, final sequence
-    literals-only — per the public spec at lz4.org."""
-    out = bytearray()
-    pos = 0
-    n = len(src)
-    while pos < n and len(out) < dest_size:
-        token = src[pos]
-        pos += 1
-        lit_len = token >> 4
-        if lit_len == 15:
-            while True:
-                b = src[pos]
-                pos += 1
-                lit_len += b
-                if b != 255:
-                    break
-        out += src[pos : pos + lit_len]
-        pos += lit_len
-        if pos >= n:
-            break  # last sequence: literals only
-        (offset,) = struct.unpack_from("<H", src, pos)
-        pos += 2
-        if offset == 0:
-            raise ValueError("corrupt LZ4 block (zero match offset)")
-        match_len = (token & 0xF) + 4
-        if (token & 0xF) == 15:
-            while True:
-                b = src[pos]
-                pos += 1
-                match_len += b
-                if b != 255:
-                    break
-        start = len(out) - offset
-        if start < 0:
-            raise ValueError("corrupt LZ4 block (offset before start)")
-        if offset >= match_len:
-            # non-overlapping: one slice copy (the hot path — executor-side
-            # zarr chunk decode would otherwise run millions of appends)
-            out += out[start : start + match_len]
-        else:
-            # self-overlapping run: repeat the offset-sized period
-            chunk = out[start:]
-            reps, rem = divmod(match_len, offset)
-            out += chunk * reps + chunk[:rem]
-    if len(out) != dest_size:
-        raise ValueError(f"LZ4 block decoded {len(out)} bytes, wanted {dest_size}")
-    return bytes(out)
 
 
 def byte_unshuffle(data: bytes, typesize: int) -> bytes:
@@ -82,13 +31,32 @@ def byte_unshuffle(data: bytes, typesize: int) -> bytes:
     return bytes(out) + tail
 
 
+# Blosc1 codec names (numcodecs' ``cname``) → the format code a frame
+# carries in flags bits 5-7 (c-blosc blosc.h ``BLOSC_*_FORMAT``): the one
+# list of blosc codecs the engine decodes and encodes. It drives
+# blosc_decompress, blosc_compress and ZarrReader's metadata gates. lz4hc
+# writes plain LZ4 blocks; blosclz and zstd are absent, so they raise.
+BLOSC_CODES = {"lz4": 1, "lz4hc": 1, "snappy": 2, "zlib": 3}
+
+
+def blosc_code(cname: str) -> int:
+    """The Blosc1 format code of ``cname``; a codec outside
+    :data:`BLOSC_CODES` raises a ValueError naming it."""
+    if cname not in BLOSC_CODES:
+        raise ValueError(
+            f"blosc codec {cname!r} not supported (supported: "
+            f"{'/'.join(BLOSC_CODES)}, and memcpy frames)"
+        )
+    return BLOSC_CODES[cname]
+
+
 def blosc_decompress(src: bytes) -> bytes:
     """Blosc1 frame → raw bytes (public header layout, c-blosc blosc.c):
     16-byte header (version, versionlz, flags, typesize, nbytes,
     blocksize, cbytes LE), then either a verbatim payload (memcpy flag)
     or per-block uint32 offsets to [uint32 csize][codec block] chunks.
-    Codec from flags bits 5-7: lz4/lz4hc, snappy and zlib decode here;
-    blosclz/zstd raise named. Byte shuffle undone per block; bit shuffle
+    Codec from flags bits 5-7: the codes of :data:`BLOSC_CODES` decode
+    here; blosclz/zstd raise named. Byte shuffle undone per block; bit shuffle
     raises named."""
     if len(src) < 16:
         raise ValueError("truncated blosc frame")
@@ -104,13 +72,9 @@ def blosc_decompress(src: bytes) -> bytes:
         raise ValueError("blosc bit-shuffle needs the bitshuffle kernel (not stdlib)")
     if memcpyed:
         return src[16 : 16 + nbytes]
-    # Blosc1 format codes: 1 = lz4/lz4hc, 2 = snappy, 3 = zlib
-    if codec not in (1, 2, 3):
-        names = {0: "blosclz", 4: "zstd"}
-        raise ValueError(
-            f"blosc codec {names.get(codec, codec)!r} not supported "
-            "(lz4/snappy/zlib/memcpy decode stdlib-side)"
-        )
+    if codec not in BLOSC_CODES.values():
+        # raises, naming the codec
+        blosc_code({0: "blosclz", 4: "zstd"}.get(codec, str(codec)))
     n_blocks = -(-nbytes // blocksize) if blocksize else 1
     starts = struct.unpack_from(f"<{n_blocks}I", src, 16)
     out = bytearray()
@@ -122,9 +86,9 @@ def blosc_decompress(src: bytes) -> bytes:
         payload = src[off + 4 : off + 4 + csize]
         if csize == want:  # stored (incompressible) block
             block = bytes(payload)
-        elif codec == 1:
+        elif codec == BLOSC_CODES["lz4"]:
             block = lz4_block_decompress(payload, want)
-        elif codec == 2:
+        elif codec == BLOSC_CODES["snappy"]:
             block = snappy_uncompress(payload)
         else:
             block = zlib.decompress(payload)
@@ -138,194 +102,70 @@ def blosc_decompress(src: bytes) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# Snappy raw-block format (the public format_description.txt: varint
-# uncompressed-length preamble, then tag-dispatched literals and
-# back-references). Reached from two container formats this engine reads:
-# Avro OCF ``avro.codec: snappy`` (each block ends with a big-endian
-# CRC32 of the UNCOMPRESSED bytes — a built-in correctness check) and
-# Blosc frames with ``cname: snappy``.
+# Raw snappy and LZ4 BLOCK codecs (not the framing formats): pyarrow's
+# bundled C++ codecs. Raw snappy is reached from Avro OCF ``avro.codec:
+# snappy`` (each block ends with a big-endian CRC32 of the uncompressed
+# bytes), Kafka's xerial and raw snappy batches and Blosc ``cname:
+# snappy``; LZ4 block from Blosc ``cname: lz4``. pyarrow is imported inside
+# each function, so importing this module costs a worker nothing. The
+# wrappers keep what callers should not need to know: the decoded size each
+# codec wants, and a ValueError naming the codec on malformed input (arrow
+# raises OSError).
 # ---------------------------------------------------------------------------
 
 
+def _arrow_decompress(codec: str, src: bytes, size: int) -> bytes:
+    import pyarrow as pa
+
+    try:
+        return pa.decompress(src, decompressed_size=size, codec=codec, asbytes=True)
+    except OSError as e:
+        raise ValueError(f"corrupt {codec} block ({e})") from e
+
+
 def snappy_uncompress(src: bytes) -> bytes:
-    """Decode one raw snappy block (not the framing format)."""
-    n = len(src)
-    # varint preamble: uncompressed length
-    total, i = read_uvarint(src, 0)
+    """Decode one raw snappy block. Its varint preamble is the decoded
+    size, and snappy's decoder checks that the block decodes to exactly
+    that many bytes."""
+    total, _ = read_uvarint(src, 0)
     if total >> 32:
         raise ValueError("snappy: length varint overruns 32 bits")
-    out = bytearray()
-    while i < n:
-        tag = src[i]
-        i += 1
-        kind = tag & 0x3
-        if kind == 0:  # literal
-            ln = tag >> 2
-            if ln >= 60:  # 60..63: length-1 stored in next 1..4 LE bytes
-                nb = ln - 59
-                if i + nb > n:
-                    raise ValueError("snappy: truncated literal length")
-                ln = int.from_bytes(src[i : i + nb], "little")
-                i += nb
-            ln += 1
-            if i + ln > n:
-                raise ValueError("snappy: literal overruns input")
-            out += src[i : i + ln]
-            i += ln
-            continue
-        if kind == 1:  # copy, 1-byte offset
-            if i >= n:
-                raise ValueError("snappy: truncated copy-1 offset")
-            ln = ((tag >> 2) & 0x7) + 4
-            off = ((tag >> 5) << 8) | src[i]
-            i += 1
-        elif kind == 2:  # copy, 2-byte LE offset
-            if i + 2 > n:
-                raise ValueError("snappy: truncated copy-2 offset")
-            ln = (tag >> 2) + 1
-            off = int.from_bytes(src[i : i + 2], "little")
-            i += 2
-        else:  # copy, 4-byte LE offset
-            if i + 4 > n:
-                raise ValueError("snappy: truncated copy-4 offset")
-            ln = (tag >> 2) + 1
-            off = int.from_bytes(src[i : i + 4], "little")
-            i += 4
-        if off == 0 or off > len(out):
-            raise ValueError(f"snappy: copy offset {off} outside window")
-        # overlapping copies replicate byte-by-byte (LZ77 semantics)
-        if off >= ln:
-            start = len(out) - off
-            out += out[start : start + ln]
-        else:
-            for _ in range(ln):
-                out.append(out[-off])
-    if len(out) != total:
-        raise ValueError(f"snappy: decoded {len(out)} bytes, header says {total}")
-    return bytes(out)
+    return _arrow_decompress("snappy", src, total)
 
 
 def snappy_compress(data: bytes) -> bytes:
-    """Encode one raw snappy block — greedy 4-byte hash matcher emitting
-    spec-conformant literals and 2-byte-offset copies. Any valid tag
-    stream is legal snappy, so this needs no bit-parity with the C++
-    encoder; decode(encode(x)) == x is the contract (round-trip and
-    CRC-verified in tests)."""
-    n = len(data)
-    out = bytearray(uvarint(n))  # varint length preamble
+    """Encode one raw snappy block (varint length preamble included)."""
+    import pyarrow as pa
 
-    def emit_literal(lo: int, hi: int) -> None:
-        ln = hi - lo
-        while ln > 0:
-            take = min(ln, 1 << 16)  # keep extension to <= 2 bytes
-            l1 = take - 1
-            if l1 < 60:
-                out.append(l1 << 2)
-            elif l1 < (1 << 8):
-                out.append(60 << 2)
-                out.append(l1)
-            else:
-                out.append(61 << 2)
-                out.extend(l1.to_bytes(2, "little"))
-            out.extend(data[lo : lo + take])
-            lo += take
-            ln -= take
+    return pa.compress(data, codec="snappy", asbytes=True)
 
-    if n < 4:
-        emit_literal(0, n)
-        return bytes(out)
-    table: dict[int, int] = {}
-    i = 0
-    lit_start = 0
-    while i + 4 <= n:
-        key = int.from_bytes(data[i : i + 4], "little")
-        cand = table.get(key)
-        table[key] = i
-        if cand is not None and i - cand <= 0xFFFF and data[cand : cand + 4] == data[i : i + 4]:
-            if lit_start < i:
-                emit_literal(lit_start, i)
-            # extend the match
-            ln = 4
-            while i + ln < n and ln < (1 << 16) and data[cand + ln] == data[i + ln]:
-                ln += 1
-            off = i - cand
-            rem = ln
-            while rem > 0:
-                # trailing sub-4 copies are legal for the 2-byte-offset tag
-                # (length field spans 1..64), so a plain 64-byte split works
-                take = min(rem, 64)
-                out.append(((take - 1) << 2) | 0x2)
-                out += off.to_bytes(2, "little")
-                rem -= take
-            i += ln
-            lit_start = i
-        else:
-            i += 1
-    if lit_start < n:
-        emit_literal(lit_start, n)
-    return bytes(out)
+
+def lz4_block_decompress(src: bytes, dest_size: int) -> bytes:
+    """Decode one LZ4 block that holds exactly ``dest_size`` bytes.
+
+    pyarrow returns ``dest_size`` bytes however many the block decoded
+    (16.x drops the decoded length), so a block that decodes short would
+    come back padded with uninitialised memory. LZ4's decoder never
+    writes past its buffer, so a block of N bytes fails to decode into
+    N - 1: a decode into ``dest_size - 1`` that succeeds proves the block
+    short. The probe is exact for blocks that keep LZ4's end-of-block
+    rules (every encoder's output); a corrupt block that breaks them at
+    its own length can still pass it."""
+    out = _arrow_decompress("lz4_raw", src, dest_size)
+    if dest_size:
+        try:
+            _arrow_decompress("lz4_raw", src, dest_size - 1)
+        except ValueError:
+            return out
+        raise ValueError(f"LZ4 block decodes fewer than {dest_size} bytes")
+    return out
 
 
 def lz4_block_compress(data: bytes) -> bytes:
-    """LZ4 BLOCK encode (greedy 4-byte hash matcher). Spec end rules
-    honored: the last sequence is literals-only, matches never start
-    within the last 12 bytes and must end at least 5 bytes before the
-    block end — any stream meeting those rules is valid LZ4, so the
-    contract is decode(encode(x)) == x (round-trip tested), not
-    bit-parity with the C encoder."""
-    n = len(data)
-    out = bytearray()
+    """Encode one LZ4 block (no frame, no size header)."""
+    import pyarrow as pa
 
-    def emit(lit_lo: int, lit_hi: int, match_len: int, offset: int) -> None:
-        lit = lit_hi - lit_lo
-        ml = match_len - 4 if match_len else 0
-        token = (min(lit, 15) << 4) | (min(ml, 15) if match_len else 0)
-        out.append(token)
-        if lit >= 15:
-            rem = lit - 15
-            while rem >= 255:
-                out.append(255)
-                rem -= 255
-            out.append(rem)
-        out.extend(data[lit_lo:lit_hi])
-        if match_len:
-            out.extend(offset.to_bytes(2, "little"))
-            if ml >= 15:
-                rem = ml - 15
-                while rem >= 255:
-                    out.append(255)
-                    rem -= 255
-                out.append(rem)
-
-    if n < 13:  # too short for any legal match: single literal sequence
-        emit(0, n, 0, 0)
-        return bytes(out)
-    table: dict[int, int] = {}
-    i = 0
-    lit_start = 0
-    # matches must END >= 5 bytes before the block end and may not START
-    # in the last 12 bytes (lz4 block spec end-of-stream conditions)
-    last_match_start = n - 12
-    while i < last_match_start:
-        key = int.from_bytes(data[i : i + 4], "little")
-        cand = table.get(key)
-        table[key] = i
-        if (
-            cand is not None
-            and i - cand <= 0xFFFF
-            and data[cand : cand + 4] == data[i : i + 4]
-        ):
-            ln = 4
-            limit = n - 5 - i  # leave the spec's 5-byte literal tail
-            while ln < limit and data[cand + ln] == data[i + ln]:
-                ln += 1
-            emit(lit_start, i, ln, i - cand)
-            i += ln
-            lit_start = i
-            continue
-        i += 1
-    emit(lit_start, n, 0, 0)  # final literals-only sequence
-    return bytes(out)
+    return pa.compress(data, codec="lz4_raw", asbytes=True)
 
 
 def blosc_compress(
@@ -333,25 +173,23 @@ def blosc_compress(
 ) -> bytes:
     """Raw bytes → one Blosc1 frame (the zarr v2 numcodecs default is
     ``{"id": "blosc", "cname": "lz4", "shuffle": 1}``) — single block,
-    optional byte shuffle, lz4/snappy/zlib codecs, stored-block
+    optional byte shuffle, the codecs of :data:`BLOSC_CODES`, stored-block
     fallback when compression does not help. Round-trips with
     :func:`blosc_decompress`; layout per the public c-blosc blosc.c
     header doc."""
-    codes = {"lz4": 1, "snappy": 2, "zlib": 3}
-    if cname not in codes:
-        raise ValueError(f"blosc_compress cname {cname!r} (lz4/snappy/zlib)")
+    code = blosc_code(cname)
     nbytes = len(data)
     body = data
-    flags = codes[cname] << 5
+    flags = code << 5
     if shuffle and typesize > 1 and nbytes % typesize == 0:
         flags |= 0x1
         # slice-stride shuffle at C speed (the inverse of byte_unshuffle's
         # slice assignment) — a per-byte Python generator here would cost
         # seconds per multi-MB zarr chunk on every executor task
         body = b"".join(data[b::typesize] for b in range(typesize))
-    if cname == "lz4":
+    if code == BLOSC_CODES["lz4"]:
         comp = lz4_block_compress(body)
-    elif cname == "snappy":
+    elif code == BLOSC_CODES["snappy"]:
         comp = snappy_compress(body)
     else:
         comp = zlib.compress(body)

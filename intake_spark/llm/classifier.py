@@ -88,7 +88,9 @@ def _gram_pairs(
     order-independent integer sums, so the numbers are identical).
     Per-partition int64 safety for the extras follows from the Gram
     bound already checked: x ≥ 1 integer counts give |c_b| ≤ Σ|x| ≤
-    Σx² < 2^62, and n ≤ rows ≤ Σx².
+    Σx² < 2^62, and n ≤ rows ≤ Σx². The dense path also checks that
+    each id carries one bias row (b = buckets) and raises a ValueError
+    naming an id that carries more.
 
     NOT a pairwise self-join: that materializes n·k² rows (k = nonzero
     buckets per doc — ~65² per document) before any combine. Instead one
@@ -150,6 +152,15 @@ def _gram_pairs(
                 "per-partition Gram bound exceeds int64 — raise "
                 "gram_partitions on hashed_linear_classifier (or lower "
                 "max document length)"
+            )
+        # one bias row per document: a duplicated id would fold its
+        # copies into one document and count it multiplicity² times
+        ids = part[id_col][part["b"] == B - 1]
+        dup = ids[ids.duplicated()]
+        if len(dup):
+            raise ValueError(
+                f"hashed_linear_classifier needs unique {id_col!r} values; "
+                f"{dup.tolist()[0]!r} occurs more than once"
             )
         codes, _ = pd.factorize(part[id_col])
         bs = part["b"].to_numpy(dtype="int64")
@@ -232,7 +243,14 @@ def hashed_linear_classifier(
     scorer regardless of convergence fine-tuning. ``gram_partitions``
     sizes the Gram pass's Exchange (default: session shuffle
     partitions) — raise it when per-task feature rows outgrow executor
-    memory at large corpus scales."""
+    memory at large corpus scales.
+
+    Precondition: ``id_col`` is unique. Rows that share an id are one
+    document to the trainer, and the join with the labels multiplies
+    them, so the document count ``n`` becomes the sum of squared
+    multiplicities. The dense path (``buckets`` ≤ 1023) raises a
+    ValueError naming a duplicated id inside its Gram pass; the join
+    path (larger ``buckets``) does not check."""
     if iters < 1 or buckets < 1:
         raise ValueError("iters and buckets must be >= 1")
     if buckets > 8192:

@@ -24,21 +24,35 @@ def binary_files(spark, url: str, glob: str | None = None, **options):
     binaryFile listing, behind every per-file reader.
 
     ``glob`` is a datatype's file glob (None: no filter); it narrows a
-    directory listing through Spark's case-sensitive ``pathGlobFilter``.
-    A URL that contains ``*`` is read as given, since the caller's
-    pattern already names the files and the datatype may accept more
-    extensions than its glob (``notes.markdown`` against ``*.md``).
-    ``options`` are DataFrameReader options, applied as given; a caller's
-    own ``pathGlobFilter`` among them narrows a wildcard URL too. A URL
-    that names an existing file is read whatever its name: neither
-    filter applies."""
+    directory listing through Spark's ``pathGlobFilter``, with its letters
+    matched in either case (``*.kml`` lists ``PLACES.KML``, as the
+    datatypes accept it). A URL that contains ``*`` is read as given,
+    since the caller's pattern already names the files and the datatype
+    may accept more extensions than its glob (``notes.markdown`` against
+    ``*.md``). ``options`` are DataFrameReader options, applied as given;
+    a caller's own ``pathGlobFilter`` among them narrows a wildcard URL
+    too, case-sensitively. A URL that names an existing file is read
+    whatever its name: neither filter applies."""
     import os
 
     if os.path.isfile(url):
         options.pop("pathGlobFilter", None)
     elif glob and "*" not in url:
-        options.setdefault("pathGlobFilter", glob)
+        options.setdefault("pathGlobFilter", _either_case(glob))
     return spark.read.format("binaryFile").options(**options).load(url)
+
+
+def _either_case(glob: str) -> str:
+    """``glob`` with each ASCII letter outside a ``[...]`` class or an
+    escape turned into a two-case class: ``*.{yaml,yml}`` becomes
+    ``*.{[yY][aA][mM][lL],[yY][mM][lL]}``."""
+    import re
+
+    return re.sub(
+        r"\\.|\[[^\]]*\]|[A-Za-z]",
+        lambda m: m[0] if len(m[0]) > 1 else f"[{m[0].lower()}{m[0].upper()}]",
+        glob,
+    )
 
 
 class BaseReader(PipelineMixin, Tokenizable):
@@ -221,8 +235,7 @@ class AVIFrameReader(BaseReader):
     def _read(self, spark, every_n: int = 30, **kwargs):
         from intake_spark.llm.video import sample_video_frames
 
-        # camera and FAT media name clips CLIP2.AVI: match the extension in any case
-        binary = binary_files(spark, self.data.url, "*.[aA][vV][iI]")
+        binary = binary_files(spark, self.data.url, "*.avi")
         return sample_video_frames(
             binary.select("path", "content"), every_n=every_n
         )
@@ -540,8 +553,8 @@ class ZarrReader(BaseReader):
     output row is one leading-axis block, stitched in the decode task from
     every zarr chunk covering it (C-order concatenation along trailing
     axes), edge chunks trimmed, missing chunks filled with ``fill_value``.
-    Supported: order='C', compressor null/zlib/gzip (blosc needs numcodecs —
-    rejected with a clear error).
+    Supported: order='C', compressor null/zlib/gzip/blosc (the blosc
+    codecs of ``compress.BLOSC_CODES``; any other is rejected by name).
     """
 
     implements = {dt.Zarr}
@@ -552,6 +565,7 @@ class ZarrReader(BaseReader):
         import os as _os
 
         from intake_spark.arrays import CHUNK_SCHEMA, cut_axis0
+        from intake_spark.compress import blosc_code
 
         root = self.data.url.rstrip("/")
         if _os.path.exists(f"{root}/zarr.json"):
@@ -585,12 +599,7 @@ class ZarrReader(BaseReader):
                         cc = "gzip"
                     elif cname == "blosc":
                         bcfg = codec.get("configuration") or {}
-                        bn = bcfg.get("cname", "lz4")
-                        if bn not in ("lz4", "lz4hc", "zlib"):
-                            raise ValueError(
-                                f"blosc cname {bn!r} needs numcodecs; the "
-                                "stdlib path decodes lz4/lz4hc/zlib/memcpy"
-                            )
+                        blosc_code(bcfg.get("cname", "lz4"))  # raises if not decodable
                         if bcfg.get("shuffle") == "bitshuffle":
                             raise ValueError(
                                 "blosc bit-shuffle needs the bitshuffle "
@@ -688,18 +697,13 @@ class ZarrReader(BaseReader):
             comp = (meta.get("compressor") or {}).get("id") if meta.get("compressor") else None
             if comp == "blosc":
                 cfg = meta.get("compressor") or {}
-                cname = cfg.get("cname", "lz4")
-                if cname not in ("lz4", "lz4hc", "zlib"):
-                    raise ValueError(
-                        f"blosc cname {cname!r} needs numcodecs; stdlib path "
-                        "decodes lz4/lz4hc/zlib/memcpy frames"
-                    )
+                blosc_code(cfg.get("cname", "lz4"))  # raises if not decodable
                 if cfg.get("shuffle") == 2:
                     raise ValueError("blosc bit-shuffle needs the bitshuffle kernel")
             elif comp not in (None, "zlib", "gzip"):
                 raise ValueError(
                     f"compressor {comp!r} needs numcodecs; supported: "
-                    "null/zlib/gzip/blosc(lz4)"
+                    "null/zlib/gzip/blosc"
                 )
             v2_filters = meta.get("filters") or []
             for flt in v2_filters:

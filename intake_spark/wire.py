@@ -462,11 +462,12 @@ class MqttWireClient:
 #
 # Scope (deliberate): PLAINTEXT listeners, ApiVersions v0 / Metadata v1 /
 # ListOffsets v1 / Fetch v4 (the first Fetch version carrying v2 batches),
-# all five batch codecs (gzip/zstd/lz4 frame/xerial-snappy — snappy via
-# this repo's stdlib codec in compress.py, lz4/zstd via pyarrow's bundled
-# codecs). SASL/TLS and transactions need the real connector, and the
-# reader says so loudly. Control batches (transaction markers) are
-# skipped per the spec: they are bookkeeping, not data.
+# all five batch codecs (gzip/zstd/lz4 frame/xerial-snappy — gzip via the
+# stdlib, snappy/lz4/zstd via pyarrow's bundled codecs, snappy through
+# compress.py's raw-block wrapper). SASL/TLS and transactions need the
+# real connector, and the reader says so loudly. Control batches
+# (transaction markers) are skipped per the spec: they are bookkeeping,
+# not data.
 
 
 def _k_svarint(n: int) -> bytes:

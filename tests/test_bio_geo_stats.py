@@ -1585,9 +1585,9 @@ def test_dicom_rle_truncation_named_errors():
 
 def test_single_file_url_is_read_as_given(spark, tmp_path):
     """A URL that names one file is read whatever its spelling: only a
-    directory listing is filtered by the reader's glob. Filtered against
-    ``*.md`` / ``*.kml``, ``notes.markdown`` (a Markdown file) and
-    ``PLACES.KML`` were each read as 0 rows."""
+    directory listing is filtered by the reader's glob, in either case.
+    Filtered against ``*.md`` / ``*.kml``, ``notes.markdown`` (a Markdown
+    file) and ``PLACES.KML`` were each read as 0 rows."""
     from intake_spark.documents import Markdown, MarkdownReader
     from intake_spark.geo import KML as KmlType
     from intake_spark.geo import KMLReader
@@ -1602,5 +1602,6 @@ def test_single_file_url_is_read_as_given(spark, tmp_path):
     kml.write_text(KML)
     rows = KMLReader(data=KmlType(url=str(kml))).read(spark=spark).collect()
     assert {r.name for r in rows} == {"pin", "line"}
-    # the same file in a directory listing is still filtered out
-    assert KMLReader(data=KmlType(url=str(tmp_path))).read(spark=spark).count() == 0
+    # the same file in a directory listing: the glob matches either case
+    rows = KMLReader(data=KmlType(url=str(tmp_path))).read(spark=spark).collect()
+    assert {r.name for r in rows} == {"pin", "line"}

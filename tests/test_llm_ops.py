@@ -3094,6 +3094,21 @@ def test_blocklist_filter_non_ascii_terms_match(spark):
     assert out[3].n_blocked == 1 and out[3].keep == 0
 
 
+def test_hashed_linear_classifier_rejects_a_duplicated_id(spark):
+    """A doc_id that occurs twice would count its document four times in
+    n; the Gram pass raises instead, naming the id."""
+    import pytest
+
+    from intake_spark.llm.classifier import hashed_linear_classifier
+
+    df = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "gamma delta"), (2, "gamma psi"), (3, "omega")],
+        "doc_id long, text string",
+    )
+    with pytest.raises(Exception, match="unique 'doc_id' values; 2 occurs"):
+        hashed_linear_classifier(df, F.col("doc_id") > 1).collect()
+
+
 def test_hashed_linear_classifier_bucket_ceiling(spark):
     """The Gram-factored trainer refuses vocab-sized bucket counts by
     name (it collects (buckets+1)^2 Gram cells to the driver)."""

@@ -232,6 +232,50 @@ def test_avi_reader_lists_upper_case_clips(spark, tmp_path):
     assert sorted(r.frame_idx for r in df.collect()) == [0, 2, 4]
 
 
+def test_every_reader_glob_lists_either_case(spark):
+    """Every datatype glob handed to binary_files (read from the source:
+    binary_files literals, ``glob`` defaults and ``glob`` class
+    attributes) still parses as a Hadoop glob after its case is folded,
+    and matches its file names in lower and upper case alike."""
+    import ast
+    import pathlib
+
+    import intake_spark
+    from intake_spark.readers import _either_case
+
+    samples = {
+        "*": "notes.txt", "*.avi": "clip.avi", "*.docx": "memo.docx",
+        "*.epub": "book.epub", "*.gpx": "track.gpx", "*.kml": "places.kml",
+        "*.md": "readme.md", "*.msgpack": "rows.msgpack", "*.pdf": "paper.pdf",
+        "*.py": "setup.py", "*.rst": "index.rst", "*.sdf": "mols.sdf",
+        "*.svg": "logo.svg", "*.tar": "shard-0.tar",
+        "*.tfrecord*": "train.tfrecord.gz", "*.{fa,fasta,fna,faa}": "chr1.fasta",
+        "*.{fq,fastq}": "reads.fq", "*.{yaml,yml}": "cat.yml",
+    }
+    found = set()
+    for path in pathlib.Path(intake_spark.__file__).parent.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.Call) and getattr(node.func, "id", None) == "binary_files"
+                    and len(node.args) > 2 and isinstance(node.args[2], ast.Constant)):
+                found.add(node.args[2].value)
+            elif isinstance(node, ast.arguments):
+                pos = node.posonlyargs + node.args
+                for a, d in zip(pos[len(pos) - len(node.defaults):], node.defaults):
+                    if a.arg == "glob" and isinstance(d, ast.Constant):
+                        found.add(d.value)
+            elif isinstance(node, ast.Assign) and isinstance(node.value, ast.Constant):
+                if any(getattr(t, "id", None) == "glob" for t in node.targets):
+                    found.add(node.value.value)
+    found.discard(None)  # binary_files' own default: no filter
+    assert found and found <= set(samples), found - set(samples)
+    glob_pattern = spark._jvm.org.apache.hadoop.fs.GlobPattern
+    for glob in found:
+        pat = glob_pattern(_either_case(glob))
+        name = samples[glob]
+        assert pat.matches(name) and pat.matches(name.upper()), glob
+        assert not pat.matches("zz.unrelated-ext") or glob == "*", glob
+
+
 def test_caller_glob_narrows_a_wildcard_url(spark, tmp_path):
     """A glob the caller passes narrows even a wildcard URL, and as
     given (case-sensitive, as Spark's pathGlobFilter is)."""
