@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from intake_spark import datatypes as dt
+from intake_spark.bitio import MSBReader
 from intake_spark.readers import BaseReader, binary_files
 from intake_spark.session import local_frame, manifest_rows, map_in_pandas
 
@@ -542,44 +543,26 @@ _XTC_MAGICINTS = (
 )
 
 
-class _XTCBits:
-    """MSB-first bit reader with O(1) per read (byte cursor + bit buffer),
-    matching the XDR bit-packing of the 3dfcoord codec."""
-
-    __slots__ = ("data", "pos", "acc", "nbits")
-
-    def __init__(self, data: bytes):
-        self.data, self.pos, self.acc, self.nbits = data, 0, 0, 0
-
-    def read(self, n: int) -> int:
-        while self.nbits < n:
-            self.acc = (self.acc << 8) | self.data[self.pos]
-            self.pos += 1
-            self.nbits += 8
-        self.nbits -= n
-        out = (self.acc >> self.nbits) & ((1 << n) - 1)
-        self.acc &= (1 << self.nbits) - 1
-        return out
-
-    def read_ints(self, nbits: int, sizes: tuple[int, int, int]) -> list[int]:
-        """Decode three ints packed as one mixed-radix number of ``nbits``
-        bits. Bytes come off the stream 8 bits at a time with the FIRST
-        byte least-significant (the codec's byte order), then peel with
-        mod/div from the last size backwards."""
-        nbytes = 0
-        v = 0
-        while nbits > 8:
-            v |= self.read(8) << (8 * nbytes)
-            nbytes += 1
-            nbits -= 8
-        if nbits > 0:
-            v |= self.read(nbits) << (8 * nbytes)
-        out = [0, 0, 0]
-        for i in (2, 1):
-            out[i] = v % sizes[i]
-            v //= sizes[i]
-        out[0] = v
-        return out
+def _xtc_read_ints(br: MSBReader, nbits: int,
+                   sizes: tuple[int, int, int]) -> list[int]:
+    """Decode three ints packed as one mixed-radix number of ``nbits``
+    bits. Bytes come off the stream 8 bits at a time with the FIRST
+    byte least-significant (the codec's byte order), then peel with
+    mod/div from the last size backwards."""
+    nbytes = 0
+    v = 0
+    while nbits > 8:
+        v |= br.read(8) << (8 * nbytes)
+        nbytes += 1
+        nbits -= 8
+    if nbits > 0:
+        v |= br.read(nbits) << (8 * nbytes)
+    out = [0, 0, 0]
+    for i in (2, 1):
+        out[i] = v % sizes[i]
+        v //= sizes[i]
+    out[0] = v
+    return out
 
 
 def _xtc_sizeofints(sizes) -> int:
@@ -608,14 +591,14 @@ def _xtc_decode_coords(data: bytes, lsize: int, minint, maxint, smallidx):
         _XTC_MAGICINTS[smallidx],
         _XTC_MAGICINTS[smallidx],
     )
-    br = _XTCBits(data)
+    br = MSBReader(data, codec="XTC")
     coords: list[list[int]] = []
     i = 0
     while i < lsize:
         if bitsize == 0:
             this = [br.read(bitsizeint[j]) for j in range(3)]
         else:
-            this = br.read_ints(bitsize, sizeint)
+            this = _xtc_read_ints(br, bitsize, sizeint)
         i += 1
         this = [this[j] + minint[j] for j in range(3)]
         prev = list(this)
@@ -629,7 +612,7 @@ def _xtc_decode_coords(data: bytes, lsize: int, minint, maxint, smallidx):
             is_smaller -= 1
         if run > 0:
             for k in range(0, run, 3):
-                this = br.read_ints(smallidx, sizesmall)
+                this = _xtc_read_ints(br, smallidx, sizesmall)
                 i += 1
                 this = [this[j] + prev[j] - smallnum for j in range(3)]
                 if k == 0:

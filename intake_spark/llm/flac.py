@@ -15,79 +15,45 @@ corrupt stream fails structurally long before a checksum would fire).
 
 from __future__ import annotations
 
-
-class Bits:
-    """MSB-first bit reader over bytes."""
-
-    def __init__(self, data: bytes, bitpos: int = 0):
-        self.data = data
-        self.pos = bitpos  # absolute bit position
-
-    def u(self, n: int) -> int:
-        """Unsigned n-bit big-endian value."""
-        out = 0
-        pos = self.pos
-        data = self.data
-        for _ in range(n):
-            byte = data[pos >> 3]
-            out = (out << 1) | ((byte >> (7 - (pos & 7))) & 1)
-            pos += 1
-        self.pos = pos
-        return out
-
-    def s(self, n: int) -> int:
-        """Signed n-bit two's-complement value."""
-        v = self.u(n)
-        return v - (1 << n) if v >> (n - 1) else v
-
-    def unary(self) -> int:
-        """Count 0 bits until the terminating 1 bit."""
-        c = 0
-        pos = self.pos
-        data = self.data
-        while not (data[pos >> 3] >> (7 - (pos & 7))) & 1:
-            c += 1
-            pos += 1
-        self.pos = pos + 1
-        return c
-
-    def align(self) -> None:
-        self.pos = (self.pos + 7) & ~7
-
-    def at_end(self) -> bool:
-        return (self.pos >> 3) >= len(self.data)
+from intake_spark.bitio import MSBReader, MSBWriter
 
 
 def parse_streaminfo(content: bytes) -> dict:
-    """'fLaC' magic + metadata walk → the STREAMINFO fields (+ the bit
+    """'fLaC' magic + metadata walk → the STREAMINFO fields (+ the byte
     offset where audio frames start)."""
     if content[:4] != b"fLaC":
         raise ValueError("not a FLAC stream (no fLaC magic)")
-    br = Bits(content, 32)
+    pos = 4
     info = None
     while True:
-        last = br.u(1)
-        btype = br.u(7)
-        length = br.u(24)
+        br = MSBReader(content, pos, codec="FLAC")
+        last = br.read(1)
+        btype = br.read(7)
+        length = br.read(24)
         if btype == 0:  # STREAMINFO
-            b = Bits(content, br.pos)
             info = {
-                "min_block": b.u(16),
-                "max_block": b.u(16),
-                "min_frame": b.u(24),
-                "max_frame": b.u(24),
-                "sample_rate": b.u(20),
-                "channels": b.u(3) + 1,
-                "bits_per_sample": b.u(5) + 1,
-                "total_samples": b.u(36),
+                "min_block": br.read(16),
+                "max_block": br.read(16),
+                "min_frame": br.read(24),
+                "max_frame": br.read(24),
+                "sample_rate": br.read(20),
+                "channels": br.read(3) + 1,
+                "bits_per_sample": br.read(5) + 1,
+                "total_samples": br.read(36),
             }
-        br.pos += length * 8
+        pos += 4 + length
         if last:
             break
     if info is None:
         raise ValueError("FLAC stream lacks a STREAMINFO block")
-    info["frames_bitpos"] = br.pos
+    info["frames_pos"] = pos
     return info
+
+
+def _signed(br: MSBReader, n: int) -> int:
+    """Signed n-bit two's-complement value."""
+    v = br.read(n)
+    return v - (1 << n) if v >> (n - 1) else v
 
 
 _FIXED_COEFS = {
@@ -99,10 +65,10 @@ _FIXED_COEFS = {
 }
 
 
-def _coded_number(br: Bits) -> int:
+def _coded_number(br: MSBReader) -> int:
     """The frame header's UTF-8-style variable-length number (up to 36
     bits / 7 bytes)."""
-    first = br.u(8)
+    first = br.read(8)
     if first < 0x80:
         return first
     n_extra = 0
@@ -112,42 +78,42 @@ def _coded_number(br: Bits) -> int:
         mask >>= 1
     val = first & (mask - 1)
     for _ in range(n_extra):
-        val = (val << 6) | (br.u(8) & 0x3F)
+        val = (val << 6) | (br.read(8) & 0x3F)
     return val
 
 
-def _block_size(code: int, br: Bits) -> int:
+def _block_size(code: int, br: MSBReader) -> int:
     if code == 1:
         return 192
     if 2 <= code <= 5:
         return 576 << (code - 2)
     if code == 6:
-        return br.u(8) + 1
+        return br.read(8) + 1
     if code == 7:
-        return br.u(16) + 1
+        return br.read(16) + 1
     if 8 <= code <= 15:
         return 256 << (code - 8)
     raise ValueError(f"reserved block-size code {code}")
 
 
-def _skip_sample_rate(code: int, br: Bits) -> None:
+def _skip_sample_rate(code: int, br: MSBReader) -> None:
     if code == 12:
-        br.u(8)
+        br.read(8)
     elif code in (13, 14):
-        br.u(16)
+        br.read(16)
 
 
 _SAMPLE_SIZE = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}
 
 
-def _residual(br: Bits, block_size: int, order: int) -> list[int]:
+def _residual(br: MSBReader, block_size: int, order: int) -> list[int]:
     """Rice/Rice2-partitioned residual → block_size - order values."""
-    method = br.u(2)
+    method = br.read(2)
     if method > 1:
         raise ValueError(f"reserved residual coding method {method}")
     plen = 4 if method == 0 else 5
     escape = (1 << plen) - 1
-    part_order = br.u(4)
+    part_order = br.read(4)
     n_parts = 1 << part_order
     part_samples = block_size >> part_order
     if part_samples << part_order != block_size:
@@ -157,35 +123,35 @@ def _residual(br: Bits, block_size: int, order: int) -> list[int]:
     out = []
     for p in range(n_parts):
         count = part_samples - (order if p == 0 else 0)
-        param = br.u(plen)
+        param = br.read(plen)
         if param == escape:
-            nbits = br.u(5)
+            nbits = br.read(5)
             for _ in range(count):
-                out.append(br.s(nbits) if nbits else 0)
+                out.append(_signed(br, nbits) if nbits else 0)
         else:
             for _ in range(count):
                 q = br.unary()
-                v = (q << param) | (br.u(param) if param else 0)
+                v = (q << param) | br.read(param)
                 out.append((v >> 1) ^ -(v & 1))  # zigzag
     return out
 
 
-def _subframe(br: Bits, block_size: int, bps: int) -> list[int]:
-    if br.u(1):
+def _subframe(br: MSBReader, block_size: int, bps: int) -> list[int]:
+    if br.read(1):
         raise ValueError("subframe padding bit set")
-    stype = br.u(6)
+    stype = br.read(6)
     wasted = 0
-    if br.u(1):
+    if br.read(1):
         wasted = br.unary() + 1
     eff = bps - wasted
     if stype == 0:  # CONSTANT
-        v = br.s(eff)
+        v = _signed(br, eff)
         out = [v] * block_size
     elif stype == 1:  # VERBATIM
-        out = [br.s(eff) for _ in range(block_size)]
+        out = [_signed(br, eff) for _ in range(block_size)]
     elif 8 <= stype <= 12:  # FIXED, order = stype - 8
         order = stype - 8
-        warm = [br.s(eff) for _ in range(order)]
+        warm = [_signed(br, eff) for _ in range(order)]
         res = _residual(br, block_size, order)
         coefs = _FIXED_COEFS[order]
         out = list(warm)
@@ -194,12 +160,12 @@ def _subframe(br: Bits, block_size: int, bps: int) -> list[int]:
             out.append(r + pred)
     elif stype >= 32:  # LPC, order = (stype & 31) + 1
         order = (stype & 31) + 1
-        warm = [br.s(eff) for _ in range(order)]
-        precision = br.u(4) + 1
+        warm = [_signed(br, eff) for _ in range(order)]
+        precision = br.read(4) + 1
         if precision == 16:
             raise ValueError("invalid LPC precision code 15")
-        shift = br.s(5)
-        coefs = [br.s(precision) for _ in range(order)]
+        shift = _signed(br, 5)
+        coefs = [_signed(br, precision) for _ in range(order)]
         res = _residual(br, block_size, order)
         out = list(warm)
         for r in res:
@@ -218,30 +184,30 @@ def decode_flac(content: bytes):
     import numpy as np
 
     info = parse_streaminfo(content)
-    br = Bits(content, info["frames_bitpos"])
+    br = MSBReader(content, info["frames_pos"], codec="FLAC")
     n_ch = info["channels"]
     total = info["total_samples"]
     chans: list[list[int]] = [[] for _ in range(n_ch)]
     got = 0
-    while (total == 0 or got < total) and not br.at_end():
-        br.align()
-        if br.at_end():
+    while total == 0 or got < total:
+        at = br.align()
+        if at >= len(content):
             break
-        sync = br.u(14)
+        sync = br.read(14)
         if sync != 0b11111111111110:
-            raise ValueError(f"lost frame sync at bit {br.pos - 14}")
-        br.u(1)  # reserved
-        br.u(1)  # blocking strategy
-        bs_code = br.u(4)
-        sr_code = br.u(4)
-        ch_code = br.u(4)
-        size_code = br.u(3)
-        br.u(1)  # reserved
+            raise ValueError(f"lost frame sync at bit {8 * at}")
+        br.read(1)  # reserved
+        br.read(1)  # blocking strategy
+        bs_code = br.read(4)
+        sr_code = br.read(4)
+        ch_code = br.read(4)
+        size_code = br.read(3)
+        br.read(1)  # reserved
         _coded_number(br)
         block_size = _block_size(bs_code, br)
         _skip_sample_rate(sr_code, br)
         bps = _SAMPLE_SIZE.get(size_code, info["bits_per_sample"])
-        br.u(8)  # CRC-8 (not validated)
+        br.read(8)  # CRC-8 (not validated)
 
         if ch_code <= 7:
             subs = [_subframe(br, block_size, bps) for _ in range(ch_code + 1)]
@@ -268,10 +234,12 @@ def decode_flac(content: bytes):
                 f"frame has {len(subs)} channels, STREAMINFO says {n_ch}"
             )
         br.align()
-        br.u(16)  # frame CRC-16 (not validated)
+        br.read(16)  # frame CRC-16 (not validated)
         for c in range(n_ch):
             chans[c].extend(subs[c])
         got += block_size
+    if got < total:  # cut at a frame boundary
+        raise ValueError(f"FLAC stream truncated: {got} of {total} samples")
     if total and got > total:  # final frame may pad past total_samples
         chans = [c[:total] for c in chans]
     arr = np.array(chans, dtype=np.int64).T.astype(np.int32)
@@ -283,29 +251,6 @@ def decode_flac(content: bytes):
 # through the distributed pipeline — STREAMINFO + fixed-blocking frames
 # with spec CRC-8/CRC-16, every sample stored at full precision.
 # ---------------------------------------------------------------------------
-
-
-class _MSBWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def u(self, v: int, bits: int):
-        for i in range(bits - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((v >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.acc)
-                self.acc = 0
-                self.n = 0
-
-    def s(self, v: int, bits: int):
-        self.u(v & ((1 << bits) - 1), bits)
-
-    def align(self):
-        while self.n:
-            self.u(0, 1)
 
 
 def _crc8(data: bytes) -> int:
@@ -370,46 +315,45 @@ def encode_flac(samples, rate: int, bps: int = 16,
         raise ValueError(f"samples exceed {bps}-bit range")
 
     out = bytearray(b"fLaC")
-    si = _MSBWriter()
-    si.u(1, 1)   # last metadata block
-    si.u(0, 7)   # STREAMINFO
-    si.u(34, 24)
+    si = MSBWriter()
+    si.write(1, 1)   # last metadata block
+    si.write(0, 7)   # STREAMINFO
+    si.write(34, 24)
     last_bs = n % block_size or min(block_size, max(n, 1))
-    si.u(min(block_size, last_bs), 16)
-    si.u(block_size, 16)
-    si.u(0, 24), si.u(0, 24)
-    si.u(rate, 20)
-    si.u(ch - 1, 3)
-    si.u(bps - 1, 5)
-    si.u(n, 36)
+    si.write(min(block_size, last_bs), 16)
+    si.write(block_size, 16)
+    si.write(0, 24), si.write(0, 24)
+    si.write(rate, 20)
+    si.write(ch - 1, 3)
+    si.write(bps - 1, 5)
+    si.write(n, 36)
     for _ in range(16):
-        si.u(0, 8)  # md5 unknown
+        si.write(0, 8)  # md5 unknown
     out += si.out
 
     for fi, start in enumerate(range(0, max(n, 1), block_size)):
         blk = x[start : start + block_size]
         bs = len(blk) or 1
-        w = _MSBWriter()
-        w.u(0b11111111111110, 14)
-        w.u(0, 1)  # reserved
-        w.u(0, 1)  # fixed blocking
-        w.u(7, 4)  # blocksize: 16-bit value follows
-        w.u(0, 4)  # sample rate: from STREAMINFO
-        w.u(ch - 1, 4)  # independent channels
-        w.u(_BPS_CODE[bps], 3)
-        w.u(0, 1)  # reserved
+        w = MSBWriter()
+        w.write(0b11111111111110, 14)
+        w.write(0, 1)  # reserved
+        w.write(0, 1)  # fixed blocking
+        w.write(7, 4)  # blocksize: 16-bit value follows
+        w.write(0, 4)  # sample rate: from STREAMINFO
+        w.write(ch - 1, 4)  # independent channels
+        w.write(_BPS_CODE[bps], 3)
+        w.write(0, 1)  # reserved
         for b in _utf8_number(fi):
-            w.u(b, 8)
-        w.u(bs - 1, 16)
-        w.u(_crc8(bytes(w.out)), 8)
+            w.write(b, 8)
+        w.write(bs - 1, 16)
+        w.write(_crc8(bytes(w.out)), 8)
         for c in range(ch):
-            w.u(0, 1)   # padding
-            w.u(1, 6)   # VERBATIM
-            w.u(0, 1)   # no wasted bits
+            w.write(0, 1)   # padding
+            w.write(1, 6)   # VERBATIM
+            w.write(0, 1)   # no wasted bits
             col = blk[:, c] if len(blk) else np.zeros(1, dtype=int)
             for v in col:
-                w.s(int(v), bps)
-        w.align()
-        w.u(_crc16(bytes(w.out)), 16)
+                w.write(int(v), bps)
+        w.write(_crc16(w.bytes()), 16)
         out += w.out
     return bytes(out)

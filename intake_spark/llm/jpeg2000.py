@@ -26,6 +26,8 @@ from __future__ import annotations
 
 import struct
 
+from intake_spark.bitio import MSBReader, MSBWriter
+
 # T.88 Table E.1 — MQ-coder probability state machine.
 # (Qe, NMPS, NLPS, SWITCH)
 _MQ = [
@@ -583,77 +585,31 @@ class _T1Block:
                     yield x, y, y * self.w + x
 
 
-class _RawWriter:
-    """T.800 raw (arithmetic-bypass) bit packer: MSB-first, and a byte
-    following an 0xFF carries only 7 data bits (MSB forced 0)."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.cur = 0
-        self.used = 0
-        self.cap = 8
-
-    def put(self, bit: int):
-        self.cur = (self.cur << 1) | (bit & 1)
-        self.used += 1
-        if self.used == self.cap:
-            self.out.append(self.cur)
-            self.cap = 7 if self.cur == 0xFF else 8
-            self.cur = 0
-            self.used = 0
-
-    def flush(self) -> bytes:
-        if self.used:
-            self.out.append(self.cur << (self.cap - self.used))
-            self.cur = 0
-            self.used = 0
-        if self.out and self.out[-1] == 0xFF:
-            self.out.append(0x00)  # a segment must not end with 0xFF
-        return bytes(self.out)
-
-
-class _RawReader:
-    """Mirror of :class:`_RawWriter`; reads 0 bits past the end."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.bit = 0
-        self.prev_ff = False
-
-    def get(self) -> int:
-        cap = 7 if self.prev_ff else 8
-        if self.bit == cap:
-            b = self.data[self.pos] if self.pos < len(self.data) else 0
-            self.prev_ff = b == 0xFF
-            self.pos += 1
-            self.bit = 0
-            cap = 7 if self.prev_ff else 8
-        b = self.data[self.pos] if self.pos < len(self.data) else 0
-        shift = cap - 1 - self.bit
-        self.bit += 1
-        return (b >> shift) & 1
+def _ff_pad(seg: bytes) -> bytes:
+    """A raw segment or packet header must not end with 0xFF, so one
+    that does gets a 0x00 byte (the stuffed successor, all pad)."""
+    return seg + b"\x00" if seg.endswith(b"\xff") else seg
 
 
 class _RawEnc:
     """Adapter: raw-pass bits through the MQ call shape (ctx ignored)."""
 
-    def __init__(self, wtr: _RawWriter):
+    def __init__(self, wtr: MSBWriter):
         self.w = wtr
 
     def encode(self, _st, _cx, d):
-        self.w.put(d)
+        self.w.write(d, 1)
 
     def flush(self):
-        return self.w.flush()
+        return _ff_pad(self.w.bytes())
 
 
 class _RawDec:
-    def __init__(self, rdr: _RawReader):
+    def __init__(self, rdr: MSBReader):
         self.r = rdr
 
     def decode(self, _st, _cx):
-        return self.r.get()
+        return self.r.bit()
 
 
 # COD SPcod code-block style bits (T.800 Table A-19)
@@ -741,7 +697,7 @@ def t1_encode(signs, mags, w: int, h: int, orient: int, style: int = 0):
     seg_first = 0  # meta index where the open segment started
     for t_, p, raw, term in _pass_list(numbps, style):
         if enc is None:
-            enc = _RawEnc(_RawWriter()) if raw else MQEncoder()
+            enc = _RawEnc(MSBWriter(stuffed=True)) if raw else MQEncoder()
             seg_first = len(meta)
         blk.raw_pass = raw
         _run_pass(blk, t_, p, st, enc=enc, style=style)
@@ -786,7 +742,8 @@ def t1_decode(segments, n_passes: int, numbps: int, w: int, h: int,
     for t_, p, raw, term in _pass_list(numbps, style)[:n_passes]:
         if dec is None:
             chunk = segs[seg_i] if seg_i < len(segs) else b""
-            dec = _RawDec(_RawReader(chunk)) if raw else MQDecoder(chunk)
+            dec = (_RawDec(MSBReader(chunk, stuffed=True, pad=True, codec="JPEG 2000"))
+                   if raw else MQDecoder(chunk))
         blk.raw_pass = raw
         _run_pass(blk, t_, p, st, dec=dec, style=style)
         if style & CBSTY_RESET:
@@ -912,76 +869,31 @@ def _cup(blk, p, st, enc=None, dec=None):
 # ---------------------------------------------------------------------------
 
 
-from intake_spark.llm.jpegls import _BitReader as _JLSBitReader
-from intake_spark.llm.jpegls import _BitWriter as _JLSBitWriter
-
-
-class _HdrBitWriter(_JLSBitWriter):
-    """Packet-header bit writer: T.800 B.10.1 stuffing is the SAME
-    "byte after 0xFF carries 7 bits" rule as T.87, so the JPEG-LS bit
-    writer is reused; only the flush differs (a trailing 0xFF gets a
-    0x00 pad byte so the body can never start with a marker-like
-    pattern)."""
-
-    def put(self, bit: int):
-        self.put_bit(bit)
-
-    def flush(self) -> bytes:
-        while self.nbits:
-            self.put_bit(0)
-        if self.out and self.out[-1] == 0xFF:
-            self.out.append(0x00)
-        return bytes(self.out)
-
-
-class _HdrBitReader(_JLSBitReader):
-    """Mirror of :class:`_HdrBitWriter` (shared T.87 reader + header
-    alignment)."""
-
-    def bit(self) -> int:
-        return self.get_bit()
-
-    def bits(self, k: int) -> int:
-        return self.get_bits(k)
-
-    def align(self) -> int:
-        """Byte-align past the header (consuming the post-FF pad byte)."""
-        self.nbits = 0
-        if self.prev_ff:
-            self.pos += 1  # stuffed 0x00 after a trailing 0xFF
-            self.prev_ff = False
-        return self.pos
-
-
-def _put_numpasses(bw: _HdrBitWriter, n: int):
+def _put_numpasses(bw: MSBWriter, n: int):
     if n == 1:
-        bw.put(0)
+        bw.write(0, 1)
     elif n == 2:
-        bw.put(1)
-        bw.put(0)
+        bw.write(0b10, 2)
     elif n <= 5:
-        bw.put_bits(0b11, 2)
-        bw.put_bits(n - 3, 2)
+        bw.write(0b1100 | (n - 3), 4)
     elif n <= 36:
-        bw.put_bits(0b1111, 4)
-        bw.put_bits(n - 6, 5)
+        bw.write(0b1111 << 5 | (n - 6), 9)
     else:
-        bw.put_bits(0b111111111, 9)
-        bw.put_bits(n - 37, 7)
+        bw.write(0b111111111 << 7 | (n - 37), 16)
 
 
-def _get_numpasses(br: _HdrBitReader) -> int:
+def _get_numpasses(br: MSBReader) -> int:
     if not br.bit():
         return 1
     if not br.bit():
         return 2
-    v = br.bits(2)
+    v = br.read(2)
     if v < 3:
         return 3 + v
-    v = br.bits(5)
+    v = br.read(5)
     if v < 31:
         return 6 + v
-    return 37 + br.bits(7)
+    return 37 + br.read(7)
 
 
 def _band_cblocks(bw_, bh_, cb: int):
@@ -1357,7 +1269,8 @@ def _encode_tile_packets(comp_bands, comp_boxes, levels, nc: int,
         if sop:
             body += b"\xff\x91\x00\x04" + struct.pack(">H", nsop & 0xFFFF)
         nsop += 1
-        hdr = _HdrBitWriter()
+        hdr = MSBWriter(stuffed=True)
+        put = lambda b: hdr.write(b, 1)  # TagTree's emit_bit
         pieces_out = []  # (st, a, b) chunks to append to body
         contrib = any(
             st["cuts"][layer + 1] > st["cuts"][layer]
@@ -1365,22 +1278,22 @@ def _encode_tile_packets(comp_bands, comp_boxes, levels, nc: int,
             for st in blocks
         )
         if not contrib:
-            hdr.put(0)
+            hdr.write(0, 1)
         else:
-            hdr.put(1)
+            hdr.write(1, 1)
             for (ncx, _ncy), incl, imsb, blocks in binfos:
                 for k, st in enumerate(blocks):
                     cy, cx = divmod(k, ncx)
                     a, b = st["cuts"][layer], st["cuts"][layer + 1]
                     if st["included"]:
-                        hdr.put(1 if b > a else 0)
+                        hdr.write(1 if b > a else 0, 1)
                         if b <= a:
                             continue
                     else:
-                        incl.encode(cx, cy, layer + 1, hdr.put)
+                        incl.encode(cx, cy, layer + 1, put)
                         if st["first"] != layer:
                             continue
-                        imsb.encode(cx, cy, st["zbp"] + 1, hdr.put)
+                        imsb.encode(cx, cy, st["zbp"] + 1, put)
                         st["included"] = True
                     _put_numpasses(hdr, b - a)
                     plist = _pass_list(st["nbps"], cb_style[ci])
@@ -1399,19 +1312,17 @@ def _encode_tile_packets(comp_bands, comp_boxes, levels, nc: int,
                             st["lblock"] + pnp.bit_length() - 1
                         )
                         inc = max(inc, need)
-                    for _ in range(inc):
-                        hdr.put(1)
-                    hdr.put(0)
+                    hdr.write((1 << (inc + 1)) - 2, inc + 1)  # inc 1s, a 0
                     st["lblock"] += inc
                     sent0 = st["sent"] - sum(p_ for p_, _n in pieces)
                     off = sent0
                     for plen, pnp in pieces:
-                        hdr.put_bits(
+                        hdr.write(
                             plen, st["lblock"] + pnp.bit_length() - 1
                         )
                         pieces_out.append((st, off, off + plen))
                         off += plen
-        hbytes = hdr.flush()
+        hbytes = _ff_pad(hdr.bytes())
         if eph:
             hbytes += b"\xff\x92"
         (hdrs if packed else body).extend(hbytes)
@@ -2477,7 +2388,7 @@ def decode_jpeg2000(blob: bytes):
         codeword segments may span many layers)."""
         if cur["sop"] and bs["data"][bs["pos"] : bs["pos"] + 2] == b"\xff\x91":
             bs["pos"] += 6
-        br = _HdrBitReader(hs["data"], hs["pos"])
+        br = MSBReader(hs["data"], hs["pos"], stuffed=True, codec="JPEG 2000")
         pend = []
         if br.bit():  # non-empty packet
             for bi, orient, bandbox, mb, blocks, ncx, ncy in pband[(ci, r, p)]:
@@ -2521,7 +2432,7 @@ def decode_jpeg2000(blob: bytes):
                         cnt += 1
                         term = plist[i][3] if i < len(plist) else True
                         if term or i == b - 1:
-                            ln_ = br.bits(st["lblock"] + cnt.bit_length() - 1)
+                            ln_ = br.read(st["lblock"] + cnt.bit_length() - 1)
                             pend.append((st, ln_, term))
                             cnt = 0
                     st["passes"] = b

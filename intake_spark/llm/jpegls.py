@@ -44,6 +44,8 @@ from __future__ import annotations
 
 import struct
 
+from intake_spark.bitio import MSBReader, MSBWriter
+
 # run-order codes (A.7.1.1)
 _J = [0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2, 3, 3, 3, 3,
       4, 4, 5, 5, 6, 6, 7, 7, 8, 9, 10, 11, 12, 13, 14, 15]
@@ -113,106 +115,28 @@ class _Params:
         return 4
 
 
-class _BitWriter:
-    """MSB-first bit writer with JPEG-LS FF stuffing: after an emitted
-    0xFF byte the next byte carries only 7 payload bits (its MSB is a
-    stuffed 0)."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.cur = 0
-        self.nbits = 0
-        self.cap = 8
-
-    def put_bit(self, b: int) -> None:
-        self.cur = (self.cur << 1) | (b & 1)
-        self.nbits += 1
-        if self.nbits == self.cap:
-            self.out.append(self.cur)
-            self.cap = 7 if self.cur == 0xFF else 8
-            self.cur = 0
-            self.nbits = 0
-
-    def put_bits(self, value: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            self.put_bit((value >> i) & 1)
-
-    def flush(self) -> bytes:
-        while self.nbits:
-            self.put_bit(0)
-        return bytes(self.out)
-
-
-class _BitReader:
-    """Mirror of :class:`_BitWriter`: consumes 7 bits from any byte that
-    follows an 0xFF (the stuffed 0). Hitting a marker (FF with MSB-set
-    follower) while bits are still needed is a truncation error."""
-
-    def __init__(self, data: bytes, pos: int = 0):
-        self.data = data
-        self.pos = pos
-        self.cur = 0
-        self.nbits = 0
-        self.prev_ff = False
-
-    def _load(self) -> None:
-        if self.pos >= len(self.data):
-            raise ValueError("JPEG-LS bitstream truncated")
-        b = self.data[self.pos]
-        if self.prev_ff:
-            if b & 0x80:
-                raise ValueError("JPEG-LS bitstream ran into a marker")
-            self.pos += 1
-            self.cur = b & 0x7F
-            self.nbits = 7
-        else:
-            self.pos += 1
-            self.cur = b
-            self.nbits = 8
-        self.prev_ff = b == 0xFF
-
-    def get_bit(self) -> int:
-        if not self.nbits:
-            self._load()
-        self.nbits -= 1
-        return (self.cur >> self.nbits) & 1
-
-    def get_bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.get_bit()
-        return v
-
-
-def _golomb_encode(bw: _BitWriter, merr: int, k: int, limit: int, qbpp: int):
+def _golomb_encode(bw: MSBWriter, merr: int, k: int, limit: int, qbpp: int):
     """Limited-length Golomb (A.5.3): unary quotient capped at
     limit - qbpp - 1, then either k remainder bits or a qbpp-bit escape
     of (merr - 1)."""
     cap = limit - qbpp - 1
     q = merr >> k
     if q < cap:
-        for _ in range(q):
-            bw.put_bit(0)
-        bw.put_bit(1)
-        if k:
-            bw.put_bits(merr & ((1 << k) - 1), k)
+        bw.write(1, q + 1)
+        bw.write(merr, k)
     else:
-        for _ in range(cap):
-            bw.put_bit(0)
-        bw.put_bit(1)
-        bw.put_bits(merr - 1, qbpp)
+        bw.write(1, cap + 1)
+        bw.write(merr - 1, qbpp)
 
 
-def _golomb_decode(br: _BitReader, k: int, limit: int, qbpp: int) -> int:
+def _golomb_decode(br: MSBReader, k: int, limit: int, qbpp: int) -> int:
     cap = limit - qbpp - 1
-    q = 0
-    while br.get_bit() == 0:
-        q += 1
-        if q > cap:
-            raise ValueError("JPEG-LS: unary run exceeds the length limit")
+    q = br.unary()
+    if q > cap:
+        raise ValueError("JPEG-LS: unary run exceeds the length limit")
     if q < cap:
-        return (q << k) | (br.get_bits(k) if k else 0)
-    return br.get_bits(qbpp) + 1
+        return (q << k) | br.read(k)
+    return br.read(qbpp) + 1
 
 
 def _context_k(p: _Params, q: int, ritype: int | None = None) -> int:
@@ -407,7 +331,7 @@ def decode_jpegls(blob: bytes):
                     # fresh modeling state, run indexes and line buffers
                     p = _Params(precision, near, maxval, t1, t2, t3,
                                 reset)
-                    br = _BitReader(blob, start)
+                    br = MSBReader(blob, start, stuffed=True, codec="JPEG-LS")
                     if ri:
                         # slice every component plane at line-group
                         # boundaries: rows [g0*v, (g0+gs)*v) clipped to
@@ -485,7 +409,7 @@ def decode_jpegls(blob: bytes):
                 # the line above all reset (the intervals are the
                 # independently-decodable error-resilience units)
                 p = _Params(precision, near, maxval, t1, t2, t3, reset)
-                br = _BitReader(blob, start)
+                br = MSBReader(blob, start, stuffed=True, codec="JPEG-LS")
                 try:
                     _decode_scan(p, br, cw, rows, [0] * cw,
                                  out[y0 : y0 + rows], 0, 0)
@@ -581,7 +505,7 @@ def _decode_line(p, br, W, prev, cur, rc0, run_index) -> int:
             runval = a
             broke = False
             while True:
-                if br.get_bit() == 1:
+                if br.bit() == 1:
                     seg_n = 1 << _J[run_index]
                     m = min(seg_n, W - i)
                     for _ in range(m):
@@ -597,7 +521,7 @@ def _decode_line(p, br, W, prev, cur, rc0, run_index) -> int:
                         break
                 else:
                     jn = _J[run_index]
-                    r = br.get_bits(jn) if jn else 0
+                    r = br.read(jn)
                     for _ in range(r):
                         cur[i] = runval
                         i += 1
@@ -739,7 +663,7 @@ def _decode_line_ilv2(p, br, W, nc, prevs, curs, rc0s, run_index) -> int:
             runvals = a[:]
             broke = False
             while True:
-                if br.get_bit() == 1:
+                if br.bit() == 1:
                     seg_n = 1 << _J[run_index]
                     m = min(seg_n, W - i)
                     for _ in range(m):
@@ -753,7 +677,7 @@ def _decode_line_ilv2(p, br, W, nc, prevs, curs, rc0s, run_index) -> int:
                         break
                 else:
                     jn = _J[run_index]
-                    r = br.get_bits(jn) if jn else 0
+                    r = br.read(jn)
                     for _ in range(r):
                         for ci in range(nc):
                             curs[ci][i] = runvals[ci]
@@ -819,7 +743,7 @@ def _encode_scan(p: "_Params", img) -> bytes:
     import numpy as np
 
     H, W = img.shape
-    bw = _BitWriter()
+    bw = MSBWriter(stuffed=True)
     run_index = 0
     pix = np.asarray(img).astype(np.int64).tolist()
     prev = [0] * W
@@ -830,7 +754,7 @@ def _encode_scan(p: "_Params", img) -> bytes:
         c_left_saved = prev[0]
         run_index = _encode_line(p, bw, W, prev, cur, pix[y], rc0, run_index)
         prev = cur
-    return bw.flush()
+    return bw.bytes()
 
 
 def _encode_line(p, bw, W, prev, cur, row, rc0, run_index) -> int:
@@ -854,18 +778,16 @@ def _encode_line(p, bw, W, prev, cur, row, rc0, run_index) -> int:
                 i += 1
             run = i - start
             while run >= (1 << _J[run_index]):
-                bw.put_bit(1)
+                bw.write(1, 1)
                 run -= 1 << _J[run_index]
                 if run_index < 31:
                     run_index += 1
             if i >= W:  # line end ended the run
                 if run > 0:
-                    bw.put_bit(1)
+                    bw.write(1, 1)
                 a = cur[i - 1] if i else a
                 continue
-            bw.put_bit(0)
-            if _J[run_index]:
-                bw.put_bits(run, _J[run_index])
+            bw.write(run, 1 + _J[run_index])  # a 0, then the run's J bits
             # run-interruption sample
             rb = prev[i]
             ritype = 1 if abs(runval - rb) <= p.near else 0
@@ -943,7 +865,7 @@ def _encode_scan_ilv1(p: "_Params", comps, vfac) -> bytes:
     import numpy as np
 
     nc = len(comps)
-    bw = _BitWriter()
+    bw = MSBWriter(stuffed=True)
     pix = [np.asarray(c_).astype(np.int64).tolist() for c_ in comps]
     prevs = [[0] * c_.shape[1] for c_ in comps]
     saved = [0] * nc
@@ -968,7 +890,7 @@ def _encode_scan_ilv1(p: "_Params", comps, vfac) -> bytes:
                 progressed = True
         if not progressed:
             break
-    return bw.flush()
+    return bw.bytes()
 
 
 def _encode_scan_ilv2(p: "_Params", comps) -> bytes:
@@ -978,7 +900,7 @@ def _encode_scan_ilv2(p: "_Params", comps) -> bytes:
 
     nc = len(comps)
     H, W = comps[0].shape
-    bw = _BitWriter()
+    bw = MSBWriter(stuffed=True)
     pix = [np.asarray(c_).astype(np.int64).tolist() for c_ in comps]
     prevs = [[0] * W for _ in range(nc)]
     saved = [0] * nc
@@ -992,7 +914,7 @@ def _encode_scan_ilv2(p: "_Params", comps) -> bytes:
             rc0s, run_index,
         )
         prevs = curs
-    return bw.flush()
+    return bw.bytes()
 
 
 def _encode_line_ilv2(p, bw, W, nc, prevs, curs, rows, rc0s,
@@ -1027,20 +949,18 @@ def _encode_line_ilv2(p, bw, W, nc, prevs, curs, rows, rc0s,
                 i += 1
             run = i - start
             while run >= (1 << _J[run_index]):
-                bw.put_bit(1)
+                bw.write(1, 1)
                 run -= 1 << _J[run_index]
                 if run_index < 31:
                     run_index += 1
             if i >= W:  # line end ended the run
                 if run > 0:
-                    bw.put_bit(1)
+                    bw.write(1, 1)
                 if i:
                     for ci in range(nc):
                         a[ci] = curs[ci][i - 1]
                 continue
-            bw.put_bit(0)
-            if _J[run_index]:
-                bw.put_bits(run, _J[run_index])
+            bw.write(run, 1 + _J[run_index])  # a 0, then the run's J bits
             # one interruption sample per component, RItype = 0
             for ci in range(nc):
                 rb = prevs[ci][i]

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from intake_spark.bitio import MSBReader
 from intake_spark.session import map_in_pandas
 
 IMAGE_META_SCHEMA = T.StructType(
@@ -1101,39 +1102,15 @@ def _jpeg_huff_table(bits: list[int], values: bytes) -> dict:
     return out
 
 
-class _JpegBits:
-    """MSB-first bit reader over a de-stuffed entropy interval."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.n = 0
-
-    def bit(self) -> int:
-        if self.n == 0:
-            if self.pos >= len(self.data):
-                return 0  # spec: pad with 1s/0s at segment end
-            self.acc = self.data[self.pos]
-            self.pos += 1
-            self.n = 8
-        self.n -= 1
-        return (self.acc >> self.n) & 1
-
-    def bits(self, k: int) -> int:
-        v = 0
-        for _ in range(k):
-            v = (v << 1) | self.bit()
-        return v
-
-    def huff(self, table: dict) -> int:
-        code = 0
-        for ln in range(1, 17):
-            code = (code << 1) | self.bit()
-            sym = table.get((ln, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid JPEG Huffman code")
+def _jpeg_huff(reader: MSBReader, table: dict) -> int:
+    """Next Huffman symbol of an entropy interval (code walked MSB-first)."""
+    code = 0
+    for ln in range(1, 17):
+        code = (code << 1) | reader.bit()
+        sym = table.get((ln, code))
+        if sym is not None:
+            return sym
+    raise ValueError("invalid JPEG Huffman code")
 
 
 def _jpeg_extend(v: int, t: int) -> int:
@@ -1283,7 +1260,7 @@ def decode_jpeg_lossless(content: bytes):
                     )
                     for cid in order
                 }
-                reader = _JpegBits(intervals[0])
+                reader = MSBReader(intervals[0], pad=True)
                 for my in range(mcuy):
                     for mx in range(mcux):
                         for si, cid in enumerate(order):
@@ -1294,12 +1271,12 @@ def decode_jpeg_lossless(content: bytes):
                                 y = my * fv + v
                                 for hh in range(fh):
                                     x = mx * fh + hh
-                                    t = reader.huff(tab)
+                                    t = _jpeg_huff(reader, tab)
                                     if t == 16:
                                         diff = 32768
                                     elif t:
                                         diff = _jpeg_extend(
-                                            reader.bits(t), t
+                                            reader.read(t), t
                                         )
                                     else:
                                         diff = 0
@@ -1330,7 +1307,7 @@ def decode_jpeg_lossless(content: bytes):
                     planes[plane_of[cid]][:] = pads[cid][:ch_, :cw_]
                 pos = next_pos
                 continue
-            reader = _JpegBits(intervals[0])
+            reader = MSBReader(intervals[0], pad=True)
             interval_idx = 0
             samples_done = 0
             use_default = True  # scan start / first sample after restart
@@ -1339,11 +1316,11 @@ def decode_jpeg_lossless(content: bytes):
                 for x in range(W):
                     for si, cid in enumerate(order):
                         pl = planes[plane_of[cid]]
-                        t = reader.huff(tables[si])
+                        t = _jpeg_huff(reader, tables[si])
                         if t == 16:
                             diff = 32768
                         elif t:
-                            diff = _jpeg_extend(reader.bits(t), t)
+                            diff = _jpeg_extend(reader.read(t), t)
                         else:
                             diff = 0
                         if use_default:
@@ -1376,7 +1353,7 @@ def decode_jpeg_lossless(content: bytes):
                     if restart_interval and samples_done % restart_interval == 0:
                         interval_idx += 1
                         if interval_idx < len(intervals):
-                            reader = _JpegBits(intervals[interval_idx])
+                            reader = MSBReader(intervals[interval_idx], pad=True)
                             use_default = True
             pos = next_pos
             continue
@@ -1621,7 +1598,7 @@ def decode_jpeg(content: bytes):
         preds = {cid: 0 for cid, _, _ in sc}
         eobrun = 0
         intervals = scan["intervals"]
-        reader = _JpegBits(intervals[0])
+        reader = MSBReader(intervals[0], pad=True)
         interval_idx = 0
         ri = scan["ri"]
         p1 = 1 << al
@@ -1630,7 +1607,7 @@ def decode_jpeg(content: bytes):
             if ri and u and u % ri == 0:
                 interval_idx += 1
                 if interval_idx < len(intervals):
-                    reader = _JpegBits(intervals[interval_idx])
+                    reader = MSBReader(intervals[interval_idx], pad=True)
                 preds = {cid: 0 for cid, _, _ in sc}
                 eobrun = 0
             if interleaved:
@@ -1650,12 +1627,12 @@ def decode_jpeg(content: bytes):
             for cid, tdc, tac, by, bx in blocks:
                 coef = coefs[cid][by, bx]
                 if not progressive:
-                    t = reader.huff(tdc)
-                    preds[cid] += _jpeg_extend(reader.bits(t), t) if t else 0
+                    t = _jpeg_huff(reader, tdc)
+                    preds[cid] += _jpeg_extend(reader.read(t), t) if t else 0
                     coef[0] = preds[cid]
                     k = 1
                     while k <= 63:
-                        rs = reader.huff(tac)
+                        rs = _jpeg_huff(reader, tac)
                         r, s = rs >> 4, rs & 0xF
                         if s == 0:
                             if r == 15:  # ZRL
@@ -1665,12 +1642,12 @@ def decode_jpeg(content: bytes):
                         k += r
                         if k > 63:
                             break
-                        coef[k] = _jpeg_extend(reader.bits(s), s)
+                        coef[k] = _jpeg_extend(reader.read(s), s)
                         k += 1
                 elif dc_scan:
                     if ah == 0:  # DC first (G.1.2.1): diff scaled by 2^Al
-                        t = reader.huff(tdc)
-                        preds[cid] += _jpeg_extend(reader.bits(t), t) if t else 0
+                        t = _jpeg_huff(reader, tdc)
+                        preds[cid] += _jpeg_extend(reader.read(t), t) if t else 0
                         coef[0] = preds[cid] << al
                     else:  # DC refinement (G.1.2.3): one bit per block
                         if reader.bit():
@@ -1681,7 +1658,7 @@ def decode_jpeg(content: bytes):
                         continue
                     k = ss
                     while k <= se:
-                        rs = reader.huff(tac)
+                        rs = _jpeg_huff(reader, tac)
                         r, s = rs >> 4, rs & 0xF
                         if s == 0:
                             if r == 15:
@@ -1689,25 +1666,25 @@ def decode_jpeg(content: bytes):
                                 continue
                             eobrun = (1 << r) - 1
                             if r:
-                                eobrun += reader.bits(r)
+                                eobrun += reader.read(r)
                             break
                         k += r
                         if k > se:
                             break
-                        coef[k] = _jpeg_extend(reader.bits(s), s) << al
+                        coef[k] = _jpeg_extend(reader.read(s), s) << al
                         k += 1
                 else:  # AC refinement (G.1.2.3): correction bits + new coeffs
                     k = ss
                     if eobrun == 0:
                         while k <= se:
-                            rs = reader.huff(tac)
+                            rs = _jpeg_huff(reader, tac)
                             r, s = rs >> 4, rs & 0xF
                             newval = 0
                             if s == 0:
                                 if r != 15:
                                     eobrun = 1 << r
                                     if r:
-                                        eobrun += reader.bits(r)
+                                        eobrun += reader.read(r)
                                     break
                                 # r == 15: advance over 16 zero-history coeffs
                             else:  # s is 1 by G.1.2.3: a newly nonzero coeff

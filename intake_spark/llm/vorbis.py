@@ -26,6 +26,8 @@ from __future__ import annotations
 
 import struct
 
+from intake_spark.bitio import LSBReader, LSBWriter
+
 # ---------------------------------------------------------------------------
 # OGG container (RFC 3533): page walk + CRC + packet assembly
 # ---------------------------------------------------------------------------
@@ -151,55 +153,6 @@ def ogg_pages(packets, serial: int = 1, granules=None) -> bytes:
     return bytes(out)
 
 
-# ---------------------------------------------------------------------------
-# Bit packing (Vorbis I 2.1: LSB-first within bytes)
-# ---------------------------------------------------------------------------
-
-
-class _BitReader:
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.bit = 0
-
-    def read(self, n: int) -> int:
-        v = 0
-        got = 0
-        while got < n:
-            if self.pos >= len(self.data):
-                raise ValueError("Vorbis packet truncated")
-            avail = 8 - self.bit
-            take = min(avail, n - got)
-            bits = (self.data[self.pos] >> self.bit) & ((1 << take) - 1)
-            v |= bits << got
-            got += take
-            self.bit += take
-            if self.bit == 8:
-                self.bit = 0
-                self.pos += 1
-        return v
-
-    def flag(self) -> bool:
-        return bool(self.read(1))
-
-
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.bit = 0
-
-    def write(self, v: int, n: int):
-        for i in range(n):
-            if self.bit == 0:
-                self.out.append(0)
-            if (v >> i) & 1:
-                self.out[-1] |= 1 << self.bit
-            self.bit = (self.bit + 1) % 8
-
-    def bytes(self) -> bytes:
-        return bytes(self.out)
-
-
 def _ilog(x: int) -> int:
     """Vorbis ilog: bits needed for x (ilog(0)=0, ilog(7)=3)."""
     return max(x, 0).bit_length()
@@ -279,13 +232,13 @@ def _assign_codewords(lengths):
 
 
 class _Codebook:
-    def __init__(self, br: _BitReader):
+    def __init__(self, br: LSBReader):
         if br.read(24) != 0x564342:
             raise ValueError("Vorbis codebook sync lost")
         self.dims = br.read(16)
         self.entries = br.read(24)
         lengths = [0] * self.entries
-        if br.flag():  # ordered
+        if br.read(1):  # ordered
             cur_len = br.read(5) + 1
             cur = 0
             while cur < self.entries:
@@ -297,10 +250,10 @@ class _Codebook:
                 cur += num
                 cur_len += 1
         else:
-            sparse = br.flag()
+            sparse = br.read(1)
             for k in range(self.entries):
                 if sparse:
-                    lengths[k] = br.read(5) + 1 if br.flag() else 0
+                    lengths[k] = br.read(5) + 1 if br.read(1) else 0
                 else:
                     lengths[k] = br.read(5) + 1
         self.lengths = lengths
@@ -318,7 +271,7 @@ class _Codebook:
             self.minimum = _float32_unpack(br.read(32))
             self.delta = _float32_unpack(br.read(32))
             vbits = br.read(4) + 1
-            self.seq_p = br.flag()
+            self.seq_p = br.read(1)
             lv = (_lookup1_values(self.entries, self.dims)
                   if self.lookup == 1 else self.entries * self.dims)
             self.mults = [br.read(vbits) for k in range(lv)]
@@ -326,7 +279,7 @@ class _Codebook:
         elif self.lookup != 0:
             raise ValueError(f"Vorbis codebook lookup type {self.lookup}")
 
-    def decode_scalar(self, br: _BitReader) -> int:
+    def decode_scalar(self, br: LSBReader) -> int:
         code = 0
         ln = 0
         while ln <= self._maxlen:
@@ -337,7 +290,7 @@ class _Codebook:
                 return e
         raise ValueError("Vorbis codeword not found (corrupt packet)")
 
-    def decode_vector(self, br: _BitReader):
+    def decode_vector(self, br: LSBReader):
         e = self.decode_scalar(br)
         if self.lookup == 0:
             raise ValueError("VQ decode from a scalar-only codebook")
@@ -360,7 +313,7 @@ class _Codebook:
                     last = out[d]
         return out
 
-    def encode_scalar(self, bw: _BitWriter, e: int):
+    def encode_scalar(self, bw: LSBWriter, e: int):
         code, ln = self._by_entry[e]
         for i in range(ln - 1, -1, -1):
             bw.write((code >> i) & 1, 1)
@@ -413,7 +366,7 @@ class _Floor0:
     cumulative VQ vectors; the curve is the LSP magnitude response
     sampled on a Bark-warped map of the half-spectrum."""
 
-    def __init__(self, br: _BitReader):
+    def __init__(self, br: LSBReader):
         self.order = br.read(8)
         self.rate = br.read(16)
         self.bark_map_size = br.read(16)
@@ -442,7 +395,7 @@ class _Floor0:
             self._maps[n2] = m
         return m
 
-    def decode(self, br: _BitReader, books, n2: int):
+    def decode(self, br: LSBReader, books, n2: int):
         """→ amplitude curve (length n2) or None (unused channel)."""
         import numpy as np
 
@@ -490,7 +443,7 @@ class _Floor0:
 
 
 class _Floor1:
-    def __init__(self, br: _BitReader):
+    def __init__(self, br: LSBReader):
         self.partitions = br.read(5)
         self.class_list = [br.read(4) for _ in range(self.partitions)]
         maxc = max(self.class_list, default=-1)
@@ -517,9 +470,9 @@ class _Floor1:
         self.xs = xs
         self.rangebits = rangebits
 
-    def decode(self, br: _BitReader, books, n2: int):
+    def decode(self, br: LSBReader, books, n2: int):
         """→ amplitude curve (length n2) or None (unused channel)."""
-        if not br.flag():
+        if not br.read(1):
             return None
         rng = _FLOOR1_RANGES[self.multiplier - 1]
         ybits = _ilog(rng - 1)
@@ -599,7 +552,7 @@ class _Floor1:
 
 
 class _Residue:
-    def __init__(self, rtype: int, br: _BitReader):
+    def __init__(self, rtype: int, br: LSBReader):
         self.rtype = rtype
         self.begin = br.read(24)
         self.end = br.read(24)
@@ -609,7 +562,7 @@ class _Residue:
         cascades = []
         for _c in range(self.nclass):
             low = br.read(3)
-            high = br.read(5) if br.flag() else 0
+            high = br.read(5) if br.read(1) else 0
             cascades.append((high << 3) | low)
         self.cascades = cascades
         self.books = []
@@ -619,7 +572,7 @@ class _Residue:
                 row.append(br.read(8) if (cascades[c] >> p) & 1 else -1)
             self.books.append(row)
 
-    def decode(self, br: _BitReader, books, nvec: int, vecsize: int,
+    def decode(self, br: LSBReader, books, nvec: int, vecsize: int,
                do_not: list):
         """→ list of nvec float lists (length vecsize)."""
         import numpy as np
@@ -742,7 +695,7 @@ def mdct(x, n: int):
 
 class VorbisSetup:
     def __init__(self, id_packet: bytes, setup_packet: bytes):
-        br = _BitReader(id_packet)
+        br = LSBReader(id_packet, codec="Vorbis")
         if br.read(8) != 1 or bytes(
             br.read(8) for _ in range(6)
         ) != b"vorbis":
@@ -755,12 +708,12 @@ class VorbisSetup:
         bs = br.read(8)
         self.bs0 = 1 << (bs & 0xF)
         self.bs1 = 1 << (bs >> 4)
-        if not br.flag():
+        if not br.read(1):
             raise ValueError("Vorbis id framing bit unset")
         if self.channels == 0 or self.rate == 0:
             raise ValueError("Vorbis id header: zero channels or rate")
 
-        br = _BitReader(setup_packet)
+        br = LSBReader(setup_packet, codec="Vorbis")
         if br.read(8) != 5 or bytes(
             br.read(8) for _ in range(6)
         ) != b"vorbis":
@@ -788,9 +741,9 @@ class VorbisSetup:
         for _ in range(br.read(6) + 1):
             if br.read(16) != 0:
                 raise ValueError("Vorbis mapping type != 0")
-            submaps = br.read(4) + 1 if br.flag() else 1
+            submaps = br.read(4) + 1 if br.read(1) else 1
             coupling = []
-            if br.flag():
+            if br.read(1):
                 steps = br.read(8) + 1
                 cb = _ilog(self.channels - 1)
                 coupling = [(br.read(cb), br.read(cb)) for _ in range(steps)]
@@ -808,12 +761,12 @@ class VorbisSetup:
             )
         self.modes = []
         for _ in range(br.read(6) + 1):
-            blockflag = br.flag()
+            blockflag = br.read(1)
             if br.read(16) != 0 or br.read(16) != 0:
                 raise ValueError("Vorbis mode window/transform type != 0")
             self.modes.append({"blockflag": blockflag,
                                "mapping": br.read(8)})
-        if not br.flag():
+        if not br.read(1):
             raise ValueError("Vorbis setup framing bit unset")
 
         # cross-reference validation: a corrupt stream must fail with a
@@ -866,15 +819,15 @@ def _decode_audio_packet(setup: VorbisSetup, packet: bytes):
     """→ (windowed time-domain block ndarray (n, ch), n, left_n)."""
     import numpy as np
 
-    br = _BitReader(packet)
+    br = LSBReader(packet, codec="Vorbis")
     if br.read(1) != 0:
         raise ValueError("header packet where audio packet expected")
     mode = setup.modes[br.read(_ilog(len(setup.modes) - 1))]
     n = setup.bs1 if mode["blockflag"] else setup.bs0
     prev_short = next_short = False
     if mode["blockflag"]:
-        prev_short = not br.flag()
-        next_short = not br.flag()
+        prev_short = not br.read(1)
+        next_short = not br.read(1)
     mapping = setup.mappings[mode["mapping"]]
     ch = setup.channels
     n2 = n // 2
@@ -992,7 +945,7 @@ def decode_vorbis(content: bytes):
 # ---------------------------------------------------------------------------
 
 
-def _write_codebook(bw: _BitWriter, dims, lengths, lookup=0,
+def _write_codebook(bw: LSBWriter, dims, lengths, lookup=0,
                     minimum=0.0, delta=0.0, vbits=0, mults=()):
     bw.write(0x564342, 24)
     bw.write(dims, 16)
@@ -1020,7 +973,7 @@ def _build_headers(rate: int, channels: int, bs0: int, bs1: int,
     Huffman tree). One floor-1 (flat-capable), one type-2 residue
     (psize 8, class 1 coded in pass 0), one uncoupled mapping, a short
     mode and (when bs1 > bs0) a long mode."""
-    bw = _BitWriter()
+    bw = LSBWriter()
     bw.write(1, 8)
     for b in b"vorbis":
         bw.write(b, 8)
@@ -1033,7 +986,7 @@ def _build_headers(rate: int, channels: int, bs0: int, bs1: int,
     bw.write(1, 1)
     id_pk = bw.bytes()
 
-    bw = _BitWriter()
+    bw = LSBWriter()
     bw.write(3, 8)
     for b in b"vorbis":
         bw.write(b, 8)
@@ -1042,7 +995,7 @@ def _build_headers(rate: int, channels: int, bs0: int, bs1: int,
     bw.write(1, 1)
     comment_pk = bw.bytes()
 
-    bw = _BitWriter()
+    bw = LSBWriter()
     bw.write(5, 8)
     for b in b"vorbis":
         bw.write(b, 8)
@@ -1205,7 +1158,7 @@ def encode_vorbis(samples, rate: int, blocksizes=(256, 2048),
         if n == bs0:
             left_n = right_n = n // 2
         w = vorbis_window(n, left_n, right_n)
-        bw = _BitWriter()
+        bw = LSBWriter()
         bw.write(0, 1)  # audio packet
         bw.write(0 if n == bs0 else 1, mode_bits)
         if n != bs0:

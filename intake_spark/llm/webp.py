@@ -18,6 +18,8 @@ import struct
 
 import numpy as np
 
+from intake_spark.bitio import LSBReader, LSBWriter
+
 __all__ = ["decode_webp", "decode_vp8l"]
 
 # code-length-code read order (RFC 9649 §3.7.1.2)
@@ -45,22 +47,6 @@ _DIST_MAP = [
 ]
 
 
-class _Bits:
-    """LSB-first bit reader over a bytes buffer."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-
-    def read(self, n: int) -> int:
-        v = 0
-        for i in range(n):
-            byte = self.data[(self.pos + i) >> 3]
-            v |= ((byte >> ((self.pos + i) & 7)) & 1) << i
-        self.pos += n
-        return v
-
-
 class _Huff:
     """Canonical prefix code: decode walks MSB-first, one bit per level."""
 
@@ -80,7 +66,7 @@ class _Huff:
                 code += 1
             code <<= 1
 
-    def decode(self, br: _Bits) -> int:
+    def decode(self, br: LSBReader) -> int:
         if self.single is not None:
             return self.single
         code = 0
@@ -92,7 +78,7 @@ class _Huff:
         raise ValueError("invalid VP8L prefix code")
 
 
-def _read_prefix_code(br: _Bits, alphabet_size: int) -> _Huff:
+def _read_prefix_code(br: LSBReader, alphabet_size: int) -> _Huff:
     if br.read(1):  # simple code: one or two symbols
         num_symbols = br.read(1) + 1
         first = br.read(8) if br.read(1) else br.read(1)
@@ -138,7 +124,7 @@ def _read_prefix_code(br: _Bits, alphabet_size: int) -> _Huff:
     return _Huff(lengths)
 
 
-def _prefix_value(br: _Bits, s: int) -> int:
+def _prefix_value(br: LSBReader, s: int) -> int:
     """LZ77 length/distance prefix decode (RFC 9649 §3.6.2.2)."""
     if s < 4:
         return s + 1
@@ -147,7 +133,7 @@ def _prefix_value(br: _Bits, s: int) -> int:
     return offset + br.read(extra) + 1
 
 
-def _decode_pixels(br: _Bits, w: int, h: int, allow_meta: bool) -> np.ndarray:
+def _decode_pixels(br: LSBReader, w: int, h: int, allow_meta: bool) -> np.ndarray:
     """Entropy-coded ARGB image → uint32 array (h, w). Used for the main
     image (allow_meta=True) and recursively for transform/entropy/palette
     sub-images (allow_meta=False). Every entropy-coded image carries its
@@ -280,8 +266,7 @@ def decode_vp8l(data: bytes) -> np.ndarray:
     """VP8L chunk payload → (H, W, 4) RGBA uint8."""
     if not data or data[0] != 0x2F:
         raise ValueError("not a VP8L stream (signature 0x2f missing)")
-    br = _Bits(data)
-    br.pos = 8
+    br = LSBReader(data, 1, codec="VP8L")
     w = br.read(14) + 1
     h = br.read(14) + 1
     br.read(1)  # alpha-used hint
@@ -424,20 +409,6 @@ def decode_webp(content: bytes) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-class _LSBWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.bit = 0
-
-    def write(self, v: int, n: int):
-        for i in range(n):
-            if self.bit == 0:
-                self.out.append(0)
-            if (v >> i) & 1:
-                self.out[-1] |= 1 << self.bit
-            self.bit = (self.bit + 1) % 8
-
-
 def _huff_lengths(hist: dict[int, int], cap: int) -> dict[int, int]:
     """Huffman code lengths for a histogram, depth-capped at ``cap``
     (falls back to balanced lengths if the optimal tree is too deep)."""
@@ -479,7 +450,7 @@ def _canonical_codes(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
     return codes
 
 
-def _write_code_lengths(bw: _LSBWriter, lengths: dict[int, int],
+def _write_code_lengths(bw: LSBWriter, lengths: dict[int, int],
                         alphabet_size: int) -> dict:
     """Serialize one prefix code (RFC 9649 §3.5): simple two-symbol form
     when possible, else code-length-coded lengths with 16/17/18 repeats.
@@ -580,7 +551,7 @@ def encode_webp(img) -> bytes:
     a = (img[:, :, 3] if img.shape[2] == 4
          else np.full(h * w, 255, dtype=np.uint8)).ravel()
 
-    bw = _LSBWriter()
+    bw = LSBWriter()
     bw.write(0x2F, 8)
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)
@@ -607,9 +578,9 @@ def encode_webp(img) -> bytes:
             for k in range(ln - 1, -1, -1):
                 bw.write((c >> k) & 1, 1)
 
-    payload = bytes(bw.out)
+    payload = bw.bytes()
+    chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
     if len(payload) & 1:
-        payload += b"\x00"
-    chunk = b"VP8L" + struct.pack("<I", len(bw.out)) + payload
+        chunk += b"\x00"
     riff = b"WEBP" + chunk
     return b"RIFF" + struct.pack("<I", len(riff)) + riff

@@ -984,6 +984,9 @@ def test_xtc_decode_smallidx_transitions():
     assert out[1] == list(A1)
     assert out[2] == [504, 500, 495]       # small2 (swapped first)
     assert out[3] == list(A2)
+    # a 2-byte body: a named error from the bit reader's end check
+    with pytest.raises(ValueError, match="XTC bitstream truncated"):
+        _xtc_decode_coords(w.tobytes()[:2], 4, minint, maxint, 9)
 
 
 def test_osm_pbf_ways_and_relations(spark, tmp_path):

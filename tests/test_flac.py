@@ -182,6 +182,14 @@ def test_streaminfo_and_verbatim_roundtrip():
     rate, arr, bits = decode_flac(data)
     assert rate == 44100 and bits == 16
     assert arr[:, 0].tolist() == x
+    # cut inside STREAMINFO, the frame header and the samples: a named
+    # error from the bit reader's end check, not an IndexError
+    for cut in (20, 45, len(data) - 3):
+        with pytest.raises(ValueError, match="FLAC bitstream truncated"):
+            decode_flac(data[:cut])
+    # cut where the frames start: STREAMINFO's sample count is not met
+    with pytest.raises(ValueError, match="FLAC stream truncated: 0 of 8"):
+        decode_flac(data[: info["frames_pos"]])
 
 
 def test_constant_and_fixed_subframes():

@@ -318,8 +318,6 @@ def test_jpeg2000_second_review_findings():
 
     # rebuild the tile body in CPRL (component-major) packet order and
     # flip the COD progression byte: pixels must still be bit-exact
-    from intake_spark.llm.jpeg2000 import _HdrBitReader
-
     # reparse packet boundaries by decoding once with the library
     # (packets are self-delimiting) — easiest: re-encode per component
     comps = [rgb[:, :, i] for i in range(3)]
@@ -379,7 +377,6 @@ def test_jpeg2000_cprl_component_major_stream(monkeypatch):
 
     # capture per-packet bytes by instrumenting the header writer flush
     packets = []
-    real_flush = j2k._HdrBitWriter.flush
 
     blob = encode_jpeg2000(img, levels=1)
     # locate tile body and re-split into packets by decoding lengths:
@@ -409,8 +406,9 @@ def _packet_spans(tile, shape, levels, nc):
     """Packet byte spans via a tracking parse (test helper): reuse the
     decoder on progressively truncated input is fragile, so parse the
     headers directly with the library primitives."""
+    from intake_spark.bitio import MSBReader
     from intake_spark.llm.jpeg2000 import (
-        TagTree, _HdrBitReader, _band_cblocks, _get_numpasses,
+        TagTree, _band_cblocks, _get_numpasses,
     )
 
     H, W = shape[0], shape[1]
@@ -434,7 +432,7 @@ def _packet_spans(tile, shape, levels, nc):
     for r, sbs in enumerate(res_geo):
         for _c in range(nc):
             start = pos
-            br = _HdrBitReader(tile, pos)
+            br = MSBReader(tile, pos, stuffed=True, codec="JPEG 2000")
             assert br.bit()
             metas = []
             for orient, (bh_, bw_) in sbs:
@@ -453,7 +451,7 @@ def _packet_spans(tile, shape, levels, nc):
                         lblock = 3
                         while br.bit():
                             lblock += 1
-                        metas.append(br.bits(lblock + (npass.bit_length() - 1)))
+                        metas.append(br.read(lblock + (npass.bit_length() - 1)))
             pos = br.align() + sum(metas)
             spans.append((start, pos))
     return spans

@@ -10,11 +10,11 @@ encoder across block schedules, channel counts and residue types."""
 import numpy as np
 import pytest
 
+from intake_spark.bitio import LSBReader as _BitReader
+from intake_spark.bitio import LSBWriter as _BitWriter
 from intake_spark.llm.vorbis import (
     FLOOR1_INVERSE_DB,
     _assign_codewords,
-    _BitReader,
-    _BitWriter,
     _render_line,
     _render_point,
     decode_vorbis,
@@ -253,7 +253,7 @@ def test_floor0_lsp_curve():
     """Floor type 0 (LSP): header parse, cumulative VQ coefficient
     decode, Bark map, and the §6.2.3 p/q curve — checked against an
     independent recomputation, for even and odd orders."""
-    from intake_spark.llm.vorbis import _BitReader, _BitWriter, _Codebook, _Floor0
+    from intake_spark.llm.vorbis import _Codebook, _Floor0
 
     for order in (4, 5):
         # codebook: dims 2, 4 entries, values minimum + delta * mult
@@ -335,7 +335,7 @@ def test_floor0_setup_validation():
     """A floor0 whose books lack value mappings (or point past the book
     list) fails at setup with a named error."""
     from intake_spark.llm.vorbis import (
-        VorbisSetup, _BitWriter, _build_headers, _write_codebook,
+        VorbisSetup, _build_headers, _write_codebook,
     )
 
     id_pk, _cm, _setup = _build_headers(8000, 1, 256, 256)
@@ -505,8 +505,6 @@ def test_setup_rejects_bad_coupling_and_mux():
     # corrupt the coupling angle channel: with 2 channels the field is
     # 1 bit; flip the magnitude bit so mag == ang
     # (craft via the writer for robustness)
-    from intake_spark.llm.vorbis import _BitReader
-
     # brute-force: flip single bits until the named error fires —
     # proves the validation exists without bit-offset bookkeeping
     hit = False

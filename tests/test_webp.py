@@ -388,6 +388,12 @@ def test_encode_webp_roundtrip():
                 [exp, np.full(exp.shape[:2] + (1,), 255, np.uint8)], axis=-1
             )
         np.testing.assert_array_equal(out, exp)
+    # cut inside the header, the prefix codes and the pixels: a named
+    # error from the bit reader's end check, not an IndexError
+    blob = encode_webp(img)
+    for cut in (23, 40, len(blob) - 5):
+        with pytest.raises(ValueError, match="VP8L bitstream truncated"):
+            decode_webp(blob[:cut])
     flat = np.full((64, 64, 3), 9, dtype=np.uint8)
     assert len(encode_webp(flat)) < 100  # simple codes: ~0 bits/px
     skew = (rng.integers(0, 8, (64, 64, 3)) ** 2 * 4).astype(np.uint8)
