@@ -1,18 +1,25 @@
 """In-process loopback protocol servers (fixture-grade, deterministic):
-RESP2, MongoDB OP_MSG, and MQTT 3.1.1 over real 127.0.0.1 sockets.
+Redis RESP2, MongoDB OP_MSG, MQTT 3.1.1, Kafka, PostgreSQL v3 and MySQL
+over real 127.0.0.1 sockets.
 
 These play the same role for the SERVICE connectors that
 ``sci.encode_grib2_complex`` / ``sci.dicom_bytes`` play for the format
 readers: a conformant counterpart written in this repo so the REAL
 client/reader network paths (intake_spark/wire.py, services.py) can be
-driven end-to-end by registered queries (q142) and by the test suite —
-actual protocol bytes over a socket, not injected mocks. Each server
-handles ONE connection then exits (the readers open exactly one);
-every server records the commands it saw so tests can assert on the
-wire conversation.
+driven end-to-end by registered queries (q142-q145) and by the test
+suite — actual protocol bytes over a socket, not injected mocks. Every
+server records the commands it saw so tests can assert on the wire
+conversation.
 
-NOT a production server of any kind: single-connection, in-memory,
-no auth — a prover/fixture, loudly so.
+One accept loop, :class:`_Listener`, serves them all: each connection
+gets its own thread and a ``wire.Stream``, the same byte stream the
+clients read through. The Redis, Mongo and MQTT servers accept ONE
+connection (their readers open exactly one); Kafka, Postgres and MySQL
+accept up to ``max_conns`` (one per executor task), Kafka without limit
+when ``max_conns=None``.
+
+NOT a production server of any kind: in-memory, fixture auth only — a
+prover/fixture, loudly so.
 """
 
 from __future__ import annotations
@@ -21,68 +28,98 @@ import fnmatch
 import socket
 import struct
 import threading
+import weakref
 
 from intake_spark.compress import uvarint
-from intake_spark.wire import BsonInt64, bson_decode, bson_encode
+from intake_spark.wire import (
+    BsonInt64,
+    Stream,
+    bson_decode,
+    bson_encode,
+    mysql_packet,
+    pg_message,
+    read_mqtt_packet,
+    read_mysql_packet,
+    read_pg_message,
+)
 
 
-class _LoopbackBase:
-    def __init__(self):
+class _Listener:
+    """The one accept loop: binds 127.0.0.1:0 and serves each connection
+    on its own thread through ``_serve_conn(stream)``. A peer that hangs
+    up mid-conversation (``ConnectionError``/``OSError``) ends that
+    conversation quietly. The listening socket closes once ``max_conns``
+    connections are accepted, so repeated runs of a query never
+    accumulate live listeners; ``None`` serves until ``close()``."""
+
+    proto = "loopback"
+
+    def __init__(self, max_conns: "int | None"):
         self._srv = socket.socket()
         self._srv.bind(("127.0.0.1", 0))
-        self._srv.listen(1)
+        self._srv.listen(max_conns or 128)
         self.port = self._srv.getsockname()[1]
-        self._thread = threading.Thread(target=self._run, daemon=True)
-        self._thread.start()
-
-    def _run(self):
-        # single-connection by contract: close the listener as soon as
-        # the one client connects, so repeated instantiations (bench
-        # runs q142 many times per session) never accumulate live
-        # listening sockets
-        try:
-            self._serve()
-        finally:
-            self._srv.close()
-
-    def _serve(self):  # pragma: no cover - overridden
-        raise NotImplementedError
+        threading.Thread(target=self._accept_loop, args=(max_conns,),
+                         daemon=True).start()
 
     def close(self) -> None:
         """Stop accepting (live connections finish on their own)."""
+        try:
+            self._srv.shutdown(socket.SHUT_RDWR)  # wakes a blocked accept()
+        except OSError:
+            pass  # the budget is spent: already closed
         self._srv.close()
 
+    def _accept_loop(self, budget: "int | None"):
+        try:
+            while budget is None or budget > 0:
+                try:
+                    conn, _ = self._srv.accept()
+                except OSError:
+                    return
+                if budget is not None:
+                    budget -= 1
+                threading.Thread(target=self._serve, args=(conn,),
+                                 daemon=True).start()
+        finally:
+            self._srv.close()
 
-class LoopbackRedis(_LoopbackBase):
+    def _serve(self, conn: socket.socket):
+        stream = Stream(conn, self.proto)
+        try:
+            self._serve_conn(stream)
+        except (ConnectionError, OSError):
+            pass
+        finally:
+            stream.close()
+
+    def _serve_conn(self, stream: Stream):  # pragma: no cover - overridden
+        raise NotImplementedError
+
+
+class LoopbackRedis(_Listener):
     """RESP2 server: SELECT/SCAN/GET/TYPE. SCAN pages with a nonzero
     intermediate cursor so a client's cursor walk is really exercised."""
+
+    proto = "RESP"
 
     def __init__(self, data: "dict[bytes, bytes]"):
         self.data = data
         self.commands: list = []
-        super().__init__()
+        super().__init__(max_conns=1)
 
-    def _serve(self):
-        conn, _ = self._srv.accept()
-        f = conn.makefile("rwb")
-        try:
-            while True:
-                line = f.readline()
-                if not line:
-                    break
-                if line[:1] != b"*":
-                    f.write(b"-ERR protocol\r\n")
-                    f.flush()
-                    break
-                args = []
-                for _ in range(int(line[1:-2])):
-                    n = int(f.readline()[1:-2])
-                    args.append(f.read(n + 2)[:-2])
-                self.commands.append(args)
-                f.write(self._dispatch(args))
-                f.flush()
-        finally:
-            conn.close()
+    def _serve_conn(self, stream: Stream):
+        while True:
+            line = stream.readline()
+            if line[:1] != b"*":
+                stream.send(b"-ERR protocol\r\n")
+                return
+            args = []
+            for _ in range(int(line[1:-2])):
+                n = int(stream.readline()[1:-2])
+                args.append(stream.read(n + 2)[:-2])
+            self.commands.append(args)
+            stream.send(self._dispatch(args))
 
     def _dispatch(self, args: "list[bytes]") -> bytes:
         cmd = args[0].upper()
@@ -110,157 +147,129 @@ class LoopbackRedis(_LoopbackBase):
         return b"-ERR unknown command '%s'\r\n" % args[0]
 
 
-class LoopbackMongo(_LoopbackBase):
+class LoopbackMongo(_Listener):
     """OP_MSG server: find returns a first batch and a live (>int32)
     cursor when more documents remain; getMore validates the cursor id
     arrived as int64 and returns the rest."""
 
     CURSOR_ID = 7_777_777_777
+    proto = "OP_MSG"
 
     def __init__(self, docs: "list[dict]", batch: int = 2):
         self.docs = docs
         self.batch = batch
         self.commands: list = []
         self._served = 0
-        super().__init__()
+        super().__init__(max_conns=1)
 
-    def _reply(self, conn, req_id: int, body: dict):
+    def _reply(self, stream: Stream, req_id: int, body: dict):
         payload = struct.pack("<I", 0) + b"\x00" + bson_encode(body)
-        conn.sendall(
+        stream.send(
             struct.pack("<iiii", 16 + len(payload), 1, req_id, 2013)
             + payload
         )
 
-    def _serve(self):
-        conn, _ = self._srv.accept()
-        try:
-            while True:
-                hdr = conn.recv(4)
-                if len(hdr) < 4:
-                    break
-                (n,) = struct.unpack("<i", hdr)
-                rest = b""
-                while len(rest) < n - 4:
-                    rest += conn.recv(n - 4 - len(rest))
-                req_id, _, opcode = struct.unpack_from("<iii", rest, 0)
-                if opcode != 2013 or rest[16] != 0:
-                    break
-                cmd, _ = bson_decode(rest, 17)
-                self.commands.append(cmd)
-                ns = f"{cmd.get('$db')}.{cmd.get('find', cmd.get('collection'))}"
-                if "find" in cmd:
-                    docs = self.docs
-                    flt = cmd.get("filter")
-                    if flt:
-                        docs = [
-                            d for d in docs
-                            if all(d.get(k) == v for k, v in flt.items())
-                        ]
-                    self._filtered = docs
-                    self._served = min(self.batch, len(docs))
-                    cid = (0 if self._served == len(docs)
-                           else self.CURSOR_ID)
-                    self._reply(conn, req_id, {
-                        "cursor": {"firstBatch": docs[: self._served],
-                                   "id": BsonInt64(cid), "ns": ns},
-                        "ok": 1.0,
-                    })
-                elif "getMore" in cmd:
-                    if not isinstance(cmd["getMore"], BsonInt64) or (
-                        int(cmd["getMore"]) != self.CURSOR_ID
-                    ):
-                        self._reply(conn, req_id,
-                                    {"ok": 0.0, "errmsg": "cursor id"})
-                        continue
-                    nxt = self._filtered[self._served :]
-                    self._served = len(self._filtered)
-                    self._reply(conn, req_id, {
-                        "cursor": {"nextBatch": nxt,
-                                   "id": BsonInt64(0), "ns": ns},
-                        "ok": 1.0,
-                    })
-                else:
-                    self._reply(conn, req_id, {"ok": 0.0, "errmsg": "bad"})
-        finally:
-            conn.close()
+    def _serve_conn(self, stream: Stream):
+        while True:
+            (n,) = struct.unpack("<i", stream.read(4))
+            rest = stream.read(n - 4)
+            req_id, _, opcode = struct.unpack_from("<iii", rest, 0)
+            if opcode != 2013 or rest[16] != 0:
+                return
+            cmd, _ = bson_decode(rest, 17)
+            self.commands.append(cmd)
+            ns = f"{cmd.get('$db')}.{cmd.get('find', cmd.get('collection'))}"
+            if "find" in cmd:
+                docs = self.docs
+                flt = cmd.get("filter")
+                if flt:
+                    docs = [
+                        d for d in docs
+                        if all(d.get(k) == v for k, v in flt.items())
+                    ]
+                self._filtered = docs
+                self._served = min(self.batch, len(docs))
+                cid = (0 if self._served == len(docs)
+                       else self.CURSOR_ID)
+                self._reply(stream, req_id, {
+                    "cursor": {"firstBatch": docs[: self._served],
+                               "id": BsonInt64(cid), "ns": ns},
+                    "ok": 1.0,
+                })
+            elif "getMore" in cmd:
+                if not isinstance(cmd["getMore"], BsonInt64) or (
+                    int(cmd["getMore"]) != self.CURSOR_ID
+                ):
+                    self._reply(stream, req_id,
+                                {"ok": 0.0, "errmsg": "cursor id"})
+                    continue
+                nxt = self._filtered[self._served :]
+                self._served = len(self._filtered)
+                self._reply(stream, req_id, {
+                    "cursor": {"nextBatch": nxt,
+                               "id": BsonInt64(0), "ns": ns},
+                    "ok": 1.0,
+                })
+            else:
+                self._reply(stream, req_id, {"ok": 0.0, "errmsg": "bad"})
 
 
-class LoopbackMqtt(_LoopbackBase):
+class LoopbackMqtt(_Listener):
     """MQTT 3.1.1 broker: validates CONNECT (protocol name/level),
     CONNACKs, SUBACKs the subscription, then pushes the configured
     (topic, payload) messages — index-1 at QoS 1, whose PUBACK is
     recorded in ``events``."""
 
+    proto = "MQTT"
+
     def __init__(self, messages: "list[tuple[str, bytes]]"):
         self.messages = messages
         self.events: list = []
-        super().__init__()
+        super().__init__(max_conns=1)
 
-    def _read_packet(self, conn):
-        h = conn.recv(1)
-        if not h:
-            return None, b""
-        length, shift = 0, 0
-        while True:
-            b = conn.recv(1)[0]
-            length |= (b & 0x7F) << shift
-            if not b & 0x80:
-                break
-            shift += 7
-        body = b""
-        while len(body) < length:
-            body += conn.recv(length - len(body))
-        return h[0], body
-
-    def _serve(self):
-        conn, _ = self._srv.accept()
-        try:
-            ptype, body = self._read_packet(conn)
-            if ptype != 0x10 or body[:6] != b"\x00\x04MQTT" or body[6] != 4:
-                return
-            self.events.append(("connect", body[6]))
-            conn.sendall(b"\x20\x02\x00\x00")
-            ptype, body = self._read_packet(conn)
-            if ptype != 0x82:
-                return
-            pid = struct.unpack(">H", body[:2])[0]
-            (tlen,) = struct.unpack(">H", body[2:4])
-            self.events.append(("subscribe", body[4 : 4 + tlen].decode()))
-            conn.sendall(b"\x90\x03" + struct.pack(">H", pid) + b"\x00")
-            for i, (t, payload) in enumerate(self.messages):
-                qos = 1 if i == 1 else 0
-                tb = t.encode()
-                var = struct.pack(">H", len(tb)) + tb
-                if qos:
-                    var += struct.pack(">H", 42)
-                var += payload
-                conn.sendall(bytes([0x30 | (qos << 1)])
-                             + uvarint(len(var)) + var)
-                if qos:
-                    ptype, ack = self._read_packet(conn)
-                    if ptype == 0x40 and ack == struct.pack(">H", 42):
-                        self.events.append(("puback", 42))
-            ptype, _ = self._read_packet(conn)  # hold for DISCONNECT
-            if ptype == 0xE0:
-                self.events.append(("disconnect",))
-        except OSError:
-            pass
-        finally:
-            conn.close()
+    def _serve_conn(self, stream: Stream):
+        ptype, body = read_mqtt_packet(stream)
+        if ptype != 0x10 or body[:6] != b"\x00\x04MQTT" or body[6:7] != b"\x04":
+            return
+        self.events.append(("connect", body[6]))
+        stream.send(b"\x20\x02\x00\x00")
+        ptype, body = read_mqtt_packet(stream)
+        if ptype != 0x82:
+            return
+        pid = struct.unpack(">H", body[:2])[0]
+        (tlen,) = struct.unpack(">H", body[2:4])
+        self.events.append(("subscribe", body[4 : 4 + tlen].decode()))
+        stream.send(b"\x90\x03" + struct.pack(">H", pid) + b"\x00")
+        for i, (t, payload) in enumerate(self.messages):
+            qos = 1 if i == 1 else 0
+            tb = t.encode()
+            var = struct.pack(">H", len(tb)) + tb
+            if qos:
+                var += struct.pack(">H", 42)
+            var += payload
+            stream.send(bytes([0x30 | (qos << 1)]) + uvarint(len(var)) + var)
+            if qos:
+                ptype, ack = read_mqtt_packet(stream)
+                if ptype == 0x40 and ack == struct.pack(">H", 42):
+                    self.events.append(("puback", 42))
+        ptype, _ = read_mqtt_packet(stream)  # hold for DISCONNECT
+        if ptype == 0xE0:
+            self.events.append(("disconnect",))
 
 
-class LoopbackKafka:
+class LoopbackKafka(_Listener):
     """Kafka broker fixture: ApiVersions v0 / Metadata v1 / ListOffsets
     v1 / Fetch v4 over real record-batch-v2 logs (encoded by
     ``wire.encode_record_batch``, any of the five codecs). Unlike the
     single-connection servers above it accepts up to ``max_conns``
-    sockets — the distributed read path opens one per EXECUTOR task —
-    each served on its own thread; the listener closes once the budget
-    is spent. ``requests`` records (api_key, detail) per call so tests
+    sockets — the distributed read path opens one per EXECUTOR task.
+    ``requests`` records (api_key, detail) per call so tests
     can assert on the wire conversation. Fetch honors partition
     max_bytes but always returns at least the first eligible batch
     (Kafka's guarantee of progress), so size-capped paging is really
     exercised."""
+
+    proto = "kafka"
 
     def __init__(self, topics: "dict[str, list[list[list[dict]]]]",
                  compression: "str | list[str]" = "none",
@@ -280,12 +289,7 @@ class LoopbackKafka:
                          if isinstance(compression, list) else compression)
                 for batch in batches:
                     self.append(name, p_idx, batch, compression=codec)
-        self._srv = socket.socket()
-        self._srv.bind(("127.0.0.1", 0))
-        self._srv.listen(max_conns or 128)
-        self.port = self._srv.getsockname()[1]
-        self._budget = max_conns
-        threading.Thread(target=self._accept_loop, daemon=True).start()
+        super().__init__(max_conns)
 
     def append(self, topic: str, partition: int, records: "list[dict]",
                compression: str = "none", magic: int = 2) -> None:
@@ -315,53 +319,18 @@ class LoopbackKafka:
                 )
             log.append((base, base + len(records), blob))
 
-    def close(self) -> None:
-        """Stop accepting (live connections finish on their own)."""
-        self._srv.close()
-
-    def _accept_loop(self):
-        try:
-            while self._budget is None or self._budget > 0:
-                try:
-                    conn, _ = self._srv.accept()
-                except OSError:
-                    return
-                if self._budget is not None:
-                    self._budget -= 1
-                threading.Thread(
-                    target=self._serve_conn, args=(conn,), daemon=True
-                ).start()
-        finally:
-            self._srv.close()
-
-    def _serve_conn(self, conn):
-        try:
-            while True:
-                hdr = b""
-                while len(hdr) < 4:
-                    chunk = conn.recv(4 - len(hdr))
-                    if not chunk:
-                        return
-                    hdr += chunk
-                (n,) = struct.unpack(">i", hdr)
-                req = b""
-                while len(req) < n:
-                    chunk = conn.recv(n - len(req))
-                    if not chunk:  # half-close mid-request: no busy loop
-                        return
-                    req += chunk
-                api_key, api_ver, corr = struct.unpack_from(">hhi", req, 0)
-                (cid_len,) = struct.unpack_from(">h", req, 8)
-                body = req[10 + max(cid_len, 0):]
-                resp = self._dispatch(api_key, api_ver, body)
-                conn.sendall(
-                    struct.pack(">i", 4 + len(resp))
-                    + struct.pack(">i", corr) + resp
-                )
-        except OSError:
-            pass
-        finally:
-            conn.close()
+    def _serve_conn(self, stream: Stream):
+        while True:
+            (n,) = struct.unpack(">i", stream.read(4))
+            req = stream.read(n)
+            api_key, api_ver, corr = struct.unpack_from(">hhi", req, 0)
+            (cid_len,) = struct.unpack_from(">h", req, 8)
+            body = req[10 + max(cid_len, 0):]
+            resp = self._dispatch(api_key, api_ver, body)
+            stream.send(
+                struct.pack(">i", 4 + len(resp))
+                + struct.pack(">i", corr) + resp
+            )
 
     @staticmethod
     def _kstr(s: str) -> bytes:
@@ -447,11 +416,11 @@ class LoopbackKafka:
         return struct.pack(">h", 35)  # UNSUPPORTED_VERSION
 
 
-class _LoopbackDBBase:
+class _LoopbackDBBase(_Listener):
     """Shared infrastructure for the SQL wire fixtures (Postgres/MySQL):
-    in-memory DuckDB delegation, a budgeted multi-connection accept loop
-    (the range-partitioned reads open one connection per executor task),
-    and exact-recv. Subclasses implement _serve_conn."""
+    in-memory DuckDB delegation behind ``max_conns`` connections (the
+    range-partitioned reads open one per executor task). Subclasses
+    implement _serve_conn."""
 
     def __init__(self, setup_sql: "list[str]", max_conns: int = 16):
         import duckdb
@@ -461,39 +430,7 @@ class _LoopbackDBBase:
             self._db.sql(stmt)
         self._db_lock = threading.Lock()
         self.queries: list[str] = []
-        self._conn_budget = max_conns
-        self._srv = socket.socket()
-        self._srv.bind(("127.0.0.1", 0))
-        self._srv.listen(max_conns)
-        self.port = self._srv.getsockname()[1]
-        threading.Thread(target=self._run, daemon=True).start()
-
-    def close(self) -> None:
-        """Stop accepting (live connections finish on their own)."""
-        self._srv.close()
-
-    def _run(self):
-        try:
-            while self._conn_budget > 0:
-                try:
-                    conn, _ = self._srv.accept()
-                except OSError:
-                    return
-                self._conn_budget -= 1
-                threading.Thread(target=self._serve_conn, args=(conn,),
-                                 daemon=True).start()
-        finally:
-            self._srv.close()
-
-    @staticmethod
-    def _recv_exact(conn, n):
-        out = b""
-        while len(out) < n:
-            chunk = conn.recv(n - len(out))
-            if not chunk:
-                raise ConnectionError("closed")
-            out += chunk
-        return out
+        super().__init__(max_conns)
 
     def _duck_run(self, sql: str):
         """(cols [(name, duck_type_str)], rows) or raises duckdb.Error;
@@ -521,47 +458,39 @@ class LoopbackPostgres(_LoopbackDBBase):
         "DATE": 1082, "TIMESTAMP": 1114, "HUGEINT": 1700,
     }
 
+    proto = "postgres"
+
     def __init__(self, setup_sql: "list[str]", user: str = "postgres",
                  password: str = "", auth: str = "scram",
                  max_conns: int = 16):
         self.user, self.password, self.auth = user, password, auth
         super().__init__(setup_sql, max_conns)
 
-    def _msg(self, t: bytes, body: bytes) -> bytes:
-        return t + struct.pack(">i", len(body) + 4) + body
-
-    def _serve_conn(self, conn):
-        try:
-            # startup message: length + payload, NO type byte
-            (n,) = struct.unpack(">i", self._recv_exact(conn, 4))
-            self._recv_exact(conn, n - 4)  # protocol + params
-            if not self._authenticate(conn):
+    def _serve_conn(self, stream: Stream):
+        # startup message: length + payload, NO type byte
+        (n,) = struct.unpack(">i", stream.read(4))
+        stream.read(n - 4)  # protocol + params
+        if not self._authenticate(stream):
+            return
+        stream.send(
+            pg_message(b"R", struct.pack(">i", 0))
+            + pg_message(b"S", b"server_version\x00loopback-16\x00")
+            + pg_message(b"Z", b"I")
+        )
+        while True:
+            t, body = read_pg_message(stream)
+            if t == b"X":
                 return
-            conn.sendall(
-                self._msg(b"R", struct.pack(">i", 0))
-                + self._msg(b"S", b"server_version\x00loopback-16\x00")
-                + self._msg(b"Z", b"I")
-            )
-            while True:
-                t = conn.recv(1)
-                if not t or t == b"X":
-                    return
-                (n,) = struct.unpack(">i", self._recv_exact(conn, 4))
-                body = self._recv_exact(conn, n - 4)
-                if t != b"Q":
-                    conn.sendall(self._msg(
-                        b"E", b"SERROR\x00Munsupported message\x00\x00"
-                    ) + self._msg(b"Z", b"I"))
-                    continue
-                sql = body.rstrip(b"\x00").decode()
-                self.queries.append(sql)
-                conn.sendall(self._run_query(sql))
-        except (ConnectionError, OSError):
-            pass
-        finally:
-            conn.close()
+            if t != b"Q":
+                stream.send(pg_message(
+                    b"E", b"SERROR\x00Munsupported message\x00\x00"
+                ) + pg_message(b"Z", b"I"))
+                continue
+            sql = body.rstrip(b"\x00").decode()
+            self.queries.append(sql)
+            stream.send(self._run_query(sql))
 
-    def _authenticate(self, conn) -> bool:
+    def _authenticate(self, stream: Stream) -> bool:
         import base64
         import hashlib
         import hmac as _hmac
@@ -571,27 +500,24 @@ class LoopbackPostgres(_LoopbackDBBase):
             return True
         if self.auth == "md5":
             salt = b"\x01\x02\x03\x04"
-            conn.sendall(self._msg(b"R", struct.pack(">i", 5) + salt))
-            t = self._recv_exact(conn, 1)
-            (n,) = struct.unpack(">i", self._recv_exact(conn, 4))
-            got = self._recv_exact(conn, n - 4).rstrip(b"\x00")
+            stream.send(pg_message(b"R", struct.pack(">i", 5) + salt))
+            t, got = read_pg_message(stream)
+            got = got.rstrip(b"\x00")
             inner = hashlib.md5(
                 self.password.encode() + self.user.encode()
             ).hexdigest().encode()
             want = b"md5" + hashlib.md5(inner + salt).hexdigest().encode()
             if t != b"p" or got != want:
-                conn.sendall(self._msg(
+                stream.send(pg_message(
                     b"E", b"SFATAL\x00Mpassword authentication failed\x00\x00"
                 ))
                 return False
             return True
         # SCRAM-SHA-256 (RFC 5802/7677), server side
-        conn.sendall(self._msg(
+        stream.send(pg_message(
             b"R", struct.pack(">i", 10) + b"SCRAM-SHA-256\x00\x00"
         ))
-        t = self._recv_exact(conn, 1)
-        (n,) = struct.unpack(">i", self._recv_exact(conn, 4))
-        body = self._recv_exact(conn, n - 4)
+        _t, body = read_pg_message(stream)
         zero = body.index(b"\x00")
         (flen,) = struct.unpack_from(">i", body, zero + 1)
         client_first = body[zero + 5 : zero + 5 + flen].decode()
@@ -605,12 +531,10 @@ class LoopbackPostgres(_LoopbackDBBase):
         server_first = (
             f"r={combined},s={base64.b64encode(salt).decode()},i={iters}"
         )
-        conn.sendall(self._msg(
+        stream.send(pg_message(
             b"R", struct.pack(">i", 11) + server_first.encode()
         ))
-        t = self._recv_exact(conn, 1)
-        (n,) = struct.unpack(">i", self._recv_exact(conn, 4))
-        client_final = self._recv_exact(conn, n - 4).decode()
+        client_final = read_pg_message(stream)[1].decode()
         no_proof, proof_b64 = client_final.rsplit(",p=", 1)
         salted = hashlib.pbkdf2_hmac(
             "sha256", self.password.encode(), salt, iters
@@ -621,7 +545,7 @@ class LoopbackPostgres(_LoopbackDBBase):
         sig = _hmac.new(stored, auth_msg, hashlib.sha256).digest()
         want_proof = bytes(a ^ b for a, b in zip(client_key, sig))
         if base64.b64decode(proof_b64) != want_proof:
-            conn.sendall(self._msg(
+            stream.send(pg_message(
                 b"E", b"SFATAL\x00Mpassword authentication failed\x00\x00"
             ))
             return False
@@ -629,7 +553,7 @@ class LoopbackPostgres(_LoopbackDBBase):
         server_sig = base64.b64encode(
             _hmac.new(server_key, auth_msg, hashlib.sha256).digest()
         ).decode()
-        conn.sendall(self._msg(
+        stream.send(pg_message(
             b"R", struct.pack(">i", 12) + f"v={server_sig}".encode()
         ))
         return True
@@ -653,12 +577,12 @@ class LoopbackPostgres(_LoopbackDBBase):
         try:
             cols, rows = self._duck_run(sql)
             if cols is None:  # DDL/DML
-                return (self._msg(b"C", b"OK\x00")
-                        + self._msg(b"Z", b"I"))
+                return (pg_message(b"C", b"OK\x00")
+                        + pg_message(b"Z", b"I"))
         except duckdb.Error as exc:
-            return (self._msg(
+            return (pg_message(
                 b"E", b"SERROR\x00M" + str(exc).encode() + b"\x00\x00"
-            ) + self._msg(b"Z", b"I"))
+            ) + pg_message(b"Z", b"I"))
         desc = struct.pack(">h", len(cols))
         for name, duck_t in cols:
             oid = self._DUCK_OID.get(
@@ -668,7 +592,7 @@ class LoopbackPostgres(_LoopbackDBBase):
                 oid = 1700
             desc += (name.encode() + b"\x00"
                      + struct.pack(">ihihih", 0, 0, oid, -1, -1, 0))
-        out = self._msg(b"T", desc)
+        out = pg_message(b"T", desc)
         for row in rows:
             body = struct.pack(">h", len(row))
             for v in row:
@@ -677,9 +601,9 @@ class LoopbackPostgres(_LoopbackDBBase):
                     body += struct.pack(">i", -1)
                 else:
                     body += struct.pack(">i", len(tv)) + tv
-            out += self._msg(b"D", body)
-        out += self._msg(b"C", f"SELECT {len(rows)}\x00".encode())
-        out += self._msg(b"Z", b"I")
+            out += pg_message(b"D", body)
+        out += pg_message(b"C", f"SELECT {len(rows)}\x00".encode())
+        out += pg_message(b"Z", b"I")
         return out
 
 
@@ -697,6 +621,7 @@ class LoopbackMySQL(_LoopbackDBBase):
         "TIMESTAMP": (0x0C, 33), "HUGEINT": (0xF6, 33),
     }
     _SCRAMBLE = bytes(range(1, 21))  # deterministic 20-byte nonce
+    proto = "mysql"
 
     def __init__(self, setup_sql: "list[str]", user: str = "root",
                  password: str = "", max_conns: int = 16,
@@ -724,6 +649,10 @@ class LoopbackMySQL(_LoopbackDBBase):
                     "client's own OAEP code)"
                 )
             self._keydir = tempfile.mkdtemp(prefix="loopback_mysql_rsa_")
+            # the private key must not outlive the server, closed or not
+            self._rm_keydir = weakref.finalize(
+                self, shutil.rmtree, self._keydir, ignore_errors=True
+            )
             self._priv = f"{self._keydir}/key.pem"
             subprocess.run(
                 ["openssl", "genpkey", "-algorithm", "RSA", "-pkeyopt",
@@ -736,6 +665,12 @@ class LoopbackMySQL(_LoopbackDBBase):
             ).stdout
         super().__init__(setup_sql, max_conns)
 
+    def close(self) -> None:
+        """Stop accepting and delete the RSA key directory."""
+        super().close()
+        if self.full_auth:
+            self._rm_keydir()
+
     def _rsa_decrypt(self, blob: bytes) -> bytes:
         import subprocess
 
@@ -744,14 +679,6 @@ class LoopbackMySQL(_LoopbackDBBase):
              "-pkeyopt", "rsa_padding_mode:oaep"],
             input=blob, check=True, capture_output=True,
         ).stdout
-
-    def _read_packet(self, conn):
-        hdr = self._recv_exact(conn, 4)
-        return self._recv_exact(conn, int.from_bytes(hdr[:3], "little"))
-
-    @staticmethod
-    def _pkt(seq: int, payload: bytes) -> bytes:
-        return len(payload).to_bytes(3, "little") + bytes([seq]) + payload
 
     @staticmethod
     def _lenenc(n: int) -> bytes:
@@ -764,91 +691,86 @@ class LoopbackMySQL(_LoopbackDBBase):
         return b"\xfe" + struct.pack("<Q", n)
 
     def _err(self, seq: int, msg: str) -> bytes:
-        return self._pkt(seq, b"\xff" + struct.pack("<H", 1064)
-                         + b"#42000" + msg.encode())
+        return mysql_packet(seq, b"\xff" + struct.pack("<H", 1064)
+                            + b"#42000" + msg.encode())
 
-    def _serve_conn(self, conn):
+    def _serve_conn(self, stream: Stream):
         from intake_spark.wire import _mysql_native_token, _mysql_sha2_token
 
-        try:
-            greet = (
-                b"\x0a" + b"8.0.0-loopback\x00"
-                + struct.pack("<I", 1)
-                + self._SCRAMBLE[:8] + b"\x00"
-                + struct.pack("<H", 0xF7FF)  # caps lower
-                + b"\x21" + struct.pack("<H", 2)
-                + struct.pack("<H", 0x0008 | 0x0001)  # caps upper: PLUGIN_AUTH
-                + bytes([21])
-                + bytes(10)
-                + self._SCRAMBLE[8:] + b"\x00"
-                + self.auth_plugin.encode() + b"\x00"
+        greet = (
+            b"\x0a" + b"8.0.0-loopback\x00"
+            + struct.pack("<I", 1)
+            + self._SCRAMBLE[:8] + b"\x00"
+            + struct.pack("<H", 0xF7FF)  # caps lower
+            + b"\x21" + struct.pack("<H", 2)
+            + struct.pack("<H", 0x0008 | 0x0001)  # caps upper: PLUGIN_AUTH
+            + bytes([21])
+            + bytes(10)
+            + self._SCRAMBLE[8:] + b"\x00"
+            + self.auth_plugin.encode() + b"\x00"
+        )
+        stream.send(mysql_packet(0, greet))
+        resp = read_mysql_packet(stream)[1]
+        pos = 4 + 4 + 1 + 23
+        zero = resp.index(b"\x00", pos)
+        user = resp[pos:zero].decode()
+        pos = zero + 1
+        tlen = resp[pos]
+        token = resp[pos + 1 : pos + 1 + tlen]
+        sha2 = self.auth_plugin == "caching_sha2_password"
+        if self.full_auth:
+            # cache miss: the fast token is unverifiable — demand
+            # the RSA exchange instead
+            if user != self.user:
+                stream.send(mysql_packet(
+                    2, b"\xff" + struct.pack("<H", 1045)
+                    + b"#28000Access denied"
+                ))
+                return
+            stream.send(mysql_packet(2, b"\x01\x04"))
+            req = read_mysql_packet(stream)[1]
+            if req != b"\x02":  # public-key request
+                stream.send(self._err(4, "expected pubkey request"))
+                return
+            stream.send(mysql_packet(4, b"\x01" + self.pub_pem))
+            blob = read_mysql_packet(stream)[1]
+            xored = self._rsa_decrypt(blob)
+            sc = self._SCRAMBLE
+            plain = bytes(
+                b ^ sc[i % len(sc)] for i, b in enumerate(xored)
             )
-            conn.sendall(self._pkt(0, greet))
-            resp = self._read_packet(conn)
-            pos = 4 + 4 + 1 + 23
-            zero = resp.index(b"\x00", pos)
-            user = resp[pos:zero].decode()
-            pos = zero + 1
-            tlen = resp[pos]
-            token = resp[pos + 1 : pos + 1 + tlen]
-            sha2 = self.auth_plugin == "caching_sha2_password"
-            if self.full_auth:
-                # cache miss: the fast token is unverifiable — demand
-                # the RSA exchange instead
-                if user != self.user:
-                    conn.sendall(self._pkt(
-                        2, b"\xff" + struct.pack("<H", 1045)
-                        + b"#28000Access denied"
-                    ))
-                    return
-                conn.sendall(self._pkt(2, b"\x01\x04"))
-                req = self._read_packet(conn)
-                if req != b"\x02":  # public-key request
-                    conn.sendall(self._err(4, "expected pubkey request"))
-                    return
-                conn.sendall(self._pkt(4, b"\x01" + self.pub_pem))
-                blob = self._read_packet(conn)
-                xored = self._rsa_decrypt(blob)
-                sc = self._SCRAMBLE
-                plain = bytes(
-                    b ^ sc[i % len(sc)] for i, b in enumerate(xored)
-                )
-                if plain != self.password.encode() + b"\x00":
-                    conn.sendall(self._pkt(
-                        6, b"\xff" + struct.pack("<H", 1045)
-                        + b"#28000Access denied"
-                    ))
-                    return
-                conn.sendall(self._pkt(6, b"\x00\x00\x00\x02\x00\x00\x00"))
+            if plain != self.password.encode() + b"\x00":
+                stream.send(mysql_packet(
+                    6, b"\xff" + struct.pack("<H", 1045)
+                    + b"#28000Access denied"
+                ))
+                return
+            stream.send(mysql_packet(6, b"\x00\x00\x00\x02\x00\x00\x00"))
+        else:
+            want = (_mysql_sha2_token if sha2 else _mysql_native_token)(
+                self.password, self._SCRAMBLE
+            )
+            if user != self.user or token != want:
+                stream.send(mysql_packet(
+                    2, b"\xff" + struct.pack("<H", 1045)
+                    + b"#28000Access denied"
+                ))
+                return
+            if sha2:  # AuthMoreData: fast-auth success (cache hit)
+                stream.send(mysql_packet(2, b"\x01\x03"))
+                stream.send(mysql_packet(3, b"\x00\x00\x00\x02\x00\x00\x00"))
             else:
-                want = (_mysql_sha2_token if sha2 else _mysql_native_token)(
-                    self.password, self._SCRAMBLE
-                )
-                if user != self.user or token != want:
-                    conn.sendall(self._pkt(
-                        2, b"\xff" + struct.pack("<H", 1045)
-                        + b"#28000Access denied"
-                    ))
-                    return
-                if sha2:  # AuthMoreData: fast-auth success (cache hit)
-                    conn.sendall(self._pkt(2, b"\x01\x03"))
-                    conn.sendall(self._pkt(3, b"\x00\x00\x00\x02\x00\x00\x00"))
-                else:
-                    conn.sendall(self._pkt(2, b"\x00\x00\x00\x02\x00\x00\x00"))
-            while True:
-                pkt = self._read_packet(conn)
-                if pkt[0] == 0x01:  # COM_QUIT
-                    return
-                if pkt[0] != 0x03:  # only COM_QUERY
-                    conn.sendall(self._err(1, "unsupported command"))
-                    continue
-                sql = pkt[1:].decode()
-                self.queries.append(sql)
-                conn.sendall(self._run_query(sql))
-        except (ConnectionError, OSError):
-            pass
-        finally:
-            conn.close()
+                stream.send(mysql_packet(2, b"\x00\x00\x00\x02\x00\x00\x00"))
+        while True:
+            pkt = read_mysql_packet(stream)[1]
+            if pkt[0] == 0x01:  # COM_QUIT
+                return
+            if pkt[0] != 0x03:  # only COM_QUERY
+                stream.send(self._err(1, "unsupported command"))
+                continue
+            sql = pkt[1:].decode()
+            self.queries.append(sql)
+            stream.send(self._run_query(sql))
 
     def _value_text(self, v) -> "bytes | None":
         import datetime as _dt
@@ -869,11 +791,11 @@ class LoopbackMySQL(_LoopbackDBBase):
         try:
             cols, rows = self._duck_run(sql)
             if cols is None:
-                return self._pkt(1, b"\x00\x00\x00\x02\x00\x00\x00")
+                return mysql_packet(1, b"\x00\x00\x00\x02\x00\x00\x00")
         except duckdb.Error as exc:
             return self._err(1, str(exc))
         seq = 1
-        out = self._pkt(seq, self._lenenc(len(cols)))
+        out = mysql_packet(seq, self._lenenc(len(cols)))
         for name, duck_t in cols:
             tb, cs = self._DUCK_MYSQL.get(duck_t.split("(")[0], (0xFD, 33))
             if duck_t.startswith("DECIMAL"):
@@ -886,9 +808,9 @@ class LoopbackMySQL(_LoopbackDBBase):
                    + struct.pack("<I", 255) + bytes([tb])
                    + struct.pack("<H", 0) + b"\x00" + b"\x00\x00")
             seq += 1
-            out += self._pkt(seq, col)
+            out += mysql_packet(seq, col)
         seq += 1
-        out += self._pkt(seq, b"\xfe\x00\x00\x02\x00")  # EOF
+        out += mysql_packet(seq, b"\xfe\x00\x00\x02\x00")  # EOF
         for row in rows:
             body = b""
             for v in row:
@@ -898,7 +820,7 @@ class LoopbackMySQL(_LoopbackDBBase):
                 else:
                     body += self._lenenc(len(tv)) + tv
             seq += 1
-            out += self._pkt(seq, body)
+            out += mysql_packet(seq, body)
         seq += 1
-        out += self._pkt(seq, b"\xfe\x00\x00\x02\x00")
+        out += mysql_packet(seq, b"\xfe\x00\x00\x02\x00")
         return out

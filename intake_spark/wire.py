@@ -1,24 +1,33 @@
 """Stdlib wire-protocol clients for the service connectors whose
-protocols are simple, public, and fully specified: Redis (RESP2,
-https://redis.io/docs/reference/protocol-spec), MongoDB (OP_MSG
-framing over BSON, the MongoDB Wire Protocol + the public BSON spec,
-bsonspec.org), and MQTT 3.1.1 (the OASIS standard's fixed-header +
-remaining-length framing).
+protocols are public and fully specified:
+
+- Redis: RESP2 (https://redis.io/docs/reference/protocol-spec)
+- MongoDB: OP_MSG framing over BSON (the MongoDB Wire Protocol and the
+  public BSON spec, bsonspec.org)
+- MQTT 3.1.1: the OASIS standard's fixed header and remaining length
+- Kafka: ApiVersions/Metadata/ListOffsets/Fetch over record batch v2
+  and the legacy MessageSet (https://kafka.apache.org/protocol)
+- PostgreSQL v3: startup, SCRAM-SHA-256/MD5/cleartext auth, simple query
+- MySQL: HandshakeV10, native and caching_sha2 auth, COM_QUERY
 
 Why these exist: the reference delegates to the ``redis`` / ``pymongo``
-/ mongo-spark / ``paho-mqtt`` packages (reference readers.py:3238-3418).
-None of those drivers ship in this environment, which left the readers
-import-gated and only injectable-mock-tested. Each protocol is a few
-hundred lines of framing, so the readers get a native stdlib path
-instead — testable against a loopback socket server speaking REAL
-protocol bytes (tests/test_wire_protocols.py), and usable against real
-servers where unauthenticated access is allowed.
+/ ``paho-mqtt`` packages, the Spark Kafka connector and JDBC (reference
+readers.py:3192-3418). None of those drivers ship in this environment,
+so the readers get a native stdlib path instead, testable against the
+loopback servers in ``loopback.py`` speaking REAL protocol bytes and
+usable against real servers where the scope below allows.
+
+All socket framing lives in :class:`Stream`: every client here and
+every loopback server reads its bytes through one, and each protocol
+with a multi-step frame has one reader that its client and server
+share (``read_mqtt_packet``, ``read_pg_message``,
+``read_mysql_packet``).
 
 Scope (deliberate): RESP2 request/response only (no pub/sub, no RESP3
 push types); OP_MSG section kind 0 only (no OP_COMPRESSED, no
 checksums, no SCRAM auth); MQTT QoS 0/1 subscribe/receive only (no
-QoS 2 PUBREC/PUBREL, no TLS) — an authenticated deployment still needs
-the real driver, and the readers say so loudly.
+QoS 2 PUBREC/PUBREL); no TLS for any protocol — such a deployment
+still needs the real driver, and the readers say so loudly.
 """
 
 from __future__ import annotations
@@ -27,6 +36,50 @@ import socket
 import struct
 
 from intake_spark.compress import crc32c, read_uvarint, uvarint
+
+
+class Stream:
+    """One connected TCP byte stream, read through one buffered
+    ``makefile("rb")``. ``proto`` names the protocol in the
+    ``ConnectionError`` a short read raises."""
+
+    def __init__(self, sock: socket.socket, proto: str):
+        self.sock = sock
+        self.proto = proto
+        self._f = sock.makefile("rb")
+
+    @classmethod
+    def connect(cls, host: str, port: int, timeout: float,
+                proto: str) -> "Stream":
+        return cls(socket.create_connection((host, port), timeout=timeout),
+                   proto)
+
+    def read(self, n: int) -> bytes:
+        """Exactly ``n`` bytes; ConnectionError if the peer closes first."""
+        if n < 0:
+            raise ConnectionError(f"{self.proto}: negative frame length {n}")
+        out = self._f.read(n)
+        if len(out) != n:
+            raise ConnectionError(f"{self.proto}: connection closed")
+        return out
+
+    def readline(self) -> bytes:
+        """One line through its newline; ConnectionError if the peer
+        closes first."""
+        line = self._f.readline()
+        if not line.endswith(b"\n"):
+            raise ConnectionError(f"{self.proto}: connection closed")
+        return line
+
+    def send(self, data: bytes) -> None:
+        self.sock.sendall(data)
+
+    def close(self) -> None:
+        try:
+            self._f.close()
+        finally:
+            self.sock.close()
+
 
 # --------------------------------------------------------------------------
 # RESP2 (Redis serialization protocol)
@@ -43,8 +96,7 @@ class RespClient:
 
     def __init__(self, host: str, port: int, db: int = 0,
                  timeout: float = 10.0):
-        self._sock = socket.create_connection((host, port), timeout=timeout)
-        self._f = self._sock.makefile("rwb")
+        self._s = Stream.connect(host, port, timeout, "RESP")
         if db:
             self.command("SELECT", str(db))
 
@@ -61,10 +113,7 @@ class RespClient:
                    int(db_seg) if db_seg.isdigit() else 0, timeout)
 
     def close(self) -> None:
-        try:
-            self._f.close()
-        finally:
-            self._sock.close()
+        self._s.close()
 
     def command(self, *args):
         """Send one command, return the parsed reply (bytes for bulk
@@ -74,14 +123,13 @@ class RespClient:
             if isinstance(a, str):
                 a = a.encode()
             out += b"$%d\r\n%s\r\n" % (len(a), a)
-        self._f.write(out)
-        self._f.flush()
+        self._s.send(out)
         return self._read_reply()
 
     def _read_line(self) -> bytes:
-        line = self._f.readline()
+        line = self._s.readline()
         if not line.endswith(b"\r\n"):
-            raise ConnectionError("RESP: truncated reply line")
+            raise ConnectionError("RESP: malformed reply line")
         return line[:-2]
 
     def _read_reply(self):
@@ -97,9 +145,9 @@ class RespClient:
             n = int(rest)
             if n == -1:
                 return None
-            body = self._f.read(n + 2)
-            if len(body) != n + 2 or body[-2:] != b"\r\n":
-                raise ConnectionError("RESP: truncated bulk string")
+            body = self._s.read(n + 2)
+            if body[-2:] != b"\r\n":
+                raise ConnectionError("RESP: malformed bulk string")
             return body[:-2]
         if t == b"*":
             n = int(rest)
@@ -238,7 +286,7 @@ class MongoWireClient:
     deployments only — SCRAM needs the real driver."""
 
     def __init__(self, host: str, port: int = 27017, timeout: float = 10.0):
-        self._sock = socket.create_connection((host, port), timeout=timeout)
+        self._s = Stream.connect(host, port, timeout, "OP_MSG")
         self._req_id = 0
 
     @classmethod
@@ -250,16 +298,7 @@ class MongoWireClient:
         return cls(host or "localhost", int(port or 27017), timeout)
 
     def close(self) -> None:
-        self._sock.close()
-
-    def _recv_exact(self, n: int) -> bytes:
-        out = b""
-        while len(out) < n:
-            chunk = self._sock.recv(n - len(out))
-            if not chunk:
-                raise ConnectionError("OP_MSG: connection closed mid-reply")
-            out += chunk
-        return out
+        self._s.close()
 
     def run_command(self, command: dict) -> dict:
         """One OP_MSG round trip; returns the reply body document and
@@ -269,9 +308,9 @@ class MongoWireClient:
         header = struct.pack(
             "<iiii", 16 + len(body), self._req_id, 0, _OP_MSG
         )
-        self._sock.sendall(header + body)
-        (msg_len,) = struct.unpack("<i", self._recv_exact(4))
-        rest = self._recv_exact(msg_len - 4)
+        self._s.send(header + body)
+        (msg_len,) = struct.unpack("<i", self._s.read(4))
+        rest = self._s.read(msg_len - 4)
         _req, _resp_to, opcode = struct.unpack_from("<iii", rest, 0)
         if opcode != _OP_MSG:
             raise ConnectionError(f"OP_MSG: unexpected reply opcode {opcode}")
@@ -323,6 +362,21 @@ class MongoWireClient:
 # --------------------------------------------------------------------------
 
 
+def read_mqtt_packet(stream: Stream) -> "tuple[int, bytes]":
+    """One MQTT control packet: (fixed-header byte, body). The remaining
+    length is at most four bytes (MQTT 3.1.1 §2.2.3)."""
+    h = stream.read(1)[0]
+    length, shift = 0, 0
+    while True:
+        b = stream.read(1)[0]
+        length |= (b & 0x7F) << shift
+        if not b & 0x80:
+            return h, stream.read(length)
+        shift += 7
+        if shift > 21:
+            raise ConnectionError("MQTT: malformed remaining length")
+
+
 class MqttWireClient:
     """Minimal MQTT 3.1.1 subscriber: CONNECT/CONNACK handshake,
     SUBSCRIBE at QoS 0/1, PUBLISH receive (PUBACK sent for QoS 1),
@@ -332,15 +386,14 @@ class MqttWireClient:
     def __init__(self, host: str, port: int = 1883,
                  client_id: str = "intake-spark",
                  keepalive: int = 60, timeout: float = 10.0):
-        self._sock = socket.create_connection((host, port), timeout=timeout)
-        self._buf = b""
+        self._s = Stream.connect(host, port, timeout, "MQTT")
         self._pkt_id = 0
         self._pending: list = []  # PUBLISHes that beat the SUBACK
         cid = client_id.encode()
         var = (b"\x00\x04MQTT\x04\x02" + struct.pack(">H", keepalive)
                + struct.pack(">H", len(cid)) + cid)
-        self._sock.sendall(b"\x10" + uvarint(len(var)) + var)
-        ptype, body = self._read_packet()
+        self._s.send(b"\x10" + uvarint(len(var)) + var)
+        ptype, body = read_mqtt_packet(self._s)
         if ptype != 0x20 or len(body) != 2 or body[1] != 0:
             raise ConnectionError(
                 f"MQTT CONNACK refused (type 0x{ptype:02x}, body {body!r})"
@@ -354,41 +407,19 @@ class MqttWireClient:
 
     def close(self) -> None:
         try:
-            self._sock.sendall(b"\xe0\x00")  # DISCONNECT
+            self._s.send(b"\xe0\x00")  # DISCONNECT
         except OSError:
             pass
-        self._sock.close()
-
-    def _recv(self, n: int) -> bytes:
-        while len(self._buf) < n:
-            chunk = self._sock.recv(4096)
-            if not chunk:
-                raise ConnectionError("MQTT: connection closed")
-            self._buf += chunk
-        out, self._buf = self._buf[:n], self._buf[n:]
-        return out
-
-    def _read_packet(self) -> "tuple[int, bytes]":
-        h = self._recv(1)[0]
-        length, shift = 0, 0
-        while True:
-            b = self._recv(1)[0]
-            length |= (b & 0x7F) << shift
-            if not b & 0x80:
-                break
-            shift += 7
-            if shift > 21:
-                raise ConnectionError("MQTT: malformed remaining length")
-        return h, self._recv(length)
+        self._s.close()
 
     def subscribe(self, topic: str, qos: int = 0) -> None:
         self._pkt_id += 1
         t = topic.encode()
         var = (struct.pack(">H", self._pkt_id)
                + struct.pack(">H", len(t)) + t + bytes([qos]))
-        self._sock.sendall(b"\x82" + uvarint(len(var)) + var)
+        self._s.send(b"\x82" + uvarint(len(var)) + var)
         while True:
-            ptype, body = self._read_packet()
+            ptype, body = read_mqtt_packet(self._s)
             if ptype == 0x90:  # SUBACK
                 if body[:2] != struct.pack(">H", self._pkt_id):
                     raise ConnectionError("MQTT SUBACK packet-id mismatch")
@@ -415,7 +446,7 @@ class MqttWireClient:
             pos += 2
             # acknowledge QoS 1 (QoS 2's PUBREC/PUBREL dance is out
             # of scope for a batch peek)
-            self._sock.sendall(b"\x40\x02" + struct.pack(">H", pid))
+            self._s.send(b"\x40\x02" + struct.pack(">H", pid))
         return topic, body[pos:]
 
     def messages(self, n: int, timeout_s: float = 30.0):
@@ -430,9 +461,9 @@ class MqttWireClient:
             yield self._pending.pop(0)
             got += 1
         while got < n and time.monotonic() < deadline:
-            self._sock.settimeout(max(0.05, deadline - time.monotonic()))
+            self._s.sock.settimeout(max(0.05, deadline - time.monotonic()))
             try:
-                ptype, body = self._read_packet()
+                ptype, body = read_mqtt_packet(self._s)
             except (TimeoutError, socket.timeout):
                 return
             if ptype & 0xF0 != 0x30:
@@ -896,7 +927,7 @@ class KafkaWireClient:
 
     def __init__(self, host: str, port: int = 9092,
                  client_id: str = "intake-spark", timeout: float = 10.0):
-        self._sock = socket.create_connection((host, port), timeout=timeout)
+        self._s = Stream.connect(host, port, timeout, "kafka")
         self._cid = client_id.encode()
         self._corr = 0
 
@@ -913,16 +944,7 @@ class KafkaWireClient:
         raise ConnectionError(f"kafka: no bootstrap server reachable: {last}")
 
     def close(self) -> None:
-        self._sock.close()
-
-    def _recv_exact(self, n: int) -> bytes:
-        out = b""
-        while len(out) < n:
-            chunk = self._sock.recv(n - len(out))
-            if not chunk:
-                raise ConnectionError("kafka: connection closed mid-reply")
-            out += chunk
-        return out
+        self._s.close()
 
     def _request(self, api_key: int, api_version: int, body: bytes) -> bytes:
         self._corr += 1
@@ -931,9 +953,9 @@ class KafkaWireClient:
             + struct.pack(">h", len(self._cid)) + self._cid
         )
         msg = hdr + body
-        self._sock.sendall(struct.pack(">i", len(msg)) + msg)
-        (n,) = struct.unpack(">i", self._recv_exact(4))
-        resp = self._recv_exact(n)
+        self._s.send(struct.pack(">i", len(msg)) + msg)
+        (n,) = struct.unpack(">i", self._s.read(4))
+        resp = self._s.read(n)
         (corr,) = struct.unpack_from(">i", resp, 0)
         if corr != self._corr:
             raise ConnectionError(
@@ -1178,6 +1200,17 @@ PG_OID_SPARK = {
 }
 
 
+def pg_message(t: bytes, body: bytes) -> bytes:
+    return t + struct.pack(">i", len(body) + 4) + body
+
+
+def read_pg_message(stream: Stream) -> "tuple[bytes, bytes]":
+    """One typed message: (type byte, body after the int32 length)."""
+    t = stream.read(1)
+    (n,) = struct.unpack(">i", stream.read(4))
+    return t, stream.read(n - 4)
+
+
 class PostgresWireClient:
     """Minimal PostgreSQL v3 client: startup, trust/cleartext/MD5/
     SCRAM-SHA-256 auth, simple-query protocol, text-format rows decoded
@@ -1186,19 +1219,18 @@ class PostgresWireClient:
     def __init__(self, host: str, port: int = 5432, user: str = "postgres",
                  password: str = "", database: str = "postgres",
                  timeout: float = 10.0):
-        self._sock = socket.create_connection((host, port), timeout=timeout)
-        self._buf = b""
+        self._s = Stream.connect(host, port, timeout, "postgres")
         self._decoders = _pg_decoders()
         params = (
             b"user\x00" + user.encode() + b"\x00"
             b"database\x00" + database.encode() + b"\x00\x00"
         )
         body = struct.pack(">i", 196608) + params  # protocol 3.0
-        self._sock.sendall(struct.pack(">i", len(body) + 4) + body)
+        self._s.send(struct.pack(">i", len(body) + 4) + body)
         self._authenticate(user, password)
         # drain ParameterStatus/BackendKeyData until ReadyForQuery
         while True:
-            t, payload = self._read_msg()
+            t, payload = read_pg_message(self._s)
             if t == b"Z":
                 break
             if t == b"E":
@@ -1232,24 +1264,10 @@ class PostgresWireClient:
 
     def close(self) -> None:
         try:
-            self._sock.sendall(b"X" + struct.pack(">i", 4))  # Terminate
+            self._send(b"X", b"")  # Terminate
         except OSError:
             pass
-        self._sock.close()
-
-    def _recv_exact(self, n: int) -> bytes:
-        while len(self._buf) < n:
-            chunk = self._sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("postgres: connection closed")
-            self._buf += chunk
-        out, self._buf = self._buf[:n], self._buf[n:]
-        return out
-
-    def _read_msg(self) -> "tuple[bytes, bytes]":
-        t = self._recv_exact(1)
-        (n,) = struct.unpack(">i", self._recv_exact(4))
-        return t, self._recv_exact(n - 4)
+        self._s.close()
 
     @staticmethod
     def _err(payload: bytes) -> str:
@@ -1260,14 +1278,14 @@ class PostgresWireClient:
         return fields.get("M", payload.decode(errors="replace"))
 
     def _send(self, t: bytes, body: bytes) -> None:
-        self._sock.sendall(t + struct.pack(">i", len(body) + 4) + body)
+        self._s.send(pg_message(t, body))
 
     def _authenticate(self, user: str, password: str) -> None:
         import hashlib
         import secrets
 
         while True:
-            t, payload = self._read_msg()
+            t, payload = read_pg_message(self._s)
             if t == b"E":
                 raise ConnectionError(f"postgres auth: {self._err(payload)}")
             if t != b"R":
@@ -1340,7 +1358,7 @@ class PostgresWireClient:
         rows: list[tuple] = []
         decs: list = []
         while True:
-            t, payload = self._read_msg()
+            t, payload = read_pg_message(self._s)
             if t == b"T":  # RowDescription
                 (nf,) = struct.unpack_from(">h", payload, 0)
                 pos = 2
@@ -1376,7 +1394,7 @@ class PostgresWireClient:
             elif t == b"E":
                 err = self._err(payload)
                 # consume the trailing ReadyForQuery before raising
-                while self._read_msg()[0] != b"Z":
+                while read_pg_message(self._s)[0] != b"Z":
                     pass
                 raise RuntimeError(f"postgres query failed: {err}")
             elif t == b"Z":  # ReadyForQuery
@@ -1568,6 +1586,22 @@ def _mysql_decoders():
     }
 
 
+def mysql_packet(seq: int, payload: bytes) -> bytes:
+    return len(payload).to_bytes(3, "little") + bytes([seq]) + payload
+
+
+def read_mysql_packet(stream: Stream) -> "tuple[int, bytes]":
+    """One logical packet: (sequence id of its last slice, payload).
+    A 16 MiB slice continues into the next one."""
+    out = b""
+    while True:
+        hdr = stream.read(4)
+        n = int.from_bytes(hdr[:3], "little")
+        out += stream.read(n)
+        if n < 0xFFFFFF:
+            return hdr[3], out
+
+
 class MySQLWireClient:
     """Minimal MySQL client: HandshakeV10 + HandshakeResponse41 with
     mysql_native_password or caching_sha2_password (fast path AND the
@@ -1578,8 +1612,7 @@ class MySQLWireClient:
     def __init__(self, host: str, port: int = 3306, user: str = "root",
                  password: str = "", database: str = "",
                  timeout: float = 10.0):
-        self._sock = socket.create_connection((host, port), timeout=timeout)
-        self._buf = b""
+        self._s = Stream.connect(host, port, timeout, "mysql")
         self._decoders = _mysql_decoders()
         self._handshake(user, password, database)
 
@@ -1614,31 +1647,15 @@ class MySQLWireClient:
             self._send(0, b"\x01")  # COM_QUIT
         except OSError:
             pass
-        self._sock.close()
-
-    def _recv_exact(self, n: int) -> bytes:
-        while len(self._buf) < n:
-            chunk = self._sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("mysql: connection closed")
-            self._buf += chunk
-        out, self._buf = self._buf[:n], self._buf[n:]
-        return out
+        self._s.close()
 
     def _read_packet(self) -> bytes:
-        out = b""
-        while True:
-            hdr = self._recv_exact(4)
-            n = int.from_bytes(hdr[:3], "little")
-            self._seq = hdr[3] + 1
-            out += self._recv_exact(n)
-            if n < 0xFFFFFF:  # 16MB slices continue into the next packet
-                return out
+        seq, out = read_mysql_packet(self._s)
+        self._seq = seq + 1
+        return out
 
     def _send(self, seq: int, payload: bytes) -> None:
-        self._sock.sendall(
-            len(payload).to_bytes(3, "little") + bytes([seq]) + payload
-        )
+        self._s.send(mysql_packet(seq, payload))
 
     @staticmethod
     def _err_text(pkt: bytes) -> str:

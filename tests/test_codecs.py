@@ -63,9 +63,10 @@ def _is_leb128_loop(fn: ast.FunctionDef) -> bool:
 
 def test_one_crc32c_and_one_varint_pair():
     """No module under intake_spark/ defines its own CRC-32C or LEB128
-    loop. The MQTT packet readers decode the remaining length from a
-    socket one ``recv(1)`` at a time, not from a buffer, and stay."""
-    stream_readers = {("wire.py", "_read_packet"), ("loopback.py", "_read_packet")}
+    loop. The one MQTT packet reader, shared by client and broker,
+    decodes the remaining length from a stream one byte at a time, not
+    from a buffer, and stays."""
+    stream_readers = {("wire.py", "read_mqtt_packet")}
     crcs, loops = [], []
     for path in sorted(ENGINE.rglob("*.py")):
         rel = str(path.relative_to(ENGINE))

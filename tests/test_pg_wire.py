@@ -420,3 +420,19 @@ def test_mysql_caching_sha2_full_auth_end_to_end():
         cli.close()
     with pytest.raises(ConnectionError, match="Access denied"):
         MySQLWireClient("127.0.0.1", srv.port, user="bob", password="no")
+
+
+@_openssl
+def test_mysql_full_auth_key_dir_removed_on_close():
+    """The full-auth fixture's RSA private key lives no longer than the
+    server: close() removes its directory."""
+    import os
+
+    from intake_spark.loopback import LoopbackMySQL
+
+    srv = LoopbackMySQL([], auth_plugin="caching_sha2_password",
+                        full_auth=True, max_conns=1)
+    keydir = srv._keydir
+    assert os.path.exists(os.path.join(keydir, "key.pem"))
+    srv.close()
+    assert not os.path.exists(keydir)

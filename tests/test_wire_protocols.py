@@ -238,29 +238,25 @@ def test_mqtt_publish_before_suback_is_buffered():
     """MQTT 3.1.1 §3.8.4: the server may deliver matching PUBLISHes
     (typically retained messages) BEFORE the SUBACK; they must be
     buffered and yielded first, not treated as a protocol error."""
-    from intake_spark.wire import MqttWireClient
+    from intake_spark.wire import MqttWireClient, read_mqtt_packet
 
     class EagerBroker(FakeMqttBroker):
-        def _serve(self):
-            conn, _ = self._srv.accept()
-            try:
-                ptype, body = self._read_packet(conn)
-                assert ptype == 0x10
-                conn.sendall(b"\x20\x02\x00\x00")
-                ptype, body = self._read_packet(conn)
-                assert ptype == 0x82
-                pid = struct.unpack(">H", body[:2])[0]
-                # retained message FIRST, then the SUBACK
-                t = b"t/retained"
-                var = struct.pack(">H", len(t)) + t + b"old"
-                conn.sendall(b"\x30" + _varint(len(var)) + var)
-                conn.sendall(b"\x90\x03" + struct.pack(">H", pid) + b"\x00")
-                t = b"t/live"
-                var = struct.pack(">H", len(t)) + t + b"new"
-                conn.sendall(b"\x30" + _varint(len(var)) + var)
-                self._read_packet(conn)  # hold for DISCONNECT
-            finally:
-                conn.close()
+        def _serve_conn(self, stream):
+            ptype, body = read_mqtt_packet(stream)
+            assert ptype == 0x10
+            stream.send(b"\x20\x02\x00\x00")
+            ptype, body = read_mqtt_packet(stream)
+            assert ptype == 0x82
+            pid = struct.unpack(">H", body[:2])[0]
+            # retained message FIRST, then the SUBACK
+            t = b"t/retained"
+            var = struct.pack(">H", len(t)) + t + b"old"
+            stream.send(b"\x30" + _varint(len(var)) + var)
+            stream.send(b"\x90\x03" + struct.pack(">H", pid) + b"\x00")
+            t = b"t/live"
+            var = struct.pack(">H", len(t)) + t + b"new"
+            stream.send(b"\x30" + _varint(len(var)) + var)
+            read_mqtt_packet(stream)  # hold for DISCONNECT
 
     broker = EagerBroker([])
     c = MqttWireClient("127.0.0.1", broker.port)
@@ -275,26 +271,20 @@ def test_mqtt_timeout_is_hard_deadline():
     timeout bounds the whole batch, not each packet gap."""
     import time
 
-    from intake_spark.wire import MqttWireClient
+    from intake_spark.wire import MqttWireClient, read_mqtt_packet
 
     class TrickleBroker(FakeMqttBroker):
-        def _serve(self):
-            conn, _ = self._srv.accept()
-            try:
-                self._read_packet(conn)
-                conn.sendall(b"\x20\x02\x00\x00")
-                ptype, body = self._read_packet(conn)
-                pid = struct.unpack(">H", body[:2])[0]
-                conn.sendall(b"\x90\x03" + struct.pack(">H", pid) + b"\x00")
-                t = b"t/slow"
-                for _i in range(100):
-                    var = struct.pack(">H", len(t)) + t + b"x"
-                    conn.sendall(b"\x30" + _varint(len(var)) + var)
-                    time.sleep(0.25)
-            except OSError:
-                pass
-            finally:
-                conn.close()
+        def _serve_conn(self, stream):
+            read_mqtt_packet(stream)
+            stream.send(b"\x20\x02\x00\x00")
+            ptype, body = read_mqtt_packet(stream)
+            pid = struct.unpack(">H", body[:2])[0]
+            stream.send(b"\x90\x03" + struct.pack(">H", pid) + b"\x00")
+            t = b"t/slow"
+            for _i in range(100):
+                var = struct.pack(">H", len(t)) + t + b"x"
+                stream.send(b"\x30" + _varint(len(var)) + var)
+                time.sleep(0.25)
 
     broker = TrickleBroker([])
     c = MqttWireClient("127.0.0.1", broker.port)
@@ -322,6 +312,149 @@ def test_resp_from_url_query_and_ipv6():
     # IPv6 parse (no listener needed — just check the split)
     u = urlsplit("redis://[::1]:7000/1")
     assert (u.hostname, u.port) == ("::1", 7000)
+
+
+# --------------------------------------------------------------------------
+# one socket-stream layer: wire.Stream reads, loopback._Listener accepts
+# --------------------------------------------------------------------------
+
+
+def _new_threads(before: set, wait_s: float) -> set:
+    import time
+
+    deadline = time.monotonic() + wait_s
+    while (left := set(threading.enumerate()) - before) and (
+            time.monotonic() < deadline):
+        time.sleep(0.02)
+    return left
+
+
+@pytest.mark.parametrize("make, cut", [
+    pytest.param(lambda: FakeMongo([]),
+                 struct.pack("<i", 100) + bytes(10), id="mongo-body"),
+    pytest.param(lambda: FakeMqttBroker([]), b"\x10\xff",
+                 id="mqtt-remaining-length"),
+    pytest.param(lambda: FakeMqttBroker([]), b"\x10\x64" + bytes(10),
+                 id="mqtt-body"),
+    pytest.param(lambda: FakeRedis({}), b"*2\r\n$3\r\nGE",
+                 id="redis-bulk-string"),
+])
+def test_loopback_server_ends_quietly_on_a_cut_request(make, cut,
+                                                       monkeypatch):
+    """A client that sends part of a request and hangs up ends the
+    server's conversation: no thread keeps spinning on a closed socket,
+    and none dies with an exception."""
+    raised: list = []
+    monkeypatch.setattr(threading, "excepthook", raised.append)
+    before = set(threading.enumerate())
+    srv = make()
+    with socket.create_connection(("127.0.0.1", srv.port), timeout=5) as c:
+        c.sendall(cut)
+    assert not _new_threads(before, 2.0)
+    assert not raised
+
+
+def test_unbounded_listener_stops_on_close():
+    """``max_conns=None`` serves until ``close()``, and ``close()`` ends
+    the accept loop and frees the port."""
+    from intake_spark.loopback import LoopbackKafka
+
+    before = set(threading.enumerate())
+    srv = LoopbackKafka({"t": [[]]}, max_conns=None)
+    srv.close()
+    assert not _new_threads(before, 2.0)
+    with pytest.raises(ConnectionRefusedError):
+        socket.create_connection(("127.0.0.1", srv.port), timeout=5)
+
+
+def test_stream_read_is_exact_and_names_the_protocol():
+    from intake_spark.wire import Stream
+
+    a, b = socket.socketpair()
+    s = Stream(a, "demo")
+    b.sendall(b"abc\r\nxy")
+    b.close()
+    assert s.readline() == b"abc\r\n"
+    with pytest.raises(ConnectionError, match="demo: connection closed"):
+        s.read(3)
+    s.close()
+
+
+# (module, outermost class or function) that may touch a raw socket
+_SOCKET_READS = {"recv", "recv_into", "makefile", "create_connection"}
+_SOCKET_ACCEPTS = {"socket", "accept"}
+_SOCKET_OWNERS = {
+    ("wire.py", "Stream"): _SOCKET_READS,
+    ("loopback.py", "_Listener"): _SOCKET_ACCEPTS,
+    # deadline-driven frame loop over an injectable sendall/recv object
+    ("services.py", "WebSocketReader"): _SOCKET_READS,
+}
+
+
+def stray_socket_sites(sources) -> set:
+    """(module, outermost class or function, call) of every raw socket
+    read, connect, listen or accept (a call of one of those names, as a
+    method or bare) outside its owner."""
+    import ast
+
+    hits = set()
+    for rel, tree in sources:
+        for top in tree.body:
+            owner = getattr(top, "name", "<module>")
+            allowed = _SOCKET_OWNERS.get((rel, owner), set())
+            for n in ast.walk(top):
+                if not isinstance(n, ast.Call):
+                    continue
+                f = n.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(
+                    f, "id", None)
+                if name in (_SOCKET_READS | _SOCKET_ACCEPTS) - allowed:
+                    hits.add((rel, owner, name))
+    return hits
+
+
+def test_one_socket_stream_and_one_accept_loop():
+    """Only ``wire.Stream`` reads or connects a socket and only
+    ``loopback._Listener`` listens and accepts; the WebSocket reader's
+    frame loop is the named exception."""
+    from tests.test_codecs import _engine_sources
+
+    assert not stray_socket_sites(_engine_sources())
+
+
+def test_socket_guard_catches_a_hand_rolled_reader():
+    """The guard sees a copied client, a copied server, and a class that
+    borrows the owner's name in another module."""
+    import ast
+
+    mutant = ast.parse('''
+import socket
+class CopiedClient:
+    def __init__(self, host, port):
+        self._sock = socket.create_connection((host, port))
+    def _recv_exact(self, n):
+        out = b""
+        while len(out) < n:
+            out += self._sock.recv(n - len(out))
+        return out
+class CopiedServer:
+    def __init__(self):
+        self._srv = socket.socket()
+    def _serve(self):
+        conn, _ = self._srv.accept()
+        return conn.makefile("rb")
+class Stream:
+    def read(self, n):
+        return self.sock.recv(n)
+''')
+    assert stray_socket_sites([("mutant.py", mutant)]) == {
+        ("mutant.py", "CopiedClient", "create_connection"),
+        ("mutant.py", "CopiedClient", "recv"),
+        ("mutant.py", "CopiedServer", "socket"),
+        ("mutant.py", "CopiedServer", "accept"),
+        ("mutant.py", "CopiedServer", "makefile"),
+        ("mutant.py", "Stream", "recv"),
+    }
 
 
 # --------------------------------------------------------------------------
